@@ -33,10 +33,17 @@ so parquet row groups inherit contiguous z-ranges. The probe
 (``tools/zorder_probe.py``) measures the payoff directly from parquet
 footers: row groups whose min/max box intersects a 2-D predicate box,
 z-ordered vs single-column-sorted.
+
+The module also owns the file-level store primitives that the
+persisted indexes and the streaming ingest loops share, all through
+the Hadoop FileSystem API: listing and the small-files compaction
+gate, the temp-then-swap directory replace (the only rename), the
+sidecar commit and the pending marker.
 """
 
 from __future__ import annotations
 
+from contextlib import contextmanager
 from typing import Sequence
 
 import pyspark.sql.functions as F
@@ -144,14 +151,111 @@ def write_zordered(
     )
 
 
+def _fs(spark, path: str):
+    """``(FileSystem, Path)`` for ``path`` through the Hadoop FileSystem
+    API — every helper below goes through it, so each works on any
+    store Spark can read (file:, hdfs:, s3a:), where ``os.path`` is
+    silently wrong for every scheme-qualified URI."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
+
+
 def input_bytes(spark, path: str) -> int:
-    """Total byte size under ``path`` via the Hadoop FileSystem API —
-    works on any store Spark can read (file:, hdfs:, s3a:), costs one
-    listing, reads no data."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+    """Total byte size under ``path`` — one listing, reads no data."""
+    fs, p = _fs(spark, path)
     return int(fs.getContentSummary(p).getLength())
+
+
+def _dir_exists(spark, path: str) -> bool:
+    fs, p = _fs(spark, path)
+    return bool(fs.exists(p))
+
+
+def _is_directory(spark, path: str) -> bool:
+    """False for plain files AND missing paths."""
+    fs, p = _fs(spark, path)
+    return bool(fs.exists(p) and fs.getFileStatus(p).isDirectory())
+
+
+def _n_data_files(spark, path: str) -> int:
+    """Visible data files directly under ``path`` (0 when missing);
+    hidden ``_SUCCESS``/``.crc``/``_``-prefixed entries excluded,
+    matching what a parquet scan reads."""
+    fs, p = _fs(spark, path)
+    return _count_data_files(fs, p) if fs.exists(p) else 0
+
+
+def _count_data_files(fs, p) -> int:
+    return sum(
+        1
+        for st in fs.listStatus(p)
+        if st.isFile() and not st.getPath().getName().startswith(("_", "."))
+    )
+
+
+def _swap_dirs(spark, live: str, tmp: str, tag) -> None:
+    """Replace ``live`` with the fully written ``tmp``, atomically as the
+    store allows: two ``FileSystem.rename`` calls keep the old table
+    aside as ``<live>__old<tag>`` until the new one is in place (a crash
+    between them leaves that copy intact), then delete it. A missing
+    ``live`` (first write, or a half-written layout being repaired) is
+    a single rename into place. On an object store rename is a copy —
+    real deployments flip a delta/iceberg catalog entry instead."""
+    fs, p = _fs(spark, live)
+    src = spark._jvm.org.apache.hadoop.fs.Path(tmp)
+    if not fs.exists(p):
+        if not fs.rename(src, p):  # pragma: no cover - fs race
+            raise IOError(f"swap: could not move {tmp} into place")
+    else:
+        old = spark._jvm.org.apache.hadoop.fs.Path(
+            f"{live.rstrip('/')}__old{tag}"
+        )
+        if not fs.rename(p, old):  # pragma: no cover - fs race
+            raise IOError(f"swap: could not move {live} aside")
+        if not fs.rename(src, p):  # pragma: no cover
+            fs.rename(old, p)  # restore; old table was never touched
+            raise IOError(f"swap: could not swap {tmp} into place")
+        fs.delete(old, True)
+    # Spark's shared FileStatusCache serves the PRE-swap listing to the
+    # next read of this path — later reads would chase deleted part
+    # files (FAILED_READ_FILE.FILE_NOT_EXIST). Invalidate the listing
+    # and any cached data keyed on the path.
+    spark.catalog.refreshByPath(live)
+
+
+def _write_sidecar(spark, df: DataFrame, live: str, tag) -> None:
+    """Commit a small metadata table by write-to-temp + swap, never an
+    overwrite in place: a crash mid-overwrite would leave ``live``
+    empty and lose what it recorded."""
+    tmp = f"{live.rstrip('/')}__tmp{tag}"
+    df.coalesce(1).write.mode("overwrite").parquet(tmp)
+    _swap_dirs(spark, live, tmp, tag)
+
+
+def _copy_dir(spark, src: str, dst: str) -> None:
+    fs, s = _fs(spark, src)
+    _, d = _fs(spark, dst)
+    spark._jvm.org.apache.hadoop.fs.FileUtil.copy(
+        fs, s, fs, d, False, spark._jsc.hadoopConfiguration()
+    )
+
+
+def _delete_dir(spark, path: str) -> None:
+    fs, p = _fs(spark, path)
+    fs.delete(p, True)
+    spark.catalog.refreshByPath(path)
+
+
+@contextmanager
+def _pending_marker(spark, path: str):
+    """Fence a multi-swap rewrite that is not jointly atomic: the
+    marker dir exists from before the first swap until after the last,
+    so a crash in between is visible to the next run, which must heal
+    (redo the rewrite) before it reads the layout."""
+    fs, p = _fs(spark, path)
+    fs.mkdirs(p)
+    yield  # no finally: a failed rewrite must leave the marker behind
+    fs.delete(p, True)
 
 
 def compact_files(
@@ -275,21 +379,13 @@ def _partition_file_counts(
     Raises when ``in_path`` has no ``partition_by=`` dirs at all —
     that is a mis-pointed path or wrong partition column, and
     returning "0 files, healthy" would hide it."""
-    jvm = spark._jvm
-    root = jvm.org.apache.hadoop.fs.Path(in_path)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, root = _fs(spark, in_path)
     prefix = f"{partition_by}="
     counts: dict[str, int] = {}
     for st in fs.listStatus(root):
         part = st.getPath().getName()
-        if not (st.isDirectory() and part.startswith(prefix)):
-            continue
-        n = 0
-        for f in fs.listStatus(st.getPath()):
-            name = f.getPath().getName()
-            if f.isFile() and not name.startswith(("_", ".")):
-                n += 1
-        counts[part] = n
+        if st.isDirectory() and part.startswith(prefix):
+            counts[part] = _count_data_files(fs, st.getPath())
     if not counts:
         raise ValueError(
             f"maybe_compact: no {prefix}* partition directories under "
@@ -303,7 +399,7 @@ def maybe_compact(
     spark,
     in_path: str,
     out_path: str,
-    partition_by: str,
+    partition_by: str | None,
     order_by: Sequence[str],
     max_files_per_partition: int = 16,
     target_bytes: int = 128 << 20,
@@ -330,7 +426,17 @@ def maybe_compact(
     :func:`input_bytes` pattern) so the gate fires on ANY store Spark
     can read — file:, hdfs://, s3a:// — not just the local
     filesystem; a table with no ``partition_by=`` directories at all
-    raises rather than silently reporting "healthy" forever."""
+    raises rather than silently reporting "healthy" forever.
+
+    ``partition_by=None`` gates an unpartitioned table on the data
+    files directly under ``in_path`` (0 when it does not exist yet)
+    and rewrites it with :func:`compact_files`."""
+    if partition_by is None:
+        if _n_data_files(spark, in_path) <= max_files_per_partition:
+            return False
+        compact_files(spark, in_path, out_path, order_by,
+                      target_bytes=target_bytes, fmt=fmt)
+        return True
     worst = max(
         _partition_file_counts(spark, in_path, partition_by).values(),
         default=0,

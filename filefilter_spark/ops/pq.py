@@ -961,7 +961,7 @@ def build_ann_index(
 
     Rebuilding over an EXISTING layout goes through temp dirs + the
     streaming maintenance swap protocol instead of overwriting in
-    place (ADVICE r14): a crash mid-rebuild leaves the old index
+    place: a crash mid-rebuild leaves the old index
     intact, and concurrent probes never see an empty ``meta/``. The
     codes→meta swap pair is atomic-as-the-store-allows — the same
     contract as every in-stream compaction; a refresh that must be
@@ -991,51 +991,27 @@ def build_ann_index(
         "id_col": id_col,
         "seeding": seeding,
         # build params the streaming loop's auto-rebuild reuses as its
-        # defaults (r16 — the drift signal's active half)
+        # defaults
         "iters": int(iters),
         "coarse_iters": int(coarse_iters),
         "fit_frac": float(fit_frac),
     }
     meta_df = spark.createDataFrame([(_json.dumps(meta),)], "meta string")
 
-    from filefilter_spark.streaming.jobs import _dir_exists, _swap_dirs
+    from filefilter_spark.ops.layout import _swap_dirs
 
+    # stage both tables fully, then swap codes first and meta last —
+    # load_ann_meta reads meta, so the crash window between the swaps
+    # serves old-meta+new-codes for exactly two renames (deterministic
+    # rebuilds from the same corpus make even that window a no-op); on
+    # a fresh path each swap is a single rename into place
     codes_dir, meta_dir = f"{path}/codes", f"{path}/meta"
-    if _dir_exists(spark, codes_dir) or _dir_exists(spark, meta_dir):
-        # refresh of a live layout: stage both tables fully, then swap
-        # codes first and meta last — load_ann_meta reads meta, so the
-        # crash window between the swaps serves old-meta+new-codes for
-        # exactly two renames (deterministic rebuilds from the same
-        # corpus make even that window a no-op)
-        codes_tmp = f"{codes_dir}__build"
-        meta_tmp = f"{meta_dir}__build"
-        indexed.repartition("cell").sortWithinPartitions(id_col).write.mode(
-            "overwrite"
-        ).partitionBy("cell").parquet(codes_tmp)
-        meta_df.coalesce(1).write.mode("overwrite").parquet(meta_tmp)
-        if _dir_exists(spark, codes_dir):
-            _swap_dirs(spark, codes_dir, codes_tmp, "rebuild")
-        else:  # pragma: no cover - half-written layout repair
-            spark._jvm.org.apache.hadoop.fs.Path(codes_tmp).getFileSystem(
-                spark._jsc.hadoopConfiguration()
-            ).rename(
-                spark._jvm.org.apache.hadoop.fs.Path(codes_tmp),
-                spark._jvm.org.apache.hadoop.fs.Path(codes_dir),
-            )
-        if _dir_exists(spark, meta_dir):
-            _swap_dirs(spark, meta_dir, meta_tmp, "rebuild")
-        else:  # pragma: no cover - half-written layout repair
-            spark._jvm.org.apache.hadoop.fs.Path(meta_tmp).getFileSystem(
-                spark._jsc.hadoopConfiguration()
-            ).rename(
-                spark._jvm.org.apache.hadoop.fs.Path(meta_tmp),
-                spark._jvm.org.apache.hadoop.fs.Path(meta_dir),
-            )
-    else:
-        indexed.repartition("cell").sortWithinPartitions(id_col).write.mode(
-            "overwrite"
-        ).partitionBy("cell").parquet(codes_dir)
-        meta_df.coalesce(1).write.mode("overwrite").parquet(meta_dir)
+    indexed.repartition("cell").sortWithinPartitions(id_col).write.mode(
+        "overwrite"
+    ).partitionBy("cell").parquet(f"{codes_dir}__build")
+    meta_df.coalesce(1).write.mode("overwrite").parquet(f"{meta_dir}__build")
+    _swap_dirs(spark, codes_dir, f"{codes_dir}__build", "rebuild")
+    _swap_dirs(spark, meta_dir, f"{meta_dir}__build", "rebuild")
 
 
 def load_ann_meta(spark, path: str) -> dict:

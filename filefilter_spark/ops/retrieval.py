@@ -40,6 +40,7 @@ from typing import Sequence
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
+from filefilter_spark.ops.layout import _dir_exists, _swap_dirs
 from filefilter_spark.ops.text import _bind, tokens
 
 
@@ -408,13 +409,6 @@ def bm25_batch_topk(
     )
 
 
-def _hadoop_dir_exists(spark, p: str) -> bool:
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    hp = jvm.org.apache.hadoop.fs.Path(p)
-    return hp.getFileSystem(conf).exists(hp)
-
-
 def _read_index_stats(
     spark, path: str, n_buckets: int | None, caller: str
 ) -> tuple[int, float, int]:
@@ -519,7 +513,7 @@ def _indexed_term_dfs(
     at-least-once streaming replays (the streaming ingest maintains no
     terms table: a cached df would go stale between micro-batches),
     cost bounded by the matching postings."""
-    if _hadoop_dir_exists(spark, f"{path}/terms"):
+    if _dir_exists(spark, f"{path}/terms"):
         rows = (
             spark.read.parquet(f"{path}/terms")
             .filter(F.col("bucket").isin(list(buckets))
@@ -669,16 +663,16 @@ def build_text_index(
       ``n_buckets`` records the bucket count the postings were hashed
       with, so probes replay the SAME term→bucket hash without the
       caller having to remember it (a mismatched count would silently
-      prune to the wrong buckets — ADVICE r14).
+      prune to the wrong buckets).
 
     Build cost: one tokenize scan + one (id, term) aggregation — the
     same postings shuffle tf-idf already pays. ``n_buckets`` bounds
     file counts (the small-files maintenance loop — ``maybe_compact``
     in ops/layout.py — applies to ``postings/`` unchanged).
 
-    Rebuilding over an EXISTING layout stages every table in temp dirs
-    and swaps them in (the streaming maintenance protocol — same
-    contract as ``pq.build_ann_index``, r15): a crash mid-rebuild
+    Every table is staged in a temp dir and swapped in (the streaming
+    maintenance protocol — same contract as ``pq.build_ann_index``), so
+    rebuilding over an EXISTING layout is safe: a crash mid-rebuild
     leaves the old index intact and concurrent probes never see a
     half-written store.
     """
@@ -693,7 +687,7 @@ def build_text_index(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("dl").alias("sum_dl"),
         F.lit(int(n_buckets)).cast("long").alias("n_buckets"),
-        # frozen at build (r16): the growth signal's baseline — the
+        # frozen at build: the growth signal's baseline — the
         # bucket count was SIZED for this corpus, and probe cost per
         # term grows ~linearly with n_docs/built_n_docs (the bucket's
         # share of the whole vocabulary's postings); see
@@ -703,11 +697,7 @@ def build_text_index(
     if int(stats.first()["n_docs"]) == 0:
         raise ValueError("build_text_index: empty corpus — nothing to index")
 
-    live = any(
-        _hadoop_dir_exists(spark, f"{path}/{d}")
-        for d in ("stats", "postings", "terms")
-    )
-    sfx = "__build" if live else ""
+    sfx = "__build"
     stats.coalesce(1).write.mode("overwrite").parquet(f"{path}/stats{sfx}")
     toks = df.select(
         F.col(id_col),
@@ -742,24 +732,12 @@ def build_text_index(
     terms.write.mode("overwrite").partitionBy("bucket").parquet(
         f"{path}/terms{sfx}"
     )
-    if live:
-        from filefilter_spark.streaming.jobs import _dir_exists, _swap_dirs
-
-        # postings first, stats LAST: probes read stats (n_buckets,
-        # avgdl) before pruning, so the crash window between renames
-        # serves old-stats + new-postings for at most two renames —
-        # atomic-as-the-store-allows, the maintenance-swap contract
-        for d in ("postings", "terms", "stats"):
-            if _dir_exists(spark, f"{path}/{d}"):
-                _swap_dirs(spark, f"{path}/{d}", f"{path}/{d}__build",
-                           "rebuild")
-            else:  # pragma: no cover - half-written layout repair
-                jvm = spark._jvm
-                hconf = spark._jsc.hadoopConfiguration()
-                sp = jvm.org.apache.hadoop.fs.Path(f"{path}/{d}__build")
-                sp.getFileSystem(hconf).rename(
-                    sp, jvm.org.apache.hadoop.fs.Path(f"{path}/{d}")
-                )
+    # postings first, stats LAST: probes read stats (n_buckets, avgdl)
+    # before pruning, so the crash window between renames serves
+    # old-stats + new-postings for at most two renames; on a fresh path
+    # each swap is a single rename into place
+    for d in ("postings", "terms", "stats"):
+        _swap_dirs(spark, f"{path}/{d}", f"{path}/{d}{sfx}", "rebuild")
 
 
 def bm25_topk_indexed(

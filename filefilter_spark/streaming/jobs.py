@@ -14,20 +14,58 @@ Three tiers, all drained to completion on static data via
 - **foreachBatch pipelines** — ``pipeline_foreach_batch`` applies the
   zero-code YAML pipeline per micro-batch, re-reading the config at
   every batch boundary (the reference's hot-reload, OP-A13).
-- **Continuous ingest with persistent stores** (r12-r13) —
-  ``ivfpq_stream_ingest`` (frozen-index encode + cell-partitioned
-  appends), ``minhash_stream_dedup`` and ``semdedup_stream_dedup``
-  (arrival-order-greedy near-dedup against persisted band/membership
-  survivor stores; history never re-hashed/re-scored), and
-  ``text_index_stream_ingest`` (per-batch postings appends to the
-  bucket-partitioned BM25 inverted index, batch-id-idempotent stats
-  merging; queries over the growing index equal the corpus-scan BM25
-  exactly). All four self-maintain against small-files drift
-  (``maintain_every`` → threshold-gated compaction + ``_swap_dirs``
-  atomic-as-the-store-allows swap with path-cache invalidation),
-  check paths through the Hadoop FS API (store-agnostic), and the
-  dedup/index loops are replay-idempotent under foreachBatch's
-  at-least-once contract.
+- **Continuous ingest into persisted stores** — six loops, each an
+  encode/probe body over one store core (:class:`_IndexStore`):
+  ``ivfpq_stream_ingest`` (frozen IVF×PQ encode into a cell-partitioned
+  code table), ``minhash_stream_dedup`` and ``semdedup_stream_dedup``
+  (arrival-order-greedy near-dedup against persisted band/cell
+  survivor stores), and ``text_index_stream_ingest``,
+  ``ann_index_stream_ingest`` and ``fuzzy_index_stream_ingest``
+  (appends to the persisted BM25, ANN and Ed-Join layouts of the batch
+  builders; queries over the growing index equal the batch op over the
+  union corpus).
+
+The store contract, the same for every ingest loop:
+
+- **Sidecar.** The text (``stats/``), ANN (``meta/``), fuzzy
+  (``stats/``) and ivfpq (``_applied/``, hidden from
+  ``spark.read.parquet(out_dir)``) stores keep a one-row sidecar with
+  the store's statistics and the applied keys — a 16-hex md5 of each
+  ingested input file name, the last ``_APPLIED_KEYS_HORIZON`` of them.
+  It is committed once per batch, after all of the batch's store
+  appends, by write-to-temp + swap (``ops.layout._write_sidecar``).
+- **Replay.** foreachBatch is at-least-once, and after checkpoint loss
+  batch ids renumber from 0 and a re-drain can regroup files, so the
+  FILE is the unit of replay identity: a batch skips every file the
+  sidecar holds and processes the rest. A non-file source keys the
+  batch id; a legacy sidecar without keys falls back to
+  ``last_batch_id``. The minhash and semdedup stores keep no sidecar: a
+  replayed row collides with its stored self in every band/cell and
+  that self-pair kills it, so a replay appends nothing.
+- **Crash window.** A crash between a batch's appends and its commit
+  leaves the appends with their files un-keyed, so the rerun appends
+  them again; the statistics in the sidecar still count every file
+  once. Each read path absorbs the duplicates: text probes dedupe
+  (doc, term) and count df as distinct docs, ANN probes
+  (``ann_topk_indexed``) and ivfpq readers dedupe ids
+  (``dedup_ids=True``), the fuzzy result drops duplicate
+  (id_a, id_b), and the dedup loops' rerun self-kills.
+- **Checkpoint.** text/ANN/fuzzy checkpoint durably under the index
+  (``<index>/_checkpoint``; pass ``checkpoint_dir`` only to simulate
+  checkpoint loss), so a rerun resumes and never redelivers committed
+  files. ivfpq and the dedup loops checkpoint on tmpfs, removed at
+  exit, and rely on the guard / self-kill when rerun.
+- **Maintenance.** ``maintain_every=N``: after every Nth batch's
+  commit, each store dir past its file threshold is compacted
+  (``ops.layout.maybe_compact``) into a temp dir and swapped in
+  (``ops.layout._swap_dirs``, path caches invalidated).
+- **Fences.** A rewrite of two dirs that must agree (text rebucket:
+  stats + postings; fuzzy rebuild: gramdf + postings) runs inside a
+  pending marker. A run that finds the marker redoes the rewrite before
+  its first batch when its self-maintenance flag is on, and refuses
+  otherwise.
+- **Drain.** A timeout raises (a partial persistent store must not
+  look complete), and so does a drain that ran no micro-batch.
 
 Scale notes: windowed shuffle keys are time-bucketed (balanced);
 state is bounded by the watermark horizon; ingest per-batch cost is
@@ -39,12 +77,25 @@ test determinism.
 
 from __future__ import annotations
 
+import os
+import shutil
+import tempfile
 import uuid
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import TimestampNTZType
 
+from filefilter_spark.ops.layout import (
+    _copy_dir,
+    _delete_dir,
+    _dir_exists,
+    _is_directory,
+    _pending_marker,
+    _swap_dirs,
+    _write_sidecar,
+    maybe_compact,
+)
 from filefilter_spark.ops.money import sum_cents
 
 
@@ -68,21 +119,21 @@ def _static_schema_and_ts_fix(spark: SparkSession, path: str):
     return schema, nanos_cols
 
 
-def _events_stream(
+def _file_stream(
     spark: SparkSession,
     path: str,
-    ts_col: str = "ts",
+    schema,
     max_files_per_trigger: int | None = None,
-):
-    schema, nanos_cols = _static_schema_and_ts_fix(spark, path)
-    import os
-
+) -> DataFrame:
+    """Parquet file-stream reader over ``path`` (a directory, or one
+    ``*.parquet`` file). ``max_files_per_trigger`` bounds each
+    micro-batch to N input files — the knob that makes an availableNow
+    drain process a directory in several batches."""
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:
-        # Bounds each micro-batch to N input files — the knob that makes
-        # an availableNow drain process a directory in several batches
-        # (and the hot-reload boundary observable in tests).
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+        reader = reader.option(
+            "maxFilesPerTrigger", str(int(max_files_per_trigger))
+        )
     if path.endswith(".parquet") and not _is_directory(spark, path):
         # Single-FILE dataset: stream-read its parent with a glob on
         # the file name. A Spark-written DIRECTORY named *.parquet must
@@ -90,10 +141,20 @@ def _events_stream(
         # part-*.parquet names and would silently select zero files —
         # so the test is the Hadoop-FS one (store-agnostic), not
         # os.path.isdir.
-        base, fname = os.path.dirname(path) or ".", os.path.basename(path)
-        stream = reader.option("pathGlobFilter", fname).parquet(base)
-    else:
-        stream = reader.parquet(path)
+        return reader.option("pathGlobFilter", os.path.basename(path)).parquet(
+            os.path.dirname(path) or "."
+        )
+    return reader.parquet(path)
+
+
+def _events_stream(
+    spark: SparkSession,
+    path: str,
+    ts_col: str = "ts",
+    max_files_per_trigger: int | None = None,
+):
+    schema, nanos_cols = _static_schema_and_ts_fix(spark, path)
+    stream = _file_stream(spark, path, schema, max_files_per_trigger)
     if ts_col in nanos_cols:
         stream = stream.withColumn(
             ts_col, F.expr(f"timestamp_micros(`{ts_col}` div 1000)")
@@ -106,6 +167,15 @@ def _events_stream(
         # column.
         stream = stream.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
     return stream
+
+
+def _tmpfs_dir(name: str) -> str:
+    """A fresh ephemeral checkpoint dir, on tmpfs when available: a
+    bounded drain's checkpoint need not survive a crash, so its state
+    files go to RAM, not disk. A deployment with a durable sink MUST
+    checkpoint to durable shared storage instead."""
+    base = "/dev/shm" if os.path.isdir("/dev/shm") else tempfile.gettempdir()
+    return os.path.join(base, f"ffspark_ckpt_{name}_{uuid.uuid4().hex[:8]}")
 
 
 def _run_to_memory(
@@ -122,20 +192,10 @@ def _run_to_memory(
     load, the same plan scales to real streams by raising the number.
     The session's batch conf is restored after the query starts.
     """
-    import os
-    import shutil
-    import tempfile
-
     spark = agg.sparkSession
     qname = "ffspark_stream_" + uuid.uuid4().hex[:8]
-    # Checkpoint on tmpfs when available: a bounded drain to a memory
-    # sink is ephemeral by definition, so its state snapshots don't
-    # need to survive a crash — put them on RAM, not disk (~0.2 s per
-    # run of state-store file IO at 8 partitions). A real deployment
-    # with a durable sink MUST checkpoint to durable shared storage
-    # instead; this shortcut is coupled to the memory sink only.
-    ckpt_base = "/dev/shm" if os.path.isdir("/dev/shm") else tempfile.gettempdir()
-    ckpt = os.path.join(ckpt_base, "ffspark_ckpt_" + qname)
+    # a bounded drain to a memory sink is ephemeral by definition
+    ckpt = _tmpfs_dir("stream")
     conf_key = "spark.sql.shuffle.partitions"
     # A bounded availableNow drain doesn't need the trailing no-data
     # micro-batch (it only advances the watermark for append-mode
@@ -430,6 +490,7 @@ def stateful_user_stats_available_now(
     )
 
 
+
 def _fb_scratch() -> str:
     """Fresh per-invocation output dir under the shared atexit-cleaned
     root (:func:`filefilter_spark.io.scratch_root`)."""
@@ -438,104 +499,45 @@ def _fb_scratch() -> str:
     return f"{scratch_root('ffspark_fb_')}/{uuid.uuid4().hex[:8]}"
 
 
-def _dir_exists(spark: SparkSession, path: str) -> bool:
-    """Store-agnostic existence check via the Hadoop FileSystem API —
-    ``os.path.isdir`` is silently False for every scheme-qualified or
-    remote URI (file:, s3a://, hdfs://), the exact bug class
-    ``ops.layout.maybe_compact`` shipped with in r12. Any output-table
-    existence gate in this module must go through here."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(p))
-
-
-def _is_directory(spark: SparkSession, path: str) -> bool:
-    """Store-agnostic directory test (False for files AND missing
-    paths) — the single-file-vs-Spark-written-directory dispatch in
-    the stream readers must not rely on ``os.path.isdir`` (see
-    :func:`_dir_exists`)."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(p) and fs.getFileStatus(p).isDirectory())
-
-
-def _n_data_files(spark: SparkSession, path: str) -> int:
-    """Count visible data files directly under ``path`` (Hadoop FS —
-    any store Spark can read; hidden _SUCCESS/.crc excluded)."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(p):
-        return 0
-    return sum(
-        1
-        for st in fs.listStatus(p)
-        if st.isFile() and not st.getPath().getName()[0] in "._"
+def _drain(
+    stream: DataFrame,
+    handle,
+    name: str,
+    result_dir: str,
+    timeout_sec: int,
+    checkpoint_dir: str | None = None,
+) -> None:
+    """Run ``handle`` as the foreachBatch body of an availableNow drain
+    of ``stream``. ``checkpoint_dir=None`` checkpoints on tmpfs and
+    removes it at exit; a given dir is durable and kept. A timeout
+    raises — the output is persistent, and a partial one returned as
+    if complete would silently lose input — and so does a drain that
+    never wrote ``result_dir`` (no micro-batches ran: no input file
+    matched), instead of failing later on an internal path."""
+    ckpt = checkpoint_dir or _tmpfs_dir(name)
+    query = (
+        stream.writeStream.foreachBatch(handle)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
     )
-
-
-def _swap_dirs(spark: SparkSession, live: str, tmp: str, tag) -> None:
-    """Atomically-as-the-store-allows replace ``live`` with ``tmp`` via
-    two Hadoop ``FileSystem.rename`` calls, keeping the old table aside
-    until the new one is in place (a crash between renames leaves the
-    ``__old`` copy intact). foreachBatch bodies run serially, so a swap
-    never races an append. On an object store the rename tier is a
-    copy — real deployments point a delta/iceberg catalog entry at the
-    compacted location instead; the gate and rewrite are the same."""
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(live)
-    fs = p.getFileSystem(hconf)
-    old = jvm.org.apache.hadoop.fs.Path(f"{live.rstrip('/')}__old{tag}")
-    if not fs.rename(p, old):  # pragma: no cover - fs race
-        raise IOError(f"maintain: could not move {live} aside")
-    if not fs.rename(jvm.org.apache.hadoop.fs.Path(tmp), p):  # pragma: no cover
-        fs.rename(old, p)  # restore; old table was never touched
-        raise IOError(f"maintain: could not swap {tmp} into place")
-    fs.delete(old, True)
-    # Spark's shared FileStatusCache serves the PRE-swap listing to the
-    # next read of this path — later batches would then chase deleted
-    # part files (FAILED_READ_FILE.FILE_NOT_EXIST, caught live by
-    # tools/neardup_stream_probe.py). Invalidate both the listing and
-    # any cached data keyed on the path.
-    spark.catalog.refreshByPath(live)
-
-
-# Replay-guard horizon for the file-keyed idempotence below: how many
-# recently ingested FILE keys the sidecar remembers (16-hex-char keys →
-# the full horizon is ~128 KB of sidecar). Under a durable checkpoint
-# (the ingest default) a replay only redelivers the in-flight batch,
-# so any bound over one batch's file count suffices; the margin covers
-# manual checkpoint-loss reruns of a recent window. A rerun reaching
-# files older than the horizon (e.g. a full re-drain of months of
-# input after deleting the checkpoint) is a REBUILD decision, not a
-# replay — the sidecar cannot arbitrate it.
-_APPLIED_KEYS_HORIZON = 4096
-
-
-def _file_key(name: str) -> str:
-    """16-hex-char content key for one ingested file name."""
-    import hashlib
-
-    return hashlib.md5(name.encode("utf-8")).hexdigest()[:16]
-
-
-def _batch_files(batch_df: DataFrame) -> list[str]:
-    """Sorted distinct input file names of a foreachBatch micro-batch
-    (empty for non-file sources). The FILE — not the batch — is the
-    unit of replay identity for a file-source ingest: ``batch_id``
-    renumbers from 0 when a checkpoint is lost, and a re-drain can
-    REGROUP the same files into differently-shaped batches, so any
-    batch-level key (id or file-set hash) misidentifies a regrouped
-    replay (ADVICE r14). Per-file keys let the ingest drop exactly the
-    already-committed files from a batch and process the rest. Cost:
-    one tiny distinct over the batch's partitions."""
-    rows = (
-        batch_df.select(F.input_file_name().alias("f")).distinct().collect()
-    )
-    return sorted({r["f"] for r in rows if r["f"]})
+    try:
+        if not query.awaitTermination(timeout_sec):  # pragma: no cover
+            raise TimeoutError(
+                f"{name}: availableNow drain did not finish within "
+                f"{timeout_sec}s — the output at {result_dir} is PARTIAL; "
+                "raise timeout_sec and rerun"
+            )
+    finally:
+        if query.isActive:  # pragma: no cover
+            query.stop()
+        if checkpoint_dir is None:
+            shutil.rmtree(ckpt, ignore_errors=True)
+    if not _dir_exists(stream.sparkSession, result_dir):
+        raise ValueError(
+            f"{name}: the availableNow run produced no micro-batches "
+            "(no matching input files?) — nothing to read"
+        )
 
 
 def pipeline_foreach_batch(
@@ -589,35 +591,7 @@ def pipeline_foreach_batch(
         pipe = Pipeline(spark, load_config_str(yaml_str))
         pipe.run(batch_df).df.write.mode("append").parquet(out_dir)
 
-    import os
-    import shutil
-    import tempfile
-    import uuid as _uuid
-
-    # Same tmpfs-checkpoint shortcut as _run_to_memory (bounded drain,
-    # ephemeral output — durable deployments checkpoint durably).
-    ckpt_base = "/dev/shm" if os.path.isdir("/dev/shm") else tempfile.gettempdir()
-    ckpt = os.path.join(ckpt_base, "ffspark_ckpt_fb_" + _uuid.uuid4().hex[:8])
-    query = (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        query.awaitTermination(timeout_sec)
-    finally:
-        if query.isActive:  # pragma: no cover
-            query.stop()
-        shutil.rmtree(ckpt, ignore_errors=True)
-    if not os.path.isdir(out_dir):
-        # Zero micro-batches ran (empty/non-matching input): the handle
-        # never wrote, so read.parquet would raise PATH_NOT_FOUND at an
-        # internal scratch path — masking the real cause. Surface it.
-        raise ValueError(
-            "pipeline_foreach_batch: the availableNow run produced no "
-            "micro-batches (no matching input files?) — nothing to read"
-        )
+    _drain(stream, handle, "pipeline_foreach_batch", out_dir, timeout_sec)
     return spark.read.parquet(out_dir)
 
 
@@ -650,9 +624,6 @@ def rate_soak(
     is correct.
     """
     import json as _json
-    import os
-    import shutil
-    import tempfile
     import time as _time
 
     stream = (
@@ -669,8 +640,7 @@ def rate_soak(
         .agg(F.count("*").alias("n"))
     )
     qname = "soak_" + uuid.uuid4().hex[:8]
-    ckpt_base = "/dev/shm" if os.path.isdir("/dev/shm") else tempfile.gettempdir()
-    ckpt = os.path.join(ckpt_base, "ffspark_ckpt_" + qname)
+    ckpt = _tmpfs_dir("soak")
     # Same conf discipline as _run_to_memory: the state-partition count
     # freezes at the first checkpoint, so set it for start() and restore
     # the session's batch default right after.
@@ -732,6 +702,165 @@ def rate_soak(
     return [out[b] for b in sorted(out)][:num_batches]
 
 
+# Replay-guard horizon: how many recently applied FILE keys a sidecar
+# remembers (16-hex-char keys → ~128 KB of sidecar). Under a durable
+# checkpoint a replay only redelivers the in-flight batch, so any bound
+# over one batch's file count suffices; the margin covers manual
+# checkpoint-loss reruns of a recent window. A rerun reaching files
+# older than the horizon (a full re-drain of months of input after
+# deleting the checkpoint) is a REBUILD decision, not a replay.
+_APPLIED_KEYS_HORIZON = 4096
+
+
+def _file_key(name: str) -> str:
+    """16-hex-char content key for one ingested file name."""
+    import hashlib
+
+    return hashlib.md5(name.encode("utf-8")).hexdigest()[:16]
+
+
+def _batch_files(batch_df: DataFrame) -> list[str]:
+    """Sorted distinct input file names of a micro-batch (empty for
+    non-file sources) — one tiny distinct over the batch."""
+    rows = (
+        batch_df.select(F.input_file_name().alias("f")).distinct().collect()
+    )
+    return sorted({r["f"] for r in rows if r["f"]})
+
+
+class _IndexStore:
+    """The store core every continuous-ingest loop shares: the
+    replay guard, the commit point, the maintenance gate, the pending
+    marker fence and the drain (contract: module docstring).
+
+    ``result_dir`` is the table the loop returns (its absence after the
+    drain means no micro-batch ran). ``sidecar`` is the one-row
+    metadata table that carries the applied keys (None for the dedup
+    stores, whose replay guard is the self-pair kill), with schema
+    ``ddl``; ``load``/``encode`` override the row codec (the ANN meta
+    sidecar is one JSON string). ``compact`` lists the maintenance
+    targets as (dir, partition column or None, sort columns)."""
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        name: str,
+        result_dir: str,
+        sidecar: str | None = None,
+        ddl: str | None = None,
+        compact=(),
+        max_files: int = 16,
+        maintain_every: int | None = None,
+        marker: str | None = None,
+        load=None,
+        encode=None,
+    ):
+        self.spark, self.name, self.result_dir = spark, name, result_dir
+        self.sidecar, self.ddl, self.compact = sidecar, ddl, compact
+        self.max_files, self.maintain_every = max_files, maintain_every
+        self.marker = marker
+        self._load, self._encode = load, encode or (lambda row: row)
+        self.new_keys: list[str] = []
+
+    def read(self) -> dict | None:
+        if self._load is not None:
+            return self._load()
+        if not _dir_exists(self.spark, self.sidecar):
+            return None
+        row = self.spark.read.parquet(self.sidecar).first()
+        return None if row is None else row.asDict()
+
+    def begin(self, batch_df: DataFrame, batch_id: int):
+        """``(the part of the batch not applied yet or None, sidecar)``:
+        drops every file whose key the sidecar already holds; a
+        non-file source keys the batch id, and a legacy sidecar
+        without keys falls back to ``batch_id <= last_batch_id``."""
+        cur = self.read()
+        self.new_keys = []
+        seen = set((cur or {}).get("applied_keys") or [])
+        last = (cur or {}).get("last_batch_id")
+        if not seen and last is not None and batch_id <= int(last):
+            return None, cur
+        files = _batch_files(batch_df)
+        if not files:
+            self.new_keys = [f"batch:{batch_id}"]
+            return (None if self.new_keys[0] in seen else batch_df), cur
+        new = [f for f in files if _file_key(f) not in seen]
+        if not new:
+            return None, cur
+        if len(new) < len(files):
+            batch_df = batch_df.filter(F.input_file_name().isin(new))
+        self.new_keys = [_file_key(f) for f in new]
+        return batch_df, cur
+
+    def write(self, batch_id: int, row: dict, keys=()) -> dict:
+        """Record ``row`` plus ``keys`` in the sidecar (temp + swap)."""
+        row = {
+            **row,
+            "last_batch_id": batch_id,
+            "applied_keys": (list(row.get("applied_keys") or []) + list(keys))[
+                -_APPLIED_KEYS_HORIZON:
+            ],
+        }
+        df = self.spark.createDataFrame([self._encode(row)], self.ddl)
+        _write_sidecar(self.spark, df, self.sidecar, batch_id)
+        return row
+
+    def commit(self, batch_id: int, row: dict | None = None) -> dict | None:
+        """The batch's single commit point, after all its store
+        appends: record ``row`` and the keys :meth:`begin` admitted
+        (stores without a sidecar record nothing), then run the
+        ``maintain_every`` compaction gate. Returns the recorded row."""
+        if self.sidecar is not None and row is not None:
+            row = self.write(batch_id, row, self.new_keys)
+        if self.maintain_every and (batch_id + 1) % self.maintain_every == 0:
+            for live, part, order in self.compact:
+                tmp = f"{live.rstrip('/')}__compact{batch_id}"
+                try:
+                    ran = maybe_compact(
+                        self.spark, live, tmp, part, order,
+                        max_files_per_partition=self.max_files,
+                    )
+                except ValueError:
+                    continue  # no partition dirs yet: all batches empty
+                if not ran:
+                    continue
+                inner = self.sidecar or ""
+                if inner.startswith(live.rstrip("/") + "/"):
+                    # the swap replaces the whole dir: carry the sidecar
+                    _copy_dir(self.spark, inner,
+                              tmp + inner[len(live.rstrip("/")):])
+                _swap_dirs(self.spark, live, tmp, batch_id)
+        return row
+
+    def fence(self, batch_id: int, heal_on: bool, heal, hint: str) -> bool:
+        """Before a batch: a pending marker means a two-dir rewrite
+        crashed half-way. Redo it via ``heal(batch_id)`` when the loop's
+        self-maintenance flag is on (True), refuse otherwise."""
+        if self.marker is None or not _dir_exists(self.spark, self.marker):
+            return False
+        if not heal_on:
+            raise RuntimeError(
+                f"{self.name}: pending marker found at {self.marker!r} — "
+                + hint
+            )
+        heal(batch_id)
+        return True
+
+    def run(
+        self,
+        path: str,
+        handle,
+        max_files_per_trigger: int | None,
+        timeout_sec: int,
+        checkpoint_dir: str | None = None,
+    ) -> None:
+        schema = self.spark.read.parquet(path).schema
+        stream = _file_stream(self.spark, path, schema, max_files_per_trigger)
+        _drain(stream, handle, self.name, self.result_dir, timeout_sec,
+               checkpoint_dir)
+
+
 def ivfpq_stream_ingest(
     spark: SparkSession,
     path: str,
@@ -754,71 +883,28 @@ def ivfpq_stream_ingest(
     code table at ``out_dir`` (default: session scratch — pass a real
     path for a persistent index). Existing data never reshuffles;
     probes over the growing table stay partition-pruned reads.
-    ``availableNow`` drains the bounded test input; an unbounded
-    deployment runs the identical plan with a durable checkpoint and
-    a delta/iceberg sink.
 
-    Per-batch appends accumulate small files per cell.
-    ``maintain_every=N`` (r13) closes that loop IN-STREAM: after
-    every Nth micro-batch the threshold gate
-    (``ops.layout.maybe_compact`` — store-agnostic Hadoop-FS listing,
-    fires only past ``max_files_per_partition`` data files in some
-    ``cell=`` dir) rewrites the table via ``compact_partitioned``
-    into a sibling directory and swaps it in with Hadoop
-    ``FileSystem.rename`` (old table kept aside until the new one is
-    in place, then deleted — a crash between renames leaves the
-    ``__old`` copy intact). foreachBatch bodies run serially, so the
-    swap never races an append. On an object store the rename tier
-    is a copy — real deployments point a delta/iceberg catalog entry
-    at the compacted location instead; the gate and rewrite are the
-    same. Left unset, run ``compact_partitioned(..., "cell",
-    [id_col])`` on your own cadence."""
-    import os
-    import shutil
-    import tempfile
-    import uuid as _uuid
-
+    The applied-keys sidecar lives in ``out_dir/_applied`` (hidden from
+    ``spark.read.parquet(out_dir)``), so rerunning over the same input
+    and ``out_dir`` appends nothing. ``maintain_every=N`` compacts the
+    ``cell=`` dirs past ``max_files_per_partition`` files in-stream;
+    left unset, run ``compact_partitioned(..., "cell", [id_col])`` on
+    your own cadence. Returns the code table."""
     from filefilter_spark.ops.pq import ivfpq_encode_batch
 
-    schema = spark.read.parquet(path).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option(
-            "maxFilesPerTrigger", str(int(max_files_per_trigger))
-        )
-    if path.endswith(".parquet") and not _is_directory(spark, path):
-        # single-FILE dataset: stream its parent with a name glob
-        # (same contract as _events_stream — a directory named
-        # *.parquet must not take this branch; Hadoop-FS test so the
-        # dispatch works on any store Spark can read)
-        base = os.path.dirname(path) or "."
-        reader = reader.option("pathGlobFilter", os.path.basename(path))
-        stream = reader.parquet(base)
-    else:
-        stream = reader.parquet(path)
-    if out_dir is None:
-        out_dir = _fb_scratch() + "/codes"
-
-    def maintain(batch_id: int) -> None:
-        from filefilter_spark.ops.layout import maybe_compact
-
-        base = out_dir.rstrip("/")
-        tmp = f"{base}__compact{batch_id}"
-        try:
-            ran = maybe_compact(
-                spark, out_dir, tmp, "cell", [id_col],
-                max_files_per_partition=max_files_per_partition,
-            )
-        except ValueError:
-            # out_dir has no cell= dirs yet (every batch so far was
-            # empty) — nothing to maintain; the loud contract exists
-            # for user-pointed paths, and this one is internal
-            return
-        if not ran:
-            return
-        _swap_dirs(spark, out_dir, tmp, batch_id)
+    out_dir = out_dir or _fb_scratch() + "/codes"
+    store = _IndexStore(
+        spark, "ivfpq_stream_ingest", out_dir,
+        sidecar=f"{out_dir}/_applied",
+        ddl="last_batch_id long, applied_keys array<string>",
+        compact=[(out_dir, "cell", [id_col])],
+        max_files=max_files_per_partition, maintain_every=maintain_every,
+    )
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
+        batch_df, cur = store.begin(batch_df, batch_id)
+        if batch_df is None:
+            return
         (
             ivfpq_encode_batch(
                 batch_df, codebooks, centroids,
@@ -828,43 +914,129 @@ def ivfpq_stream_ingest(
             .mode("append")
             .parquet(out_dir)
         )
-        if maintain_every and (batch_id + 1) % maintain_every == 0:
-            maintain(batch_id)
+        store.commit(batch_id, cur or {})
 
-    ckpt_base = (
-        "/dev/shm" if os.path.isdir("/dev/shm") else tempfile.gettempdir()
-    )
-    ckpt = os.path.join(
-        ckpt_base, "ffspark_ckpt_ivfpq_" + _uuid.uuid4().hex[:8]
-    )
-    query = (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        # Unlike the windowed-aggregation helpers (whose partial
-        # results are legitimately useful), the output here is a
-        # PERSISTENT INDEX — returning a partially-ingested code
-        # table as if complete would silently lose vectors, so a
-        # timeout is an error, not a shrug.
-        if not query.awaitTermination(timeout_sec):  # pragma: no cover
-            raise TimeoutError(
-                f"ivfpq_stream_ingest: availableNow drain did not "
-                f"finish within {timeout_sec}s — the code table at "
-                f"{out_dir} is PARTIAL; raise timeout_sec and rerun"
-            )
-    finally:
-        if query.isActive:  # pragma: no cover
-            query.stop()
-        shutil.rmtree(ckpt, ignore_errors=True)
-    if not _dir_exists(spark, out_dir):
-        raise ValueError(
-            "ivfpq_stream_ingest: the availableNow run produced no "
-            "micro-batches (no matching input files?) — nothing to read"
-        )
+    store.run(path, handle, max_files_per_trigger, timeout_sec)
     return spark.read.parquet(out_dir)
+
+
+def _greedy_neardup(
+    spark: SparkSession,
+    new: DataFrame,
+    keyed: DataFrame,
+    rows_dir: str,
+    keys_dir: str,
+    keys: list[str],
+    kid: str,
+    id_col: str,
+    cap: int | None,
+    verify,
+    stats: dict | None,
+    want_capped: bool = False,
+) -> list:
+    """Arrival-order-greedy near-dedup of one batch against a survivor
+    store, then the survivors' appends — the body the minhash (LSH
+    bands) and semdedup (cell memberships) loops share.
+
+    ``new`` holds the batch's rows, ``keyed`` (persisted by the caller)
+    its candidate keys as (``kid``, ``*keys``); ``rows_dir``/``keys_dir``
+    hold the stored survivors' rows and keys. ``verify(pairs, rows)``
+    keeps the (id_a, id_b) pairs that really are near-dups, reading
+    ``rows`` for both sides.
+
+    1. batch keys join the stored keys (store keys held by more than
+       ``cap`` survivors dropped first — the degenerate-bucket bound,
+       here also capping the join fan-out); history is never re-keyed;
+    2. the candidates are verified reading ONLY the candidate
+       survivors' rows — batch rows matching history drop;
+    3. the remainder near-dups within the batch through the batch
+       tier's pieces (``_bucket_pairs`` → verify →
+       ``keep_neardup_survivors``, CC min-id representative);
+    4. the survivors' rows and keys append to the store.
+
+    Fills ``stats`` (when given) with ``n_in``/``n_survived``; returns
+    the capped key rows when ``want_capped``."""
+    from pyspark.storagelevel import StorageLevel
+
+    from filefilter_spark.ops.dedup import _bucket_pairs, keep_neardup_survivors
+
+    scope: list = []  # the pair kernel's per-batch cache, freed below
+    capped: list = []
+    try:
+        remaining = new
+        if _dir_exists(spark, rows_dir):
+            seen = spark.read.parquet(keys_dir)
+            if cap is not None:
+                hot = (
+                    seen.groupBy(*keys)
+                    .agg(F.count("*").alias("__n"))
+                    .filter(F.col("__n") > cap)
+                    .select(*keys)
+                )
+                if want_capped:
+                    capped = hot.collect()
+                seen = seen.join(F.broadcast(hot), keys, "left_anti")
+            cross = (
+                keyed.join(seen.withColumnRenamed(kid, "__seen"), keys)
+                .select(F.col(kid).alias("id_a"), F.col("__seen").alias("id_b"))
+                .distinct()
+            )
+            # A REPLAYED row shares every key with its stored self, so it
+            # surfaces here as the self-pair (x, x): kill it on id
+            # equality without a verify (the verify would drop
+            # self-pairs). A replayed batch thus re-kills its own
+            # survivors and appends nothing; only rows whose every key
+            # is capped escape (the standing candidate-recall caveat).
+            killed_replay = cross.filter(
+                F.col("id_a") == F.col("id_b")
+            ).select(F.col("id_a").alias(id_col))
+            cross = cross.filter(F.col("id_a") != F.col("id_b"))
+            # candidates' stored rows, minus the batch's own replayed
+            # ids: a row listed twice would fail the Jaccard verify's
+            # two-sides check, and a replayed non-survivor would then
+            # escape its stored near-dup
+            cand_seen = (
+                spark.read.parquet(rows_dir)
+                .join(
+                    cross.select(F.col("id_b").alias(id_col)).distinct(),
+                    id_col,
+                    "left_semi",
+                )
+                .join(new.select(id_col), id_col, "left_anti")
+            )
+            killed = (
+                verify(cross, new.unionByName(cand_seen))
+                .select(F.col("id_a").alias(id_col))
+                .unionByName(killed_replay)
+                .distinct()
+            )
+            remaining = new.join(killed, id_col, "left_anti")
+        rem_keyed = keyed.join(
+            remaining.select(F.col(id_col).alias(kid)), kid, "left_semi"
+        )
+        pairs = verify(
+            _bucket_pairs(rem_keyed, keys, id_col=kid, max_bucket=cap,
+                          scope=scope),
+            remaining,
+        )
+        survivors = keep_neardup_survivors(remaining, pairs, id_col=id_col)
+        if stats is not None:
+            # Counts BEFORE the store writes: appending to rows_dir
+            # invalidates any cached plan that reads it (Spark
+            # recacheByPath), so a post-write survivors.count() would
+            # recompute against the just-appended store — where every
+            # survivor now self-pairs and "dies".
+            survivors = survivors.persist(StorageLevel.MEMORY_AND_DISK)
+            stats.update(n_in=new.count(), n_survived=survivors.count())
+        survivors.write.mode("append").parquet(rows_dir)
+        keyed.join(
+            survivors.select(F.col(id_col).alias(kid)), kid, "left_semi"
+        ).write.mode("append").parquet(keys_dir)
+        survivors.unpersist()
+    finally:
+        for h in scope:
+            h.unpersist()
+    return capped
 
 
 def minhash_stream_dedup(
@@ -891,268 +1063,69 @@ def minhash_stream_dedup(
     survivors — the arrival-order-greedy policy every streaming dedup
     implements (first copy wins; later paraphrases drop), composed
     from the batch tier's own pieces so the two agree parameter for
-    parameter.
+    parameter (:func:`_greedy_neardup` over LSH bands).
 
-    Per micro-batch (foreachBatch, bodies serial):
+    The store is ``<out_dir>/docs`` (survivor rows) and
+    ``<out_dir>/bands`` (their band table: cross-batch candidates are
+    one equi-join on (band, bucket), ``max_bucket`` capping hot store
+    buckets). Each batch is banded (signatures + tokenize) exactly
+    ONCE; the probe, the within-batch candidates and the band append
+    reuse that persisted frame through id filters — at 100 TB the
+    MinHash fold is the dominant per-batch cost.
 
-    1. band the batch (``ops.dedup.minhash_band_buckets``) — history
-       is NEVER re-hashed: the survivor store persists its band table,
-       so cross-batch candidates are one equi-join of batch bands
-       against stored bands on (band, bucket). Hot store buckets past
-       ``max_bucket`` are dropped first (the same degenerate-bucket
-       bound as the batch op, here also capping the join fan-out).
-    2. exact-verify candidates (``_verify_jaccard``) reading ONLY the
-       candidate survivors' texts (id-semi-join into the store) —
-       batch docs matching history drop.
-    3. near-dup the remainder within-batch (``_bucket_pairs`` over the
-       SAME banding pass + exact verify + ``keep_neardup_survivors`` —
-       CC min-id representative, the batch tier's deterministic rule;
-       the composition is plan-identical to ``minhash_near_dup``).
-    4. append survivors' rows to ``<out_dir>/docs`` and their bands to
-       ``<out_dir>/bands`` — again filters of the step-1 banding.
+    ``on_batch`` (opt-in metrics hook; its counts cost extra jobs) is
+    called after each micro-batch with ``{"batch_id", "n_in",
+    "n_survived", "seconds"}``. ``maintain_every=N`` compacts store
+    dirs past ``max_files_per_store`` data files (docs ordered by id,
+    bands by (band, bucket) so the probe side row-group-prunes).
 
-    The batch is banded (signatures + tokenize) exactly ONCE; steps
-    1/3/4 reuse the persisted band frame through id filters — at
-    100 TB the MinHash fold is the dominant per-batch cost, so the
-    single-pass shape is the difference between 1× and 3× ingest cost.
-
-    ``on_batch`` (opt-in metrics hook) is called after each micro-batch
-    with ``{"batch_id", "seconds", "n_in", "n_survived"}`` — the
-    counts cost extra jobs, so leave it unset in production unless the
-    numbers feed a dashboard; SCALING.md's per-batch cost curve was
-    measured through it.
-
-    Replay-safe under foreachBatch's at-least-once contract: a
-    replayed (or re-ingested) document shares every band with its
-    stored self, surfaces as a self-pair in the candidate join, and is
-    killed on id equality — so reprocessing a batch appends nothing
-    (pinned in tests by running the same arrivals through one store
-    twice). The uncovered window is a crash between the docs and bands
-    appends of ONE batch; a transactional table format (delta/iceberg)
-    closes it.
-
-    ``maintain_every=N``: per-batch appends leave 2 files per batch
-    (docs + bands) forever — the same small-files drift
-    ``ivfpq_stream_ingest`` maintains against. After every Nth batch,
-    any store dir past ``max_files_per_store`` data files (Hadoop-FS
-    listing) is rewritten by ``ops.layout.compact_files`` (docs ordered
-    by id for tight row-group stats; bands by (band, bucket) so the
-    candidate equi-join's probe side row-group-prunes) and swapped in
-    via :func:`_swap_dirs`. Left unset, compact on your own cadence.
-
-    Returns the survivor table. Cost per batch is O(batch + matching
-    buckets + candidates): the store is touched only through the
-    (band, bucket) join and the candidate-id lookup — at 100 TB both
-    store tables would be bucketed by their join key so the probe
-    reads shrink to the touched buckets; the scan-based form here is
-    plan-identical above the exchange. The survivor set depends on
-    arrival order ACROSS batches (inherent to any streaming dedup —
-    the stream defines who arrived first) but is deterministic within
-    a batch; a single-batch drain (``max_files_per_trigger=None``)
-    equals the batch pipeline exactly (pinned in tests).
-    ``availableNow`` drains the bounded test input; an unbounded
-    deployment runs the identical plan with a durable checkpoint.
-    """
-    import os
-    import shutil
-    import tempfile
-    import uuid as _uuid
+    Returns the survivor table. Which copy survives depends on arrival
+    order ACROSS batches (the stream defines who arrived first) and is
+    deterministic within a batch; a single-batch drain equals the
+    batch pipeline exactly (pinned in tests)."""
+    import time as _time
 
     from pyspark.storagelevel import StorageLevel
 
     from filefilter_spark.ops.dedup import (
-        _bucket_pairs,
         _doc_tokens,
         _verify_jaccard,
-        keep_neardup_survivors,
         minhash_band_buckets,
     )
 
-    schema = spark.read.parquet(path).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option(
-            "maxFilesPerTrigger", str(int(max_files_per_trigger))
+    out_dir = out_dir or _fb_scratch() + "/neardup"
+    docs_dir, bands_dir = f"{out_dir}/docs", f"{out_dir}/bands"
+    store = _IndexStore(
+        spark, "minhash_stream_dedup", docs_dir,
+        compact=[(docs_dir, None, [id_col]),
+                 (bands_dir, None, ["band", "bucket", "doc_id"])],
+        max_files=max_files_per_store, maintain_every=maintain_every,
+    )
+
+    def verify(pairs: DataFrame, rows: DataFrame) -> DataFrame:
+        return _verify_jaccard(
+            pairs, _doc_tokens(rows, id_col, text_col, shingle_n), threshold
         )
-    if path.endswith(".parquet") and not _is_directory(spark, path):
-        base = os.path.dirname(path) or "."
-        reader = reader.option("pathGlobFilter", os.path.basename(path))
-        stream = reader.parquet(base)
-    else:
-        stream = reader.parquet(path)
-    if out_dir is None:
-        out_dir = _fb_scratch() + "/neardup"
-    docs_dir = f"{out_dir}/docs"
-    bands_dir = f"{out_dir}/bands"
-
-    def band(df: DataFrame) -> DataFrame:
-        return minhash_band_buckets(
-            df, id_col, text_col, num_hashes, bands, seed, shingle_n
-        )
-
-    def maintain(batch_id: int) -> None:
-        from filefilter_spark.ops.layout import compact_files
-
-        for d, order in (
-            (docs_dir, [id_col]),
-            (bands_dir, ["band", "bucket", "doc_id"]),
-        ):
-            if _n_data_files(spark, d) <= max_files_per_store:
-                continue
-            tmp = f"{d}__compact{batch_id}"
-            compact_files(spark, d, tmp, order)
-            _swap_dirs(spark, d, tmp, batch_id)
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        import time as _time
-
         t0 = _time.time()
         new = batch_df.select(F.col(id_col), F.col(text_col))
-        # ONE banding (hence one signature/tokenize) pass per batch —
-        # the cross-store probe, the within-batch candidates, and the
-        # survivors' band append all reuse it via id filters.
-        new_banded = band(new).persist(StorageLevel.MEMORY_AND_DISK)
-        # bounded-lifetime pair-kernel cache (r17, ADVICE r16): the
-        # kernel persists into this scope instead of localCheckpoint,
-        # so long streams free each batch's blocks deterministically
-        pair_scope: list = []
+        banded = minhash_band_buckets(
+            new, id_col, text_col, num_hashes, bands, seed, shingle_n
+        ).persist(StorageLevel.MEMORY_AND_DISK)
+        stats = None if on_batch is None else {"batch_id": batch_id}
         try:
-            remaining = new
-            if _dir_exists(spark, docs_dir):
-                seen_bands = spark.read.parquet(bands_dir)
-                if max_bucket is not None:
-                    hot = (
-                        seen_bands.groupBy("band", "bucket")
-                        .agg(F.count("*").alias("__n"))
-                        .filter(F.col("__n") > max_bucket)
-                        .select("band", "bucket")
-                    )
-                    seen_bands = seen_bands.join(
-                        F.broadcast(hot), ["band", "bucket"], "left_anti"
-                    )
-                cross = (
-                    new_banded.join(
-                        seen_bands.withColumnRenamed("doc_id", "__seen"),
-                        ["band", "bucket"],
-                    )
-                    .select(
-                        F.col("doc_id").alias("id_a"),
-                        F.col("__seen").alias("id_b"),
-                    )
-                    .distinct()
-                )
-                # Replay idempotence for free: foreachBatch is
-                # at-least-once, and a REPLAYED document shares every
-                # band with its stored self, so it surfaces here as the
-                # self-pair (x, x) — kill it on id equality without any
-                # Jaccard read (the verify path would silently drop
-                # self-pairs: the melted side-join sees 4 rows for one
-                # doc_id and its n_sides == 2 guard rejects them). A
-                # replayed batch thus re-kills its own survivors and
-                # appends nothing; only docs whose every bucket is
-                # hot-capped escape (the standing LSH recall caveat).
-                killed_replay = cross.filter(
-                    F.col("id_a") == F.col("id_b")
-                ).select(F.col("id_a").alias(id_col))
-                cross = cross.filter(F.col("id_a") != F.col("id_b"))
-                cand_seen = spark.read.parquet(docs_dir).join(
-                    cross.select(F.col("id_b").alias(id_col)).distinct(),
-                    id_col,
-                    "left_semi",
-                )
-                toks = _doc_tokens(
-                    new, id_col, text_col, shingle_n
-                ).unionByName(
-                    _doc_tokens(cand_seen, id_col, text_col, shingle_n)
-                )
-                killed = (
-                    _verify_jaccard(cross, toks, threshold)
-                    .select(F.col("id_a").alias(id_col))
-                    .unionByName(killed_replay)
-                    .distinct()
-                )
-                remaining = new.join(killed, id_col, "left_anti")
-            rem_ids = remaining.select(F.col(id_col).alias("doc_id"))
-            pairs_in = _verify_jaccard(
-                _bucket_pairs(
-                    new_banded.join(rem_ids, "doc_id", "left_semi"),
-                    ["band", "bucket"],
-                    max_bucket=max_bucket,
-                    scope=pair_scope,
-                ),
-                _doc_tokens(remaining, id_col, text_col, shingle_n),
-                threshold,
+            _greedy_neardup(
+                spark, new, banded, docs_dir, bands_dir, ["band", "bucket"],
+                "doc_id", id_col, max_bucket, verify, stats,
             )
-            survivors = keep_neardup_survivors(
-                remaining, pairs_in, id_col=id_col
-            )
-            stats = None
-            if on_batch is not None:
-                # Counts BEFORE the store writes: appending to docs_dir
-                # invalidates any cached plan that reads it (Spark
-                # recacheByPath), so a post-write survivors.count()
-                # would recompute against the just-appended store —
-                # where every survivor now self-pairs and "dies".
-                survivors = survivors.persist(StorageLevel.MEMORY_AND_DISK)
-                stats = {
-                    "batch_id": batch_id,
-                    "n_in": new.count(),
-                    "n_survived": survivors.count(),
-                }
-            survivors.write.mode("append").parquet(docs_dir)
-            (
-                new_banded.join(
-                    survivors.select(F.col(id_col).alias("doc_id")),
-                    "doc_id",
-                    "left_semi",
-                )
-                .write.mode("append")
-                .parquet(bands_dir)
-            )
-            if maintain_every and (batch_id + 1) % maintain_every == 0:
-                maintain(batch_id)
-            if stats is not None:
-                survivors.unpersist()
-                # seconds covers the WHOLE batch body, maintenance
-                # included — the probe's flatness claim must price it
-                stats["seconds"] = _time.time() - t0
-                on_batch(stats)
         finally:
-            new_banded.unpersist()
-            for h in pair_scope:
-                h.unpersist()
+            banded.unpersist()
+        store.commit(batch_id)
+        if stats is not None:
+            on_batch({**stats, "seconds": _time.time() - t0})
 
-    ckpt_base = (
-        "/dev/shm" if os.path.isdir("/dev/shm") else tempfile.gettempdir()
-    )
-    ckpt = os.path.join(
-        ckpt_base, "ffspark_ckpt_neardup_" + _uuid.uuid4().hex[:8]
-    )
-    query = (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        # Same contract as ivfpq_stream_ingest: the output is a
-        # PERSISTENT survivor corpus — a partial drain would silently
-        # admit documents whose earlier near-dup never got processed.
-        if not query.awaitTermination(timeout_sec):  # pragma: no cover
-            raise TimeoutError(
-                f"minhash_stream_dedup: availableNow drain did not "
-                f"finish within {timeout_sec}s — the survivor store at "
-                f"{out_dir} is PARTIAL; raise timeout_sec and rerun"
-            )
-    finally:
-        if query.isActive:  # pragma: no cover
-            query.stop()
-        shutil.rmtree(ckpt, ignore_errors=True)
-    if not _dir_exists(spark, docs_dir):
-        raise ValueError(
-            "minhash_stream_dedup: the availableNow run produced no "
-            "micro-batches (no matching input files?) — nothing to read"
-        )
+    store.run(path, handle, max_files_per_trigger, timeout_sec)
     return spark.read.parquet(docs_dir)
 
 
@@ -1177,9 +1150,9 @@ def semdedup_stream_dedup(
     """Streaming SEMANTIC near-dedup (OP-D5 × OP-D3 — SemDeDup's
     production shape, Abbas et al. 2023): continuously ingest
     embeddings, keep only vectors with no exact-cosine near-dup
-    (≥ ``threshold``) among previously ACCEPTED survivors. The exact
-    structural mirror of :func:`minhash_stream_dedup` with KMeans
-    cells in place of LSH bands:
+    (≥ ``threshold``) among previously ACCEPTED survivors — the
+    :func:`minhash_stream_dedup` body (:func:`_greedy_neardup`) with
+    KMeans cells in place of LSH bands:
 
     - ``centroids`` are FROZEN (fit offline or on the first corpus via
       ``ops.similarity.build_ivf_index`` — ``method="lloyd"`` for a
@@ -1188,144 +1161,72 @@ def semdedup_stream_dedup(
       which batch delivered it.
     - the store persists ``<out_dir>/vecs`` (id + embedding) and
       ``<out_dir>/cells`` (the top-``n_assign`` membership table,
-      ``ops.similarity.cell_memberships``) — history is never
-      re-scored: cross-batch candidates are one equi-join of batch
-      memberships against stored memberships on ``cell``, hot cells
-      past ``max_cell`` stored members dropped first (the SemDeDup
-      boundary-recall tradeoff, here also capping join fan-out).
-    - candidates are verified by EXACT cosine
-      (``ops.similarity._pair_cosine_verify``) reading only candidate
-      survivors' vectors; a replayed/re-ingested vector surfaces as
-      its own self-pair and is killed on id equality — replay-safe
-      under foreachBatch's at-least-once contract, like the minhash
-      loop.
-    - the within-batch remainder near-dups via the same
-      memberships → ``_bucket_pairs`` → cosine-verify →
-      ``keep_neardup_survivors`` (CC min-id) pieces as the batch op,
-      so a single-batch drain equals batch ``semantic_dedup`` +
-      survivor materialization exactly (pinned in tests).
-    - ``maintain_every=N`` compacts both store dirs past
-      ``max_files_per_store`` files and swaps them in
-      (:func:`_swap_dirs`, path caches invalidated).
-    - ``on_batch`` is the same opt-in metrics hook as the minhash
-      loop: ``{"batch_id", "seconds", "n_in", "n_survived"}`` per
-      micro-batch (counts taken BEFORE the store writes — see the
-      recacheByPath note there), feeding SCALING.md's cost curve.
-      r16 adds the staleness wire
-      (:func:`ops.similarity.semdedup_cell_drift`, thresholds
-      calibrated by ``tools/semdedup_drift_probe.py``):
+      ``ops.similarity.cell_memberships``); cells past ``max_cell``
+      stored members drop out of candidate generation (the SemDeDup
+      boundary-recall tradeoff). Candidates are verified by EXACT
+      cosine (``ops.similarity._pair_cosine_verify``), so a
+      single-batch drain equals batch ``semantic_dedup`` + survivor
+      materialization exactly (pinned in tests).
+    - ``on_batch`` receives ``{"batch_id", "n_in", "n_survived",
+      "n_capped_cells", "rebuilt", "n_lists", "seconds"}`` plus the
+      :func:`ops.similarity.semdedup_cell_drift` staleness fields:
       ``capped_mass_frac`` — the share of the batch's memberships
-      landing in cells the ``max_cell`` cap has dropped, the DIRECT
-      predictor of silent dup-catch loss — drives ``action`` (ok →
-      degraded → rebuild: refit the centroids ``seeding="kmeanspar"``
-      with re-sized ``n_lists``/``max_cell`` and re-baseline);
-      ``n_capped_cells`` and, when ``built_cell_counts`` is passed
-      (the fit corpus's :func:`ops.similarity.membership_histogram`),
-      the ``tv_distance`` TREND field ride along. TV does not drive
-      the action — measured, a regionally focused ingest reads high
-      TV with perfect recall.
-    - ``rebuild_on_drift=True`` CLOSES the loop (the
-      ``ann_index_stream_ingest`` ``rebuild_source`` twin — here the
-      survivor store IS the full corpus, so no source argument is
-      needed): when a batch's action reads ``rebuild``, the loop
-      refits the centroids over ``<out_dir>/vecs`` at the batch
-      boundary — ``seeding="kmeanspar"``, RE-SIZED to
-      ``max(built, round(sqrt(n_store)))`` lists per SCALING.md's
-      rebuild rule — recomputes the WHOLE cells table under the new
-      model (temp+swap, so a crash mid-rebuild leaves the old layout
-      intact), re-baselines the TV trend from the new store
-      histogram, and assigns every subsequent batch under the fresh
-      centroids. Dup-catch on post-rebuild arrivals returns to
-      baseline (``tools/semdedup_drift_probe.py``'s self-heal
-      scenario). Already-missed pairs are NOT retroactively killed —
-      history is never re-scored, same contract as every other loop.
-      Stats gain ``rebuilt`` and ``n_lists``.
+      landing in capped cells, the direct predictor of silent
+      dup-catch loss — drives ``action`` (ok → degraded → rebuild);
+      with ``built_cell_counts`` (the fit corpus's
+      :func:`ops.similarity.membership_histogram`) the
+      ``tv_distance`` trend rides along without driving the action.
+    - ``rebuild_on_drift=True`` acts on ``action == "rebuild"`` at the
+      batch boundary: refit the centroids over ``<out_dir>/vecs``
+      (``seeding="kmeanspar"``, re-sized to ``max(built,
+      round(sqrt(n_store)))`` lists per SCALING.md's rebuild rule),
+      recompute the WHOLE cells table under the new model (temp +
+      swap), re-baseline the TV trend, and assign later batches under
+      the fresh centroids. Already-missed pairs are NOT retroactively
+      killed — history is never re-scored.
 
-    Returns the survivor table ``(vec_id, embedding)``. Arrival order
-    across batches decides who survives (first copy wins) —
-    deterministic within a batch."""
-    import os
-    import shutil
-    import tempfile
-    import uuid as _uuid
+    Returns the survivor table ``(vec_id, embedding)``."""
+    import math as _math
+    import time as _time
 
-    from pyspark.storagelevel import StorageLevel
-
-    from filefilter_spark.ops.dedup import (
-        _bucket_pairs,
-        keep_neardup_survivors,
-    )
     from filefilter_spark.ops.similarity import (
         _as_double_array,
         _pair_cosine_verify,
+        build_ivf_index,
         cell_memberships,
+        semdedup_cell_drift,
     )
 
-    schema = spark.read.parquet(path).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option(
-            "maxFilesPerTrigger", str(int(max_files_per_trigger))
-        )
-    if path.endswith(".parquet") and not _is_directory(spark, path):
-        base = os.path.dirname(path) or "."
-        reader = reader.option("pathGlobFilter", os.path.basename(path))
-        stream = reader.parquet(base)
-    else:
-        stream = reader.parquet(path)
-    if out_dir is None:
-        out_dir = _fb_scratch() + "/semdedup"
-    vecs_dir = f"{out_dir}/vecs"
-    cells_dir = f"{out_dir}/cells"
-
-    # live model state: rebuild_on_drift swaps in refit centroids (and
-    # a re-read TV baseline) at a batch boundary, so membership
-    # assignment must read through this holder, not the arguments
+    out_dir = out_dir or _fb_scratch() + "/semdedup"
+    vecs_dir, cells_dir = f"{out_dir}/vecs", f"{out_dir}/cells"
+    store = _IndexStore(
+        spark, "semdedup_stream_dedup", vecs_dir,
+        compact=[(vecs_dir, None, [id_col]), (cells_dir, None, ["cell", "id"])],
+        max_files=max_files_per_store, maintain_every=maintain_every,
+    )
+    track = on_batch is not None or rebuild_on_drift
+    # live model state: a rebuild swaps in refit centroids (and a
+    # re-read TV baseline) at a batch boundary
     state = {"cents": centroids, "baseline": built_cell_counts}
 
-    def member(df: DataFrame) -> DataFrame:
-        return cell_memberships(
-            df, state["cents"], n_assign, vec_col, id_col
+    def verify(pairs: DataFrame, rows: DataFrame) -> DataFrame:
+        return _pair_cosine_verify(
+            pairs, rows, _as_double_array(vec_col), id_col, threshold
         )
-
-    def maintain(batch_id: int) -> None:
-        from filefilter_spark.ops.layout import compact_files
-
-        for d, order in (
-            (vecs_dir, [id_col]),
-            (cells_dir, ["cell", "id"]),
-        ):
-            if _n_data_files(spark, d) <= max_files_per_store:
-                continue
-            tmp = f"{d}__compact{batch_id}"
-            compact_files(spark, d, tmp, order)
-            _swap_dirs(spark, d, tmp, batch_id)
 
     def do_rebuild(batch_id: int) -> None:
-        """Act on the staleness signal: refit the frozen centroids
-        over the survivor store (``seeding="kmeanspar"`` — O(log k)
-        passes — RE-SIZED to ``max(built, round(sqrt(n_store)))``
-        lists), recompute the WHOLE cells table under the new model
-        via temp+swap (a crash mid-rebuild leaves the old layout
-        readable), and re-baseline the TV trend from the new store
-        histogram (n_lists-bounded collect)."""
-        import math as _math
-
-        from filefilter_spark.ops.similarity import build_ivf_index
-
-        store = spark.read.parquet(vecs_dir)
-        n_store = store.count()
+        store_df = spark.read.parquet(vecs_dir)
         n_new = max(
             len(state["cents"]),
-            int(round(_math.sqrt(max(1, n_store)))),
+            int(round(_math.sqrt(max(1, store_df.count())))),
         )
         _, cents2 = build_ivf_index(
-            store, n_lists=n_new, vec_col=vec_col, id_col=id_col,
+            store_df, n_lists=n_new, vec_col=vec_col, id_col=id_col,
             method="lloyd", coarse_iters=8, seeding="kmeanspar",
         )
         tmp = f"{cells_dir}__rebuild{batch_id}"
         cell_memberships(
-            store, cents2, n_assign, vec_col, id_col
+            store_df, cents2, n_assign, vec_col, id_col
         ).write.parquet(tmp)
         _swap_dirs(spark, cells_dir, tmp, batch_id)
         state["cents"] = cents2
@@ -1338,166 +1239,46 @@ def semdedup_stream_dedup(
         }
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        import time as _time
-
         t0 = _time.time()
         new = batch_df.select(F.col(id_col), F.col(vec_col))
-        new_cells = member(new).persist()
-        capped_ids: list[int] = []
-        # bounded-lifetime pair-kernel cache (r17, ADVICE r16) — see
-        # the minhash loop's pair_scope note
-        pair_scope: list = []
+        cells = cell_memberships(
+            new, state["cents"], n_assign, vec_col, id_col
+        ).persist()
+        stats = None if on_batch is None else {"batch_id": batch_id}
+        drift = None
         try:
-            remaining = new
-            if _dir_exists(spark, vecs_dir):
-                seen_cells = spark.read.parquet(cells_dir)
-                if max_cell is not None:
-                    hot = (
-                        seen_cells.groupBy("cell")
-                        .agg(F.count("*").alias("__n"))
-                        .filter(F.col("__n") > max_cell)
-                        .select("cell")
-                    )
-                    if on_batch is not None or rebuild_on_drift:
-                        # cap-engagement wire: members of these cells
-                        # are OUT of candidate generation — the
-                        # silent-recall-loss mechanism the staleness
-                        # signal keys off (n_lists-bounded collect)
-                        capped_ids = [
-                            int(r["cell"]) for r in hot.collect()
-                        ]
-                    seen_cells = seen_cells.join(
-                        F.broadcast(hot), ["cell"], "left_anti"
-                    )
-                cross = (
-                    new_cells.join(
-                        seen_cells.withColumnRenamed("id", "__seen"),
-                        ["cell"],
-                    )
-                    .select(
-                        F.col("id").alias("id_a"),
-                        F.col("__seen").alias("id_b"),
-                    )
-                    .distinct()
-                )
-                killed_replay = cross.filter(
-                    F.col("id_a") == F.col("id_b")
-                ).select(F.col("id_a").alias(id_col))
-                cross = cross.filter(F.col("id_a") != F.col("id_b"))
-                cand_seen = spark.read.parquet(vecs_dir).join(
-                    cross.select(F.col("id_b").alias(id_col)).distinct(),
-                    id_col,
-                    "left_semi",
-                )
-                both = new.unionByName(cand_seen)
-                killed = (
-                    _pair_cosine_verify(
-                        cross, both, _as_double_array(vec_col),
-                        id_col, threshold,
-                    )
-                    .select(F.col("id_a").alias(id_col))
-                    .unionByName(killed_replay)
-                    .distinct()
-                )
-                remaining = new.join(killed, id_col, "left_anti")
-            rem_cells = new_cells.join(
-                remaining.select(F.col(id_col).alias("id")), "id",
-                "left_semi",
+            capped = _greedy_neardup(
+                spark, new, cells, vecs_dir, cells_dir, ["cell"], "id",
+                id_col, max_cell, verify, stats, want_capped=track,
             )
-            pairs_in = _pair_cosine_verify(
-                _bucket_pairs(rem_cells, ["cell"], id_col="id",
-                              max_bucket=max_cell, scope=pair_scope),
-                remaining, _as_double_array(vec_col), id_col, threshold,
-            )
-            survivors = keep_neardup_survivors(
-                remaining, pairs_in, id_col=id_col
-            )
-            stats = None
-            drift = None
-            if on_batch is not None or rebuild_on_drift:
-                from filefilter_spark.ops.similarity import (
-                    semdedup_cell_drift,
-                )
-
+            if track:
                 batch_hist = {
                     int(r["cell"]): int(r["n"])
-                    for r in new_cells.groupBy("cell")
+                    for r in cells.groupBy("cell")
                     .agg(F.count(F.lit(1)).alias("n"))
                     .collect()
                 }
                 drift = semdedup_cell_drift(
-                    state["baseline"], batch_hist, capped_ids
+                    state["baseline"], batch_hist,
+                    [int(r["cell"]) for r in capped],
                 )
-            if on_batch is not None:
-                # counts BEFORE the store writes — see the minhash
-                # loop's recacheByPath note
-                survivors = survivors.persist(StorageLevel.MEMORY_AND_DISK)
-                stats = {
-                    "batch_id": batch_id,
-                    "n_in": new.count(),
-                    "n_survived": survivors.count(),
-                    "n_capped_cells": len(capped_ids),
-                    **drift,
-                }
-            survivors.write.mode("append").parquet(vecs_dir)
-            (
-                new_cells.join(
-                    survivors.select(F.col(id_col).alias("id")),
-                    "id",
-                    "left_semi",
-                )
-                .write.mode("append")
-                .parquet(cells_dir)
-            )
-            if maintain_every and (batch_id + 1) % maintain_every == 0:
-                maintain(batch_id)
-            rebuilt = False
-            if (
-                rebuild_on_drift
-                and drift is not None
-                and drift["action"] == "rebuild"
-            ):
-                do_rebuild(batch_id)
-                rebuilt = True
-            if stats is not None:
-                survivors.unpersist()
-                stats["rebuilt"] = rebuilt
-                stats["n_lists"] = len(state["cents"])
-                stats["seconds"] = _time.time() - t0
-                on_batch(stats)
         finally:
-            new_cells.unpersist()
-            for h in pair_scope:
-                h.unpersist()
+            cells.unpersist()
+        store.commit(batch_id)
+        rebuilt = rebuild_on_drift and drift["action"] == "rebuild"
+        if rebuilt:
+            do_rebuild(batch_id)
+        if stats is not None:
+            on_batch({
+                **stats,
+                "n_capped_cells": len(capped),
+                **drift,
+                "rebuilt": rebuilt,
+                "n_lists": len(state["cents"]),
+                "seconds": _time.time() - t0,
+            })
 
-    ckpt_base = (
-        "/dev/shm" if os.path.isdir("/dev/shm") else tempfile.gettempdir()
-    )
-    ckpt = os.path.join(
-        ckpt_base, "ffspark_ckpt_semdedup_" + _uuid.uuid4().hex[:8]
-    )
-    query = (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        if not query.awaitTermination(timeout_sec):  # pragma: no cover
-            raise TimeoutError(
-                f"semdedup_stream_dedup: availableNow drain did not "
-                f"finish within {timeout_sec}s — the survivor store at "
-                f"{out_dir} is PARTIAL; raise timeout_sec and rerun"
-            )
-    finally:
-        if query.isActive:  # pragma: no cover
-            query.stop()
-        shutil.rmtree(ckpt, ignore_errors=True)
-    if not _dir_exists(spark, vecs_dir):
-        raise ValueError(
-            "semdedup_stream_dedup: the availableNow run produced no "
-            "micro-batches (no matching input files?) — nothing to read"
-        )
+    store.run(path, handle, max_files_per_trigger, timeout_sec)
     return spark.read.parquet(vecs_dir)
 
 
@@ -1516,230 +1297,70 @@ def text_index_stream_ingest(
     on_batch=None,
     rebucket_on_growth: bool = False,
 ) -> DataFrame:
-    """Continuous inverted-index maintenance (OP-D5 × OP-D4-bm25): the
-    text twin of :func:`ivfpq_stream_ingest`. Each micro-batch of
-    newly arrived documents is tokenized into (doc, dl, term, tf)
-    postings and APPENDED to the bucket-partitioned layout of
-    ``ops.retrieval.build_text_index`` at ``out_dir`` — existing
-    postings never reshuffle, and ``bm25_topk_indexed`` queries over
-    the growing index stay partition-pruned reads at every point.
+    """Continuous inverted-index maintenance (OP-D5 × OP-D4-bm25): each
+    micro-batch of newly arrived documents is tokenized into (doc, dl,
+    term, tf) postings and APPENDED to the bucket-partitioned layout of
+    ``ops.retrieval.build_text_index`` at ``out_dir``; ``stats/``
+    (n_docs, Σdl — exact int64s) merges additively at the commit.
+    ``bm25_topk_indexed`` queries over the growing index stay
+    partition-pruned reads and equal the corpus-scan BM25 exactly.
 
-    Correctness under streaming semantics:
-
-    * **stats** (n_docs, Σdl) are merged ADDITIVELY per batch from
-      exact int64s, guarded by PER-FILE keys (:func:`_batch_files`):
-      already-committed files are dropped from a replayed batch before
-      anything is computed, so an at-least-once replay is a no-op even
-      after checkpoint loss — where batch ids renumber from 0 AND the
-      rerun regroups files into differently-shaped batches, the case a
-      batch-level guard misidentifies (ADVICE r14; ``last_batch_id``
-      remains as the legacy-layout guard and an observability field).
-    * **postings** can still double-append in the crash window between
-      a batch's append and its stats commit; the query path dedupes
-      (doc, term) on its pruned read and counts df as DISTINCT docs,
-      so scores are exact regardless.
-    * **no terms/ table is maintained** — a cached df would go stale
-      the moment the next batch lands; ``bm25_topk_indexed`` detects
-      the missing table and computes df from the pruned postings
-      instead (exact, always fresh). When the layout came from the
-      BATCH build (which does cache ``terms/``), the first applied
-      append DELETES that cache before writing (r16): leaving it
-      would keep probes scoring with build-era dfs — measured
-      silently wrong on a built-then-grown layout (idf inflation;
-      regression-pinned). The delete-then-append order keeps every
-      crash point exact — the fallback recomputes the same dfs the
-      cache held.
+    * **no terms/ table is maintained** — a cached df would go stale the
+      moment the next batch lands; ``bm25_topk_indexed`` computes df
+      from the pruned postings instead. A layout from the BATCH build
+      (which caches ``terms/``) has that cache deleted before the first
+      applied append.
     * **n_buckets comes from the stats sidecar** when ``out_dir``
-      already holds an index (a mismatched explicit value raises —
-      appending postings hashed with a different bucket count would
-      silently corrupt every probe); on a fresh dir the parameter
-      (default 64) is used and recorded.
-    * **the checkpoint is durable by default** (``checkpoint_dir=None``
-      → ``out_dir/_checkpoint``): a crash-and-rerun resumes batch
-      numbering and never redelivers committed input files. Pass an
-      explicit ephemeral dir only to simulate checkpoint loss.
+      already holds an index (a contradicting explicit value raises —
+      postings hashed with another bucket count would corrupt every
+      probe); on a fresh dir the parameter (default 64) is recorded.
+    * ``on_batch`` fires after each APPLIED micro-batch with
+      ``{batch_id, n_docs, rebucketed, n_buckets}`` plus the
+      :func:`ops.retrieval.text_index_growth` signal (``growth_factor``,
+      ``action``): scores stay exact at any growth, but ``n_buckets``
+      is a frozen SIZING decision, and past ``TEXT_GROWTH_REBUCKET``×
+      the build size ``action="rebucket"`` says re-size it.
+    * ``rebucket_on_growth=True`` acts on that signal at the batch
+      boundary: the stats sidecar records ``n_buckets ×
+      2^⌈log₂ growth⌉`` buckets and re-freezes ``built_n_docs``, then
+      the postings are re-hashed to match — both inside the
+      ``rebucket_pending`` fence (bucket is a pure function of term, so
+      healing re-derives the postings from the sidecar).
 
-    ``maintain_every=N`` closes the small-files loop in-stream, same
-    as the IVF×PQ and near-dup stores: every Nth batch the
-    threshold gate (``ops.layout.maybe_compact``, store-agnostic
-    Hadoop-FS listing) rewrites fragmented buckets sorted by
-    (term, id) and swaps the table in atomically.
+    Returns the postings table at ``out_dir`` after the drain."""
+    import math as _math
 
-    ``on_batch`` (opt-in, r16) fires after each APPLIED micro-batch
-    with ``{batch_id, n_docs}`` plus the
-    :func:`ops.retrieval.text_index_growth` signal (``growth_factor``,
-    ``action``): this layout has no frozen model — scores stay exact
-    at any growth — but ``n_buckets`` is a frozen SIZING decision;
-    past ``TEXT_GROWTH_REBUCKET``× the build size each bucket holds
-    that multiple of its intended postings share (a layout-maintenance
-    drift, not a latency alarm — measured flat probe latency to ×16,
-    SCALING.md); ``action="rebucket"`` says re-size the bucket count
-    at the next rebuild.
-
-    ``rebucket_on_growth=True`` makes the loop ACT on that signal
-    (r16 — completing the self-acting set: ANN rebuilds, SemDeDup
-    refits, fuzzy re-derives, text REBUCKETS): at the triggering
-    batch's boundary the postings store is rewritten with
-    ``n_buckets × 2^⌈log₂ growth⌉`` buckets (term hashing restored to
-    its intended per-bucket share) and the sidecar re-freezes
-    ``built_n_docs`` at the current size, so the signal resets to ok.
-    A probe under the old sidecar against new-bucketed postings would
-    prune the WRONG partitions silently, so the postings and stats
-    swaps are fenced by a ``rebucket_pending`` marker CARRYING the
-    target bucket count: a crash at any point between them heals by
-    an idempotent re-derivation (bucket is a pure function of term)
-    before the next batch; finding the marker with
-    ``rebucket_on_growth=False`` raises rather than probe a
-    possibly-mixed layout. Stats gain ``rebucketed``/``n_buckets``.
-
-    ``availableNow`` drains the bounded test input; an unbounded
-    deployment runs the identical plan with a durable checkpoint.
-    Returns the postings table at ``out_dir`` after the drain.
-    """
-    import os
-
-    import pyspark.sql.functions as F
-
+    from filefilter_spark.ops.retrieval import text_index_growth
     from filefilter_spark.ops.text import tokens
 
-    schema = spark.read.parquet(path).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option(
-            "maxFilesPerTrigger", str(int(max_files_per_trigger))
-        )
-    if path.endswith(".parquet") and not _is_directory(spark, path):
-        base = os.path.dirname(path) or "."
-        reader = reader.option("pathGlobFilter", os.path.basename(path))
-        stream = reader.parquet(base)
-    else:
-        stream = reader.parquet(path)
-
     post_dir = f"{out_dir}/postings"
-    stats_dir = f"{out_dir}/stats"
-
-    # the layout's recorded bucket count is authoritative: appending
-    # postings hashed with a different n_buckets would scatter a term
-    # across buckets and silently break every probe's pruning
-    if _dir_exists(spark, stats_dir):
-        cur0 = spark.read.parquet(stats_dir).first()
-        if (
-            cur0 is not None
-            and "n_buckets" in cur0.__fields__
-            and cur0["n_buckets"] is not None
-        ):
-            stored_nb = int(cur0["n_buckets"])
-            if n_buckets is not None and int(n_buckets) != stored_nb:
-                raise ValueError(
-                    f"text_index_stream_ingest: n_buckets="
-                    f"{int(n_buckets)} contradicts the index's stats "
-                    f"sidecar (built with n_buckets={stored_nb}); omit "
-                    f"the parameter to append with the recorded value"
-                )
-            n_buckets = stored_nb
-    # mutable: rebucket_on_growth swaps in a larger bucket count at a
-    # batch boundary; later batches must hash with the live value
+    store = _IndexStore(
+        spark, "text_index_stream_ingest", post_dir,
+        sidecar=f"{out_dir}/stats",
+        ddl="n_docs long, sum_dl long, n_buckets long, last_batch_id long, "
+            "applied_keys array<string>, built_n_docs long",
+        compact=[(post_dir, "bucket", ["term", id_col])],
+        max_files=max_files_per_partition, maintain_every=maintain_every,
+        marker=f"{out_dir}/rebucket_pending",
+    )
+    stored_nb = (store.read() or {}).get("n_buckets")
+    if stored_nb is not None:
+        if n_buckets is not None and int(n_buckets) != int(stored_nb):
+            raise ValueError(
+                f"text_index_stream_ingest: n_buckets={int(n_buckets)} "
+                f"contradicts the index's stats sidecar (built with "
+                f"n_buckets={int(stored_nb)}); omit the parameter to "
+                "append with the recorded value"
+            )
+        n_buckets = stored_nb
+    # mutable: a rebucket swaps in a larger bucket count at a batch
+    # boundary; later batches must hash with the live value
     nb = {"v": 64 if n_buckets is None else int(n_buckets)}
 
-    def _stats_row():
-        if not _dir_exists(spark, stats_dir):
-            return None
-        return spark.read.parquet(stats_dir).first()
-
-    def _seen_keys(cur) -> list[str]:
-        if (
-            cur is not None
-            and "applied_keys" in cur.__fields__
-            and cur["applied_keys"] is not None
-        ):
-            return list(cur["applied_keys"])
-        return []
-
-    def merge_stats(
-        batch_df: DataFrame, batch_id: int, new_keys: list[str]
-    ) -> tuple[int, int | None]:
-        src = F.lower(F.col(text_col))
-        row = (
-            batch_df.select(F.size(tokens(src)).alias("dl"))
-            .agg(F.count(F.lit(1)).alias("n"), F.sum("dl").alias("s"))
-            .first()
-        )
-        bn, bs = int(row["n"]), int(row["s"] or 0)
-        cur = _stats_row()
-        if bn == 0 and cur is None:
-            return 0, None  # empty first batch: nothing to record yet
-        n0 = int(cur["n_docs"]) if cur is not None else 0
-        s0 = int(cur["sum_dl"]) if cur is not None else 0
-        # growth-signal baseline (r16): frozen by the batch build (or
-        # at this layout's FIRST stream write for stream-created
-        # layouts); legacy sidecars carry None → action "unknown"
-        if cur is None:
-            built = n0 + bn
-        elif (
-            "built_n_docs" in cur.__fields__
-            and cur["built_n_docs"] is not None
-        ):
-            built = int(cur["built_n_docs"])
-        else:
-            built = None
-        keys = (_seen_keys(cur) + new_keys)[-_APPLIED_KEYS_HORIZON:]
-        # write-to-temp + swap, NOT overwrite-in-place: a crash mid
-        # overwrite would leave stats/ empty — losing the cumulative
-        # (n_docs, sum_dl) AND the replay guard, so a restart would
-        # rebuild stats from only the replayed batches and silently
-        # skew avgdl/idf for every later query (ADVICE r13). Same
-        # atomic-as-the-store-allows contract as the postings
-        # compaction.
-        tmp = f"{stats_dir.rstrip('/')}__tmp{batch_id}"
-        spark.createDataFrame(
-            [(n0 + bn, s0 + bs, int(nb["v"]), batch_id, keys, built)],
-            "n_docs long, sum_dl long, n_buckets long, "
-            "last_batch_id long, applied_keys array<string>, "
-            "built_n_docs long",
-        ).coalesce(1).write.mode("overwrite").parquet(tmp)
-        if _dir_exists(spark, stats_dir):
-            _swap_dirs(spark, stats_dir, tmp, batch_id)
-        else:
-            jvm = spark._jvm
-            hconf = spark._jsc.hadoopConfiguration()
-            src_p = jvm.org.apache.hadoop.fs.Path(tmp)
-            if not src_p.getFileSystem(hconf).rename(
-                src_p, jvm.org.apache.hadoop.fs.Path(stats_dir)
-            ):  # pragma: no cover - fs race
-                raise IOError(f"merge_stats: could not move {tmp} into place")
-            spark.catalog.refreshByPath(stats_dir)
-        return n0 + bn, built
-
-    def maintain(batch_id: int) -> None:
-        from filefilter_spark.ops.layout import maybe_compact
-
-        tmp = f"{post_dir.rstrip('/')}__compact{batch_id}"
-        try:
-            ran = maybe_compact(
-                spark, post_dir, tmp, "bucket", ["term", id_col],
-                max_files_per_partition=max_files_per_partition,
-            )
-        except ValueError:
-            return  # no bucket= dirs yet (all batches empty so far)
-        if ran:
-            _swap_dirs(spark, post_dir, tmp, batch_id)
-
-    marker_dir = f"{out_dir}/rebucket_pending"
-
-    def _mark_pending(on: bool) -> None:
-        jvm = spark._jvm
-        p = jvm.org.apache.hadoop.fs.Path(marker_dir)
-        fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-        if on:
-            fs.mkdirs(p)
-        else:
-            fs.delete(p, True)
-
-    def _rewrite_postings(batch_id: int, target: int) -> None:
+    def rewrite_postings(batch_id: int, target: int) -> None:
         """Re-hash the WHOLE postings store to ``target`` buckets
-        (bucket is a pure function of term — idempotent from any
-        current physical layout), temp+swap."""
-        tmp = f"{post_dir.rstrip('/')}__rebuckettmp"
+        (idempotent from any current physical layout), temp+swap."""
+        tmp = f"{post_dir}__rebuckettmp"
         (
             spark.read.parquet(post_dir)
             .drop("bucket")
@@ -1753,83 +1374,26 @@ def text_index_stream_ingest(
             .parquet(tmp)
         )
         _swap_dirs(spark, post_dir, tmp, batch_id)
-
-    def do_rebucket(batch_id: int, target: int) -> None:
-        """Act on the growth signal: re-size the frozen bucket count.
-        Stats swap FIRST (``n_buckets`` is authoritative and
-        ``built_n_docs`` re-freezes at the current size, resetting the
-        signal), postings rewrite second — a crash anywhere in between
-        leaves the ``rebucket_pending`` marker, and healing simply
-        re-derives the postings bucketing FROM the stats sidecar
-        (idempotent), so no crash point can leave probes pruning the
-        wrong partitions silently."""
-        _mark_pending(True)
-        cur = _stats_row()
-        tmp = f"{stats_dir.rstrip('/')}__rebuckettmp"
-        spark.createDataFrame(
-            [(int(cur["n_docs"]), int(cur["sum_dl"]), int(target),
-              int(cur["last_batch_id"]), _seen_keys(cur),
-              int(cur["n_docs"]))],
-            "n_docs long, sum_dl long, n_buckets long, "
-            "last_batch_id long, applied_keys array<string>, "
-            "built_n_docs long",
-        ).coalesce(1).write.mode("overwrite").parquet(tmp)
-        _swap_dirs(spark, stats_dir, tmp, batch_id)
-        _rewrite_postings(batch_id, target)
-        _mark_pending(False)
         nb["v"] = int(target)
 
+    def heal(batch_id: int) -> None:
+        with _pending_marker(spark, store.marker):
+            rewrite_postings(batch_id, int(store.read()["n_buckets"]))
+
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        if _dir_exists(spark, marker_dir):
-            if not rebucket_on_growth:
-                raise RuntimeError(
-                    "text_index_stream_ingest: rebucket_pending marker "
-                    f"found at {marker_dir!r} — a prior rebucket "
-                    "crashed between its stats/postings swaps and "
-                    "probes may prune the wrong partitions. Rerun with "
-                    "rebucket_on_growth=True to heal (postings are "
-                    "re-derived from the authoritative stats sidecar)."
-                )
-            cur0 = _stats_row()
-            tgt = int(cur0["n_buckets"])
-            _rewrite_postings(batch_id, tgt)
-            _mark_pending(False)
-            nb["v"] = tgt
-        files = _batch_files(batch_df)
-        cur = _stats_row()
-        seen = _seen_keys(cur)
-        if files:
-            if not seen and cur is not None and (
-                "last_batch_id" in cur.__fields__
-                and cur["last_batch_id"] is not None
-                and batch_id <= int(cur["last_batch_id"])
-            ):
-                return  # legacy layout (no keys yet): batch-id guard
-            new = [f for f in files if _file_key(f) not in seen]
-            if not new:
-                return  # every file already committed: replay no-op
-            if len(new) < len(files):
-                # partial replay (checkpoint loss regrouped batches):
-                # process only the files the sidecar has not committed
-                batch_df = batch_df.filter(F.input_file_name().isin(new))
-            new_keys = [_file_key(f) for f in new]
-        else:
-            # non-file source: fall back to batch-id keying
-            bk = f"batch:{batch_id}"
-            if bk in seen:
-                return
-            if not seen and cur is not None and (
-                "last_batch_id" in cur.__fields__
-                and cur["last_batch_id"] is not None
-                and batch_id <= int(cur["last_batch_id"])
-            ):
-                return
-            new_keys = [bk]
+        store.fence(
+            batch_id, rebucket_on_growth, heal,
+            "a prior rebucket crashed between its stats/postings swaps "
+            "and probes may prune the wrong partitions. Rerun with "
+            "rebucket_on_growth=True to heal (postings are re-derived "
+            "from the authoritative stats sidecar).",
+        )
+        batch_df, cur = store.begin(batch_df, batch_id)
+        if batch_df is None:
+            return
         src = F.lower(F.col(text_col))
         postings = (
-            batch_df.select(
-                F.col(id_col), tokens(src).alias("toks")
-            )
+            batch_df.select(F.col(id_col), tokens(src).alias("toks"))
             .select(
                 id_col,
                 F.size("toks").alias("dl"),
@@ -1837,84 +1401,56 @@ def text_index_stream_ingest(
             )
             .groupBy(id_col, "dl", "term")
             .agg(F.count(F.lit(1)).alias("tf"))
-            .withColumn(
-                "bucket", F.pmod(F.xxhash64("term"), F.lit(nb["v"]))
-            )
+            .withColumn("bucket", F.pmod(F.xxhash64("term"), F.lit(nb["v"])))
         )
         if _dir_exists(spark, f"{out_dir}/terms"):
-            # the BATCH build caches per-term dfs in terms/; an append
-            # makes that cache stale and a probe would keep scoring
-            # with build-era dfs — measured silently wrong (idf
-            # inflation, r16 regression test). The streaming design
-            # computes df fresh from the pruned postings
-            # (_indexed_term_dfs' fallback), so drop the cache BEFORE
-            # the append that would invalidate it: a crash in between
-            # leaves the index exact either way (the fallback returns
-            # the same dfs the cache held).
-            jvm = spark._jvm
-            tp = jvm.org.apache.hadoop.fs.Path(f"{out_dir}/terms")
-            tp.getFileSystem(spark._jsc.hadoopConfiguration()).delete(
-                tp, True
-            )
-            spark.catalog.refreshByPath(f"{out_dir}/terms")
+            # the batch build's per-term df cache goes stale with this
+            # append (probes would score with build-era dfs): drop it
+            # BEFORE appending — a crash in between leaves the index
+            # exact, the fallback recomputes the same dfs
+            _delete_dir(spark, f"{out_dir}/terms")
         postings.write.partitionBy("bucket").mode("append").parquet(post_dir)
-        n_total, built = merge_stats(batch_df, batch_id, new_keys)
-        if maintain_every and (batch_id + 1) % maintain_every == 0:
-            maintain(batch_id)
+        agg = (
+            batch_df.select(F.size(tokens(src)).alias("dl"))
+            .agg(F.count(F.lit(1)).alias("n"), F.sum("dl").alias("s"))
+            .first()
+        )
+        bn, bs = int(agg["n"]), int(agg["s"] or 0)
+        row = None
+        if cur is not None or bn:  # an empty first batch records nothing
+            cur = cur or {"n_docs": 0, "sum_dl": 0, "built_n_docs": bn}
+            row = {
+                **cur,
+                "n_docs": int(cur["n_docs"]) + bn,
+                "sum_dl": int(cur["sum_dl"]) + bs,
+                "n_buckets": nb["v"],
+            }
+        row = store.commit(batch_id, row) or {"n_docs": 0}
         growth = None
         if on_batch is not None or rebucket_on_growth:
-            from filefilter_spark.ops.retrieval import text_index_growth
-
-            growth = text_index_growth(n_total, built)
-        rebucketed = False
-        if (
-            rebucket_on_growth
-            and growth is not None
-            and growth["action"] == "rebucket"
-        ):
-            import math as _math
-
-            target = int(nb["v"]) * (
-                1 << max(1, _math.ceil(_math.log2(
-                    max(2.0, growth["growth_factor"])
-                )))
-            )
-            do_rebucket(batch_id, target)
-            rebucketed = True
+            growth = text_index_growth(row["n_docs"], row.get("built_n_docs"))
+        rebucketed = rebucket_on_growth and growth["action"] == "rebucket"
+        if rebucketed:
+            target = nb["v"] * (1 << max(1, _math.ceil(_math.log2(
+                max(2.0, growth["growth_factor"])
+            ))))
+            # stats FIRST (n_buckets is authoritative, built_n_docs
+            # re-freezes so the signal resets), postings second
+            with _pending_marker(spark, store.marker):
+                store.write(batch_id, {**row, "n_buckets": target,
+                                       "built_n_docs": row["n_docs"]})
+                rewrite_postings(batch_id, target)
         if on_batch is not None:
             on_batch({
                 "batch_id": batch_id,
-                "n_docs": n_total,
+                "n_docs": row["n_docs"],
                 **growth,
                 "rebucketed": rebucketed,
-                "n_buckets": int(nb["v"]),
+                "n_buckets": nb["v"],
             })
 
-    # durable by default, co-located with the index (ADVICE r14): the
-    # file source then tracks committed input across restarts, so a
-    # crash-and-rerun resumes instead of renumbering batches from 0
-    ckpt = checkpoint_dir or f"{out_dir}/_checkpoint"
-    query = (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        if not query.awaitTermination(timeout_sec):  # pragma: no cover
-            raise TimeoutError(
-                f"text_index_stream_ingest: availableNow drain did not "
-                f"finish within {timeout_sec}s — the index at {out_dir} "
-                f"is PARTIAL; raise timeout_sec and rerun"
-            )
-    finally:
-        if query.isActive:  # pragma: no cover
-            query.stop()
-    if not _dir_exists(spark, post_dir):
-        raise ValueError(
-            "text_index_stream_ingest: the availableNow run produced no "
-            "micro-batches (no matching input files?) — nothing to read"
-        )
+    store.run(path, handle, max_files_per_trigger, timeout_sec,
+              checkpoint_dir or f"{out_dir}/_checkpoint")
     return spark.read.parquet(post_dir)
 
 
@@ -1934,173 +1470,76 @@ def ann_index_stream_ingest(
     rebuild_kwargs: dict | None = None,
 ) -> DataFrame:
     """Continuous maintenance of a PERSISTED :func:`ops.pq.build_ann_index`
-    layout (OP-D5 × OP-A8-annindex) — the lifecycle twin of
-    :func:`text_index_stream_ingest`: each micro-batch of newly arrived
+    layout (OP-D5 × OP-A8-annindex): each micro-batch of newly arrived
     embeddings is assigned + encoded against the layout's FROZEN model
     (``ivfpq_encode_batch`` over the meta sidecar's codebooks/centroids
     — grid-exact, so a vector gets the same codes no matter which batch
     delivered it) and appended to the cell-partitioned ``codes/``
-    table; ``ann_topk_indexed`` probes the growing layout unchanged.
+    table; the meta sidecar's ``cell_counts`` (the auto-refine sizing
+    histogram) merge additively at the commit. ``ann_topk_indexed``
+    probes the growing layout unchanged. Growing a corpus far past its
+    fit distribution is a rebuild decision.
 
-    Correctness under streaming semantics:
+    ``on_batch`` (opt-in) is called after each non-empty micro-batch
+    with ``{batch_id, n_in, applied, rebuilt, n_lists, seconds}`` plus
+    the :func:`ops.pq.ann_index_drift` staleness signal (driver-side
+    arithmetic over the merged meta, zero extra jobs): a deployment
+    alerts on ``action != "ok"`` instead of learning about drift from
+    falling recall. The meta also persists the verdict
+    (``last_drift``/``recommended_n_probe``) for external probers.
 
-    * **meta cell_counts** (the auto-refine sizing histogram) merge
-      additively per batch, guarded by PER-FILE keys
-      (:func:`_batch_files`): already-committed files are dropped from
-      a replayed batch before encoding, so an at-least-once replay is
-      a no-op even after checkpoint loss — where batch ids renumber
-      from 0 AND the rerun regroups files into differently-shaped
-      batches, the case a batch-level guard misidentifies (ADVICE r14;
-      ``last_batch_id`` remains for legacy layouts/observability) —
-      and the meta rewrite goes through a temp dir +
-      atomic-as-the-store-allows swap (the merge_stats contract): a
-      crash mid-update cannot lose the model.
-    * **the checkpoint is durable by default** (``checkpoint_dir=None``
-      → ``index_path/_checkpoint``): a crash-and-rerun resumes batch
-      numbering and never redelivers committed input files. Pass an
-      explicit ephemeral dir only to simulate checkpoint loss.
-    * **codes** can still double-append in the crash window between a
-      batch's append and its meta commit; the probe path dedupes ids
-      on its PRUNED read (``ann_topk_indexed`` passes
-      ``dedup_ids=True``), so results are exact regardless.
-    * the model itself (codebooks/centroids) is FROZEN — growing a
-      corpus far past its fit distribution is a rebuild decision, the
-      same contract as the batch layout.
-
-    ``maintain_every=N`` threshold-compacts fragmented cells in-stream
-    (``ops.layout.maybe_compact`` + swap), same as every other store.
-    ``on_batch`` (opt-in metrics hook, the minhash/semdedup contract)
-    is called after each applied micro-batch with ``{batch_id, n_in,
-    seconds}`` plus the :func:`ops.pq.ann_index_drift` staleness
-    signal computed from the just-merged meta (driver-side arithmetic,
-    zero extra jobs) — the operational wire for the widen-probe /
-    rebuild policy: a deployment alerts on ``action != "ok"`` instead
-    of learning about drift from falling recall. The merged meta also
-    persists the verdict (``last_drift``/``recommended_n_probe``), so
-    external probers read the widened width from the sidecar without
-    recomputing (``n_probe="auto"`` already derives it live).
-
-    **Auto-rebuild (r16 — the drift signal's ACTIVE half, VERDICT r15
-    #2):** pass ``rebuild_source`` (path or list of parquet paths that
-    together hold the FULL current corpus of raw vectors — the
-    canonical vectors table a real deployment keeps; the frozen codes
-    are lossy, so a refit cannot come from the index itself) and the
-    loop acts on its own ``action == "rebuild"`` signal at the batch
-    boundary where it fires: a crash-safe temp+swap
+    **Auto-rebuild:** pass ``rebuild_source`` (path or list of parquet
+    paths that together hold the FULL current corpus of raw vectors —
+    the frozen codes are lossy, so a refit cannot come from the index
+    itself) and the loop acts on its own ``action == "rebuild"`` at the
+    batch boundary where it fires: a temp+swap
     :func:`ops.pq.build_ann_index` re-fit over the whole source,
     RE-SIZED (``n_lists = max(built, round(sqrt(n)))`` — SCALING.md's
-    rebuild rule) and RE-SEEDED (``seeding="kmeanspar"`` — the
-    O(log k)-pass initializer; both overridable via
-    ``rebuild_kwargs``), after which the signal re-freezes at ~0 and
-    probes re-prune. Every file currently in ``rebuild_source`` is
-    marked applied post-rebuild, so a file the rebuild already indexed
-    never double-ingests even if the stream delivers it later; the
-    rebuild runs inside ``foreachBatch``, serialized with ingest.
-    Without ``rebuild_source`` the signal stays alert-only.
-    ``availableNow`` drains the bounded test input; an unbounded
-    deployment runs the identical plan with a durable checkpoint.
-    Returns the codes table at ``index_path`` after the drain.
-    """
+    rebuild rule) and RE-SEEDED (``seeding="kmeanspar"``; both
+    overridable via ``rebuild_kwargs``), after which the signal
+    re-freezes at ~0. Every file in ``rebuild_source`` is then marked
+    applied, so a file the rebuild indexed never double-ingests when
+    the stream delivers it later. Without ``rebuild_source`` the signal
+    stays alert-only. Returns the codes table at ``index_path``."""
     import json as _json
-    import os
+    import math as _math
     import time as _time
 
-    from filefilter_spark.ops.pq import ivfpq_encode_batch, load_ann_meta
+    from filefilter_spark.ops.pq import (
+        ann_index_drift,
+        auto_n_probe,
+        build_ann_index,
+        ivfpq_encode_batch,
+        load_ann_meta,
+    )
 
-    meta = load_ann_meta(spark, index_path)
     codes_dir = f"{index_path}/codes"
-    meta_dir = f"{index_path}/meta"
+    store = _IndexStore(
+        spark, "ann_index_stream_ingest", codes_dir,
+        sidecar=f"{index_path}/meta", ddl="meta string",
+        load=lambda: load_ann_meta(spark, index_path),
+        encode=lambda meta: {"meta": _json.dumps(meta)},
+        compact=[(codes_dir, "cell", [id_col])],
+        max_files=max_files_per_partition, maintain_every=maintain_every,
+    )
 
-    schema = spark.read.parquet(path).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option(
-            "maxFilesPerTrigger", str(int(max_files_per_trigger))
-        )
-    if path.endswith(".parquet") and not _is_directory(spark, path):
-        base = os.path.dirname(path) or "."
-        reader = reader.option("pathGlobFilter", os.path.basename(path))
-        stream = reader.parquet(base)
-    else:
-        stream = reader.parquet(path)
-
-    def merge_meta(
-        cell_adds: dict[int, int],
-        batch_id: int,
-        cur: dict,
-        new_keys: list[str],
-    ) -> dict:
-        keys = list(cur.get("applied_keys") or [])
-        counts = dict(cur["cell_counts"])
-        for c, n in cell_adds.items():
-            counts[c] = counts.get(c, 0) + n
-        cur = dict(cur)
-        cur["cell_counts"] = {str(c): n for c, n in counts.items()}
-        built = cur.get("built_cell_counts")
-        if built:
-            cur["built_cell_counts"] = {
-                str(c): int(n) for c, n in built.items()
-            }
-        cur["last_batch_id"] = batch_id
-        cur["applied_keys"] = (keys + new_keys)[-_APPLIED_KEYS_HORIZON:]
-        # persist the drift verdict next to the histograms it is
-        # computed from (VERDICT r15 #2): external probers read the
-        # recommendation from the sidecar; n_probe="auto" derives the
-        # same width live either way. Driver arithmetic, zero jobs.
-        from filefilter_spark.ops.pq import ann_index_drift, auto_n_probe
-
-        probe_view = {**cur, "cell_counts": counts}
-        cur["last_drift"] = ann_index_drift(probe_view)
-        cur["recommended_n_probe"] = auto_n_probe(probe_view)
-        out = {
-            **cur,
-            "cell_counts": {int(c): n for c, n in counts.items()},
-            "built_cell_counts": (
-                {int(c): int(n) for c, n in built.items()} if built else built
-            ),
-        }
-        tmp = f"{meta_dir.rstrip('/')}__tmp{batch_id}"
-        spark.createDataFrame(
-            [(_json.dumps(cur),)], "meta string"
-        ).coalesce(1).write.mode("overwrite").parquet(tmp)
-        _swap_dirs(spark, meta_dir, tmp, batch_id)
-        return out
-
-    def maintain(batch_id: int) -> None:
-        from filefilter_spark.ops.layout import maybe_compact
-
-        tmp = f"{codes_dir.rstrip('/')}__compact{batch_id}"
-        try:
-            ran = maybe_compact(
-                spark, codes_dir, tmp, "cell", [id_col],
-                max_files_per_partition=max_files_per_partition,
-            )
-        except ValueError:
-            return
-        if ran:
-            _swap_dirs(spark, codes_dir, tmp, batch_id)
+    def with_drift(meta: dict) -> dict:
+        # the verdict persists next to the histograms it is computed
+        # from; n_probe="auto" derives the same width live either way
+        return {**meta, "last_drift": ann_index_drift(meta),
+                "recommended_n_probe": auto_n_probe(meta)}
 
     def do_rebuild(batch_id: int, merged: dict) -> dict:
-        """Act on the drift signal: temp+swap re-fit over the full
-        ``rebuild_source`` corpus, RE-SIZED and RE-SEEDED per the
-        SCALING.md rebuild rule, then mark every source file applied
-        (the rebuild indexed them — the stream must not re-ingest
-        one it later delivers) and re-freeze the signal."""
-        import math as _math
-
-        from filefilter_spark.ops.pq import build_ann_index
-
         srcs = (
             [rebuild_source]
             if isinstance(rebuild_source, str)
             else list(rebuild_source)
         )
         full = spark.read.parquet(*srcs)
-        n_total = full.count()
         kw = dict(
             n_lists=max(
                 int(merged["n_lists"]),
-                int(round(_math.sqrt(max(1, n_total)))),
+                int(round(_math.sqrt(max(1, full.count())))),
             ),
             m=int(merged["m"]),
             k=int(merged["k"]),
@@ -2115,58 +1554,22 @@ def ann_index_stream_ingest(
             coarse_iters=max(int(merged.get("coarse_iters", 2)), 8),
             seeding="kmeanspar",
         )
-        if rebuild_kwargs:
-            kw.update(rebuild_kwargs)
+        kw.update(rebuild_kwargs or {})
         build_ann_index(full, index_path, **kw)
-        files = sorted({
-            r["f"]
-            for r in full.select(
-                F.input_file_name().alias("f")
-            ).distinct().collect()
-            if r["f"]
-        })
-        keys = [_file_key(f) for f in files]
-        fresh = load_ann_meta(spark, index_path)
-        return merge_meta({}, batch_id, fresh, keys)
+        keys = [_file_key(f) for f in _batch_files(full)]
+        return store.write(
+            batch_id, with_drift(load_ann_meta(spark, index_path)), keys
+        )
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        t0 = _time.time() if on_batch is not None else 0.0
-        files = _batch_files(batch_df)
-        cur = load_ann_meta(spark, index_path)
-        seen = list(cur.get("applied_keys") or [])
-        applied = True
-        new: list[str] = []
-        if files:
-            if not seen and batch_id <= int(cur.get("last_batch_id", -1)):
-                applied = False  # legacy layout (no keys): batch-id guard
-            else:
-                new = [f for f in files if _file_key(f) not in seen]
-                if not new:
-                    applied = False  # every file committed: replay no-op
-                elif len(new) < len(files):
-                    # partial replay (checkpoint loss regrouped
-                    # batches): encode only the uncommitted files
-                    batch_df = batch_df.filter(
-                        F.input_file_name().isin(new)
-                    )
-            new_keys = [_file_key(f) for f in new]
-        else:
-            bk = f"batch:{batch_id}"
-            if bk in seen or (
-                not seen and batch_id <= int(cur.get("last_batch_id", -1))
-            ):
-                applied = False
-            new_keys = [bk]
-        merged = None
-        if applied:
+        t0 = _time.time()
+        batch_df, cur = store.begin(batch_df, batch_id)
+        merged, n_in, rebuilt = None, 0, False
+        if batch_df is not None:
             enc = ivfpq_encode_batch(
-                batch_df,
-                meta["codebooks"],
-                meta["centroids"],
-                vec_col=vec_col,
-                id_col=id_col,
-                scale=meta["scale"],
-                residual=meta["residual"],
+                batch_df, cur["codebooks"], cur["centroids"],
+                vec_col=vec_col, id_col=id_col,
+                scale=cur["scale"], residual=cur["residual"],
             )
             # cell histogram BEFORE the append (n_lists-bounded collect)
             adds = {
@@ -2178,75 +1581,54 @@ def ann_index_stream_ingest(
             if not adds:
                 return  # empty batch: nothing to append or merge
             enc.write.partitionBy("cell").mode("append").parquet(codes_dir)
-            merged = merge_meta(adds, batch_id, cur, new_keys)
-            if maintain_every and (batch_id + 1) % maintain_every == 0:
-                maintain(batch_id)
-        rebuilt = False
-        if (
-            merged is not None
-            and rebuild_source is not None
-            and merged["last_drift"]["action"] == "rebuild"
-        ):
-            merged = do_rebuild(batch_id, merged)
-            rebuilt = True
+            counts = dict(cur["cell_counts"])
+            for c, n in adds.items():
+                counts[c] = counts.get(c, 0) + n
+            merged = store.commit(
+                batch_id, with_drift({**cur, "cell_counts": counts})
+            )
+            n_in = sum(adds.values())
+            if (
+                rebuild_source is not None
+                and merged["last_drift"]["action"] == "rebuild"
+            ):
+                merged = do_rebuild(batch_id, merged)
+                rebuilt = True
         if on_batch is not None:
-            from filefilter_spark.ops.pq import ann_index_drift
-
+            meta = merged or cur
             on_batch({
                 "batch_id": batch_id,
-                "n_in": sum(adds.values()) if merged is not None else 0,
+                "n_in": n_in,
                 "applied": merged is not None,
                 "rebuilt": rebuilt,
-                "n_lists": int(
-                    (merged if merged is not None else cur).get(
-                        "n_lists", 0
-                    )
-                ),
+                "n_lists": int(meta.get("n_lists", 0)),
                 "seconds": _time.time() - t0,
-                **ann_index_drift(merged if merged is not None else cur),
+                **ann_index_drift(meta),
             })
 
-    # durable by default, co-located with the index (ADVICE r14): see
-    # text_index_stream_ingest — committed input never redelivers
-    ckpt = checkpoint_dir or f"{index_path}/_checkpoint"
-    query = (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        if not query.awaitTermination(timeout_sec):  # pragma: no cover
-            raise TimeoutError(
-                f"ann_index_stream_ingest: availableNow drain did not "
-                f"finish within {timeout_sec}s — the index at "
-                f"{index_path} is PARTIAL; raise timeout_sec and rerun"
-            )
-    finally:
-        if query.isActive:  # pragma: no cover
-            query.stop()
+    store.run(path, handle, max_files_per_trigger, timeout_sec,
+              checkpoint_dir or f"{index_path}/_checkpoint")
     return spark.read.parquet(codes_dir)
 
 
 # Fuzzy-index staleness thresholds, calibrated by
-# tools/fuzzy_drift_probe.py (SCALING.md "Fuzzy staleness signal",
-# r16): unseen_gram_frac is the fraction of a batch's PREFIX entries
-# ordered by the unseen-at-build sentinel. Exactness never depends on
-# it; what degrades is prefix SELECTIVITY — unseen grams carry no
-# rarity information, so drifted batches collide on now-common new
-# grams and the candidate count per row blows up. On the measured
-# curve (zipf new-vocabulary drift): candidates/row holds near the
-# fresh-build baseline through ~0.2, roughly doubles by ~0.5, and
-# runs multiples of baseline at ≥0.8 — while a REBUILD at the same
-# drift restores the baseline (the frozen order re-learns the new
-# vocabulary's rarities).
+# tools/fuzzy_drift_probe.py (SCALING.md "Fuzzy staleness signal"):
+# unseen_gram_frac is the fraction of a batch's PREFIX entries ordered
+# by the unseen-at-build sentinel. Exactness never depends on it; what
+# degrades is prefix SELECTIVITY — unseen grams carry no rarity
+# information, so drifted batches collide on now-common new grams and
+# the candidate count per row blows up. On the measured curve (zipf
+# new-vocabulary drift): candidates/row holds near the fresh-build
+# baseline through ~0.2, roughly doubles by ~0.5, and runs multiples
+# of baseline at ≥0.8 — while a REBUILD at the same drift restores the
+# baseline (the frozen order re-learns the new vocabulary's rarities).
 FUZZY_UNSEEN_WARN = 0.30
 FUZZY_UNSEEN_REBUILD = 0.60
 
 
 def fuzzy_index_staleness(unseen_gram_frac: float | None) -> str:
     """The fuzzy lifecycle's action rule (the ANN ``ann_index_drift``
-    twin, VERDICT r15 #3): ``"ok"`` below ``FUZZY_UNSEEN_WARN``,
+    twin): ``"ok"`` below ``FUZZY_UNSEEN_WARN``,
     ``"selectivity_degraded"`` past it (expect growing per-batch
     candidate cost; plan a rebuild), ``"rebuild"`` at
     ``FUZZY_UNSEEN_REBUILD`` (the frozen rarity order is mostly blind
@@ -2277,10 +1659,9 @@ def fuzzy_index_stream_ingest(
     rebuild_on_drift: bool = False,
 ) -> DataFrame:
     """Continuous fuzzy-join maintenance over a persisted
-    :func:`ops.dedup.build_fuzzy_index` layout (OP-D5 × OP-D2-fuzzy) —
-    the last batch-tier dedup to get a streaming mirror (VERDICT r14
-    #4). Each micro-batch of newly arrived strings is prefix-indexed
-    under the layout's FROZEN gram order and joined against the store:
+    :func:`ops.dedup.build_fuzzy_index` layout (OP-D5 × OP-D2-fuzzy).
+    Each micro-batch of newly arrived strings is prefix-indexed under
+    the layout's FROZEN gram order and joined against the store:
     candidate pairs are (new × corpus-so-far) ∪ (new × new) — history
     is never re-paired against itself — verified with the thresholded
     ``levenshtein(l, r, d)``, and the EXACT new pairs append to
@@ -2295,73 +1676,62 @@ def fuzzy_index_stream_ingest(
       ``FUZZY_UNSEEN_GDF`` sentinel — deterministic, still total);
     * every pair has a later-arriving side, and that side's batch
       generates it: new-vs-store collisions ride a broadcast join of
-      the batch's prefix against the bucketed postings (DPP-prunable
-      on ``bucket``), new-vs-new reuses the batch op's self-group, and
-      the short block length-bands the batch's short strings against
-      the (tiny) short store in both length directions;
+      the batch's prefix against the bucketed postings, new-vs-new
+      reuses the batch op's self-group, and the short block
+      length-bands the batch's short strings against the (tiny) short
+      store in both length directions;
     * the verify is exact, so losing NO candidates means the pair set
       is the batch op's, bit for bit.
 
-    Replay contract matches the text/ANN loops: durable default
-    checkpoint under ``index_path``, per-FILE key guard in the stats
-    sidecar (already-committed files drop out of a replayed batch
-    before anything is computed), and the only crash window —
-    between a batch's appends and its stats commit — can at worst
-    double-append rows whose duplicates the read path drops
-    (the returned pairs frame dedups (id_a, id_b)).
+    ``on_batch`` (opt-in) receives {batch_id, n_in, n_new_pairs,
+    n_candidates, n_buckets_probed, applied, unseen_gram_frac, action,
+    rebuilt, seconds}. ``n_candidates`` counts raw candidate collision
+    rows (the per-batch cost); ``unseen_gram_frac`` is the fraction of
+    the batch's prefix entries ordered by the unseen-at-build sentinel
+    — a rising fraction means the frozen rarity order has lost
+    selectivity, and ``action`` applies :func:`fuzzy_index_staleness`.
 
-    Scale shape per batch: tagging is batch-sized; the gramdf join
-    and the postings probe broadcast the BATCH side (candidate cost
-    bounded by the batch's prefix entries × matching postings, the
-    Ed-Join bound); strings come back only for surviving candidates
-    (id join against the sbucket-partitioned strings store). The
-    growth curve is measured by ``tools/index_lifecycle_probe.py``.
-    ``on_batch`` (opt-in metrics hook) receives {batch_id, n_in,
-    n_new_pairs, n_candidates, n_buckets_probed, applied,
-    unseen_gram_frac, action, seconds} — ``unseen_gram_frac`` is this index's staleness signal
-    (the ANN drift twin): the fraction of the batch's prefix entries
-    ordered by the unseen-at-build sentinel. Exactness never depends
-    on it, but a rising fraction means the frozen rarity order has
-    lost selectivity — ``n_candidates`` (the per-batch cost the signal
-    predicts) blows up, and ``action`` applies the measured thresholds
-    (:func:`fuzzy_index_staleness`: ok → selectivity_degraded →
-    rebuild; calibrated by ``tools/fuzzy_drift_probe.py``). Rebuild to
-    restore selectivity.
+    ``rebuild_on_drift=True`` acts on ``action == "rebuild"`` at the
+    batch boundary: it re-derives the two ORDER-DEPENDENT dirs —
+    ``gramdf`` (the frozen rarity order, now absorbing the new
+    vocabulary) and ``postings`` — from the strings store via
+    :func:`ops.dedup.write_fuzzy_gram_layout`, inside the
+    ``rebuild_pending`` fence (a mixed order would be SILENTLY lossy).
+    ``strings``/``short``/``pairs``/``stats`` are order-independent
+    and carry over: a rebuild changes candidate cost, never results.
 
-    ``rebuild_on_drift=True`` makes the loop ACT on its own rebuild
-    action (r16 — the ANN/SemDeDup self-acting twin): at the
-    triggering batch's boundary it re-derives the two ORDER-DEPENDENT
-    dirs — ``gramdf`` (the frozen rarity order, which absorbs the
-    accumulated new vocabulary) and ``postings`` (every string's
-    rarest-prefix entries under the new order) — from the strings
-    store via :func:`ops.dedup.write_fuzzy_gram_layout`, temp+swap.
-    ``strings``/``short``/``pairs`` are order-INDEPENDENT and carry
-    over untouched (the pairs store stays the exact union-corpus pair
-    set — a rebuild changes candidate GENERATION cost, never results),
-    as do ``stats``/``applied_keys``. The two swaps are not jointly
-    atomic and a mixed order would be SILENTLY lossy, so they are
-    fenced by a ``rebuild_pending`` marker: a crash between them
-    forces a (cheap, idempotent) re-derivation before the next batch;
-    if the marker is found with ``rebuild_on_drift=False`` the loop
-    refuses loudly rather than run on a possibly-mixed layout. Stats
-    gain ``rebuilt``. Returns the deduped pairs table.
-    """
-    import os
+    Scale shape per batch: tagging is batch-sized; the gramdf join and
+    the postings probe broadcast the BATCH side (the Ed-Join bound);
+    strings come back only for candidates (id join against the
+    sbucket-partitioned strings store). Returns the pairs table,
+    deduplicated on (id_a, id_b)."""
     import time as _time
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.storagelevel import StorageLevel
 
     from filefilter_spark.ops.dedup import (
         FUZZY_UNSEEN_GDF,
         _fuzzy_tagged,
         _reduced_prefix_expr,
+        write_fuzzy_gram_layout,
     )
 
-    stats_dir = f"{index_path}/stats"
     post_dir = f"{index_path}/postings"
     strings_dir = f"{index_path}/strings"
     short_dir = f"{index_path}/short"
     pairs_dir = f"{index_path}/pairs"
-
-    srow = spark.read.parquet(stats_dir).first()
+    store = _IndexStore(
+        spark, "fuzzy_index_stream_ingest", pairs_dir,
+        sidecar=f"{index_path}/stats",
+        ddl="q long, max_dist long, n_buckets long, n_strings long, "
+            "applied_keys array<string>",
+        compact=[(post_dir, "bucket", ["g", "occ", "id"]),
+                 (strings_dir, "sbucket", ["id"])],
+        max_files=max_files_per_partition, maintain_every=maintain_every,
+        marker=f"{index_path}/rebuild_pending",
+    )
+    srow = store.read()
     if srow is None:
         raise ValueError(
             f"fuzzy_index_stream_ingest: empty stats at {index_path!r}"
@@ -2371,457 +1741,256 @@ def fuzzy_index_stream_ingest(
     n_buckets = int(srow["n_buckets"])
     T = q * (d + 1)
 
-    schema = spark.read.parquet(path).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option(
-            "maxFilesPerTrigger", str(int(max_files_per_trigger))
-        )
-    if path.endswith(".parquet") and not _is_directory(spark, path):
-        base_dir = os.path.dirname(path) or "."
-        reader = reader.option("pathGlobFilter", os.path.basename(path))
-        stream = reader.parquet(base_dir)
-    else:
-        stream = reader.parquet(path)
-
-    def commit_stats(cur, batch_id: int, new_keys: list[str],
-                     n_added: int) -> None:
-        keys = (list(cur["applied_keys"] or []) + new_keys)[
-            -_APPLIED_KEYS_HORIZON:
-        ]
-        tmp = f"{stats_dir.rstrip('/')}__tmp{batch_id}"
-        spark.createDataFrame(
-            [(q, d, n_buckets, int(cur["n_strings"]) + n_added, keys)],
-            "q long, max_dist long, n_buckets long, n_strings long, "
-            "applied_keys array<string>",
-        ).coalesce(1).write.mode("overwrite").parquet(tmp)
-        _swap_dirs(spark, stats_dir, tmp, batch_id)
-
-    def maintain(batch_id: int) -> None:
-        from filefilter_spark.ops.layout import maybe_compact
-
-        for dpath, pcol, sort_cols in (
-            (post_dir, "bucket", ["g", "occ", "id"]),
-            (strings_dir, "sbucket", ["id"]),
-        ):
-            tmp = f"{dpath.rstrip('/')}__compact{batch_id}"
-            try:
-                ran = maybe_compact(
-                    spark, dpath, tmp, pcol, sort_cols,
-                    max_files_per_partition=max_files_per_partition,
-                )
-            except ValueError:
-                continue
-            if ran:
-                _swap_dirs(spark, dpath, tmp, batch_id)
-
-    pending_path = f"{index_path}/rebuild_pending"
-
-    def _mark_pending(on: bool) -> None:
-        jvm = spark._jvm
-        p = jvm.org.apache.hadoop.fs.Path(pending_path)
-        fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-        if on:
-            fs.mkdirs(p)
-        else:
-            fs.delete(p, True)
-
     def do_rebuild(batch_id: int) -> None:
-        """Act on the staleness signal: re-derive gramdf (frozen
-        rarity, now absorbing the accumulated vocabulary) + postings
-        (prefixes under the new order) from the strings store,
-        temp+swap each, fenced by the ``rebuild_pending`` marker (the
-        two swaps are not jointly atomic and a mixed order is
-        SILENTLY lossy — the marker forces an idempotent re-derivation
-        if a crash lands between them). strings/short/pairs/stats are
-        order-independent and untouched."""
-        from filefilter_spark.ops.dedup import write_fuzzy_gram_layout
-
         sall = spark.read.parquet(strings_dir).select("id", "s")
         # fixed tmp names: a crashed attempt's leftovers are simply
         # overwritten by the healing re-derivation
         tmp_g = f"{index_path}/gramdf__rebuildtmp"
-        tmp_p = f"{post_dir.rstrip('/')}__rebuildtmp"
+        tmp_p = f"{post_dir}__rebuildtmp"
         write_fuzzy_gram_layout(sall, tmp_g, tmp_p, q, d, n_buckets)
-        _mark_pending(True)
-        _swap_dirs(spark, f"{index_path}/gramdf", tmp_g, batch_id)
-        _swap_dirs(spark, post_dir, tmp_p, batch_id)
-        _mark_pending(False)
+        with _pending_marker(spark, store.marker):
+            _swap_dirs(spark, f"{index_path}/gramdf", tmp_g, batch_id)
+            _swap_dirs(spark, post_dir, tmp_p, batch_id)
+
+    def banded(lhs: DataFrame, rhs: DataFrame) -> DataFrame:
+        # short-string pairs within d by length banding, canonicalized
+        # by strict (len, id) so the two length directions are disjoint
+        # (module docstring of edit_distance_pairs)
+        L = lhs.select(
+            F.col("id").alias("id_l"),
+            F.col("l").alias("l_l"),
+            F.explode(F.sequence(F.col("l"), F.col("l") + F.lit(d))).alias(
+                "bkt"
+            ),
+        )
+        R = rhs.select(
+            F.col("id").alias("id_r"),
+            F.col("l").alias("l_r"),
+            F.col("l").alias("bkt"),
+        )
+        return (
+            L.join(R, "bkt")
+            .filter(
+                (F.col("l_l") < F.col("l_r"))
+                | ((F.col("l_l") == F.col("l_r"))
+                   & (F.col("id_l") < F.col("id_r")))
+            )
+            .select(
+                F.least("id_l", "id_r").alias("id_a"),
+                F.greatest("id_l", "id_r").alias("id_b"),
+            )
+        )
+
+    def apply(base_b: DataFrame, n_in: int, info: dict) -> None:
+        """Probe + verify one non-empty batch and append its stores."""
+        gramdf = spark.read.parquet(f"{index_path}/gramdf")
+        prefix_full = (
+            _fuzzy_tagged(base_b, q)
+            .join(
+                gramdf.select("g", "occ", "gdf"),
+                [F.expr("t.g = g"), F.expr("t.occ = occ")],
+                "left",
+            )
+            .groupBy("doc")
+            .agg(F.collect_list(F.struct(
+                F.coalesce(F.col("gdf"), F.lit(FUZZY_UNSEEN_GDF)).alias("gdf"),
+                F.col("t.g").alias("g"),
+                F.col("t.occ").alias("occ"),
+                F.col("t.pos").alias("pos"),
+            )).alias("gl"))
+            .select(
+                "doc",
+                # location-reduced prefix — the batch op's lossless cut;
+                # the frozen order (unseen grams on the sentinel) stays
+                # the sort key, so build- and probe-side prefixes share
+                # one total order
+                F.explode(F.expr(_reduced_prefix_expr("gl", q, d))).alias("t"),
+            )
+            .select(
+                F.col("t.g").alias("g"),
+                F.col("t.occ").alias("occ"),
+                F.col("t.gdf").alias("gdf"),
+                F.col("doc.id").alias("id"),
+                F.col("doc.l").alias("l"),
+            )
+            .withColumn(
+                "bucket", F.pmod(F.xxhash64("g", "occ"), F.lit(n_buckets))
+            )
+            .persist(StorageLevel.MEMORY_AND_DISK)
+        )
+        if on_batch is not None or rebuild_on_drift:
+            row = prefix_full.agg(F.avg(
+                (F.col("gdf") == F.lit(FUZZY_UNSEEN_GDF)).cast("double")
+            ).alias("f")).first()
+            info["unseen_gram_frac"] = (
+                round(float(row["f"]), 6) if row["f"] is not None else 0.0
+            )
+        prefix_b = prefix_full.drop("gdf")
+        # Explicit bucket-set partition filter on the postings read, only
+        # when the batch CAN be narrow: with E = n_in * (q*d+1) hashed
+        # prefix entries, a batch with E >= 8 * n_buckets covers every
+        # bucket with near-certainty (coupon collector), so the distinct
+        # collect (one job) is skipped and the full postings are read.
+        store_post = spark.read.parquet(post_dir)
+        info["n_buckets_probed"] = n_buckets
+        if n_in * (q * d + 1) < 8 * n_buckets:
+            bkts = sorted(
+                r["bucket"]
+                for r in prefix_b.select("bucket").distinct().collect()
+            )
+            info["n_buckets_probed"] = len(bkts)
+            if len(bkts) < n_buckets:
+                store_post = store_post.filter(F.col("bucket").isin(bkts))
+        cross = (
+            F.broadcast(prefix_b.select(
+                "bucket", "g", "occ",
+                F.col("id").alias("id_n"),
+                F.col("l").alias("l_n"),
+            ))
+            .join(store_post, ["bucket", "g", "occ"])
+            .filter(
+                (F.col("id") != F.col("id_n"))
+                & (F.abs(F.col("l") - F.col("l_n")) <= d)
+                & (F.greatest(F.col("l"), F.col("l_n")) >= T)
+            )
+            .select(
+                F.least("id", "id_n").alias("id_a"),
+                F.greatest("id", "id_n").alias("id_b"),
+            )
+        )
+        within = (
+            prefix_b.groupBy("g", "occ")
+            .agg(F.collect_list(F.struct("id", "l")).alias("ds"))
+            .filter(F.size("ds") >= 2)
+            .select(F.explode("ds").alias("a"), "ds")
+            .select("a", F.explode("ds").alias("b"))
+            .filter(
+                F.expr("a.id < b.id")
+                & (F.abs(F.expr("a.l - b.l")) <= d)
+                & (F.greatest(F.expr("a.l"), F.expr("b.l")) >= T)
+            )
+            .select(F.expr("a.id").alias("id_a"), F.expr("b.id").alias("id_b"))
+        )
+        short_b = base_b.select(
+            "id", "s", F.length("s").alias("l")
+        ).filter(F.col("l") < T)
+        short_store = spark.read.parquet(short_dir)
+        short_pairs = banded(
+            short_b, short_store.unionByName(short_b)
+        ).unionByName(banded(short_store, short_b))
+        # The three blocks are pairwise disjoint by construction (cross:
+        # one side stored; within: both new; short: both below T), and
+        # dist is a pure function of the pair, so the dedup runs AFTER
+        # the verify — only same-block multi-gram collisions collapse.
+        cands = cross.unionByName(within).unionByName(short_pairs)
+        if on_batch is not None:
+            # raw candidate collision rows; the verify reuses this frame
+            cands = cands.persist(StorageLevel.MEMORY_AND_DISK)
+            info["n_candidates"] = cands.count()
+        strings_all = (
+            spark.read.parquet(strings_dir)
+            .select("id", "s")
+            .unionByName(base_b.select("id", "s"))
+        )
+        verified = (
+            cands.join(
+                strings_all.select(
+                    F.col("id").alias("id_a"), F.col("s").alias("s_a")
+                ),
+                "id_a",
+            )
+            .join(
+                strings_all.select(
+                    F.col("id").alias("id_b"), F.col("s").alias("s_b")
+                ),
+                "id_b",
+            )
+            .withColumn("dist", F.levenshtein("s_a", "s_b", d))
+            .filter(F.col("dist") >= 0)
+            .select(
+                F.col("id_a").cast("long"),
+                F.col("id_b").cast("long"),
+                F.col("dist").cast("int").alias("dist"),
+            )
+            .distinct()
+        )
+        if on_batch is not None:
+            verified = verified.persist(StorageLevel.MEMORY_AND_DISK)
+            info["n_new_pairs"] = verified.count()
+        writes = [
+            lambda: verified.write.mode("append").parquet(pairs_dir),
+            lambda: prefix_b.repartition("bucket").write.partitionBy(
+                "bucket"
+            ).mode("append").parquet(post_dir),
+            lambda: base_b.select(
+                "id", "s", F.length("s").alias("l")
+            ).withColumn(
+                "sbucket", F.pmod(F.xxhash64("id"), F.lit(n_buckets))
+            ).repartition("sbucket").write.partitionBy(
+                "sbucket"
+            ).mode("append").parquet(strings_dir),
+            lambda: short_b.write.mode("append").parquet(short_dir),
+        ]
+        # The four store appends are independent (their inputs are
+        # persisted or snapshot-listed at batch start), so they overlap:
+        # each append's task tail back-fills with the next one's work.
+        # All of them precede the commit. A crash after some appends
+        # completed (and before the commit) leaves those stores
+        # appended and the files un-keyed, so the replay re-appends
+        # every store, the completed ones a second time; the duplicate
+        # strings/postings/short rows only re-derive the same pairs,
+        # and the read path's (id_a, id_b) dedup absorbs them.
+        with ThreadPoolExecutor(max_workers=len(writes)) as pool:
+            for fut in [pool.submit(w) for w in writes]:
+                fut.result()
+        cands.unpersist()
+        verified.unpersist()
+        prefix_full.unpersist()
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        t0 = _time.time() if on_batch is not None else 0.0
-        unseen_frac = None
-        rebuilt = False
-        if _dir_exists(spark, pending_path):
-            if not rebuild_on_drift:
-                raise RuntimeError(
-                    "fuzzy_index_stream_ingest: rebuild_pending marker "
-                    f"found at {pending_path!r} — a prior rebuild "
-                    "crashed between its gramdf/postings swaps and the "
-                    "layout may mix two gram orders (silently lossy). "
-                    "Rerun with rebuild_on_drift=True to heal, or "
-                    "re-run build_fuzzy_index offline."
-                )
-            do_rebuild(batch_id)  # crashed mid-swap: re-derive first
-            rebuilt = True
-        files = _batch_files(batch_df)
-        cur = spark.read.parquet(stats_dir).first()
-        seen = list(cur["applied_keys"] or [])
-        applied = True
-        new_files: list[str] = []
-        if files:
-            new_files = [f for f in files if _file_key(f) not in seen]
-            if not new_files:
-                applied = False
-            elif len(new_files) < len(files):
-                batch_df = batch_df.filter(
-                    F.input_file_name().isin(new_files)
-                )
-            new_keys = [_file_key(f) for f in new_files]
-        else:
-            bk = f"batch:{batch_id}"
-            if bk in seen:
-                applied = False
-            new_keys = [bk]
-        n_in = 0
-        n_new_pairs = 0
-        n_cands = 0
-        n_bkts_probed = 0
-        if applied:
-            from pyspark.storagelevel import StorageLevel
-
+        t0 = _time.time()
+        rebuilt = store.fence(
+            batch_id, rebuild_on_drift, do_rebuild,
+            "a prior rebuild crashed between its gramdf/postings swaps "
+            "and the layout may mix two gram orders (silently lossy). "
+            "Rerun with rebuild_on_drift=True to heal, or re-run "
+            "build_fuzzy_index offline.",
+        )
+        batch_df, cur = store.begin(batch_df, batch_id)
+        info = {"n_in": 0, "n_new_pairs": 0, "n_candidates": 0,
+                "n_buckets_probed": 0, "applied": batch_df is not None,
+                "unseen_gram_frac": None}
+        if batch_df is not None:
             base_b = batch_df.select(
                 F.col(id_col).alias("id"), F.col(str_col).alias("s")
             ).filter(F.col("s").isNotNull()).persist(
                 StorageLevel.MEMORY_AND_DISK
             )
             try:
-                n_in = base_b.count()
-                if n_in == 0:
-                    commit_stats(cur, batch_id, new_keys, 0)
-                else:
-                    gramdf = spark.read.parquet(f"{index_path}/gramdf")
-                    tagged_b = _fuzzy_tagged(base_b, q)
-                    prefix_b = (
-                        tagged_b.join(
-                            gramdf.select("g", "occ", "gdf"),
-                            [F.expr("t.g = g"), F.expr("t.occ = occ")],
-                            "left",
-                        )
-                        .groupBy("doc")
-                        .agg(F.collect_list(F.struct(
-                            F.coalesce(
-                                F.col("gdf"), F.lit(FUZZY_UNSEEN_GDF)
-                            ).alias("gdf"),
-                            F.col("t.g").alias("g"),
-                            F.col("t.occ").alias("occ"),
-                            F.col("t.pos").alias("pos"),
-                        )).alias("gl"))
-                        .select(
-                            "doc",
-                            # location-reduced prefix (r17) — same
-                            # lossless cut as the batch op; the frozen
-                            # order (unseen grams on the sentinel) stays
-                            # the sort key, so build- and probe-side
-                            # prefixes share one total order
-                            F.explode(F.expr(
-                                _reduced_prefix_expr("gl", q, d)
-                            )).alias("t"),
-                        )
-                        .select(
-                            F.col("t.g").alias("g"),
-                            F.col("t.occ").alias("occ"),
-                            F.col("t.gdf").alias("gdf"),
-                            F.col("doc.id").alias("id"),
-                            F.col("doc.l").alias("l"),
-                        )
-                        .withColumn("bucket", F.pmod(
-                            F.xxhash64("g", "occ"), F.lit(n_buckets)
-                        ))
-                        .persist(StorageLevel.MEMORY_AND_DISK)
-                    )
-                    prefix_full = prefix_b  # persisted handle (w/ gdf)
-                    if on_batch is not None or rebuild_on_drift:
-                        # the fuzzy index's staleness signal (the ANN
-                        # drift twin): fraction of the batch's PREFIX
-                        # entries carrying the unseen-at-build sentinel
-                        # order key. Unseen grams stay LOSSLESS (the
-                        # frozen order is still total) but sort last,
-                        # i.e. the prefixes lose their rarity
-                        # selectivity — a rising fraction means more
-                        # candidates per batch; rebuild to restore it.
-                        row = prefix_b.agg(
-                            F.avg(
-                                (F.col("gdf") == F.lit(FUZZY_UNSEEN_GDF))
-                                .cast("double")
-                            ).alias("f")
-                        ).first()
-                        unseen_frac = (
-                            round(float(row["f"]), 6)
-                            if row["f"] is not None else 0.0
-                        )
-                    prefix_b = prefix_b.drop("gdf")
-                    # explicit bucket-set partition filter on the
-                    # postings read (r16, VERDICT r15 #5): the batch's
-                    # distinct buckets are a <= n_buckets collect over
-                    # the persisted prefix frame; when the batch
-                    # touches FEWER buckets than the store has (small
-                    # or vocabulary-narrow batches), the literal IN
-                    # filter statically prunes the postings partitions
-                    # instead of relying on DPP firing across the
-                    # broadcast join. Measured (SCALING.md "fuzzy
-                    # postings-scan term"): a default-shaped batch
-                    # covers every bucket, so this prunes nothing
-                    # there — the lever that moves the O(store) term
-                    # is batch size — but it makes the narrow-batch
-                    # case (the streaming steady state at higher
-                    # n_buckets) a partition-pruned read for free.
-                    # r17: the collect itself is one job per batch, so
-                    # it only runs when the batch CAN be narrow — with
-                    # E = n_in * (q*d+1) hashed prefix entries, a batch
-                    # with E >= 8 * n_buckets covers every bucket with
-                    # near-certainty (coupon collector needs ~ln(n)+4
-                    # draws per bucket), so a default-shaped batch
-                    # skips straight to the full postings read.
-                    store_post = spark.read.parquet(post_dir)
-                    n_bkts_probed = n_buckets
-                    if n_in * (q * d + 1) < 8 * n_buckets:
-                        bkts = sorted(
-                            r["bucket"]
-                            for r in prefix_b.select(
-                                "bucket"
-                            ).distinct().collect()
-                        )
-                        n_bkts_probed = len(bkts)
-                        if len(bkts) < n_buckets:
-                            store_post = store_post.filter(
-                                F.col("bucket").isin(bkts)
-                            )
-                    cross = (
-                        F.broadcast(
-                            prefix_b.select(
-                                "bucket", "g", "occ",
-                                F.col("id").alias("id_n"),
-                                F.col("l").alias("l_n"),
-                            )
-                        )
-                        .join(store_post, ["bucket", "g", "occ"])
-                        .filter(
-                            (F.col("id") != F.col("id_n"))
-                            & (F.abs(F.col("l") - F.col("l_n")) <= d)
-                            & (F.greatest(F.col("l"), F.col("l_n")) >= T)
-                        )
-                        .select(
-                            F.least("id", "id_n").alias("id_a"),
-                            F.greatest("id", "id_n").alias("id_b"),
-                        )
-                    )
-                    within = (
-                        prefix_b.groupBy("g", "occ")
-                        .agg(F.collect_list(
-                            F.struct("id", "l")
-                        ).alias("ds"))
-                        .filter(F.size("ds") >= 2)
-                        .select(F.explode("ds").alias("a"), "ds")
-                        .select("a", F.explode("ds").alias("b"))
-                        .filter(
-                            F.expr("a.id < b.id")
-                            & (F.abs(F.expr("a.l - b.l")) <= d)
-                            & (F.greatest(
-                                F.expr("a.l"), F.expr("b.l")) >= T)
-                        )
-                        .select(
-                            F.expr("a.id").alias("id_a"),
-                            F.expr("b.id").alias("id_b"),
-                        )
-                    )
-                    short_b = base_b.select(
-                        "id", "s", F.length("s").alias("l")
-                    ).filter(F.col("l") < T)
-                    short_store = spark.read.parquet(short_dir)
-                    all_short = short_store.unionByName(short_b)
-                    # both length directions, disjoint by the strict
-                    # (len, id) canonicalization (module docstring of
-                    # edit_distance_pairs): batch→all covers
-                    # l_b <= l_other, all→batch covers l_other < l_b
-                    def banded(lhs, rhs):
-                        L = lhs.select(
-                            F.col("id").alias("id_l"),
-                            F.col("l").alias("l_l"),
-                            F.explode(F.sequence(
-                                F.col("l"), F.col("l") + F.lit(d)
-                            )).alias("bkt"),
-                        )
-                        R = rhs.select(
-                            F.col("id").alias("id_r"),
-                            F.col("l").alias("l_r"),
-                            F.col("l").alias("bkt"),
-                        )
-                        return (
-                            L.join(R, "bkt")
-                            .filter(
-                                (F.col("l_l") < F.col("l_r"))
-                                | ((F.col("l_l") == F.col("l_r"))
-                                   & (F.col("id_l") < F.col("id_r")))
-                            )
-                            .select(
-                                F.least("id_l", "id_r").alias("id_a"),
-                                F.greatest("id_l", "id_r").alias("id_b"),
-                            )
-                        )
-                    short_pairs = banded(short_b, all_short).unionByName(
-                        banded(short_store, short_b)
-                    )
-                    # candidate dedup moved AFTER the verify (r17 —
-                    # the same change the r16 batch op made, same
-                    # proof: dist is a pure function of the pair, so
-                    # multi-gram collisions are exact row duplicates
-                    # and the pre-verify distinct pushed the whole
-                    # candidate set through an exchange for a handful
-                    # of survivors; the re-verified duplicates are
-                    # early-exit thresholded levenshteins). The three
-                    # blocks are pairwise disjoint by construction
-                    # (cross: one side stored; within: both new;
-                    # short: both below T with strict (len, id)
-                    # canonicalization), so dedup only collapses
-                    # same-block multi-gram collisions.
-                    cands = (
-                        cross.unionByName(within)
-                        .unionByName(short_pairs)
-                    )
-                    if on_batch is not None:
-                        # candidate-ROW cost per batch — what the
-                        # staleness signal predicts (raw collision
-                        # rows since r17; the verify tier reuses this
-                        # persisted frame)
-                        cands = cands.persist(
-                            StorageLevel.MEMORY_AND_DISK
-                        )
-                        n_cands = cands.count()
-                    strings_all = (
-                        spark.read.parquet(strings_dir)
-                        .select("id", "s")
-                        .unionByName(base_b.select("id", "s"))
-                    )
-                    verified = (
-                        cands.join(
-                            strings_all.select(
-                                F.col("id").alias("id_a"),
-                                F.col("s").alias("s_a"),
-                            ),
-                            "id_a",
-                        )
-                        .join(
-                            strings_all.select(
-                                F.col("id").alias("id_b"),
-                                F.col("s").alias("s_b"),
-                            ),
-                            "id_b",
-                        )
-                        .withColumn(
-                            "dist", F.levenshtein("s_a", "s_b", d)
-                        )
-                        .filter(F.col("dist") >= 0)
-                        .select(
-                            F.col("id_a").cast("long"),
-                            F.col("id_b").cast("long"),
-                            F.col("dist").cast("int").alias("dist"),
-                        )
-                        # survivor-count dedup (see the candidate
-                        # comment above)
-                        .distinct()
-                    )
-                    if on_batch is not None:
-                        verified = verified.persist(
-                            StorageLevel.MEMORY_AND_DISK
-                        )
-                        n_new_pairs = verified.count()
-
-                    # The four store appends are independent of one
-                    # another (their input frames are persisted or
-                    # snapshot-listed at batch start, and the crash
-                    # contract only requires ALL of them to precede
-                    # the stats commit) — overlap them so each
-                    # append's task tail back-fills with the next
-                    # append's work (guide §2.6).
-                    from concurrent.futures import ThreadPoolExecutor
-
-                    def _w_pairs() -> None:
-                        verified.write.mode("append").parquet(pairs_dir)
-
-                    def _w_postings() -> None:
-                        prefix_b.repartition("bucket").write.partitionBy(
-                            "bucket"
-                        ).mode("append").parquet(post_dir)
-
-                    def _w_strings() -> None:
-                        base_b.select(
-                            "id", "s", F.length("s").alias("l")
-                        ).withColumn(
-                            "sbucket",
-                            F.pmod(F.xxhash64("id"), F.lit(n_buckets)),
-                        ).repartition("sbucket").write.partitionBy(
-                            "sbucket"
-                        ).mode("append").parquet(strings_dir)
-
-                    def _w_short() -> None:
-                        short_b.write.mode("append").parquet(short_dir)
-
-                    with ThreadPoolExecutor(max_workers=3) as pool:
-                        for fut in [pool.submit(w) for w in
-                                    (_w_pairs, _w_postings,
-                                     _w_strings, _w_short)]:
-                            fut.result()
-                    commit_stats(cur, batch_id, new_keys, n_in)
-                    if on_batch is not None:
-                        verified.unpersist()
-                        cands.unpersist()
-                    prefix_full.unpersist()
-                    if maintain_every and (
-                        batch_id + 1
-                    ) % maintain_every == 0:
-                        maintain(batch_id)
-                    if (
-                        rebuild_on_drift
-                        and fuzzy_index_staleness(unseen_frac)
-                        == "rebuild"
-                    ):
-                        # the batch's own entries were appended under
-                        # the stale order; the re-derivation replaces
-                        # the WHOLE postings store, this batch included
-                        do_rebuild(batch_id)
-                        rebuilt = True
+                info["n_in"] = base_b.count()
+                if info["n_in"]:
+                    apply(base_b, info["n_in"], info)
             finally:
                 base_b.unpersist()
+            store.commit(
+                batch_id,
+                {**cur, "n_strings": int(cur["n_strings"]) + info["n_in"]},
+            )
+            action = fuzzy_index_staleness(info["unseen_gram_frac"])
+            if rebuild_on_drift and action == "rebuild":
+                # the batch's own entries were appended under the stale
+                # order; the re-derivation replaces the WHOLE postings
+                do_rebuild(batch_id)
+                rebuilt = True
         if on_batch is not None:
             on_batch({
                 "batch_id": batch_id,
-                "n_in": n_in,
-                "n_new_pairs": n_new_pairs,
-                "n_candidates": n_cands,
-                "n_buckets_probed": n_bkts_probed,
-                "applied": applied,
-                "unseen_gram_frac": unseen_frac,
-                "action": fuzzy_index_staleness(unseen_frac),
+                **info,
+                "action": fuzzy_index_staleness(info["unseen_gram_frac"]),
                 "rebuilt": rebuilt,
                 "seconds": _time.time() - t0,
             })
 
-    ckpt = checkpoint_dir or f"{index_path}/_checkpoint"
-    query = (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        if not query.awaitTermination(timeout_sec):  # pragma: no cover
-            raise TimeoutError(
-                f"fuzzy_index_stream_ingest: availableNow drain did not "
-                f"finish within {timeout_sec}s — the index at "
-                f"{index_path} is PARTIAL; raise timeout_sec and rerun"
-            )
-    finally:
-        if query.isActive:  # pragma: no cover
-            query.stop()
+    store.run(path, handle, max_files_per_trigger, timeout_sec,
+              checkpoint_dir or f"{index_path}/_checkpoint")
     return spark.read.parquet(pairs_dir).dropDuplicates(["id_a", "id_b"])

@@ -101,6 +101,10 @@ SLOW_TESTS = {
     "test_semantic_dedup_recall_vs_exact",
     "test_quality_scores_match_model_coefficients",
     "test_cluster_pairs_raises_when_not_converged",
+    # drives all six ingest loops three times each
+    "test_stream_ingest_crash_before_commit_replays_exact",
+    "test_fuzzy_index_stream_on_batch_figures_pinned",
+    "test_ivfpq_stream_ingest_rerun_appends_nothing",
 }
 
 

@@ -4979,6 +4979,231 @@ def test_fuzzy_index_staleness_rule():
     assert fuzzy_index_staleness(1.0) == "rebuild"  # measured 6x point
 
 
+def test_fuzzy_index_stream_on_batch_figures_pinned(spark, tmp_path):
+    """Pins the fuzzy on_batch figures on a fixed seeded two-batch
+    input: n_candidates counts raw candidate collision rows, and the
+    second batch's mostly-unseen vocabulary moves unseen_gram_frac
+    past FUZZY_UNSEEN_WARN (but not FUZZY_UNSEEN_REBUILD), so its
+    action reads selectivity_degraded while the first reads ok."""
+    import random
+    import time
+
+    from filefilter_spark.ops.dedup import build_fuzzy_index
+    from filefilter_spark.streaming.jobs import (
+        FUZZY_UNSEEN_REBUILD,
+        FUZZY_UNSEEN_WARN,
+        fuzzy_index_stream_ingest,
+    )
+
+    rng = random.Random(20)
+    low, up = "abcdefgh", "QRSTUVWX"
+
+    def word(alpha, n):
+        return "".join(rng.choice(alpha) for _ in range(n))
+
+    def mutate(s):
+        i = rng.randrange(len(s))
+        return s[:i] + rng.choice(low) + s[i + 1:]
+
+    base = [(i, word(low, 14)) for i in range(40)]
+    b1 = ([(100 + i, mutate(base[i][1])) for i in range(12)]
+          + [(120 + i, word(low, 14)) for i in range(4)])
+    b2 = ([(200 + i, word(low, 3) + word(up, 11)) for i in range(10)]
+          + [(220 + i, mutate(base[20 + i][1])) for i in range(4)])
+    schema = "doc_id long, s string"
+    ix, src = str(tmp_path / "ix"), str(tmp_path / "src")
+    build_fuzzy_index(spark.createDataFrame(base, schema), ix,
+                      id_col="doc_id", str_col="s", max_dist=2, q=2,
+                      n_buckets=16)
+    spark.createDataFrame(b1, schema).coalesce(1).write.parquet(src)
+    time.sleep(1.1)  # distinct mtimes -> deterministic batch order
+    spark.createDataFrame(b2, schema).coalesce(1).write.mode(
+        "append").parquet(src)
+    sig = []
+    got = fuzzy_index_stream_ingest(
+        spark, src, ix, id_col="doc_id", str_col="s",
+        max_files_per_trigger=1, on_batch=sig.append)
+    keys = ("batch_id", "n_in", "n_new_pairs", "n_candidates",
+            "n_buckets_probed", "unseen_gram_frac", "action")
+    assert [tuple(b[k] for k in keys) for b in sig] == [
+        (0, 16, 12, 284, 15, 0.0, "ok"),
+        (1, 14, 4, 162, 16, 0.421875, "selectivity_degraded"),
+    ]
+    assert sig[0]["unseen_gram_frac"] < FUZZY_UNSEEN_WARN
+    assert (FUZZY_UNSEEN_WARN <= sig[1]["unseen_gram_frac"]
+            < FUZZY_UNSEEN_REBUILD)
+    assert got.count() == sum(b["n_new_pairs"] for b in sig) == 16
+
+
+def test_ivfpq_stream_ingest_rerun_appends_nothing(spark, tmp_path, sf_dir):
+    """A second ivfpq_stream_ingest over the same input and out_dir
+    must leave the single-call code table: the applied-keys sidecar
+    (under the hidden out_dir/_applied) drops every committed file,
+    though the tmpfs checkpoint is gone and the re-drain renumbers
+    batches from 0."""
+    from filefilter_spark.ops.pq import build_ivfpq_index
+    from filefilter_spark.queries.registry import load_table
+    from filefilter_spark.streaming.jobs import ivfpq_stream_ingest
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    _, books, cents = build_ivfpq_index(emb, n_lists=8, m=8, k=16, iters=0)
+    src, out = str(tmp_path / "src"), str(tmp_path / "codes")
+    emb.repartition(2).write.parquet(src)
+
+    def table():
+        return sorted((r["vec_id"], r["cell"], tuple(r["codes"]))
+                      for r in spark.read.parquet(out).collect())
+
+    ivfpq_stream_ingest(spark, src, books, cents,
+                        max_files_per_trigger=1, out_dir=out)
+    once = table()
+    assert len(once) == emb.count()
+    ivfpq_stream_ingest(spark, src, books, cents,
+                        max_files_per_trigger=1, out_dir=out)
+    assert table() == once
+
+
+def _crash_case(spark, tmp_path, sf_dir, loop):
+    """(run, read) for one ingest loop over a three-file arrival dir:
+    ``run(d)`` drains it one file per batch into the store at ``d``
+    (building the ANN/fuzzy layout first when ``d`` is new) and
+    returns the loop's result; ``read(d, result)`` is the loop's
+    documented read path, as plain Python values."""
+    import glob
+    import os
+
+    from filefilter_spark.queries.registry import load_table
+    from filefilter_spark.streaming import jobs
+
+    src = str(tmp_path / "src")
+
+    def arrivals(df):
+        df.repartition(3).write.parquet(src)
+        # distinct mtimes -> the same batch order on every drain
+        for i, f in enumerate(sorted(glob.glob(f"{src}/part-*"))):
+            os.utime(f, (1_700_000_000 + 10 * i,) * 2)
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    docs = load_table(spark, sf_dir, "documents")
+    one = {"max_files_per_trigger": 1}
+    if loop == "ivfpq":
+        from filefilter_spark.ops.pq import build_ivfpq_index
+
+        _, books, cents = build_ivfpq_index(emb, n_lists=8, m=8, k=16,
+                                            iters=0)
+        arrivals(emb)
+        return (
+            lambda d: jobs.ivfpq_stream_ingest(
+                spark, src, books, cents, out_dir=d, **one),
+            # readers dedupe ids (dedup_ids=True)
+            lambda d, res: sorted(
+                (r["vec_id"], r["cell"], tuple(r["codes"]))
+                for r in res.dropDuplicates(["vec_id"]).collect()),
+        )
+    if loop == "minhash":
+        arrivals(docs.select("doc_id", "text"))
+        return (
+            lambda d: jobs.minhash_stream_dedup(
+                spark, src, threshold=0.5, shingle_n=3, out_dir=d, **one),
+            lambda d, res: sorted(r["doc_id"] for r in res.collect()),
+        )
+    if loop == "semdedup":
+        from filefilter_spark.ops.similarity import build_ivf_index
+
+        _, cents = build_ivf_index(emb, n_lists=16, method="lloyd")
+        arrivals(emb)
+        return (
+            lambda d: jobs.semdedup_stream_dedup(
+                spark, src, cents, threshold=0.45, out_dir=d, **one),
+            lambda d, res: sorted(r["vec_id"] for r in res.collect()),
+        )
+    if loop == "text":
+        from filefilter_spark.ops.retrieval import bm25_topk_indexed
+
+        arrivals(docs)
+
+        def read_text(d, res):
+            st = spark.read.parquet(f"{d}/stats").first()
+            return (st["n_docs"], st["sum_dl"], [
+                tuple(r) for r in bm25_topk_indexed(
+                    spark, d, ["spark", "merge", "data"], k=10).collect()])
+
+        return (
+            lambda d: jobs.text_index_stream_ingest(
+                spark, src, d, n_buckets=8, **one),
+            read_text,
+        )
+    day1 = F.pmod(F.xxhash64("doc_id" if loop == "fuzzy" else "vec_id"),
+                  F.lit(2)) == 0
+    if loop == "ann":
+        from filefilter_spark.ops.pq import (
+            ann_topk_indexed, build_ann_index, load_ann_meta)
+
+        arrivals(emb.filter(~day1))
+        qv = [float(x) for x in
+              emb.filter("vec_id = 0").first()["embedding"]]
+
+        def run_ann(d):
+            if not os.path.isdir(d):
+                build_ann_index(emb.filter(day1), d, n_lists=8, m=8, k=16,
+                                iters=1)
+            return jobs.ann_index_stream_ingest(spark, src, d, **one)
+
+        return run_ann, lambda d, res: (
+            load_ann_meta(spark, d)["cell_counts"],
+            [tuple(r) for r in ann_topk_indexed(
+                spark, d, qv, topk=5, n_probe=4, vectors=emb).collect()],
+        )
+    from filefilter_spark.ops.dedup import build_fuzzy_index
+
+    strs = docs.select("doc_id", F.expr("substring(text, 1, 24)").alias("s"))
+    arrivals(strs.filter(~day1))
+
+    def run_fuzzy(d):
+        if not os.path.isdir(d):
+            build_fuzzy_index(strs.filter(day1), d, id_col="doc_id",
+                              str_col="s", max_dist=3, q=2)
+        return jobs.fuzzy_index_stream_ingest(
+            spark, src, d, id_col="doc_id", str_col="s", **one)
+
+    return run_fuzzy, lambda d, res: (
+        spark.read.parquet(f"{d}/stats").first()["n_strings"],
+        sorted(tuple(r) for r in res.collect()),
+    )
+
+
+@pytest.mark.parametrize(
+    "loop", ["ivfpq", "minhash", "semdedup", "text", "ann", "fuzzy"])
+def test_stream_ingest_crash_before_commit_replays_exact(
+        spark, tmp_path, sf_dir, monkeypatch, loop):
+    """The one crash-and-replay contract of the six ingest loops: batch
+    1 fails at the store core's single commit point — after its store
+    appends (both appends for the dedup loops), before its sidecar
+    commit — then the same call reruns over the same store, and the
+    loop's documented read path returns what an uncrashed run does."""
+    from filefilter_spark.streaming import jobs
+
+    run, read = _crash_case(spark, tmp_path, sf_dir, loop)
+    clean = str(tmp_path / "clean")
+    want = read(clean, run(clean))
+
+    real_commit = jobs._IndexStore.commit
+    armed = [True]
+
+    def commit(self, batch_id, row=None):
+        if armed[0] and batch_id == 1:
+            armed[0] = False
+            raise RuntimeError("injected crash before the commit")
+        return real_commit(self, batch_id, row)
+
+    monkeypatch.setattr(jobs._IndexStore, "commit", commit)
+    crashed = str(tmp_path / "crashed")
+    with pytest.raises(Exception, match="injected crash"):
+        run(crashed)
+    assert not armed[0]
+    assert read(crashed, run(crashed)) == want
+
+
 def test_ivfpq_batch_topk_equals_query_loop(spark, tmp_path):
     """The batch ANN probe must return EXACTLY what N single-query
     ivfpq_topk calls return (same probe order, ADC folds, auto-refine

@@ -127,10 +127,12 @@ def main() -> None:
     import pyspark.sql.functions as F
 
     from filefilter_spark.ops.dedup import build_fuzzy_index
-    from filefilter_spark.ops.layout import maybe_compact
-    from filefilter_spark.streaming.jobs import (
+    from filefilter_spark.ops.layout import (
         _n_data_files,
         _swap_dirs,
+        maybe_compact,
+    )
+    from filefilter_spark.streaming.jobs import (
         ann_index_stream_ingest,
         fuzzy_index_stream_ingest,
         text_index_stream_ingest,
