@@ -48,6 +48,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
 from filefilter_spark.ops.text import tokens
+from filefilter_spark.session import lineage_cut
 
 
 def word_histogram(
@@ -229,23 +230,20 @@ def train_bpe_distributed(
     two vocab-sized Spark jobs (pair-count argmax + fold application),
     so wall time is ~``num_merges`` × the per-job floor regardless of
     corpus size; see the module docstring for when that trade wins."""
-    # localCheckpoint, NOT persist: persist keeps the full logical
-    # plan, so each iteration's analysis (and the plan string Spark
-    # renders for persist's RDD name) re-walks every previous
-    # iteration's nested aggregate() lambda — measured superlinear
-    # (4.9 s at 8 merges → 10.1 s at 12) and an 8 GiB-heap OOM in
-    # treeString by 20 merges. localCheckpoint materializes to
-    # executor storage AND truncates lineage to a constant-size
-    # LogicalRDD scan — the standard iterative-algorithm pattern
-    # (GraphX/ALS do the same). Trade: checkpoint blocks are
-    # unreplicated, so an executor loss mid-loop fails the job and
-    # training restarts — acceptable for a vocab-sized loop whose
-    # full rerun costs minutes; superseded blocks are released by
-    # the ContextCleaner as each iteration's frame goes out of
-    # reference.
-    cur = hist.select(
-        F.split("word", "").alias("syms"), F.col("freq")
-    ).localCheckpoint()
+    # An eager lineage cut per merge, NOT a persist: persist keeps the
+    # full logical plan, so each iteration's analysis (and the plan
+    # string Spark renders for persist's RDD name) re-walks every
+    # previous iteration's nested aggregate() lambda — measured
+    # superlinear (4.9 s at 8 merges → 10.1 s at 12) and an 8 GiB-heap
+    # OOM in treeString by 20 merges. The cut materializes the frame
+    # AND truncates lineage to a constant-size LogicalRDD scan — the
+    # standard iterative-algorithm pattern (GraphX/ALS do the same).
+    # Superseded cuts are released by the ContextCleaner as each
+    # iteration's frame goes out of reference; durability follows
+    # session.lineage_cut.
+    cur = lineage_cut(
+        hist.select(F.split("word", "").alias("syms"), "freq"), eager=True
+    )
     merges: list[tuple[str, str]] = []
     for _ in range(num_merges):
         pairs = F.transform(
@@ -268,9 +266,10 @@ def train_bpe_distributed(
             break
         a, b = top[0]["a"], top[0]["b"]
         merges.append((a, b))
-        cur = cur.select(
-            _merge_expr(F.col("syms"), a, b).alias("syms"), "freq"
-        ).localCheckpoint()
+        cur = lineage_cut(
+            cur.select(_merge_expr(F.col("syms"), a, b).alias("syms"), "freq"),
+            eager=True,
+        )
     return merges
 
 

@@ -57,6 +57,8 @@ from typing import Sequence
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
+from filefilter_spark.session import lineage_cut
+
 
 def quantize_to_grid(col: str | Column, scale: float = 1e6) -> Column:
     """``array<float> → array<bigint>``: per-component
@@ -170,7 +172,8 @@ def _kmeanspar_seeds(
 
     Plan-size discipline at rebuild-grade k: distances ride per-row
     STATE (``__d2``/``__c`` — the min distance and argmin candidate
-    so far, lineage cut with an eager localCheckpoint per round), so
+    so far, lineage cut eagerly per round by
+    :func:`~filefilter_spark.session.lineage_cut`), so
     every round's centroid literal is bounded at the ROUND's ℓ new
     vectors (O(ℓ·d) expression terms), never the accumulated pool —
     a naive re-evaluation against all |C| ≈ ℓ·rounds candidates
@@ -197,14 +200,13 @@ def _kmeanspar_seeds(
         qd = F.transform(F.col("q"), lambda v: v / F.col("__scale"))
         return F.transform(cent_lit, lambda c: _sq_dist(qd, c))
 
-    state = (
-        seeds.withColumn("__nd", dists_to([first_vec]))
-        .select(
+    state = lineage_cut(
+        seeds.withColumn("__nd", dists_to([first_vec])).select(
             "__id", "q", "__scale",
             F.col("__nd")[0].alias("__d2"),
             F.lit(0).cast("int").alias("__c"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        eager=True,
     )
     for rnd in range(rounds):
         # E-S key ln(u)/d² (maximize ⇔ maximize u^(1/d²)): u ∈ (0,1)
@@ -238,7 +240,7 @@ def _kmeanspar_seeds(
         # fold the ℓ new candidates into the per-row min-dist state:
         # strict < keeps the earliest (lowest-index) candidate on
         # ties, matching argmin-first-match semantics
-        state = (
+        state = lineage_cut(
             state.withColumn("__nd", dists_to(new_vecs))
             .withColumn("__m", F.array_min("__nd"))
             .withColumn(
@@ -254,8 +256,8 @@ def _kmeanspar_seeds(
                 .otherwise(F.col("__d2")).alias("__d2"),
                 F.when(F.col("__m") < F.col("__d2"), F.col("__nc"))
                 .otherwise(F.col("__c")).alias("__c"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            eager=True,
         )
     # weighting: rows nearest each candidate are already tracked in
     # __c — one map-combined agg, zero further distance evaluation
@@ -436,9 +438,9 @@ def lloyd_kmeans(
             F.col("__id").alias(id_col), "cluster", "dist2"
         )
         # The persist must outlive the returned lazy frame's first
-        # action; localCheckpoint(eager) materializes the (tiny:
-        # id, int, double) result so the cache can be dropped now.
-        return out.localCheckpoint(eager=True)
+        # action; an eager cut materializes the (tiny: id, int, double)
+        # result so the cache can be dropped now.
+        return lineage_cut(out, eager=True)
     finally:
         qframe.unpersist()
 

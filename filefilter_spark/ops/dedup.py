@@ -25,8 +25,10 @@ import pandas as pd  # module-level: pandas_udf type hints resolve here
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 from pyspark.sql.types import StructField, StructType
+from pyspark.storagelevel import StorageLevel
 
 from filefilter_spark.ops.text import fingerprint, shingles, tokens
+from filefilter_spark.session import lineage_cut
 
 # Mersenne prime 2^31-1 for the universal-hash family used by minhash.
 # Kept at 31 bits ON PURPOSE: a, b, h < 2^31 keeps a*h + b < 2^62, so
@@ -54,35 +56,6 @@ _MERSENNE = (1 << 31) - 1
 # narrow pass over the postings in the worst case, bought against a
 # guaranteed-parallel quadratic stage.
 _PAIR_CHUNK = 256
-
-
-def _lineage_cut(df: DataFrame, eager: bool = True) -> DataFrame:
-    """Checkpoint ``df`` to truncate lineage (pair kernel routing, CC
-    loop rounds). Default: ``localCheckpoint`` — executor-local blocks,
-    fast, and NEVER matched by the CacheManager's canonicalized-plan
-    lookup (so a later identical plan recomputes honestly instead of
-    silently reading these blocks), but NOT fault-tolerant (guide §5):
-    losing an executor fails the query, which is then retried whole.
-
-    r17 (VERDICT r16 #8): cluster deployments that cannot afford
-    whole-query retries — a 100 TB near-dup job holding hours of pair
-    state — opt in to RELIABLE checkpoints by setting
-    ``FILEFILTER_RELIABLE_CHECKPOINT_DIR`` to a durable (HDFS /
-    object-store) path: blocks then survive executor loss at the cost
-    of writing them to that store. Honors an application-set
-    ``setCheckpointDir`` if one exists; otherwise sets it from the env
-    once. Results are identical either way — this is a durability
-    knob, not a semantics knob.
-    """
-    import os as _os
-
-    rdir = _os.environ.get("FILEFILTER_RELIABLE_CHECKPOINT_DIR")
-    if rdir:
-        sc = df.sparkSession.sparkContext
-        if sc.getCheckpointDir() is None:
-            sc.setCheckpointDir(rdir)
-        return df.checkpoint(eager=eager)
-    return df.localCheckpoint(eager=eager)
 
 
 def _inplace_list_pairs(grouped: DataFrame, list_col: str) -> DataFrame:
@@ -146,79 +119,44 @@ def _chunked_list_pairs(
     exactly once per row, as columns ``(a, b)`` with ``a < b`` in the
     elements' natural order.
 
-    Mode-routed (the :func:`cluster_pairs` pattern): ``grouped`` is
-    localCheckpoint'ed — the expensive upstream (LSH banding, gram
-    tagging) is computed exactly once regardless of how many plan
-    branches consume it — then ONE bounded job reads max(size) and
-    picks the plan: all lists within ``_PAIR_CHUNK`` (the
-    overwhelmingly common healthy-posting-list case) keeps the
+    Mode-routed (the :func:`cluster_pairs` pattern): ``grouped`` goes
+    through :func:`~filefilter_spark.session.lineage_cut` (lazy; with
+    ``scope``, the per-batch persist), so the expensive upstream (LSH
+    banding, gram tagging) is computed once however many plan branches
+    consume it. ONE bounded job then reads max(size), which also
+    materializes the cut, and picks the plan: all lists within
+    ``_PAIR_CHUNK`` (the common healthy-posting-list case) keeps the
     zero-extra-exchange in-place explode; any oversize list routes the
     mixed hybrid with chunk work units spread round-robin. Routing by
-    the measured list-size bound (not a static branch union) is what
-    keeps the common case free of the hybrid's constant overhead — the
-    empty unit branch still scheduled its spread exchange's worth of
-    tasks and re-ran the final aggregation per branch (measured +0.5 s
-    on the LSH bench row at sf0.1).
-
-    r17 (VERDICT r16 #2): the checkpoint is LAZY — the max-size probe
-    itself is the materializing action, so routing costs one job, not
-    two (the r16 eager form paid a checkpoint-materialization count
-    PLUS the probe on every invocation; measured +0.25-0.4 s per
-    consumer at sf0.1). Lazy localCheckpoint keeps the property that
-    made checkpoint (unlike persist) safe here: checkpoint blocks are
-    never matched by the CacheManager's canonicalized-plan lookup, so
-    a later identical plan (the bench's second rep) recomputes
-    honestly instead of silently reading this invocation's blocks.
+    the measured list-size bound, not a static branch union, keeps the
+    common case free of the hybrid's constant overhead (an empty unit
+    branch still schedules its spread exchange and re-runs the final
+    aggregation per branch).
 
     Build-time semantics (shared by every public pair-generating
     operator that routes through here — token_jaccard_pairs,
     minhash/simhash/winnow candidates, edit_distance_pairs):
 
     - **Eager at build.** Constructing the returned DataFrame runs the
-      upstream grouping to completion (checkpoint + bounded max-size
-      probe). Building a plan you never consume still pays the
-      upstream; set ``FILEFILTER_PAIR_PLAN_ONLY=1`` for a lazy
-      plan-only build (in-place branch, zero jobs) for
-      explain/dry-run use — NOT for execution on data that may route
-      hybrid.
+      upstream grouping to completion (the max-size probe). Building a
+      plan you never consume still pays the upstream.
     - **Snapshot.** The result is frozen at build time; re-executing
       the returned DataFrame after the source changes returns the
       build-time pairs, not the current ones. Rebuild to refresh.
-    - **Not fault-tolerant.** localCheckpoint stores blocks on
-      executors without lineage; losing an executor fails the query,
-      which is then retried whole (guide §5). Acceptable for bounded
-      near-dup jobs; a reliable-checkpoint opt-in for long cluster
-      deployments is tracked in SCALING.md.
+    - **Durability** is :func:`~filefilter_spark.session.lineage_cut`'s:
+      executor-local unless the application set a checkpoint dir.
 
-    ``scope`` (r17, ADVICE r16): a caller-owned list for BOUNDED-
-    LIFETIME invocations — streaming foreachBatch bodies, which build
-    one kernel per micro-batch. When passed, the grouped frame is
-    persisted instead of checkpointed and the handle is appended to
-    ``scope`` so the caller can ``unpersist()`` it at batch end —
-    localCheckpoint blocks are freed only by driver GC/ContextCleaner
-    and would accumulate across a long stream. The cache-substitution
-    hazard that bans persist in the BATCH path (a later identical plan
-    silently reading this invocation's cache) cannot bite inside
-    foreachBatch: each batch's source differs, so no later plan
-    canonicalizes equal — and the caller unpersists before the batch
-    returns anyway.
+    ``scope``: a caller-owned list for bounded-lifetime invocations
+    (streaming foreachBatch bodies, one kernel per micro-batch); the
+    caller unpersists its handles when the batch ends, where
+    checkpoint blocks would wait for the driver's GC.
 
     Elements must be distinct and non-null within a row (collect_set
     members, or structs led by a distinct id — both invariants of
     every caller), which makes element order equivalent to
     ``a.id < b.id``.
     """
-    import os as _os
-
-    if _os.environ.get("FILEFILTER_PAIR_PLAN_ONLY"):
-        return _inplace_list_pairs(grouped, list_col)
-    if scope is not None:
-        from pyspark.storagelevel import StorageLevel
-
-        g = grouped.persist(StorageLevel.MEMORY_AND_DISK)
-        scope.append(g)
-    else:
-        g = _lineage_cut(grouped, eager=False)
+    g = lineage_cut(grouped, scope=scope)
     mx = g.agg(F.max(F.size(list_col)).alias("m")).first()["m"]
     if mx is None or mx <= _PAIR_CHUNK:
         return _inplace_list_pairs(g, list_col)
@@ -426,22 +364,24 @@ def winnow_near_dup(
 # component.
 CC_DRIVER_MAX_EDGES = 2_000_000
 
-# Broadcast-hint gate for the driver-built cluster map (r17, ADVICE
-# r16): raw id bytes, not row count — a row-count gate assumes narrow
-# fixed-width ids, but 2M rows of 200-byte string doc ids are a ~1 GB
-# hash relation shipped to every executor past the auto-broadcast
-# threshold's head. 64 MB of raw ids stays comfortably inside executor
-# memory after the ~2-4x hash-relation framing overhead.
+# Broadcast-hint gate for the driver-built cluster map: raw id bytes,
+# not row count — a row-count gate assumes narrow fixed-width ids, but
+# 2M rows of 200-byte string doc ids are a ~1 GB hash relation shipped
+# to every executor past the auto-broadcast threshold's head. 64 MB of
+# raw ids stays comfortably inside executor memory after the ~2-4x
+# hash-relation framing overhead.
 CC_BROADCAST_MAX_BYTES = 64 * 1024 * 1024
 
 
 def _cc_map_bytes(rows: list) -> float:
     """Estimated raw id bytes of the driver-built (doc_id, cluster_id)
-    map: measured mean width over the first 1k rows (strings/bytes
-    carry their length; fixed-width ids count 8) scaled to the full
-    row count. The rows are already on the driver, so sampling is
+    map: mean width over a strided sample of about 1k rows spanning the
+    whole list (strings/bytes carry their length; fixed-width ids count
+    8) scaled to the full row count. :func:`_cc_driver` emits rows in
+    first-seen order, so a head-only sample would miss wide ids that
+    appear late. The rows are already on the driver, so sampling is
     free."""
-    probe = rows[:1000]
+    probe = rows[:: max(1, len(rows) // 1000)]
     per_row = sum(
         (len(a) if isinstance(a, (str, bytes)) else 8)
         + (len(b) if isinstance(b, (str, bytes)) else 8)
@@ -483,17 +423,10 @@ def _cc_driver(rows, spark, id_type) -> DataFrame:
     # estimate defaults to "huge" and every consumer join (the split
     # hash's left outer, the survivor anti-join) plans sort-merge:
     # two exchanges + sorts to attach a few hundred cluster rows to
-    # the corpus (r16, seen in the OP-D7-safesplit plan). The driver
-    # KNOWS the exact rows here — hint broadcast whenever the map is
-    # small enough to ship, which turns those joins into exchange-free
-    # broadcast-hash joins. r17 (ADVICE r16): the gate is BYTES, not
-    # rows — the r16 row-count gate assumed narrow fixed-width ids,
-    # but a 2M-row map of 200-byte string doc ids is a ~1 GB hash
-    # relation pushed to every executor over the auto-broadcast
-    # threshold's head. Estimate from the actual ids (the rows are
-    # already on the driver; sampling 1k is free) and cap at 64 MB of
-    # raw id bytes — comfortably inside executor memory after the
-    # ~2-4x hash-relation framing overhead.
+    # the corpus (seen in the OP-D7-safesplit plan). The driver KNOWS
+    # the exact rows here — hint broadcast whenever the map's estimated
+    # id bytes fit CC_BROADCAST_MAX_BYTES, which turns those joins into
+    # exchange-free broadcast-hash joins.
     if out and _cc_map_bytes(out) <= CC_BROADCAST_MAX_BYTES:
         df = F.broadcast(df)
     return df
@@ -523,26 +456,19 @@ def cluster_pairs(
     labels; stop when no label changes. Rounds needed = graph
     diameter (near-dup clusters are shallow — a handful), each round
     one join + one aggregation on narrow (node, label) rows.
-    A checkpoint truncates lineage per round so the plan does not
-    grow with iterations (:func:`_lineage_cut` — executor-local by
-    default; ``FILEFILTER_RELIABLE_CHECKPOINT_DIR`` opts in to
-    durable checkpoints for deployments that cannot afford
-    whole-query retries on executor loss). The convergence `.count()`
+    An eager :func:`~filefilter_spark.session.lineage_cut` per round
+    keeps the plan from growing with iterations. The convergence `.count()`
     is a driver-side scalar per round — O(diameter) actions, not
     per-row work. Pass ``driver_max_edges=0`` to force the
     distributed loop.
     """
     uniq = pairs.select(id_a, id_b).distinct()
-    persisted = False
     if driver_max_edges > 0:
-        from pyspark.storagelevel import StorageLevel
-
         # persist the NARROW distinct pair list before sizing it —
         # the pair generator upstream (LSH/Ed-Join/cosine verify) is
         # the expensive part, and both the count and the
         # collect-or-double below must not re-evaluate it
         uniq = uniq.persist(StorageLevel.MEMORY_AND_DISK)
-        persisted = True
         n_pairs = uniq.count()
         if n_pairs <= driver_max_edges:
             try:
@@ -553,17 +479,19 @@ def cluster_pairs(
                 )
             finally:
                 uniq.unpersist()
-    edges = _lineage_cut(
+    edges = lineage_cut(
         uniq.selectExpr(f"{id_a} AS a", f"{id_b} AS b")
         .unionByName(uniq.selectExpr(f"{id_b} AS a", f"{id_a} AS b"))
-        .distinct()
+        .distinct(),
+        eager=True,
     )
-    if persisted:
+    if driver_max_edges > 0:
         uniq.unpersist()
-    labels = _lineage_cut(
+    labels = lineage_cut(
         edges.select(F.col("a").alias("node"))
         .distinct()
-        .withColumn("label", F.col("node"))
+        .withColumn("label", F.col("node")),
+        eager=True,
     )
     converged = False
     for _ in range(max_iter):
@@ -572,14 +500,15 @@ def cluster_pairs(
             .groupBy("a")
             .agg(F.min("label").alias("nlabel"))
         )
-        new_labels = _lineage_cut(
+        new_labels = lineage_cut(
             labels.join(neighbor_min, labels.node == neighbor_min.a, "left")
             .select(
                 "node",
                 F.least(
                     F.col("label"), F.coalesce(F.col("nlabel"), F.col("label"))
                 ).alias("label"),
-            )
+            ),
+            eager=True,
         )
         changed = (
             new_labels.alias("n")
@@ -838,8 +767,6 @@ def _build_bloom(
 
     if n_parts <= tree_threshold:
         def fold(batches):
-            import pandas as pd
-
             bits = np.zeros(n_bytes, dtype=np.uint8)
             any_rows = False
             for b in batches:
@@ -893,8 +820,6 @@ def _bloom_slice_emitter(m: int, slice_bits: int):
     dense_cutoff = slice_bits // 32  # offsets beyond this: dense is smaller
 
     def emit(batches):
-        import pandas as pd
-
         acc: dict = {}  # slice_id -> list[np.uint32 offsets] | np dense uint8
 
         def promote(sid, chunks):
@@ -959,8 +884,6 @@ def _bloom_slice_or(m: int, slice_bits: int):
     import numpy as np
 
     def or_slices(batches):
-        import pandas as pd
-
         acc: dict = {}
         for b in batches:
             for sid, dense, payload in zip(b["slice_id"], b["dense"], b["payload"]):
@@ -1066,7 +989,6 @@ def bloom_dedup_against(
     broadcast bitmap.
     """
     import numpy as np
-    import pandas as pd
 
     # The fingerprint frame is consumed three times (count for sizing,
     # bitmap fold, false-positive anti-join); persist the 16-byte-per-
@@ -1081,8 +1003,6 @@ def bloom_dedup_against(
         _BLOOM_LIVE.append(res)
     seen_fp = seen.select(fingerprint(text_col).alias("__fp"))
     if n_seen is None:
-        from pyspark import StorageLevel
-
         seen_fp = seen_fp.persist(StorageLevel.MEMORY_AND_DISK)
         res._handles.append(seen_fp)
         n_seen = seen_fp.count()
@@ -1107,8 +1027,6 @@ def bloom_dedup_against(
     # per branch (measured 4x the whole op's cost at probe scale). The
     # cache is ~24 bytes/row — for a 1 B-doc daily batch that is
     # ~24 GB across the cluster, far below re-reading the batch.
-    from pyspark import StorageLevel
-
     new_fp = (
         new.select(F.col(id_col), fingerprint(text_col).alias("__fp"))
         .withColumn("__maybe", might_contain(_bloom_positions(F.col("__fp"), m, k)))

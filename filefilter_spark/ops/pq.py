@@ -56,6 +56,8 @@ from typing import Mapping, Sequence
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
+from filefilter_spark.session import lineage_cut
+
 Codebooks = list[list[list[float]]]  # [subspace][centroid][component]
 
 
@@ -419,22 +421,15 @@ def build_ivfpq_index(
         df, books, centroids, vec_col=vec_col, id_col=id_col,
         scale=scale, residual=residual,
     )
-    # Lazy lineage cut (r17, guide §5): an in-memory index is probed
-    # several times per build — ivfpq_topk's auto-refine count and its
-    # shortlist each execute `indexed`, re-running the whole
-    # assignment+encode projection per action (at table scale the
-    # persisted-by-cell parquet layout plays this role). The first
-    # consumer materializes the checkpoint; later consumers read
-    # blocks. Checkpoint, not persist: checkpoint blocks are never
-    # CacheManager-plan-matched, so a separate rebuild of the same
-    # recipe still recomputes honestly (the r16 adjudication). The
-    # result is a SNAPSHOT of df at build time — rebuild to refresh —
-    # and executor loss fails the consumer, retried whole (the
-    # standing localCheckpoint caveat; see ops/dedup._lineage_cut for
-    # the durable opt-in).
-    from filefilter_spark.ops.dedup import _lineage_cut
-
-    return _lineage_cut(indexed, eager=False), books, centroids
+    # Lazy lineage cut: an in-memory index is probed several times per
+    # build — ivfpq_topk's auto-refine count and its shortlist each
+    # execute `indexed`, re-running the whole assignment+encode
+    # projection per action (at table scale the persisted-by-cell
+    # parquet layout plays this role). The first consumer materializes
+    # the cut; later consumers read blocks. The result is a snapshot of
+    # df at build time — rebuild to refresh. Policy and durability:
+    # session.lineage_cut.
+    return lineage_cut(indexed), books, centroids
 
 
 def _assign_cells(

@@ -12,7 +12,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.storagelevel import StorageLevel
 
 # Defaults are sized for the local[32]/128GiB test box but every knob is
 # cluster-safe: on a real cluster AQE re-plans partition counts at
@@ -33,7 +34,53 @@ _DEFAULT_CONF: dict[str, str] = {
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
     "spark.ui.enabled": "false",
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+    # durable lineage cuts (see lineage_cut) delete their files once the
+    # cut frame is garbage-collected on the driver
+    "spark.cleaner.referenceTracking.cleanCheckpoints": "true",
 }
+
+
+def lineage_cut(
+    df: DataFrame, eager: bool = False, scope: list | None = None
+) -> DataFrame:
+    """Truncate ``df``'s lineage so later consumers read materialized
+    blocks instead of re-running the upstream plan. The one lineage-cut
+    policy of the engine, for iterative loops (CC rounds, k-means||
+    state, BPE merges) and multi-consumer frames (the pair kernel's
+    grouped lists, the in-memory IVF-PQ index):
+
+    - ``scope`` given (bounded-lifetime callers such as a foreachBatch
+      body): ``persist(MEMORY_AND_DISK)`` and append the handle to
+      ``scope``; the caller unpersists it when the batch ends, where
+      checkpoint blocks would wait for the driver's GC. Lineage is
+      kept; the cache is the cut. A per-batch plan never recurs, so no
+      later query can be served from this cache.
+    - the application set ``SparkContext.setCheckpointDir``: a durable
+      ``checkpoint`` that survives executor loss. The frame is persisted
+      first and the checkpoint is eager, so the upstream runs once, then
+      the cache is dropped; the files are deleted after the returned
+      frame is released (``cleanCheckpoints`` in :data:`_DEFAULT_CONF`).
+    - otherwise: ``localCheckpoint(eager)``, executor-local blocks; an
+      executor loss fails the consumer, which is retried whole.
+
+    ``df`` must be a frame the caller has not cached: the durable path
+    drops the cache it makes.
+
+    Checkpoints, unlike a persist, are never matched by the
+    CacheManager's plan lookup, so a later identical plan recomputes
+    instead of reading this snapshot. Either way the result is a
+    snapshot of ``df`` when it is materialized.
+    """
+    if scope is not None:
+        scope.append(df.persist(StorageLevel.MEMORY_AND_DISK))
+        return df
+    if df.sparkSession.sparkContext.getCheckpointDir() is None:
+        return df.localCheckpoint(eager=eager)
+    df.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        return df.checkpoint(eager=True)
+    finally:
+        df.unpersist()
 
 
 # Short S3 option name -> hadoop-aws (s3a) conf key. Exposed through

@@ -85,37 +85,10 @@ def test_chunked_list_pairs_exact_across_chunk_boundaries(spark):
     assert all(r.a.id < r.b.id and r.a.n == r.a.id % 3 for r in spairs)
 
 
-def test_chunked_list_pairs_plan_only_escape_hatch(spark, monkeypatch):
-    """r17 (ADVICE r16): FILEFILTER_PAIR_PLAN_ONLY=1 gives a LAZY
-    plan-only build — no checkpoint snapshot (no Scan ExistingRDD in
-    the plan), no Spark jobs at build time — for explain/dry-run use.
-    Same pairs when actually executed on all-small lists."""
-    import itertools
-
-    from filefilter_spark.ops.dedup import _chunked_list_pairs
-
-    # range-based input: the source plan has no ExistingRDD of its
-    # own, so any ExistingRDD in the pair plan is a checkpoint snapshot
-    df = spark.range(1).selectExpr(
-        "cast(id as int) k", "array(5L, 3L, 9L, 1L) AS ids"
-    )
-
-    monkeypatch.setenv("FILEFILTER_PAIR_PLAN_ONLY", "1")
-    sc = spark.sparkContext
-    sc.setJobGroup("plan_only_probe", "escape hatch build")
-    pairs = _chunked_list_pairs(df, "ids")
-    sc.setJobGroup(None, None)
-    assert sc.statusTracker().getJobIdsForGroup("plan_only_probe") == []
-    plan = pairs._jdf.queryExecution().executedPlan().toString()
-    assert "ExistingRDD" not in plan  # no snapshot — fully lazy
-    got = sorted((r.a, r.b) for r in pairs.collect())
-    assert got == sorted(itertools.combinations(sorted([5, 3, 9, 1]), 2))
-
-
 def test_cc_map_broadcast_gate_is_byte_based():
-    """r17 (ADVICE r16): the _cc_driver broadcast hint gates on
-    estimated id BYTES, not row count — wide string ids stop
-    qualifying long before 2M rows."""
+    """The _cc_driver broadcast hint gates on estimated id BYTES, not
+    row count — wide string ids stop qualifying long before 2M rows,
+    also when they appear only late in the list."""
     from filefilter_spark.ops.dedup import (
         CC_BROADCAST_MAX_BYTES,
         _cc_map_bytes,
@@ -131,48 +104,93 @@ def test_cc_map_broadcast_gate_is_byte_based():
         > CC_BROADCAST_MAX_BYTES
     # the estimator samples: width measured from the head scales out
     assert _cc_map_bytes(wide * 3000) > CC_BROADCAST_MAX_BYTES
+    # _cc_driver emits first-seen order: narrow ids at the head, wide
+    # string ids later. 2M rows, half of them 200-byte ids ≈ 416 MB ->
+    # over the gate; the sample must span the list, not its head
+    skewed = [(1, 2)] * 1_000_000 + [("x" * 200, "y" * 200)] * 1_000_000
+    assert _cc_map_bytes(skewed) > CC_BROADCAST_MAX_BYTES
 
 
-def test_reliable_checkpoint_dir_passthrough(spark, monkeypatch, tmp_path):
-    """r17 (VERDICT r16 #8): FILEFILTER_RELIABLE_CHECKPOINT_DIR routes
-    the pair kernel's and CC loop's lineage cuts through durable
-    checkpoint() instead of localCheckpoint — identical results, and
-    checkpoint data lands under the configured directory."""
+def test_reliable_checkpoint_dir_passthrough(spark, tmp_path):
+    """An application-set ``setCheckpointDir`` turns every lineage cut
+    durable: the pair kernel and the CC loop give the local cut's rows,
+    checkpoint files land under the set dir, and the upstream of a
+    durable cut is evaluated once. The dir is unset again afterwards —
+    the ``spark`` fixture is session-wide, and a leftover dir would
+    make every later test's cuts durable. The files are deleted once
+    the cut frames are released."""
+    import gc
     import itertools
     import os
+    import time
+
+    from pyspark.storagelevel import StorageLevel
 
     from filefilter_spark.ops.dedup import (
         _chunked_list_pairs,
         cluster_pairs,
     )
+    from filefilter_spark.session import lineage_cut
 
-    ckdir = str(tmp_path / "reliable_ck")
-    monkeypatch.setenv("FILEFILTER_RELIABLE_CHECKPOINT_DIR", ckdir)
-    df = spark.range(1).selectExpr(
-        "cast(id as int) k", "array(5L, 3L, 9L, 1L) AS ids"
-    )
-    got = sorted((r.a, r.b) for r in _chunked_list_pairs(df, "ids").collect())
-    assert got == sorted(itertools.combinations(sorted([5, 3, 9, 1]), 2))
-
+    sc = spark.sparkContext
+    assert sc.getCheckpointDir() is None
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11)], "id_a long, id_b long"
     )
-    # driver_max_edges=0 forces the distributed loop (the checkpointing
-    # mode); results must equal the driver union-find's
-    want = sorted(
-        tuple(r) for r in cluster_pairs(pairs).collect()
+    # local cuts: driver_max_edges=0 forces the distributed CC loop
+    want_cc = sorted(
+        tuple(r) for r in cluster_pairs(pairs, driver_max_edges=0).collect()
     )
-    monkeypatch.setenv("FILEFILTER_RELIABLE_CHECKPOINT_DIR", ckdir)
-    got_cc = sorted(
-        tuple(r)
-        for r in cluster_pairs(pairs, driver_max_edges=0).collect()
-    )
-    assert got_cc == want
-    # durable checkpoint data actually landed under the opt-in dir
-    found = [
-        f for root, _, fs in os.walk(ckdir) for f in fs
-    ]
-    assert found, "no reliable checkpoint files written"
+    assert want_cc == sorted(tuple(r) for r in cluster_pairs(pairs).collect())
+
+    ckdir = str(tmp_path / "reliable_ck")
+    sc.setCheckpointDir(ckdir)
+    try:
+        df = spark.range(1).selectExpr(
+            "cast(id as int) k", "array(5L, 3L, 9L, 1L) AS ids"
+        )
+        got = sorted(
+            (r.a, r.b) for r in _chunked_list_pairs(df, "ids").collect()
+        )
+        assert got == sorted(itertools.combinations(sorted([5, 3, 9, 1]), 2))
+        got_cc = sorted(
+            tuple(r)
+            for r in cluster_pairs(pairs, driver_max_edges=0).collect()
+        )
+        assert got_cc == want_cc
+
+        # upstream evaluated once: a counting UDF under a lazy-requested
+        # cut consumed twice
+        evals = sc.accumulator(0)
+
+        def tick(x):
+            evals.add(1)
+            return x
+
+        src = spark.range(4).select(F.udf(tick, "bigint")("id").alias("x"))
+        cut = lineage_cut(src)
+        assert sorted(r.x for r in cut.collect()) == [0, 1, 2, 3]
+        assert cut.count() == 4
+        assert evals.value == 4
+        assert src.storageLevel == StorageLevel.NONE  # its cache is dropped
+
+        def files():
+            return [f for _, _, fs in os.walk(ckdir) for f in fs]
+
+        assert files(), "no durable checkpoint files written"
+        # the cleaner (cleanCheckpoints, set by get_spark) deletes them
+        # once the cut frames are released and the JVM collects them
+        del cut, src
+        for _ in range(80):
+            gc.collect()
+            sc._jvm.System.gc()
+            if not files():
+                break
+            time.sleep(0.25)
+        assert not files(), "durable checkpoint files not cleaned up"
+    finally:
+        sc._jsc.sc().setCheckpointDir(None)
+    assert sc.getCheckpointDir() is None
 
 
 def test_bucket_pairs_hot_bucket_same_result_as_small(spark):

@@ -1,18 +1,22 @@
 """Golden pipeline tests replicating the reference's documented outputs.
 
-- fullExample (deterministic variant): running the *actual reference
-  YAML* end-to-end must byte-match the golden CSV embedded at
-  ``/root/reference/FileFilterGPT/example1.txt:101-109`` (rows compared
-  sorted — row order through row stages is not defined, SURVEY.md §1.4).
-- phones: regex truth table from ``/root/reference/FileFilterGPT/phones.yml:5-16``
-  (spec prose in ``phones.txt:1-3``).
+- fullExample (deterministic variant): the reference-shaped YAML run
+  end-to-end must byte-match the golden CSV the reference documents in
+  ``FileFilterGPT/example1.txt:101-109`` (rows compared sorted — row
+  order through row stages is not defined, SURVEY.md §1.4).
+- phones: the regex truth table of the reference's
+  ``FileFilterGPT/phones.yml:5-16`` (spec prose in ``phones.txt:1-3``).
+
+The inputs live in ``tests/fixtures/reference/``: small reconstructions
+of the reference's example files (SURVEY.md §5.1), with the REST call
+of fullExample replaced by a python stage returning a fixed response.
 """
 
 import subprocess
 import sys
 from pathlib import Path
 
-REF = Path("/root/reference")
+REF = Path(__file__).resolve().parent / "fixtures" / "reference"
 
 GOLDEN_FULLEXAMPLE = [
     "id;address;state",

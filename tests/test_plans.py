@@ -387,11 +387,10 @@ def test_gopher_rep_plan_shape(spark, sf_dir, queries):
 
 
 def test_jaccard_pair_generation_is_codegen(spark, sf_dir, queries):
-    # r16 (final form): the pair kernel (_chunked_list_pairs) is
-    # MODE-ROUTED — the grouped posting frame is eagerly
-    # localCheckpoint'ed, one bounded job reads max(list size), and the
-    # plan contains ONLY the branch the data needs. Pin both modes at
-    # the kernel surface:
+    # the pair kernel (_chunked_list_pairs) is MODE-ROUTED — the
+    # grouped posting frame goes through session.lineage_cut, one
+    # bounded job reads max(list size), and the plan contains ONLY the
+    # branch the data needs. Pin both modes at the kernel surface:
     from filefilter_spark.ops.dedup import _PAIR_CHUNK, _chunked_list_pairs
 
     # all-small input -> the zero-extra-exchange in-place explode: no
