@@ -17,6 +17,7 @@ chain is the standard AWS provider chain, same idea as DuckDB httpfs).
 
 from __future__ import annotations
 
+import re
 from pathlib import Path
 from typing import Sequence
 
@@ -282,13 +283,14 @@ def write_csv(
     single_file: bool = False,
     compression: str | None = None,
 ) -> None:
-    """CSV sink (OP-A9; reference ``filefilter.py:374-379``).
+    """CSV sink (OP-A9; reference ``filefilter.py:374-379``): a directory
+    of part files at ``path``, one per task, each with its own header.
 
-    ``single_file=True`` coalesces to 1 partition for byte-parity with
-    the reference's single-file ``COPY`` — only for small outputs; at
-    scale leave it off and let each task write its own part file.
-    ``compression`` ("gzip", "bzip2", "zstd", ...) trades CPU for
-    storage/network; remember gzip parts are not splittable on re-read.
+    ``single_file=True`` coalesces to 1 partition, so the whole last
+    stage runs as one task and writes one part. :func:`write_csv_file`
+    gets one file without it. ``compression`` ("gzip", "bzip2", "zstd",
+    ...) trades CPU for storage/network; remember gzip parts are not
+    splittable on re-read.
     """
     out = df.coalesce(1) if single_file else df
     w = (
@@ -301,32 +303,55 @@ def write_csv(
     w.csv(_normalize_path(path))
 
 
-def write_csv_file(df: DataFrame, path: str, delimiter: str = ",") -> None:
-    """Write ONE local CSV file at ``path`` — byte-parity with the
-    reference's single-file ``COPY ... TO`` sink (``filefilter.py:374-379``).
+_PART_NAME = re.compile(r"part-(\d+)-.*?(?:-c(\d+))?\.csv$")
 
-    Spark's csv writer emits a directory of part files; this coalesces
-    to one part and renames it to the target. Local-filesystem CLI
-    convenience only — at scale use :func:`write_csv` and let every
-    task write its own part. An ``s3://`` target takes the same
-    driver-side boto3 tier as the read side when the s3a jars are
-    absent: write locally, upload the one file.
+
+def _part_order(name: str) -> tuple[int, int]:
+    """Sort key of a Spark part file: (task index, file counter). Names
+    are ``part-NNNNN-<uuid>-cNNN.csv`` with the index zero-padded to
+    five digits only, so past 99,999 tasks a string sort misorders."""
+    m = _PART_NAME.match(name)
+    if m is None:
+        raise ValueError(f"not a Spark CSV part file name: {name!r}")
+    return int(m.group(1)), int(m.group(2) or 0)
+
+
+def write_csv_file(df: DataFrame, path: str, delimiter: str = ",") -> None:
+    """Write ONE CSV file at ``path`` — the reference's single-file
+    ``COPY ... TO`` sink (``filefilter.py:374-379``).
+
+    Spark writes ``df`` with its own partitioning, one part file per
+    task, so the last stage stays parallel. The driver then stitches
+    the parts in task-index order into a temp file next to the target,
+    keeping the first part's header and dropping the identical header
+    of every later part, and renames it over ``path``. A one-partition
+    write concatenates partitions 0..N-1 in the same order, so the file
+    is byte-identical to ``write_csv(df, ..., single_file=True)``'s one
+    part. An ``s3://`` target takes the same driver-side boto3 tier as
+    the read side when the s3a jars are absent: the stitched file is
+    uploaded. Nothing is left behind when a write fails.
     """
+    import os
     import shutil
     import tempfile
-    from pathlib import Path as _P
+    import uuid
 
+    # A quoted column name may hold newlines, so a header spans one
+    # line more than the names hold newlines.
+    header_lines = 1 + sum(c.count("\n") for c in df.columns)
     tmp = tempfile.mkdtemp(prefix="ffspark_csv_")
+    stitched = None
     try:
-        out_dir = str(_P(tmp) / "out")
-        write_csv(df, out_dir, delimiter=delimiter, single_file=True)
-        parts = sorted(_P(out_dir).glob("part-*.csv"))
+        out_dir = Path(tmp) / "out"
+        write_csv(df, str(out_dir), delimiter=delimiter)
+        parts = sorted(out_dir.glob("part-*.csv"), key=lambda p: _part_order(p.name))
         if not parts:
             raise RuntimeError(
                 f"csv write produced no part file under {out_dir} "
                 "(empty input with a writer that skips empty parts?)"
             )
-        if path.startswith(("s3://", "s3a://")):
+        to_s3 = path.startswith(("s3://", "s3a://"))
+        if to_s3:
             from filefilter_spark.session import s3a_available
 
             if s3a_available(df.sparkSession):  # pragma: no cover - jars
@@ -334,19 +359,39 @@ def write_csv_file(df: DataFrame, path: str, delimiter: str = ",") -> None:
                     "with the s3a connector present, write to s3a:// via "
                     "write_csv (distributed parts), not the single-file sink"
                 )
+            stitched = Path(tmp) / "stitched.csv"
+        else:
+            target = Path(path)
+            target.parent.mkdir(parents=True, exist_ok=True)
+            stitched = target.parent / f".{target.name}.{uuid.uuid4().hex[:8]}.tmp"
+        header = None
+        with open(stitched, "xb") as out:
+            for part in parts:
+                with open(part, "rb") as f:
+                    head = b"".join(f.readline() for _ in range(header_lines))
+                    if header is None:
+                        header = head
+                        out.write(head)
+                    elif head != header:
+                        raise RuntimeError(
+                            f"csv part {part.name} has header {head!r}, "
+                            f"expected {header!r}"
+                        )
+                    shutil.copyfileobj(f, out, 1 << 20)
+        if to_s3:
             from urllib.parse import urlparse
 
             import boto3
 
             u = urlparse("s3://" + path.split("://", 1)[1])
-            boto3.client("s3").upload_file(
-                str(parts[0]), u.netloc, u.path.lstrip("/")
-            )
+            boto3.client("s3").upload_file(str(stitched), u.netloc, u.path.lstrip("/"))
         else:
-            _P(path).parent.mkdir(parents=True, exist_ok=True)
-            shutil.move(str(parts[0]), path)
+            os.replace(stitched, path)
     finally:
-        # failed writes must not accumulate ffspark_csv_* scratch dirs
+        # failed writes must leave neither the temp file next to the
+        # target nor an ffspark_csv_* scratch dir behind
+        if stitched is not None:
+            stitched.unlink(missing_ok=True)
         shutil.rmtree(tmp, ignore_errors=True)
 
 

@@ -80,6 +80,124 @@ def test_csv_roundtrip_quotes_delimiters_newlines(spark, tmp_path):
     assert got == {i: s for i, s in rows}
 
 
+def _four_partitions(spark, parts, schema):
+    """A frame with exactly the given four partitions, in order."""
+    rdd = spark.sparkContext.parallelize(parts, 4).flatMap(lambda rows: rows)
+    df = spark.createDataFrame(rdd, schema)
+    assert df.rdd.glom().map(len).collect() == [len(p) for p in parts]
+    return df
+
+
+def test_csv_file_sink_matches_one_partition_write(spark, tmp_path):
+    """The single-file sink stitches the parallel parts into the same
+    bytes a one-partition write produces: delimiters, quotes and
+    embedded newlines in later partitions, empty partitions between
+    non-empty ones, and a quoted header that itself spans two lines."""
+    from filefilter_spark.io import write_csv, write_csv_file
+
+    df = _four_partitions(spark, [
+        [(1, "plain")],
+        [],
+        [(2, "with;delimiter"), (3, 'with "quotes"')],
+        [(4, "with\nnewline"), (5, None), (6, "")],
+    ], "a int, b string").toDF("i;d", 's "q"\nx')
+    out = tmp_path / "out.csv"
+    write_csv_file(df, str(out), delimiter=";")
+    write_csv(df, str(tmp_path / "one"), delimiter=";", single_file=True)
+    (one,) = (tmp_path / "one").glob("part-*.csv")
+    expected = one.read_bytes()
+    assert expected.startswith(b'"i;d";"s \\"q\\"\nx"\n1;plain\n')
+    assert out.read_bytes() == expected
+    assert sorted(p.name for p in tmp_path.iterdir()) == ["one", "out.csv"]
+
+
+def test_csv_file_sink_all_empty_partitions_writes_header(spark, tmp_path):
+    from filefilter_spark.io import write_csv_file
+
+    df = _four_partitions(spark, [[], [], [], []], "id int, s string")
+    out = tmp_path / "empty.csv"
+    write_csv_file(df, str(out))
+    assert out.read_bytes() == b"id,s\n"
+
+
+def test_csv_file_sink_last_stage_is_parallel(spark, tmp_path):
+    """The sink's write stage runs one task per input partition; a
+    ``coalesce(1)`` would fold the whole last stage into one task."""
+    from filefilter_spark.io import write_csv_file
+
+    sc = spark.sparkContext
+    df = _four_partitions(
+        spark, [[(i, f"r{i}")] for i in range(4)], "id int, s string"
+    )
+    group = "csv-sink-parallelism"
+    sc.setJobGroup(group, "single-file csv sink")
+    try:
+        write_csv_file(df, str(tmp_path / "out.csv"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    stages = [
+        s for j in tracker.getJobIdsForGroup(group)
+        for s in tracker.getJobInfo(j).stageIds
+    ]
+    assert stages
+    assert tracker.getStageInfo(max(stages)).numTasks == 4
+    assert (tmp_path / "out.csv").read_text() == "id,s\n0,r0\n1,r1\n2,r2\n3,r3\n"
+
+
+def test_csv_part_order_is_numeric():
+    from filefilter_spark.io import _part_order
+
+    names = [
+        "part-100000-9f0c-c000.csv",
+        "part-99999-9f0c-c000.csv",
+        "part-00002-9f0c-c001.csv",
+        "part-00002-9f0c-c000.csv",
+    ]
+    assert sorted(names, key=_part_order) == [
+        "part-00002-9f0c-c000.csv",
+        "part-00002-9f0c-c001.csv",
+        "part-99999-9f0c-c000.csv",
+        "part-100000-9f0c-c000.csv",
+    ]
+    with pytest.raises(ValueError):
+        _part_order("_SUCCESS")
+
+
+def test_csv_file_sink_leaves_no_scratch_on_failure(spark, tmp_path, monkeypatch):
+    """A failed write removes its ffspark_csv_* scratch dir and the temp
+    file it stitches next to the target."""
+    import tempfile
+
+    from filefilter_spark.io import write_csv_file
+
+    scratch = tmp_path / "scratch"
+    scratch.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(scratch))
+    dest = tmp_path / "dest"
+    dest.mkdir()
+    df = spark.createDataFrame([(1, "a"), (2, "b")], "id int, s string")
+
+    # Spark refuses the write: CSV has no array type
+    with pytest.raises(Exception, match="(?i)array"):
+        write_csv_file(
+            spark.createDataFrame([(1, [1])], "id int, xs array<int>"),
+            str(dest / "arr.csv"),
+        )
+    # the target's parent is a file
+    (dest / "afile").write_text("x")
+    with pytest.raises(OSError):
+        write_csv_file(df, str(dest / "afile" / "out.csv"))
+    # the stitch ran, then the rename onto a directory fails
+    (dest / "adir.csv").mkdir()
+    with pytest.raises(OSError):
+        write_csv_file(df, str(dest / "adir.csv"))
+
+    assert list(scratch.iterdir()) == []
+    assert sorted(p.name for p in dest.iterdir()) == ["adir.csv", "afile"]
+    assert list((dest / "adir.csv").iterdir()) == []
+
+
 def test_python_stage_nulls_in_new_column(spark):
     df = spark.createDataFrame([(1,), (2,), (3,)], "id int")
     out = Pipeline(spark, load_config_str("""
