@@ -21,6 +21,7 @@ import logging
 import shutil
 import sys
 import time
+from contextlib import nullcontext
 
 
 def build_parser() -> argparse.ArgumentParser:
@@ -30,7 +31,8 @@ def build_parser() -> argparse.ArgumentParser:
     )
     p.add_argument("input", help="input file (csv/tsv/txt/parquet, local or s3://)")
     p.add_argument("config", help="pipeline YAML")
-    p.add_argument("output", help="output CSV file path")
+    p.add_argument("output", help="output path: .parquet writes a parquet "
+                                  "dataset, anything else one CSV file")
     p.add_argument("-i", "--interactive", action="store_true",
                    help="print per-stage metrics and a sample of the result")
     p.add_argument("-d", "--delete", action="store_true",
@@ -61,8 +63,8 @@ def main(argv: list[str] | None = None) -> int:
     if args.delete and args.checkpoint_dir:
         shutil.rmtree(args.checkpoint_dir, ignore_errors=True)
 
-    from filefilter_spark.io import read_input, write_csv_file
     from filefilter_spark.pipeline import Pipeline
+    from filefilter_spark.progress import StatusLine
     from filefilter_spark.session import get_spark
 
     t0 = time.time()
@@ -75,29 +77,12 @@ def main(argv: list[str] | None = None) -> int:
         # flag overrides YAML; absent flag defers to observeMetrics
         observe_metrics=False if args.no_observe_metrics else None,
     )
-    df = read_input(
-        spark, args.input,
-        delimiter=pipe.config.in_delimiter,
-        sample_lines=pipe.config.sample_lines,
-    )
-    if args.interactive:
-        from contextlib import ExitStack
-
-        from filefilter_spark.progress import StatusLine
-
-        stack = ExitStack()
-        stack.enter_context(StatusLine(spark))
-    else:
-        from contextlib import nullcontext
-
-        stack = nullcontext()
-    with stack:
-        result = pipe.run(df)
-        write_csv_file(result.df, args.output, delimiter=pipe.config.out_delimiter)
+    with StatusLine(spark) if args.interactive else nullcontext():
+        result = pipe.run_file(args.input, args.output)
     if args.interactive:
         # observe()-based: counts were collected by the write action, no
         # extra jobs (OP-A10/A14).
-        for m in result.harvest_metrics():
+        for m in result.metrics:
             log.info("stage %-30s %-7s rows=%s errors=%s %s%s",
                      m.name, m.action_type, m.rows_out, m.errors,
                      m.http_status or "", " [resumed]" if m.resumed else "")

@@ -165,9 +165,9 @@ def _kmeanspar_seeds(
 
     Like maxmin it cannot leave a data mode unseeded: every round's
     d²-weighted draw lands mass in every still-uncovered region, and
-    the greedy D² reduction keeps the spread (measured —
-    tools/ann_drift_probe.py reproduces maxmin's recall/pruning on
-    the shifted-rebuild scenario). Returns ≤ k seed vectors
+    the greedy D² reduction keeps the spread (measured — SCALING.md
+    "r16: k-means‖ rebuild seeding" reproduces maxmin's recall/pruning
+    on the shifted-rebuild scenario). Returns ≤ k seed vectors
     (exactly min(k, distinct rows)).
 
     Plan-size discipline at rebuild-grade k: distances ride per-row
@@ -334,8 +334,8 @@ def lloyd_kmeans(
     partition-invariant but DECORRELATED from id order. When row ids
     correlate with content (time-ordered ingest, mode-sorted corpora)
     the lowest-id seeds all land in one region and shallow Lloyd runs
-    keep several centroids collapsed there (measured:
-    tools/ann_drift_probe.py — a rebuilt 2×-corpus index at
+    keep several centroids collapsed there (measured: SCALING.md
+    "ANN drift signal" — a rebuilt 2×-corpus index at
     n_lists=48/id-seeding left probed@4 at ~56% of the corpus);
     ``"hash"`` spreads the seeds content-blind, but leaves ~1/e of k
     modes unseeded at k ≈ mode count (coupon collector, measured).
@@ -373,7 +373,7 @@ def lloyd_kmeans(
             # id). k−1 extra passes over the cached narrow frame — the
             # rebuild-grade initializer: unlike id/hash seeding it
             # cannot leave a data mode unseeded (coupon-collector gap,
-            # measured in tools/ann_drift_probe.py), and it is a
+            # measured in SCALING.md "ANN drift signal"), and it is a
             # 2-approximation for the k-center objective.
             first = seeds.orderBy(
                 F.xxhash64("__id"), F.col("__id")

@@ -29,9 +29,8 @@ The column min/max bounds come from one map-combined aggregate
 Scale shape of :func:`write_zordered`:
 ``repartitionByRange(zkey)`` — one range-exchange shuffle (AQE-sized,
 the same cost any global sort pays) — then ``sortWithinPartitions``
-so parquet row groups inherit contiguous z-ranges. The probe
-(``tools/zorder_probe.py``) measures the payoff directly from parquet
-footers: row groups whose min/max box intersects a 2-D predicate box,
+so parquet row groups inherit contiguous z-ranges. SCALING.md
+"Z-order layout" measures the payoff directly from parquet footers: row groups whose min/max box intersects a 2-D predicate box,
 z-ordered vs single-column-sorted.
 
 The module also owns the file-level store primitives that the

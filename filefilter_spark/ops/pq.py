@@ -1028,8 +1028,8 @@ def load_ann_meta(spark, path: str) -> dict:
     return meta
 
 
-# Drift-policy thresholds, calibrated by tools/ann_drift_probe.py
-# (SCALING.md "ANN drift signal", r15): on the measured recall curve a
+# Drift-policy thresholds, calibrated in SCALING.md "ANN drift
+# signal" (r15): on the measured recall curve a
 # same-distribution ingest sits at TV ≈ 0.1–0.2 with flat recall, a
 # shifted-distribution ingest reads TV ≥ ~0.45 with recall sagging at
 # the default probe width, and recall at 2× ingested mass is rebuild
@@ -1063,8 +1063,8 @@ def ann_index_drift(meta: Mapping) -> dict:
     * ``ingested_frac`` — ingested rows / built rows: even
       perfectly-shaped growth eventually warrants a refit (the model
       was fit on a shrinking fraction of the corpus).
-    * ``action`` — the operational rule, thresholds measured by
-      ``tools/ann_drift_probe.py``: ``"ok"`` below
+    * ``action`` — the operational rule, thresholds measured in
+      SCALING.md "ANN drift signal": ``"ok"`` below
       ``DRIFT_TV_WIDEN``; ``"widen_probe"`` when TV crosses it
       (recall is probe-bound under a frozen partial fit — raise
       ``n_probe``); ``"rebuild"`` when TV ≥ ``DRIFT_TV_REBUILD`` or

@@ -472,7 +472,7 @@ def _read_index_stats(
 # r16). The BM25 layout has NO frozen model — stats and postings merge
 # exactly forever — but n_buckets is a frozen SIZING decision: past
 # growth, each bucket holds that multiple of its intended postings
-# share. Measured (tools/text_index_growth_probe.py): probe LATENCY
+# share. Measured (SCALING.md "Text-index growth signal"): probe LATENCY
 # stays flat to ×16 at probe scale — term-sorted buckets row-group-skip
 # the grown mass — so this is a LAYOUT maintenance signal, not a
 # latency alarm: compaction units, per-bucket file counts, and

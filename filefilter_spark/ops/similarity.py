@@ -614,9 +614,8 @@ def cell_memberships(
     return base.select("id", F.explode(F.expr(cells_expr)).alias("cell"))
 
 
-# SemDeDup staleness thresholds, calibrated by
-# tools/semdedup_drift_probe.py (SCALING.md "SemDeDup drift signal",
-# r16). The ACTION keys off ``capped_mass_frac`` — the fraction of a
+# SemDeDup staleness thresholds, calibrated in SCALING.md "SemDeDup
+# drift signal" (r16). The ACTION keys off ``capped_mass_frac`` — the fraction of a
 # batch's memberships landing in cells the loop's ``max_cell`` cap has
 # dropped from candidate generation — because that IS the recall-loss
 # mechanism: a near-dup whose original lives only in capped cells
@@ -670,7 +669,7 @@ def semdedup_cell_drift(
       whose members are OUT of candidate generation). This is the
       direct recall-loss predictor: a near-dup pair connected only
       through capped cells is silently missed, and the measured miss
-      rate tracks this fraction (``tools/semdedup_drift_probe.py``).
+      rate tracks this fraction (SCALING.md "SemDeDup drift signal").
       Drives ``action``: ok → ``"degraded"`` at
       :data:`SEMDEDUP_CAP_WARN` → ``"rebuild"`` at
       :data:`SEMDEDUP_CAP_REBUILD` (refit the centroids —

@@ -33,11 +33,22 @@ halves are plan-tested (tests/test_plans.py, cross-stage section):
   filtered scan. That is the mode a 100 TB run wants; per-stage counts
   are the reference-parity default.
 
-Metrics (OP-A10/A14) ride on ``df.observe``: per-stage row counts are
-collected by the SAME action that materializes the result — zero extra
-jobs — exactly what the reference's free-rolling counters wanted to be.
-``collect_metrics=True`` additionally forces an eager count per stage
-(the reference's literal behavior, N extra jobs; off by default).
+Metrics (OP-A10/A14) ride on ``df.observe``: each stage's row count is
+filled by the first action that completes over its Observation. For a
+lazy pipeline that is the sink's write, so the counts cost no extra
+jobs. Some stages act when applied: ``expect``'s aggregate,
+``temperature``'s group counts and ``bpe``'s training histogram each
+read the full upstream, so they fill the upstream counts with the same
+values. ``collect_metrics=True`` additionally forces an eager count per
+stage (the reference's literal behavior, N extra jobs; off by default).
+
+A stage that samples its input when applied (``Stage.samples_input``:
+the python and pandas stages' schema-inference sample) and the OP-A11
+head sample must not run on a plan with pending Observations: an
+Observation keeps the first completed action, and a limit job would
+record the sample size as the stage's row count. Only then does
+:meth:`Pipeline.run` also thread an observation-free copy of the chain,
+and only up to the last stage that needs it.
 
 Resume (workspace analog): with ``checkpoint_dir`` set, each stage's
 output is materialized to ``<dir>/stage_<N>/`` parquet; a later run
@@ -60,7 +71,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Observation, SparkSession
 
 from filefilter_spark.config import PipelineConfig, StageConfig, load_config
-from filefilter_spark.io import read_input, write_csv_file
+from filefilter_spark.io import read_input, write_csv_file, write_parquet
 from filefilter_spark.stages import STAGE_TYPES
 
 log = logging.getLogger("filefilter_spark")
@@ -191,22 +202,30 @@ class Pipeline:
     def run(self, df: DataFrame) -> PipelineResult:
         """Fold the enabled stages over the input DataFrame (OP-A8).
 
-        Two twin chains are threaded: the *observed* chain (returned,
-        carries one Observation per stage so the caller's action fills
-        the row counts) and an *observation-free* chain used only for
-        row-stage schema-inference sampling — PySpark Observations
-        capture the FIRST completed action, so the limit-sample job must
-        never run on the observed plan or it would record the sample
-        size as the stage's row count.
+        Each stage is applied once to the returned chain, which carries
+        one Observation per stage so the caller's action fills the row
+        counts. When a stage samples its input or a head sample is
+        shown, the stages up to the last such one are also applied to an
+        observation-free twin (``plain``): the sample runs there, and a
+        sampling stage caches what it learned, so its apply to the
+        observed chain runs no sample.
         """
         metrics: list[StageMetrics] = []
         try:
             self._input_token = str(df.semanticHash())
         except Exception:  # pragma: no cover - developer API moved
             self._input_token = ""
+        stages = self.config.enabled_stages
+        show_all = self.collect_metrics and self.config.show_sample_on_finish
+        last_twin = max(
+            (i for i, cfg in enumerate(stages)
+             if show_all or cfg.show_sample
+             or STAGE_TYPES[cfg.action_type].samples_input),
+            default=-1,
+        )
         resuming = True  # leading prefix of resumable stages
         plain = df  # observation-free twin
-        for cfg in self.config.enabled_stages:
+        for i, cfg in enumerate(stages):
             m = StageMetrics(cfg.name, cfg.action_type)
             resumed_df = self._try_resume(cfg) if resuming else None
             if resumed_df is not None:
@@ -217,9 +236,8 @@ class Pipeline:
             else:
                 resuming = False
                 stage = self._build_stage(cfg)
-                # Plain chain first: schema inference samples HERE (and
-                # caches), so the observed apply below is action-free.
-                plain = stage.apply(plain)
+                if i <= last_twin:
+                    plain = stage.apply(plain)
                 df = stage.apply(df)
                 m._error_acc = getattr(df, "_filefilter_error_acc", None)
                 m._status_accs = getattr(df, "_filefilter_status_accs", None)
@@ -238,20 +256,19 @@ class Pipeline:
                 m.rows_out = df.count()
                 m.harvest()
                 log.info("stage %s (%s): %s rows", cfg.name, cfg.action_type, m.rows_out)
-            if cfg.show_sample or (self.collect_metrics and self.config.show_sample_on_finish):
-                # Show on the observation-FREE twin: a limit-5 job on the
-                # observed chain would be the first completed action and
-                # permanently record ~5-row partial counts (the invariant
-                # in this docstring).
+            if show_all or cfg.show_sample:
                 plain.show(5, truncate=False)  # OP-A11 head sample
             metrics.append(m)
         return PipelineResult(df=df, metrics=metrics)
 
     def run_file(self, input_path: str, output_path: str | None = None) -> PipelineResult:
-        """End-to-end: source → stages → optional CSV sink.
+        """End-to-end: source → stages → optional sink.
 
         Mirrors the reference CLI contract
-        (``python3 filefilter.py IN CONFIG.yml OUT``).
+        (``python3 filefilter.py IN CONFIG.yml OUT``). The sink follows
+        the output extension, as :func:`read_input` does for the source:
+        ``.parquet`` writes a parquet dataset, anything else one CSV
+        file.
         """
         df = read_input(
             self.spark,
@@ -261,9 +278,10 @@ class Pipeline:
         )
         result = self.run(df)
         if output_path:
-            # Single local FILE, matching the CLI sink exactly — the two
-            # entry points must not diverge in output layout.
-            write_csv_file(result.df, output_path,
-                           delimiter=self.config.out_delimiter)
+            if Path(output_path).suffix.lower() == ".parquet":
+                write_parquet(result.df, output_path)
+            else:
+                write_csv_file(result.df, output_path,
+                               delimiter=self.config.out_delimiter)
             result.harvest_metrics()
         return result

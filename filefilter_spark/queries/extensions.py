@@ -3436,14 +3436,8 @@ _MULTILINE_CORPUS_SQL = """
 
 
 def _multiline_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return multiline_of(load_table(spark, sf_dir, "documents"))
-
-
-def multiline_of(d: DataFrame) -> DataFrame:
-    """The OP-D2-lines multi-line fixture over any documents frame —
-    also imported by tools/scale_probe.py so the probe measures exactly
-    the corpus shape the correctness gate verifies."""
-    return d.select(
+    """The OP-D2-lines multi-line fixture over the documents table."""
+    return load_table(spark, sf_dir, "documents").select(
         "doc_id",
         F.concat_ws(
             "\n",
@@ -4514,8 +4508,8 @@ def op_a9_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
         "no floats anywhere) and write/read completeness. The layout "
         "is the 100 TB story: row groups become 2-D tiles so a "
         "selective predicate on EITHER interleaved column prunes via "
-        "parquet min/max stats — measured by tools/zorder_probe.py "
-        "(SCALING.md zorder section) against a single-column sort "
+        "parquet min/max stats — measured (SCALING.md \"Z-order "
+        "layout\") against a single-column sort "
         "(ops/layout.py).",
 )
 def op_a9_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -50,6 +50,12 @@ _INTEGRALS = (LongType, IntegerType, ShortType, ByteType)
 
 
 class Stage:
+    # True when apply() runs a sampling action on its input (schema
+    # inference). Pipeline.run then applies the stage to an
+    # observation-free copy of the chain first, so the sample never
+    # completes on a plan that carries per-stage Observations.
+    samples_input = False
+
     def __init__(self, spark: SparkSession, cfg: StageConfig):
         self.spark = spark
         self.cfg = cfg

@@ -84,6 +84,7 @@ def _exec_on_pdf(code_obj, pdf: pd.DataFrame) -> pd.DataFrame:
 
 
 class PandasStage(Stage):
+    samples_input = True
     _schema_cache: StructType | None = None
 
     def infer_schema(self, df: DataFrame) -> StructType:

@@ -60,6 +60,7 @@ def _run_user_code(code_obj, row: dict[str, Any], on_error=None) -> dict[str, An
 
 
 class PythonStage(Stage):
+    samples_input = True
     _schema_cache: StructType | None = None
 
     def infer_schema(self, df: DataFrame) -> StructType:

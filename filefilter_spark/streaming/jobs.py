@@ -1611,8 +1611,8 @@ def ann_index_stream_ingest(
     return spark.read.parquet(codes_dir)
 
 
-# Fuzzy-index staleness thresholds, calibrated by
-# tools/fuzzy_drift_probe.py (SCALING.md "Fuzzy staleness signal"):
+# Fuzzy-index staleness thresholds, calibrated in SCALING.md "Fuzzy
+# staleness signal":
 # unseen_gram_frac is the fraction of a batch's PREFIX entries ordered
 # by the unseen-at-build sentinel. Exactness never depends on it; what
 # degrades is prefix SELECTIVITY — unseen grams carry no rarity

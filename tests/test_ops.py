@@ -4639,7 +4639,7 @@ def test_semdedup_cell_drift_signal():
     loop's OWN failure mechanism: capped_mass_frac (share of batch
     memberships in cells the max_cell cap dropped from candidate
     generation) drives the action; TV vs the fit baseline is a trend
-    field only — measured (tools/semdedup_drift_probe.py), a focused
+    field only — measured (SCALING.md 'SemDeDup drift signal'), a focused
     ingest reads TV ~0.8 with perfect recall, so TV must NOT act."""
     from filefilter_spark.ops.similarity import (
         SEMDEDUP_CAP_REBUILD,
@@ -4721,8 +4721,8 @@ def test_semdedup_stream_rebuild_on_drift_self_heals(spark, tmp_path):
     refits the centroids over the survivor store (kmeanspar, re-sized
     ~sqrt(n)), remaps the cells table temp+swap, re-baselines, and
     the NEXT batch's planted near-dup is caught under the fresh
-    model. Tiny mirror of tools/semdedup_drift_probe.py's self-heal
-    scenario."""
+    model. Tiny mirror of the self-heal scenario in SCALING.md
+    'SemDeDup drift signal'."""
     import glob
 
     import numpy as np
@@ -4978,8 +4978,8 @@ def test_fuzzy_index_stream_rebuild_on_drift(spark, tmp_path):
 
 
 def test_fuzzy_index_staleness_rule():
-    """The fuzzy action thresholds (tools/fuzzy_drift_probe.py,
-    SCALING.md 'Fuzzy staleness signal'): measured blowup stays <=
+    """The fuzzy action thresholds (SCALING.md 'Fuzzy staleness
+    signal'): measured blowup stays <=
     ~baseline through unseen_frac 0.18 and reads ~6x baseline at 1.0 —
     0.30/0.60 split those points with margin."""
     from filefilter_spark.streaming.jobs import (

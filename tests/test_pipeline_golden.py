@@ -61,6 +61,31 @@ def test_cli_end_to_end(tmp_path):
     assert sorted(lines[1:]) == GOLDEN_FULLEXAMPLE[1:]
 
 
+def test_cli_parquet_sink_keeps_array_columns(spark, tmp_path):
+    """A ``.parquet`` output path gets the parquet writer, so a column a
+    CSV cannot hold (``ARRAY<STRING>``) survives the CLI run."""
+    src = tmp_path / "in.csv"
+    src.write_text("id,text\n1,a b\n2,c d e\n")
+    config = tmp_path / "words.yml"
+    config.write_text(
+        "filters:\n"
+        "  - name: words\n"
+        "    actionType: sql\n"
+        "    code: SELECT id, split(text, ' ') AS words FROM df\n"
+    )
+    out = tmp_path / "out.parquet"
+    proc = subprocess.run(
+        [sys.executable, "-m", "filefilter_spark", str(src), str(config), str(out)],
+        capture_output=True, text=True, timeout=300,
+        cwd=str(Path(__file__).resolve().parent.parent),
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    got = spark.read.parquet(str(out))
+    assert got.schema["words"].dataType.simpleString() == "array<string>"
+    assert sorted((r.id, r.words) for r in got.collect()) == [
+        (1, ["a", "b"]), (2, ["c", "d", "e"])]
+
+
 def test_phones_truth_table(spark, tmp_path):
     """phones.yml regex classification: ^9\\d{8}$ → fijo, ^6\\d{8}$ →
     movil, else error (FileFilterGPT/phones.yml:5-16)."""

@@ -1,6 +1,8 @@
 """Resume-workspace (reference data/<input>.db analog) and
 observe()-based metrics (OP-A10/A14)."""
 
+import pytest
+
 from filefilter_spark.config import load_config_str
 from filefilter_spark.pipeline import Pipeline
 
@@ -44,3 +46,48 @@ def test_resume_skips_unchanged_stages(spark, tmp_path):
     r3 = Pipeline(spark, load_config_str(changed), checkpoint_dir=ck, resume=True).run(df)
     assert [m.resumed for m in r3.metrics] == [True, False]
     assert sorted(r.tag for r in r3.df.collect()) == ["yy"] * 5
+
+
+def _jobs_in_group(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("stage", [
+    "actionType: expect\n    actionConfig: {minRows: 1, unique: [doc_id]}",
+    "actionType: temperature\n    actionConfig: {alpha: 0.5}",
+])
+def test_eager_stage_acts_once_without_a_sampling_stage(spark, stage):
+    """With no stage that samples its input, Pipeline.run applies each
+    stage once: an eager stage launches the same jobs as one direct
+    apply, and the observed counts are the full row counts."""
+    from filefilter_spark.stages import STAGE_TYPES
+
+    cfg = load_config_str(f"""
+filters:
+  - name: tag
+    actionType: sql
+    code: SELECT id AS doc_id, IF(id < 90, 'big', 'small') AS source FROM df
+  - name: eager
+    {stage}
+""")
+    df = spark.range(100)
+    kind = cfg.enabled_stages[1].action_type
+
+    def direct():
+        out = df
+        for c in cfg.enabled_stages:
+            out = STAGE_TYPES[c.action_type](spark, c).apply(out)
+        return out
+
+    expected, want = _jobs_in_group(spark, f"direct-{kind}", direct)
+    result, got = _jobs_in_group(
+        spark, f"pipeline-{kind}", lambda: Pipeline(spark, cfg).run(df))
+    assert want > 0 and got == want
+    result.df.write.format("noop").mode("overwrite").save()
+    assert [m.rows_out for m in result.harvest_metrics()] == [100, expected.count()]

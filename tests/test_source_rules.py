@@ -5,15 +5,20 @@
   ``.checkpoint(``.
 - Operators take their settings as parameters: nothing under
   ``filefilter_spark/ops/`` reads the environment.
+- No script under ``tools/`` turns the Spark UI on: per-stage numbers
+  come from the event log (``perfbench/spans.py``), not from scraping
+  the UI's REST API.
 """
 
 import re
 from pathlib import Path
 
-PKG = Path(__file__).resolve().parent.parent / "filefilter_spark"
+ROOT = Path(__file__).resolve().parent.parent
+PKG = ROOT / "filefilter_spark"
 
 CUT = re.compile(r"localCheckpoint\(|\.checkpoint\(")
 ENV = re.compile(r"os\.environ|getenv")
+UI_ON = re.compile(r"""spark\.ui\.enabled["']?\s*[:,=]\s*["']?true""", re.I)
 
 
 def test_one_lineage_cut_and_no_env_reads_in_ops():
@@ -25,4 +30,14 @@ def test_one_lineage_cut_and_no_env_reads_in_ops():
                 offenders.append(f"{rel}:{n}: {line.strip()}")
             if rel.startswith("ops/") and ENV.search(line):
                 offenders.append(f"{rel}:{n}: {line.strip()}")
+    assert not offenders, "\n".join(offenders)
+
+
+def test_no_tool_enables_the_spark_ui():
+    offenders = [
+        f"{path.name}:{n}: {line.strip()}"
+        for path in sorted((ROOT / "tools").glob("*.py"))
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if UI_ON.search(line)
+    ]
     assert not offenders, "\n".join(offenders)
