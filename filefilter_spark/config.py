@@ -14,8 +14,8 @@ true: per-stage row counters; set false for full cross-stage Catalyst
 optimization — the 100 TB setting), and ``filters:`` — an ordered
 stage list.
 
-Per stage: ``name``, ``actionType``
-(python|rest|sql|pandas|udf|dedup|split|sample),
+Per stage: ``name``, ``actionType`` (a key of
+``filefilter_spark.stages.STAGE_TYPES``, the one stage registry),
 ``disabled``, ``filterThreads``, ``chunkSize``, ``code``,
 ``actionConfig``, ``showSampleOnFinish``.
 """
@@ -27,23 +27,6 @@ from pathlib import Path
 from typing import Any
 
 import yaml
-
-VALID_ACTION_TYPES = {
-    "python", "rest", "sql", "pandas", "udf",
-    # zero-code corpus-assembly stages (stages/corpus_stage.py)
-    "dedup", "fuzzydedup", "semdedup", "split", "sample",
-    "linededup", "spandedup", "quota", "chunk", "decontaminate", "domainfilter",
-    "textstats", "perplexity", "expect",
-    "dedupbest", "temperature", "bpe",
-    "dsir", "qualityfilter", "safesplit",
-    "gopher", "gopherrep", "entropy",
-    "epochs", "budget",
-    # event/retrieval analytics stages (stages/analytics_stage.py)
-    "sessionize", "search", "qualitygate",
-    "searchindex", "batchsearch", "annindex",
-    # zero-code multimodal stage (stages/media_stage.py)
-    "media",
-}
 
 # Delimiter aliases accepted by the reference loaders (loaders.py:10,22).
 _DELIM_ALIASES = {"TAB": "\t", "tab": "\t", "\\t": "\t"}
@@ -75,11 +58,15 @@ class StageConfig:
     def from_dict(cls, raw: dict[str, Any], index: int) -> "StageConfig":
         if not isinstance(raw, dict):
             raise ConfigError(f"filter #{index}: expected a mapping, got {type(raw).__name__}")
+        # The stage registry is the one list of action types; imported
+        # here because the stage modules import this one.
+        from filefilter_spark.stages import STAGE_TYPES
+
         action = raw.get("actionType")
-        if action not in VALID_ACTION_TYPES:
+        if action not in STAGE_TYPES:
             raise ConfigError(
                 f"filter #{index} ({raw.get('name', '?')}): actionType must be one of "
-                f"{sorted(VALID_ACTION_TYPES)}, got {action!r}"
+                f"{sorted(STAGE_TYPES)}, got {action!r}"
             )
         code = raw.get("code")
         if action in {"python", "sql", "pandas"} and not code:

@@ -257,12 +257,6 @@ def _rewrite_list_slice(sql: str) -> str:
     return _rewrite_call(sql, "list_slice", one)
 
 
-def _rewrite_date_part(sql: str) -> str:
-    # date_part('year', x) → extract(year FROM x)  (Spark also has
-    # date_part built-in with same signature in 3.0+ — keep it if so).
-    return sql  # Spark supports date_part('year', ts) natively.
-
-
 def _split_top_level(s: str) -> list[str]:
     """Split on commas not nested in parens/quotes."""
     parts, depth, cur, i = [], 0, [], 0

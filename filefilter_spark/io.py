@@ -9,6 +9,13 @@ Spark-first: ``spark.read`` with format dispatch on extension; the
 ``df.limit(n)`` which Catalyst pushes into the scan (GlobalLimit over
 the file source — only the needed splits are read).
 
+One writer per output shape, each writing one part file per task:
+:func:`write_csv` (a directory of CSV parts), :func:`write_csv_file`
+(the reference's one CSV file, stitched from those parts on the
+driver), :func:`write_parquet`, :func:`write_orc`, :func:`write_jsonl`
+and :func:`write_bucketed_table`. None of them folds the data into one
+task; small-files compaction is ``ops.layout.compact_files``.
+
 Scale notes: CSV schema inference reads the file once extra — callers
 on 100 TB inputs should pass an explicit ``schema``; parquet needs no
 inference. S3 paths map to ``s3a://`` (hadoop-aws connector; credential
@@ -61,7 +68,7 @@ def _normalize_path(path: str) -> str:
     return path
 
 
-def _fetch_s3_to_local(path: str) -> str:
+def _fetch_s3_to_local(path: str, max_bytes: int = 32 << 30) -> str:
     """Driver-side boto3 fallback for ``s3://`` inputs when the s3a
     connector jars are absent: download the object — or every object
     under the prefix — into a local scratch dir and return the local
@@ -70,12 +77,12 @@ def _fetch_s3_to_local(path: str) -> str:
 
     Deliberately a CONVENIENCE tier: the bytes flow through the driver,
     so it is right for the CLI's modest inputs and wrong for cluster
-    reads — a deployment reading TBs installs hadoop-aws (see
-    ``session.require_s3a``) and Spark's executors then pull their own
-    splits. Credentials/endpoint come from the standard boto3 chain
-    (env vars, profile, IMDS; ``AWS_ENDPOINT_URL`` honored) — the same
-    sources ``session.s3_conf`` maps into s3a, so the two paths share
-    one credential story.
+    reads — a deployment reading TBs installs hadoop-aws and Spark's
+    executors then pull their own splits. An object or prefix larger
+    than ``max_bytes`` fails before any download. Credentials/endpoint
+    come from the standard boto3 chain (env vars, profile, IMDS;
+    ``AWS_ENDPOINT_URL`` honored) — the same sources ``session.s3_conf``
+    maps into s3a, so the two paths share one credential story.
     """
     import uuid
     from pathlib import Path as _P
@@ -91,8 +98,6 @@ def _fetch_s3_to_local(path: str) -> str:
             "or boto3 for the driver-side fallback"
         ) from e
 
-    import os
-
     u = urlparse(path if path.startswith("s3://") else "s3://" + path.split("://", 1)[1])
     bucket, key = u.netloc, u.path.lstrip("/")
     dest_root = _P(scratch_root("ffspark_s3_")) / uuid.uuid4().hex[:8]
@@ -102,10 +107,6 @@ def _fetch_s3_to_local(path: str) -> str:
     # driver's scratch dir, so a multi-TB dataset pointed here (where
     # the jarful path would stream splits to executors) must fail fast
     # with the real remedy, not silently fill the local disk.
-    max_bytes = int(
-        os.environ.get("FFSPARK_S3_FETCH_MAX_BYTES", str(32 << 30))
-    )
-
     def _check_size(total: int) -> None:
         if total > max_bytes:
             raise ValueError(
@@ -113,8 +114,7 @@ def _fetch_s3_to_local(path: str) -> str:
                 f"{max_bytes / (1 << 30):.1f} GiB driver-side fetch cap. "
                 "This jarless fallback downloads through the driver; for "
                 "inputs this size install hadoop-aws so executors read "
-                "s3a:// splits directly, or raise "
-                "FFSPARK_S3_FETCH_MAX_BYTES explicitly."
+                "s3a:// splits directly."
             )
 
     try:
@@ -280,21 +280,16 @@ def write_csv(
     df: DataFrame,
     path: str,
     delimiter: str = ",",
-    single_file: bool = False,
     compression: str | None = None,
 ) -> None:
     """CSV sink (OP-A9; reference ``filefilter.py:374-379``): a directory
     of part files at ``path``, one per task, each with its own header.
-
-    ``single_file=True`` coalesces to 1 partition, so the whole last
-    stage runs as one task and writes one part. :func:`write_csv_file`
-    gets one file without it. ``compression`` ("gzip", "bzip2", "zstd",
-    ...) trades CPU for storage/network; remember gzip parts are not
-    splittable on re-read.
+    :func:`write_csv_file` stitches those parts into one file.
+    ``compression`` ("gzip", "bzip2", "zstd", ...) trades CPU for
+    storage/network; remember gzip parts are not splittable on re-read.
     """
-    out = df.coalesce(1) if single_file else df
     w = (
-        out.write.mode("overwrite")
+        df.write.mode("overwrite")
         .option("header", True)
         .option("sep", delimiter)
     )
@@ -326,10 +321,10 @@ def write_csv_file(df: DataFrame, path: str, delimiter: str = ",") -> None:
     keeping the first part's header and dropping the identical header
     of every later part, and renames it over ``path``. A one-partition
     write concatenates partitions 0..N-1 in the same order, so the file
-    is byte-identical to ``write_csv(df, ..., single_file=True)``'s one
-    part. An ``s3://`` target takes the same driver-side boto3 tier as
-    the read side when the s3a jars are absent: the stitched file is
-    uploaded. Nothing is left behind when a write fails.
+    is byte-identical to the one part :func:`write_csv` writes for a
+    one-partition frame. An ``s3://`` target takes the same driver-side
+    boto3 tier as the read side when the s3a jars are absent: the
+    stitched file is uploaded. Nothing is left behind when a write fails.
     """
     import os
     import shutil
@@ -402,48 +397,6 @@ def write_parquet(df: DataFrame, path: str, partition_by: list[str] | None = Non
     w.parquet(_normalize_path(path))
 
 
-def compact_parquet(
-    df: DataFrame,
-    path: str,
-    rows_per_file: int,
-    order_col: str | None = None,
-) -> None:
-    """Rewrite a dataset as parquet files of a TARGET SIZE — the
-    small-files compaction every long-lived 100 TB corpus needs
-    (ingest leaves thousands of KB-sized parts per batch; scans then
-    pay per-file open/footer cost and the driver pays per-file
-    listing).
-
-    ``maxRecordsPerFile`` caps each task's output file; the partition
-    count is sized so tasks receive ~``rows_per_file`` rows and emit
-    ~one file each, not a directory of capped fragments. With
-    ``order_col`` the data is range-repartitioned on it, so files
-    carry disjoint sorted key ranges and parquet min/max stats prune
-    file scans for key-range queries — the cheap, format-native cousin
-    of Z-ordering. Row count drives the sizing via a fast count()
-    (metadata-only on parquet sources).
-    """
-    if rows_per_file <= 0:
-        raise ValueError(f"rows_per_file must be positive: {rows_per_file}")
-    n = df.count()
-    n_files = max(1, -(-n // rows_per_file))  # ceil
-    # Range boundaries come from sampling, so partitions are only
-    # approximately equal — maxRecordsPerFile still hard-caps any
-    # oversampled partition (at the cost of an extra file there), and
-    # the within-partition sort makes every file's min/max stats tight
-    # and globally disjoint.
-    part = (
-        df.repartitionByRange(n_files, order_col).sortWithinPartitions(order_col)
-        if order_col
-        else df.repartition(n_files)
-    )
-    (
-        part.write.mode("overwrite")
-        .option("maxRecordsPerFile", rows_per_file)
-        .parquet(_normalize_path(path))
-    )
-
-
 def write_bucketed_table(
     df: DataFrame,
     table: str,
@@ -457,7 +410,7 @@ def write_bucketed_table(
     aggregation on the bucket key reads co-located data and skips its
     shuffle entirely (the plan-level lever for repeated joins on one
     key, e.g. doc_id enrichment passes over a 100 TB corpus; asserted
-    in tests/test_plans.py).
+    in tests/test_ops.py).
 
     Bucketing requires the table-metadata path (``saveAsTable``) —
     plain ``.parquet(path)`` writes carry no bucket spec. Sorted
@@ -470,19 +423,14 @@ def write_bucketed_table(
     w.saveAsTable(table)
 
 
-def write_orc(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
+def write_orc(df: DataFrame, path: str) -> None:
     """ORC sink — the other mainstream columnar interchange format
     (Hive/Trino ecosystems); Spark's writer is built in, same predicate
     pushdown + column pruning on re-read as parquet."""
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.orc(_normalize_path(path))
+    df.write.mode("overwrite").orc(_normalize_path(path))
 
 
-def write_jsonl(df: DataFrame, path: str, single_file: bool = False) -> None:
+def write_jsonl(df: DataFrame, path: str) -> None:
     """JSON Lines sink: one object per line, one part file per task —
-    the standard interchange layout for LLM-corpus pipelines. As with
-    :func:`write_csv`, ``single_file`` is a small-output convenience."""
-    out = df.coalesce(1) if single_file else df
-    out.write.mode("overwrite").json(_normalize_path(path))
+    the standard interchange layout for LLM-corpus pipelines."""
+    df.write.mode("overwrite").json(_normalize_path(path))

@@ -1915,9 +1915,9 @@ def build_fuzzy_index(
         ).partitionBy("sbucket").parquet(f"{path}/strings")
 
     def _w_short() -> None:
-        strings.filter(F.col("l") < T).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{path}/short")
+        strings.filter(F.col("l") < T).write.mode("overwrite").parquet(
+            f"{path}/short"
+        )
 
     with ThreadPoolExecutor(max_workers=3) as pool:
         for fut in [pool.submit(_w_gram_postings), pool.submit(_w_strings),

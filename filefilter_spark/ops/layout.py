@@ -35,9 +35,10 @@ z-ordered vs single-column-sorted.
 
 The module also owns the file-level store primitives that the
 persisted indexes and the streaming ingest loops share, all through
-the Hadoop FileSystem API: listing and the small-files compaction
-gate, the temp-then-swap directory replace (the only rename), the
-sidecar commit and the pending marker.
+the Hadoop FileSystem API: listing, the one small-files compactor
+(:func:`compact_files`, plain or hive-partitioned) and its gate
+(:func:`maybe_compact`), the temp-then-swap directory replace (the
+only rename), the sidecar commit and the pending marker.
 """
 
 from __future__ import annotations
@@ -265,6 +266,7 @@ def compact_files(
     target_bytes: int = 128 << 20,
     fmt: str = "parquet",
     out_fmt: str | None = None,
+    partition_by: str | None = None,
 ) -> int:
     """Small-files compaction — the standing operational chore of any
     long-lived 100 TB table (streaming sinks, per-batch ingests, and
@@ -283,6 +285,15 @@ def compact_files(
     layout: parquet min/max stats on the leading key become tight and
     later key-range scans prune files.
 
+    ``partition_by`` compacts a HIVE-PARTITIONED table and keeps its
+    ``partition_by=`` directories, which partition pruning depends on
+    (``streaming.jobs.ivfpq_stream_ingest`` appends one file set per
+    cell per micro-batch). The partition column becomes the leading
+    range key and the write is ``partitionBy(partition_by)``: a small
+    partition's rows land in ONE file under its dir, an oversized one
+    splits across ``ceil(its bytes / target)`` files. Rows, values and
+    directory layout are unchanged; only file boundaries move.
+
     ``out_fmt`` (default: same as ``fmt``) converts while compacting —
     the standard ingestion chore jsonl → parquet is one pass: read the
     shattered interchange files, range-cluster, land columnar.
@@ -292,7 +303,9 @@ def compact_files(
     compaction preserves compressed size closely; format conversions
     should pass an explicit ``target_bytes`` scaled by the expected
     ratio (jsonl → snappy parquet typically shrinks 3-10×). Returns
-    the number of files written."""
+    the number of range tasks: the file count of an unpartitioned
+    table; a partitioned one has one more file per partition that a
+    task boundary splits."""
     if not order_by:
         raise ValueError(
             "compact_files: order_by is required — unordered compaction "
@@ -302,64 +315,16 @@ def compact_files(
     total = input_bytes(spark, in_path)
     n_out = max(1, -(-total // int(target_bytes)))
     df = spark.read.format(fmt).load(in_path)
-    keys = [F.col(c) for c in order_by]
-    (
+    lead = [partition_by] if partition_by else []
+    keys = [F.col(c) for c in lead + list(order_by)]
+    w = (
         df.repartitionByRange(n_out, *keys)
         .sortWithinPartitions(*keys)
         .write.mode("overwrite")
-        .format(out_fmt or fmt)
-        .save(out_path)
     )
-    return n_out
-
-
-def compact_partitioned(
-    spark,
-    in_path: str,
-    out_path: str,
-    partition_by: str,
-    order_by: Sequence[str],
-    target_bytes: int = 128 << 20,
-    fmt: str = "parquet",
-) -> int:
-    """:func:`compact_files` for a HIVE-PARTITIONED table, preserving
-    the ``partition_by=`` directory layout that downstream partition
-    pruning depends on — the maintenance step a per-batch streaming
-    sink needs (``streaming.jobs.ivfpq_stream_ingest`` appends one
-    file set per cell per micro-batch; a long-lived index otherwise
-    degrades to thousands of KB files per cell, and every probe pays
-    one task + one open per file).
-
-    Same determinism contract as :func:`compact_files` (`order_by`
-    required), with the partition column as the LEADING range key:
-    ``repartitionByRange(n, partition_by, *order_by)`` +
-    ``sortWithinPartitions`` + ``write.partitionBy(partition_by)``.
-    Each output task holds a contiguous (partition, key) range, so a
-    small partition's rows land in ONE file under its ``partition=``
-    dir, an oversized partition splits across ``ceil(its bytes /
-    target)`` files, and within-file rows are key-sorted (tight
-    min/max stats). Content is untouched — rows, values, and the
-    pruning-relevant directory layout are identical pre/post; only
-    file boundaries move. Returns the task count (≥ output file
-    count lower bound; files = tasks + straddled partitions)."""
-    if not order_by:
-        raise ValueError(
-            "compact_partitioned: order_by is required — unordered "
-            "compaction is not reproducible (file contents would "
-            "depend on scheduling)"
-        )
-    total = input_bytes(spark, in_path)
-    n_out = max(1, -(-total // int(target_bytes)))
-    df = spark.read.format(fmt).load(in_path)
-    keys = [F.col(partition_by)] + [F.col(c) for c in order_by]
-    (
-        df.repartitionByRange(n_out, *keys)
-        .sortWithinPartitions(*keys)
-        .write.mode("overwrite")
-        .partitionBy(partition_by)
-        .format(fmt)
-        .save(out_path)
-    )
+    if partition_by:
+        w = w.partitionBy(partition_by)
+    w.format(out_fmt or fmt).save(out_path)
     return n_out
 
 
@@ -404,7 +369,7 @@ def maybe_compact(
     target_bytes: int = 128 << 20,
     fmt: str = "parquet",
 ) -> bool:
-    """Threshold-gated :func:`compact_partitioned` — the call a
+    """Threshold-gated :func:`compact_files` — the call a
     streaming-index maintenance loop actually makes: check the current
     fragmentation (max data files under any ``partition_by=`` dir) and
     compact ONLY when it exceeds ``max_files_per_partition``, so the
@@ -428,22 +393,17 @@ def maybe_compact(
     raises rather than silently reporting "healthy" forever.
 
     ``partition_by=None`` gates an unpartitioned table on the data
-    files directly under ``in_path`` (0 when it does not exist yet)
-    and rewrites it with :func:`compact_files`."""
+    files directly under ``in_path`` (0 when it does not exist yet)."""
     if partition_by is None:
-        if _n_data_files(spark, in_path) <= max_files_per_partition:
-            return False
-        compact_files(spark, in_path, out_path, order_by,
-                      target_bytes=target_bytes, fmt=fmt)
-        return True
-    worst = max(
-        _partition_file_counts(spark, in_path, partition_by).values(),
-        default=0,
-    )
+        worst = _n_data_files(spark, in_path)
+    else:
+        worst = max(
+            _partition_file_counts(spark, in_path, partition_by).values(),
+            default=0,
+        )
     if worst <= max_files_per_partition:
         return False
-    compact_partitioned(
-        spark, in_path, out_path, partition_by, order_by,
-        target_bytes=target_bytes, fmt=fmt,
-    )
+    compact_files(spark, in_path, out_path, order_by,
+                  target_bytes=target_bytes, fmt=fmt,
+                  partition_by=partition_by)
     return True

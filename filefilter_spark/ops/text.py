@@ -91,13 +91,6 @@ def repetition_score(col: str | Column, n: int = 3) -> Column:
     return _bind(tokens(col), build)
 
 
-def stopword_ratio(col: str | Column, lang: str = "en") -> Column:
-    toks = tokens(col)
-    sw = F.array(*[F.lit(w) for w in LANG_STOPWORDS[lang]])
-    hits = F.size(F.filter(toks, lambda t: F.array_contains(sw, F.lower(t))))
-    return hits / F.greatest(F.size(toks), F.lit(1))
-
-
 def detect_language(col: str | Column) -> Column:
     """N-gram/stopword-hit-rate language ID: argmax over per-language
     stopword ratios; 'und' when nothing hits. Tokenizes once (let-bound)

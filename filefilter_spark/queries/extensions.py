@@ -4655,7 +4655,7 @@ def op_d5_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     "OP-D5-ivfpq-compact",
     oracle=_IVFPQ_CODES_ORACLE,
     doc="streaming-index maintenance (ops/layout.py "
-        "compact_partitioned composed with streaming/jobs.py "
+        "compact_files(partition_by=...) composed with streaming/jobs.py "
         "ivfpq_stream_ingest): the per-batch appends accumulate one "
         "file set per cell per micro-batch, so a long-lived index "
         "degrades to thousands of KB files per cell; this compacts "
@@ -4671,7 +4671,7 @@ def op_d5_ivfpq_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from filefilter_spark.ops.layout import compact_partitioned
+    from filefilter_spark.ops.layout import compact_files
     from filefilter_spark.ops.pq import fit_pq_codebooks
     from filefilter_spark.ops.similarity import build_ivf_index
     from filefilter_spark.streaming.jobs import ivfpq_stream_ingest
@@ -4686,8 +4686,8 @@ def op_d5_ivfpq_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, f"{sf_dir}/embeddings.parquet", books, cents,
             out_dir=idx,
         )
-        compact_partitioned(spark, idx, f"{base}/compact", "cell",
-                            ["vec_id"])
+        compact_files(spark, idx, f"{base}/compact", ["vec_id"],
+                      partition_by="cell")
         # materialize before the scratch dir vanishes: the oracle
         # compare collects AFTER this callable returns
         out = spark.read.parquet(f"{base}/compact").select(

@@ -42,12 +42,12 @@ def _scratch(name: str) -> str:
         "scale-correct path — inference costs an extra pass).",
 )
 def op_a1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from filefilter_spark.io import read_input, write_csv
+    from filefilter_spark.io import read_input, write_csv_file
 
     out = _scratch("a1/nation.tsv")
-    write_csv(
+    write_csv_file(
         load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name", "n_regionkey"),
-        out, delimiter="\t", single_file=True,
+        out, delimiter="\t",
     )
     return read_input(
         spark, out, delimiter="TAB",
@@ -203,14 +203,15 @@ def op_a8(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="""
     SELECT CAST(r_regionkey AS VARCHAR) AS r_regionkey, r_name FROM region
     """,
-    doc="CSV sink + re-read round-trip (filefilter.py:374-379): written with "
-        "header+delimiter, read back as strings.",
+    doc="CSV sink + re-read round-trip (filefilter.py:374-379): the "
+        "single-file sink io.write_csv_file, written with header+delimiter, "
+        "read back as strings.",
 )
 def op_a9(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from filefilter_spark.io import write_csv
+    from filefilter_spark.io import write_csv_file
 
-    out = _scratch("a9/region_csv")
-    write_csv(load_table(spark, sf_dir, "region"), out, delimiter=";", single_file=True)
+    out = _scratch("a9/region.csv")
+    write_csv_file(load_table(spark, sf_dir, "region"), out, delimiter=";")
     return (
         spark.read.options(header=True, sep=";")
         .schema("r_regionkey string, r_name string")
@@ -275,7 +276,7 @@ def op_a9_gzip(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = _scratch("a9g/region.csv.gz")
     write_csv(
         load_table(spark, sf_dir, "region").select("r_regionkey", "r_name"),
-        out, single_file=True, compression="gzip",
+        out, compression="gzip",
     )
     return read_input(spark, out, schema="r_regionkey string, r_name string")
 

@@ -171,21 +171,6 @@ def s3a_available(spark: SparkSession) -> bool:
         return False
 
 
-def require_s3a(spark: SparkSession, path: str) -> None:
-    """Fail FAST with an actionable message when an s3a path is about
-    to hit a classpath without the connector. Without this the first
-    action on the DataFrame dies deep inside Py4J with
-    ``ClassNotFoundException: org.apache.hadoop.fs.s3a.S3AFileSystem``
-    — minutes into a job, with no hint at the fix."""
-    if not s3a_available(spark):
-        raise RuntimeError(
-            f"cannot read {path!r}: the s3a connector is not on the JVM "
-            "classpath. Add hadoop-aws + its matching aws-sdk bundle, e.g. "
-            "spark.jars.packages=org.apache.hadoop:hadoop-aws:<hadoop "
-            "version>, then pass credentials via get_spark(s3={...})."
-        )
-
-
 def elastic_conf(
     min_executors: int = 0,
     max_executors: int | None = None,

@@ -546,7 +546,6 @@ def pipeline_foreach_batch(
     config_yaml: str | None = None,
     ts_col: str = "ts",
     timeout_sec: int = 300,
-    state_partitions: int | None = None,
     config_path: str | None = None,
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
@@ -888,8 +887,8 @@ def ivfpq_stream_ingest(
     ``spark.read.parquet(out_dir)``), so rerunning over the same input
     and ``out_dir`` appends nothing. ``maintain_every=N`` compacts the
     ``cell=`` dirs past ``max_files_per_partition`` files in-stream;
-    left unset, run ``compact_partitioned(..., "cell", [id_col])`` on
-    your own cadence. Returns the code table."""
+    left unset, run ``compact_files(..., [id_col], partition_by="cell")``
+    on your own cadence. Returns the code table."""
     from filefilter_spark.ops.pq import ivfpq_encode_batch
 
     out_dir = out_dir or _fb_scratch() + "/codes"

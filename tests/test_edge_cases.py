@@ -103,7 +103,7 @@ def test_csv_file_sink_matches_one_partition_write(spark, tmp_path):
     ], "a int, b string").toDF("i;d", 's "q"\nx')
     out = tmp_path / "out.csv"
     write_csv_file(df, str(out), delimiter=";")
-    write_csv(df, str(tmp_path / "one"), delimiter=";", single_file=True)
+    write_csv(df.coalesce(1), str(tmp_path / "one"), delimiter=";")
     (one,) = (tmp_path / "one").glob("part-*.csv")
     expected = one.read_bytes()
     assert expected.startswith(b'"i;d";"s \\"q\\"\nx"\n1;plain\n')
@@ -378,14 +378,14 @@ def test_s3_boto3_fallback_reads_object_and_prefix(spark, monkeypatch, tmp_path)
 
 
 def test_s3_fallback_error_and_size_guards(spark, monkeypatch, tmp_path):
-    """The jarless fetch tier's failure modes (hardened round 7):
+    """The jarless fetch tier's failure modes:
 
     - a non-404 ClientError on the object probe (AccessDenied, throttle)
       surfaces AS ITSELF — falling through to the prefix listing would
       misreport it as FileNotFoundError and mask the actual cause;
-    - an object/prefix larger than FFSPARK_S3_FETCH_MAX_BYTES fails
-      fast naming the cap and the hadoop-aws remedy, instead of
-      silently pulling a cluster-sized dataset through driver disk.
+    - an object/prefix larger than ``max_bytes`` fails fast naming the
+      cap and the hadoop-aws remedy, instead of silently pulling a
+      cluster-sized dataset through driver disk.
     """
     import boto3
     from moto import mock_aws
@@ -405,16 +405,13 @@ def test_s3_fallback_error_and_size_guards(spark, monkeypatch, tmp_path):
 
         # size cap: single object over the cap -> ValueError, not a
         # download and not FileNotFoundError
-        monkeypatch.setenv("FFSPARK_S3_FETCH_MAX_BYTES", "1024")
         with pytest.raises(ValueError, match="hadoop-aws"):
-            _fetch_s3_to_local("s3://corpus/big/blob.bin")
+            _fetch_s3_to_local("s3://corpus/big/blob.bin", max_bytes=1024)
         # size cap: prefix total over the cap (two 4k objects, 6k cap)
         s3.put_object(Bucket="corpus", Key="big/blob2.bin", Body=b"y" * 4096)
-        monkeypatch.setenv("FFSPARK_S3_FETCH_MAX_BYTES", "6144")
-        with pytest.raises(ValueError, match="FFSPARK_S3_FETCH_MAX_BYTES"):
-            _fetch_s3_to_local("s3://corpus/big")
-        # under the cap the same prefix fetch succeeds
-        monkeypatch.setenv("FFSPARK_S3_FETCH_MAX_BYTES", str(32 << 30))
+        with pytest.raises(ValueError, match="fetch cap"):
+            _fetch_s3_to_local("s3://corpus/big", max_bytes=6144)
+        # under the default cap the same prefix fetch succeeds
         out = _fetch_s3_to_local("s3://corpus/big")
         import pathlib
 

@@ -427,34 +427,6 @@ def test_streaming_session_windows_match_gaps_and_islands(spark, sf_dir):
     assert s == b
 
 
-def test_bucketed_join_is_shuffle_free(spark, sf_dir, tmp_path):
-    """Two tables bucketed on the join key join with NO Exchange."""
-    from filefilter_spark.ops.bucketing import bucketed_join, write_bucketed
-
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    customer = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    write_bucketed(orders, "b_orders", ["o_custkey"], n_buckets=8,
-                   sort_cols=["o_custkey"], path=str(tmp_path / "bo"))
-    write_bucketed(
-        customer.withColumnRenamed("c_custkey", "o_custkey"),
-        "b_customer", ["o_custkey"], n_buckets=8,
-        sort_cols=["o_custkey"], path=str(tmp_path / "bc"),
-    )
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = bucketed_join(spark, "b_orders", "b_customer", on=["o_custkey"])
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan[:2000]
-        assert joined.count() == orders.join(
-            customer, orders.o_custkey == customer.c_custkey
-        ).count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.sql("DROP TABLE IF EXISTS b_orders")
-        spark.sql("DROP TABLE IF EXISTS b_customer")
-
-
 def test_salted_agg_matches_plain(spark):
     from filefilter_spark.ops.skew import salted_agg
 
@@ -657,7 +629,7 @@ def test_io_round_trips(spark, sf_dir, tmp_path):
     assert got == want
 
     gz = str(tmp_path / "region.csv.gz")
-    write_csv(src, gz, single_file=True, compression="gzip")
+    write_csv(src, gz, compression="gzip")
     import glob
 
     assert glob.glob(gz + "/part-*.csv.gz"), "expected gzip part files"
@@ -1791,62 +1763,54 @@ filters:
     assert r3.metrics[0].resumed
 
 
-def test_compact_parquet_sizes_files_and_prunes(spark, tmp_path):
-    """Compaction: ~rows_per_file rows per output file (not thousands
-    of fragments), content preserved, and range layout gives disjoint
-    per-file key ranges."""
-    import glob
-
-    from filefilter_spark.io import compact_parquet
-
-    src = spark.createDataFrame(
-        [(i, f"d{i}") for i in range(1000)], "doc_id int, text string"
-    ).repartition(64)  # the small-files mess: 64 files for 1000 rows
-    out = str(tmp_path / "compacted.parquet")
-    compact_parquet(src, out, rows_per_file=250, order_col="doc_id")
-    files = [f for f in glob.glob(out + "/*.parquet")]
-    # range boundaries are sampled, so +-1 partition may split under
-    # the hard cap — but never the 64-file mess, and never an oversized
-    # file
-    assert 4 <= len(files) <= 6
-    back = spark.read.parquet(out)
-    assert back.count() == 1000
-    assert sorted(r["doc_id"] for r in back.collect()) == list(range(1000))
-    # range layout: per-file min/max doc_id ranges are disjoint
-    import pyarrow.parquet as pq
-
-    ranges = []
-    for f in files:
-        md = pq.ParquetFile(f).metadata
-        assert md.num_rows <= 250  # the hard per-file cap held
-        col = [md.row_group(i).column(0) for i in range(md.num_row_groups)]
-        stats = [c.statistics for c in col]
-        ranges.append((min(s.min for s in stats), max(s.max for s in stats)))
-    ranges.sort()
-    assert all(a[1] < b[0] for a, b in zip(ranges, ranges[1:]))
-
-
-def test_bucketed_table_join_skips_shuffle(spark, tmp_path):
-    """The bucketing lever: a self-join on the bucket key over the
-    bucketed table plans with ZERO shuffle exchanges (both sides read
-    co-located buckets); the same join over plain parquet shuffles."""
+def test_bucketed_table_join_skips_shuffle(spark, sf_dir):
+    """The bucketing lever: joins on the bucket key over tables written
+    by ``write_bucketed_table`` plan with ZERO shuffle exchanges (both
+    sides read co-located buckets) — a two-table join of orders and
+    customer bucketed alike, and a self-join."""
     from filefilter_spark.io import write_bucketed_table
 
+    def n_shuffle(df):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return plan.count("Exchange") - plan.count("BroadcastExchange"), plan
+
+    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    customer = spark.read.parquet(f"{sf_dir}/customer.parquet")
     df = spark.createDataFrame(
         [(i, i % 7) for i in range(2000)], "doc_id int, grp int"
     )
-    spark.sql("DROP TABLE IF EXISTS ff_bucket_test")
-    write_bucketed_table(df, "ff_bucket_test", ["doc_id"], 8,
-                         sort_cols=["doc_id"])
+    tables = ["b_orders", "b_customer", "ff_bucket_test"]
+    for name in tables:
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        write_bucketed_table(orders, "b_orders", ["o_custkey"], 8,
+                             sort_cols=["o_custkey"])
+        write_bucketed_table(
+            customer.withColumnRenamed("c_custkey", "o_custkey"),
+            "b_customer", ["o_custkey"], 8, sort_cols=["o_custkey"],
+        )
+        joined = spark.table("b_orders").join(
+            spark.table("b_customer"), ["o_custkey"]
+        )
+        n, plan = n_shuffle(joined)
+        assert n == 0, plan[:2000]
+        assert joined.count() == orders.join(
+            customer, orders.o_custkey == customer.c_custkey
+        ).count()
+
+        write_bucketed_table(df, "ff_bucket_test", ["doc_id"], 8,
+                             sort_cols=["doc_id"])
         t = spark.table("ff_bucket_test")
-        joined = t.alias("a").join(t.alias("b"), "doc_id")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        n_shuffle = plan.count("Exchange") - plan.count("BroadcastExchange")
-        assert n_shuffle == 0, plan[:2000]
-        assert joined.count() == 2000
+        self_joined = t.alias("a").join(t.alias("b"), "doc_id")
+        n, plan = n_shuffle(self_joined)
+        assert n == 0, plan[:2000]
+        assert self_joined.count() == 2000
     finally:
-        spark.sql("DROP TABLE IF EXISTS ff_bucket_test")
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+        for name in tables:
+            spark.sql(f"DROP TABLE IF EXISTS {name}")
 
 
 def test_leakage_safe_split_properties(spark, documents):
@@ -3000,11 +2964,11 @@ def test_ivfpq_stream_ingest_matches_batch(spark, tmp_path):
     w = {r["vec_id"]: (r["cell"], r["codes"]) for r in want.collect()}
     assert g == w and len(g) == emb.count()
 
-    # r12: per-cell compaction — the 4-micro-batch ingest left several
-    # files per cell= dir; compact_partitioned must collapse them
+    # per-cell compaction — the 4-micro-batch ingest left several
+    # files per cell= dir; compact_files(partition_by=) must collapse them
     # while PRESERVING the cell= layout (probe pruning) and moving no
     # rows/values
-    from filefilter_spark.ops.layout import compact_partitioned
+    from filefilter_spark.ops.layout import compact_files
 
     def cell_files(d):
         out = {}
@@ -3017,7 +2981,7 @@ def test_ivfpq_stream_ingest_matches_batch(spark, tmp_path):
     assert max(before.values()) > 1  # fragmentation actually happened
 
     comp_dir = str(tmp_path / "compacted")
-    compact_partitioned(spark, idx_dir, comp_dir, "cell", ["vec_id"])
+    compact_files(spark, idx_dir, comp_dir, ["vec_id"], partition_by="cell")
     after = cell_files(comp_dir)
     assert set(after) == set(before)          # same cell= dirs
     assert all(v == 1 for v in after.values())  # one file per cell here
@@ -4880,6 +4844,27 @@ def test_fuzzy_index_stream_ingest_exact(spark, tmp_path):
                    for r in want3.collect()])
     stats = spark.read.parquet(f"{ix}/stats").first()
     assert stats["n_strings"] == docs.count()
+
+
+def test_fuzzy_index_short_store_one_part_per_task(spark, tmp_path):
+    """``build_fuzzy_index`` writes ``short/`` with the input's own
+    partitioning: a short string in each of 4 input partitions gives
+    more than one part file, holding exactly the short strings."""
+    import glob
+
+    from filefilter_spark.ops.dedup import build_fuzzy_index
+
+    rows = [(i, f"a{i}" if i % 2 == 0 else f"a longer string {i}")
+            for i in range(8)]
+    df = spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, 4), "doc_id long, s string"
+    )
+    assert [len(p) for p in df.rdd.glom().collect()] == [2, 2, 2, 2]
+    ix = str(tmp_path / "ix")
+    build_fuzzy_index(df, ix, id_col="doc_id", str_col="s")
+    assert len(glob.glob(f"{ix}/short/part-*.parquet")) > 1
+    short = spark.read.parquet(f"{ix}/short")
+    assert sorted(r["id"] for r in short.collect()) == [0, 2, 4, 6]
 
 
 def test_fuzzy_index_stream_rebuild_on_drift(spark, tmp_path):

@@ -931,14 +931,17 @@ filters:
             == {r["doc_id"] for r in hits.collect()})
 
 
-def test_stage_registry_matches_config_whitelist():
-    """Every dispatchable stage is configurable and vice versa — a new
-    actionType added to one map but not the other is a silent dead-end
-    (the sessionize/search addition tripped exactly this)."""
-    from filefilter_spark.config import VALID_ACTION_TYPES
-    from filefilter_spark.stages import STAGE_TYPES
+def test_stage_registry_matches_config_whitelist(monkeypatch):
+    """Config validation reads the stage registry itself: an actionType
+    registered in ``STAGE_TYPES`` alone is configurable, with no second
+    list to keep in step."""
+    from filefilter_spark.stages import STAGE_TYPES, SqlStage
 
-    assert set(STAGE_TYPES) == set(VALID_ACTION_TYPES)
+    yaml_text = "filters:\n  - name: p\n    actionType: probe\n"
+    with pytest.raises(ConfigError, match="probe"):
+        load_config_str(yaml_text)
+    monkeypatch.setitem(STAGE_TYPES, "probe", SqlStage)
+    assert load_config_str(yaml_text).stages[0].action_type == "probe"
 
 
 def test_search_stage_via_persisted_index(spark, tmp_path):
