@@ -1763,24 +1763,14 @@ filters:
     assert r3.metrics[0].resumed
 
 
-def test_bucketed_table_join_skips_shuffle(spark, sf_dir):
-    """The bucketing lever: joins on the bucket key over tables written
-    by ``write_bucketed_table`` plan with ZERO shuffle exchanges (both
-    sides read co-located buckets) — a two-table join of orders and
-    customer bucketed alike, and a self-join."""
+def test_bucketed_join_is_shuffle_free(spark, sf_dir):
+    """Two tables bucketed alike on the join key (written by
+    ``write_bucketed_table``) join with NO shuffle Exchange."""
     from filefilter_spark.io import write_bucketed_table
-
-    def n_shuffle(df):
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        return plan.count("Exchange") - plan.count("BroadcastExchange"), plan
 
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
     customer = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    df = spark.createDataFrame(
-        [(i, i % 7) for i in range(2000)], "doc_id int, grp int"
-    )
-    tables = ["b_orders", "b_customer", "ff_bucket_test"]
-    for name in tables:
+    for name in ("b_orders", "b_customer"):
         spark.sql(f"DROP TABLE IF EXISTS {name}")
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
@@ -1794,23 +1784,38 @@ def test_bucketed_table_join_skips_shuffle(spark, sf_dir):
         joined = spark.table("b_orders").join(
             spark.table("b_customer"), ["o_custkey"]
         )
-        n, plan = n_shuffle(joined)
-        assert n == 0, plan[:2000]
+        plan = joined._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange" not in plan, plan[:2000]
         assert joined.count() == orders.join(
             customer, orders.o_custkey == customer.c_custkey
         ).count()
-
-        write_bucketed_table(df, "ff_bucket_test", ["doc_id"], 8,
-                             sort_cols=["doc_id"])
-        t = spark.table("ff_bucket_test")
-        self_joined = t.alias("a").join(t.alias("b"), "doc_id")
-        n, plan = n_shuffle(self_joined)
-        assert n == 0, plan[:2000]
-        assert self_joined.count() == 2000
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        for name in tables:
+        for name in ("b_orders", "b_customer"):
             spark.sql(f"DROP TABLE IF EXISTS {name}")
+
+
+def test_bucketed_table_join_skips_shuffle(spark):
+    """The bucketing lever: a self-join on the bucket key over the
+    bucketed table plans with ZERO shuffle exchanges (both sides read
+    co-located buckets)."""
+    from filefilter_spark.io import write_bucketed_table
+
+    df = spark.createDataFrame(
+        [(i, i % 7) for i in range(2000)], "doc_id int, grp int"
+    )
+    spark.sql("DROP TABLE IF EXISTS ff_bucket_test")
+    write_bucketed_table(df, "ff_bucket_test", ["doc_id"], 8,
+                         sort_cols=["doc_id"])
+    try:
+        t = spark.table("ff_bucket_test")
+        joined = t.alias("a").join(t.alias("b"), "doc_id")
+        plan = joined._jdf.queryExecution().executedPlan().toString()
+        n_shuffle = plan.count("Exchange") - plan.count("BroadcastExchange")
+        assert n_shuffle == 0, plan[:2000]
+        assert joined.count() == 2000
+    finally:
+        spark.sql("DROP TABLE IF EXISTS ff_bucket_test")
 
 
 def test_leakage_safe_split_properties(spark, documents):
