@@ -34,7 +34,8 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("output", help="output path: .parquet writes a parquet "
                                   "dataset, anything else one CSV file")
     p.add_argument("-i", "--interactive", action="store_true",
-                   help="print per-stage metrics and a sample of the result")
+                   help="show a live status line, then print each stage's "
+                        "observed rows, errors and HTTP status counts")
     p.add_argument("-d", "--delete", action="store_true",
                    help="clear the checkpoint dir before running")
     p.add_argument("-v", "--verbose", action="store_true", help="DEBUG logging")

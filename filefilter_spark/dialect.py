@@ -54,10 +54,9 @@ _FN_RENAMES = {
     # one. List length: write ``array_length(l)`` (mapped to ``size``).
     "strlen": "length",
     "regexp_matches": "rlike",  # both are partial-match boolean
-    "date_part": "extract_part__",  # handled specially below
-    "to_timestamp": "to_timestamp",
     "epoch_ms": "unix_millis",
-    "regexp_full_match": "regexp_full_match__",
+    # approximate: full-match pattern authors anchor with ^$
+    "regexp_full_match": "regexp_like",
 }
 
 # DuckDB strftime %-codes → JDK DateTimeFormatter patterns.
@@ -393,17 +392,12 @@ def _rewrite_qualify(sql: str) -> str:
 
 
 def _rewrite_fn_names(sql: str) -> str:
-    def repl(m: re.Match) -> str:
-        name = m.group(1).lower()
-        target = _FN_RENAMES.get(name, m.group(1))
-        if target == "extract_part__":
-            return "date_part"
-        if target == "regexp_full_match__":
-            return "regexp_like"  # approximate: full-match pattern authors use ^$
-        return target
-
     names = "|".join(sorted(_FN_RENAMES, key=len, reverse=True))
-    return re.sub(rf"(?i)\b({names})\s*\(", lambda m: repl(m) + "(", sql)
+    return re.sub(
+        rf"(?i)\b({names})\s*\(",
+        lambda m: _FN_RENAMES[m.group(1).lower()] + "(",
+        sql,
+    )
 
 
 def _strip_sql(sql: str) -> str:

@@ -222,17 +222,15 @@ def read_input(
     if p.startswith("s3a://"):
         from filefilter_spark.session import s3a_available
 
-        # Two-tier S3 (status re-checked 2026-08-14, round 7): with the
-        # hadoop-aws jars on the classpath, executors read s3a://
-        # splits directly (the cluster path — still untestable in this
-        # jarless sandbox beyond the fail-fast probe; its conf surface
-        # IS contract-tested: session.s3_conf_from_env pins the
-        # boto3-env-chain → fs.s3a.* mapping, so a deployment's first
-        # validation is only the jar itself). Without them, fall back
-        # to a driver-side boto3
-        # fetch into local scratch — a REAL, moto-tested S3 ingestion
-        # path (protocol, credentials, object/prefix handling), sized
-        # for CLI inputs, not cluster reads (_fetch_s3_to_local).
+        # Two-tier S3: with the hadoop-aws jars on the classpath,
+        # executors read s3a:// splits directly (the cluster path; its
+        # conf surface is contract-tested: session.s3_conf_from_env pins
+        # the boto3-env-chain → fs.s3a.* mapping, so a deployment's first
+        # validation is only the jar itself). Without them, fall back to
+        # a driver-side boto3 fetch into local scratch — a REAL,
+        # moto-tested S3 ingestion path (protocol, credentials,
+        # object/prefix handling), sized for CLI inputs, not cluster
+        # reads (_fetch_s3_to_local).
         if not s3a_available(spark):
             p = _fetch_s3_to_local(path)
     name = Path(p).name.lower()

@@ -1124,21 +1124,15 @@ def minhash_signatures(
     seed: int = 42,
     shingle_n: int = 1,
 ) -> DataFrame:
-    """k minhashes per doc, all JVM-side: one xxhash64 base hash per
-    token, run through k multiply-shift permutations
+    """k minhashes per doc: one xxhash64 base hash per token (JVM-side),
+    run through k multiply-shift permutations
     (``(a_i * h) >>> 33``, a_i odd — the Dietzfelbinger universal
-    family, defined over Z/2^64 so the silent bigint wrap IS the
-    arithmetic, not an overflow bug), min-folded per perm with
-    higher-order array functions. No UDF, no explode, and no modulo —
-    multiply-shift replaces the (a*h+b) mod p family because a 64-bit
-    multiply+shift is several times cheaper than a 64-bit remainder,
-    and this expression runs k times per token over the whole corpus.
-
-    The base-hash array is materialized in its own projection ON
-    PURPOSE: the k per-perm transforms each reference it, and Catalyst's
-    CollapseProject keeps a non-cheap multiply-referenced alias as its
-    own step — inlining the expression instead would re-run
-    tokenize+shingle+xxhash k times per row (measured 64× slower)."""
+    family, defined over Z/2^64 so the silent 64-bit wrap IS the
+    arithmetic, not an overflow bug) and min-folded per perm in an
+    Arrow-batched numpy kernel. No modulo — multiply-shift replaces the
+    (a*h+b) mod p family because a 64-bit multiply+shift is several
+    times cheaper than a 64-bit remainder, and the fold runs k times per
+    token over the whole corpus."""
     import random as _random
 
     rng = _random.Random(seed)
@@ -1159,46 +1153,29 @@ def minhash_signatures(
     # a scalar PythonUDF expression that feeds an exploded grouping key
     # (second fresh-scan plan in a session hits INTERNAL_ERROR "Cannot
     # evaluate expression: ..."); an operator has nothing to extract.
-    # The pure-JVM expression remains as fallback for environments
-    # without numpy.
-    try:
-        import numpy as np
-        import pandas as pd
+    import numpy as np
 
-        np_mults = np.array(mults, dtype=np.uint64)
-        shift = np.uint64(64 - 31)
-        k = num_hashes
+    np_mults = np.array(mults, dtype=np.uint64)
+    shift = np.uint64(64 - 31)
+    k = num_hashes
 
-        def _fold_partition(batches):
-            for pdf in batches:
-                sigs = []
-                for arr in pdf["__base_h"]:
-                    if arr is None or len(arr) == 0:
-                        # JVM parity: array_min over an empty array is NULL.
-                        sigs.append([None] * k)
-                        continue
-                    h = np.asarray(arr, dtype=np.int64).astype(np.uint64)
-                    mins = ((h[:, None] * np_mults[None, :]) >> shift).min(axis=0)
-                    sigs.append(mins.astype(np.int64))
-                yield pd.DataFrame({"doc_id": pdf["doc_id"], "minhash": sigs})
+    def _fold_partition(batches):
+        for pdf in batches:
+            sigs = []
+            for arr in pdf["__base_h"]:
+                if arr is None or len(arr) == 0:
+                    # JVM parity: array_min over an empty array is NULL.
+                    sigs.append([None] * k)
+                    continue
+                h = np.asarray(arr, dtype=np.int64).astype(np.uint64)
+                mins = ((h[:, None] * np_mults[None, :]) >> shift).min(axis=0)
+                sigs.append(mins.astype(np.int64))
+            yield pd.DataFrame({"doc_id": pdf["doc_id"], "minhash": sigs})
 
-        id_type = hashed.schema["doc_id"].dataType.simpleString()
-        return hashed.mapInPandas(
-            _fold_partition, f"doc_id {id_type}, minhash array<bigint>"
-        )
-    except ImportError:  # pragma: no cover - numpy/pandas are baked in
-        sig = F.array(
-            *[
-                F.array_min(
-                    F.transform(
-                        F.col("__base_h"),
-                        lambda h: F.shiftrightunsigned(F.lit(a) * h, 33),
-                    )
-                )
-                for a in mults
-            ]
-        )
-        return hashed.select("doc_id", sig.alias("minhash"))
+    id_type = hashed.schema["doc_id"].dataType.simpleString()
+    return hashed.mapInPandas(
+        _fold_partition, f"doc_id {id_type}, minhash array<bigint>"
+    )
 
 
 def minhash_near_dup(
@@ -1357,10 +1334,11 @@ def simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     stable across engines), sign-summed per bit position. Output
     (doc_id, simhash BIGINT).
 
-    Token hashes are materialized once (own projection, same
-    CollapseProject reasoning as minhash_signatures), then each of the
-    32 bit-sums folds over the cached array — one tokenize pass per row
-    instead of 32."""
+    Token hashes are materialized once in their own projection (the
+    32 bit-sums each reference it, and Catalyst's CollapseProject keeps
+    a non-cheap multiply-referenced alias as its own step), then each
+    bit-sum folds over that array — one tokenize pass per row instead
+    of 32."""
     toks = F.array_distinct(tokens(text_col))
     hashed = df.select(
         F.col(id_col).alias("doc_id"),

@@ -1,9 +1,9 @@
-"""Pure-stdlib image codec (PNG + BMP + baseline & progressive JPEG,
-plus GIF and TIFF elsewhere in this tier) backing the multimodal
-kernels.
+"""Image codec on ``zlib`` + ``struct`` + numpy (PNG + BMP + baseline
+& progressive JPEG, plus GIF and TIFF elsewhere in this tier) backing
+the multimodal kernels.
 
-This container ships no Pillow/libvips/ffmpeg, so the real (non-fake)
-decode path is implemented directly on ``zlib`` + ``struct`` + numpy:
+The engine depends on no Pillow/libvips/ffmpeg, so the real (non-fake)
+decode path is implemented directly on those three:
 PNG (8-bit gray / gray+alpha / RGB / RGBA / palette, non-interlaced),
 BMP (24/32-bit uncompressed), baseline JFIF JPEG (SOF0/SOF1
 sequential DCT, Huffman-coded, grayscale or YCbCr at any sampling
@@ -37,6 +37,8 @@ from __future__ import annotations
 
 import struct
 import zlib
+
+import numpy as np
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 
@@ -118,11 +120,6 @@ def _decode_png(data: bytes) -> tuple[int, int, int, bytes]:
     if len(raw) < h * (stride + 1):
         raise ImageFormatError("PNG pixel data shorter than geometry")
 
-    try:
-        import numpy as np
-    except ImportError:  # pragma: no cover - numpy is baked in
-        np = None
-
     out = bytearray(h * stride)
     prev = bytearray(stride)
     for y in range(h):
@@ -132,16 +129,12 @@ def _decode_png(data: bytes) -> tuple[int, int, int, bytes]:
         if filt == 0:
             pass
         elif filt == 2:  # Up — vectorizable
-            if np is not None:
-                line = bytearray(
-                    (
-                        (np.frombuffer(bytes(line), np.uint8).astype(np.uint16)
-                         + np.frombuffer(bytes(prev), np.uint8)) & 0xFF
-                    ).astype(np.uint8).tobytes()
-                )
-            else:
-                for i in range(stride):
-                    line[i] = (line[i] + prev[i]) & 0xFF
+            line = bytearray(
+                (
+                    (np.frombuffer(bytes(line), np.uint8).astype(np.uint16)
+                     + np.frombuffer(bytes(prev), np.uint8)) & 0xFF
+                ).astype(np.uint8).tobytes()
+            )
         elif filt == 1:  # Sub
             for i in range(ch, stride):
                 line[i] = (line[i] + line[i - ch]) & 0xFF
@@ -240,8 +233,6 @@ _IDCT_BASIS = None  # lazy 8x8 DCT-III basis (numpy)
 def _idct_basis():
     global _IDCT_BASIS
     if _IDCT_BASIS is None:
-        import numpy as np
-
         k = np.arange(8)
         # C[u, x] = c(u)/2 * cos((2x+1) u pi / 16); IDCT: C.T @ F @ C
         c = np.cos((2 * k[None, :] + 1) * k[:, None] * np.pi / 16) / 2.0
@@ -560,8 +551,6 @@ class _ScanDecoder:
 
 
 def _decode_jpeg(data: bytes) -> tuple[int, int, int, bytes]:
-    import numpy as np
-
     if data[:2] != b"\xff\xd8":
         raise ImageFormatError("not a JPEG")
     qt: dict[int, "np.ndarray"] = {}
@@ -1113,8 +1102,6 @@ def encode_jpeg(
     """Encode 8-bit gray or RGB pixels as a baseline JFIF payload
     (4:4:4, flat quantization ``quant`` for every coefficient, flat
     Huffman tables, optional DRI/RSTn restart markers)."""
-    import numpy as np
-
     if channels not in (1, 3):
         raise ValueError("encode_jpeg supports 1 (gray) or 3 (RGB) channels")
     if not 1 <= quant <= 255:
@@ -1238,21 +1225,8 @@ def encode_png(w: int, h: int, channels: int, pixels: bytes) -> bytes:
 def resize_nearest(
     w: int, h: int, channels: int, pixels: bytes, new_w: int, new_h: int
 ) -> bytes:
-    """Nearest-neighbor resample (numpy when present)."""
-    try:
-        import numpy as np
-
-        arr = np.frombuffer(pixels, np.uint8).reshape(h, w, channels)
-        ys = (np.arange(new_h) * h // new_h).clip(0, h - 1)
-        xs = (np.arange(new_w) * w // new_w).clip(0, w - 1)
-        return arr[ys][:, xs].tobytes()
-    except ImportError:  # pragma: no cover - numpy is baked in
-        out = bytearray(new_w * new_h * channels)
-        for y in range(new_h):
-            sy = min(h - 1, y * h // new_h)
-            for x in range(new_w):
-                sx = min(w - 1, x * w // new_w)
-                src = (sy * w + sx) * channels
-                dst = (y * new_w + x) * channels
-                out[dst : dst + channels] = pixels[src : src + channels]
-        return bytes(out)
+    """Nearest-neighbor resample."""
+    arr = np.frombuffer(pixels, np.uint8).reshape(h, w, channels)
+    ys = (np.arange(new_h) * h // new_h).clip(0, h - 1)
+    xs = (np.arange(new_w) * w // new_w).clip(0, w - 1)
+    return arr[ys][:, xs].tobytes()

@@ -6,7 +6,7 @@ run as Arrow-batched ``mapInPandas`` functions so bytes cross the
 JVM↔Python boundary once per batch, never per row.
 
 Image decode/resize are REAL for PNG, BMP, JPEG (baseline AND
-progressive SOF2), GIF, and TIFF via the pure-stdlib codec in
+progressive SOF2), GIF, and TIFF via the zlib + numpy codec in
 ``ops/imagecodec.py``; audio for RIFF/WAVE via ``ops/audiocodec.py``;
 video frame sampling for YUV4MPEG2 via ``ops/videocodec.py``. Formats
 that genuinely need an external codec library (WebP, MP3/AAC, H.264)
@@ -101,7 +101,7 @@ _DECODE_SCHEMA = StructType([
 def decode_image_stub(content: bytes, fake: bool = False,
                       on_error: str = "raise") -> dict | None:
     """Decode kernel. ``fake=False`` REALLY decodes PNG/BMP/JPEG
-    (baseline + progressive)/GIF/TIFF payloads (pure-stdlib codec,
+    (baseline + progressive)/GIF/TIFF payloads (zlib + numpy codec,
     ``ops/imagecodec.py``) — width/height/channels from the actual
     pixel grid, ``feature_hash`` over the decoded pixel bytes. Formats
     needing an external library (WebP, ...) follow ``on_error``:

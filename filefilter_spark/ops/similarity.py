@@ -290,66 +290,52 @@ def _bucket_memberships(
     whole-stage codegen; same rationale and structure as the minhash
     fold in ``ops/dedup.py:minhash_signatures``). mapInPandas rather
     than a scalar pandas_udf on purpose — see the Spark 4.1 planner
-    note there. Pure-JVM explode formulation remains as fallback.
+    note there.
 
-    The two kernels may disagree on a bucket bit only when a dot
-    product is within float rounding of 0 (sign flip) — harmless here,
-    since candidates are always re-verified with exact cosine."""
+    The kernel may disagree with the JVM ``lsh_signature`` expression
+    on a bucket bit only when a dot product is within float rounding of
+    0 (sign flip) — harmless here, since candidates are always
+    re-verified with exact cosine."""
+    import numpy as np
+    import pandas as pd
+
     n_tables, r = len(tables), len(tables[0])
     dim = len(tables[0][0])
     id_type = df.schema[id_col].dataType.simpleString()
-    try:
-        import numpy as np
-        import pandas as pd
+    planes = np.array(
+        [p for tbl in tables for p in tbl], dtype=np.float64
+    )  # (b·r, dim)
+    weights = np.uint64(1) << np.arange(r, dtype=np.uint64)
+    t_idx = np.arange(n_tables, dtype=np.int32)
 
-        planes = np.array(
-            [p for tbl in tables for p in tbl], dtype=np.float64
-        )  # (b·r, dim)
-        weights = np.uint64(1) << np.arange(r, dtype=np.uint64)
-        t_idx = np.arange(n_tables, dtype=np.int32)
-
-        def _kernel(batches):
-            for pdf in batches:
-                n = len(pdf)
-                if n == 0:
-                    yield pd.DataFrame(
-                        {
-                            "id": pdf[id_col],
-                            "t": pd.Series([], dtype="int32"),
-                            "b": pd.Series([], dtype="int64"),
-                        }
-                    )
-                    continue
-                E = np.zeros((n, dim), dtype=np.float64)
-                for i, v in enumerate(pdf["__emb"]):
-                    if v is not None and len(v) == dim:
-                        E[i] = v
-                bits = (E @ planes.T > 0).reshape(n, n_tables, r)
-                B = (bits.astype(np.uint64) * weights).sum(axis=2).astype(np.int64)
+    def _kernel(batches):
+        for pdf in batches:
+            n = len(pdf)
+            if n == 0:
                 yield pd.DataFrame(
                     {
-                        "id": pdf[id_col].repeat(n_tables).reset_index(drop=True),
-                        "t": np.tile(t_idx, n),
-                        "b": B.reshape(-1),
+                        "id": pdf[id_col],
+                        "t": pd.Series([], dtype="int32"),
+                        "b": pd.Series([], dtype="int64"),
                     }
                 )
+                continue
+            E = np.zeros((n, dim), dtype=np.float64)
+            for i, v in enumerate(pdf["__emb"]):
+                if v is not None and len(v) == dim:
+                    E[i] = v
+            bits = (E @ planes.T > 0).reshape(n, n_tables, r)
+            B = (bits.astype(np.uint64) * weights).sum(axis=2).astype(np.int64)
+            yield pd.DataFrame(
+                {
+                    "id": pdf[id_col].repeat(n_tables).reset_index(drop=True),
+                    "t": np.tile(t_idx, n),
+                    "b": B.reshape(-1),
+                }
+            )
 
-        src = df.select(F.col(id_col), emb.alias("__emb"))
-        return src.mapInPandas(_kernel, schema=f"id {id_type}, t int, b bigint")
-    except ImportError:  # pragma: no cover - numpy/pandas are baked in
-        return df.select(
-            F.col(id_col).alias("id"),
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(t).alias("t"), lsh_signature(emb, tbl).alias("b")
-                        )
-                        for t, tbl in enumerate(tables)
-                    ]
-                )
-            ).alias("tb"),
-        ).select("id", "tb.t", "tb.b")
+    src = df.select(F.col(id_col), emb.alias("__emb"))
+    return src.mapInPandas(_kernel, schema=f"id {id_type}, t int, b bigint")
 
 
 def build_ivf_index(

@@ -6,9 +6,11 @@ Reference behavior (``filefilter.py:306-372``): iterate the YAML
 consumes the current dataset (view ``df``) and its output becomes the
 new dataset; after each stage the view is repointed (``:352``), the
 table is recounted (``:355``, OP-A10) and optionally sampled
-(``:361-368``, OP-A11); the final stage is exported to CSV. The DuckDB
-workspace ``data/<input>.db`` persists across runs (``Database.py:19-29``)
-— rerunning resumes from materialized ``filter<N>`` tables — and the
+(``:361-368``, OP-A11: after one stage with that stage's
+``showSampleOnFinish``, after every stage with the top-level one); the
+final stage is exported to CSV. The DuckDB workspace
+``data/<input>.db`` persists across runs (``Database.py:19-29``) —
+rerunning resumes from materialized ``filter<N>`` tables — and the
 ``-d`` flag deletes it.
 
 Spark-first: the "current dataset" is just a DataFrame variable; stages
@@ -21,7 +23,7 @@ halves are plan-tested (tests/test_plans.py, cross-stage section):
 - Column pruning crosses stage boundaries in EVERY mode: a late
   projection prunes the scan's ReadSchema, and computed columns a later
   stage drops are never evaluated — the free per-stage ``observe()``
-  counters are ``count(1)`` and need no columns, so CollectMetrics
+  row counters are ``count(1)`` and need no columns, so CollectMetrics
   nodes are transparent to pruning.
 - Filter pushdown to the scan's ``PushedFilters`` is fenced by the
   default per-stage counters: the observed row counts semantically pin
@@ -33,22 +35,25 @@ halves are plan-tested (tests/test_plans.py, cross-stage section):
   filtered scan. That is the mode a 100 TB run wants; per-stage counts
   are the reference-parity default.
 
-Metrics (OP-A10/A14) ride on ``df.observe``: each stage's row count is
-filled by the first action that completes over its Observation. For a
-lazy pipeline that is the sink's write, so the counts cost no extra
-jobs. Some stages act when applied: ``expect``'s aggregate,
-``temperature``'s group counts and ``bpe``'s training histogram each
-read the full upstream, so they fill the upstream counts with the same
-values. ``collect_metrics=True`` additionally forces an eager count per
-stage (the reference's literal behavior, N extra jobs; off by default).
+Metrics (OP-A10/A14) ride on ``df.observe`` and nothing else: each
+stage's row count, the python stage's error count and the rest stage's
+status-class counts are each filled by the first action that completes
+over their Observation. For a lazy pipeline that is the sink's write,
+so the counts cost no extra jobs. Some stages act when applied:
+``expect``'s aggregate, ``temperature``'s group counts and ``bpe``'s
+training histogram each read the full upstream, so they fill the
+upstream counts with the same values; later runs of the plan leave the
+counts as they are. The stage counters stay with
+``observe_metrics=False``: they sit directly above the stage's
+``mapInPandas``, which already blocks pushdown.
 
 A stage that samples its input when applied (``Stage.samples_input``:
 the python and pandas stages' schema-inference sample) and the OP-A11
 head sample must not run on a plan with pending Observations: an
 Observation keeps the first completed action, and a limit job would
 record the sample size as the stage's row count. Only then does
-:meth:`Pipeline.run` also thread an observation-free copy of the chain,
-and only up to the last stage that needs it.
+:meth:`Pipeline.run` also thread a copy of the chain free of the
+Observations it reads, and only up to the last stage that needs it.
 
 Resume (workspace analog): with ``checkpoint_dir`` set, each stage's
 output is materialized to ``<dir>/stage_<N>/`` parquet; a later run
@@ -85,21 +90,19 @@ class StageMetrics:
     errors: int | None = None
     http_status: dict[str, int] = field(default_factory=dict)
     resumed: bool = False
-    _observation: Observation | None = None
-    _error_acc: Any = None
-    _status_accs: dict[str, Any] | None = None
+    _observation: Observation | None = None  # the pipeline's row count
+    _counters: Observation | None = None  # the stage's own (Stage.observation)
 
     def harvest(self) -> None:
-        """Pull observed/accumulated values after an action has run."""
+        """Read the observed counts; blocks until an action has run."""
         if self._observation is not None and self.rows_out is None:
-            try:
-                self.rows_out = self._observation.get.get("rows")
-            except Exception:  # pragma: no cover - no action ran
-                pass
-        if self._error_acc is not None:
-            self.errors = self._error_acc.value
-        if self._status_accs:
-            self.http_status = {k: a.value for k, a in self._status_accs.items()}
+            self.rows_out = self._observation.get["rows"]
+        if self._counters is not None:
+            counts = self._counters.get
+            if self.action_type == "rest":
+                self.http_status = counts
+            else:
+                self.errors = counts["errors"]
 
 
 @dataclass
@@ -133,14 +136,12 @@ class Pipeline:
         self,
         spark: SparkSession,
         config: PipelineConfig,
-        collect_metrics: bool = False,
         checkpoint_dir: str | None = None,
         resume: bool = False,
         observe_metrics: bool | None = None,
     ):
         self.spark = spark
         self.config = config
-        self.collect_metrics = collect_metrics
         self.checkpoint_dir = checkpoint_dir
         self.resume = resume
         # Per-stage observe() counters (OP-A10/A14 parity) pin each
@@ -203,12 +204,14 @@ class Pipeline:
         """Fold the enabled stages over the input DataFrame (OP-A8).
 
         Each stage is applied once to the returned chain, which carries
-        one Observation per stage so the caller's action fills the row
-        counts. When a stage samples its input or a head sample is
-        shown, the stages up to the last such one are also applied to an
-        observation-free twin (``plain``): the sample runs there, and a
-        sampling stage caches what it learned, so its apply to the
-        observed chain runs no sample.
+        one row-count Observation per stage, plus the python and rest
+        stages' own counters, so the caller's action fills every count
+        (:meth:`PipelineResult.harvest_metrics`). When a stage samples
+        its input or a head sample is shown, the stages up to the last
+        such one are also applied to a twin (``plain``) whose
+        Observations nobody reads: the sample runs there, and a sampling
+        stage caches what it learned, so its apply to the observed chain
+        runs no sample.
         """
         metrics: list[StageMetrics] = []
         try:
@@ -216,7 +219,7 @@ class Pipeline:
         except Exception:  # pragma: no cover - developer API moved
             self._input_token = ""
         stages = self.config.enabled_stages
-        show_all = self.collect_metrics and self.config.show_sample_on_finish
+        show_all = self.config.show_sample_on_finish
         last_twin = max(
             (i for i, cfg in enumerate(stages)
              if show_all or cfg.show_sample
@@ -224,7 +227,7 @@ class Pipeline:
             default=-1,
         )
         resuming = True  # leading prefix of resumable stages
-        plain = df  # observation-free twin
+        plain = df  # twin for samples; its Observations are never read
         for i, cfg in enumerate(stages):
             m = StageMetrics(cfg.name, cfg.action_type)
             resumed_df = self._try_resume(cfg) if resuming else None
@@ -239,8 +242,7 @@ class Pipeline:
                 if i <= last_twin:
                     plain = stage.apply(plain)
                 df = stage.apply(df)
-                m._error_acc = getattr(df, "_filefilter_error_acc", None)
-                m._status_accs = getattr(df, "_filefilter_status_accs", None)
+                m._counters = stage.observation
                 if self.observe_metrics:
                     # OP-A10/A14: row count observed for free on the
                     # next action — at the cost of fencing filter
@@ -252,10 +254,6 @@ class Pipeline:
                     df = self._materialize(cfg, df)
                     plain = df
                     m.harvest()  # the write was an action; counts are in
-            if self.collect_metrics and m.rows_out is None:
-                m.rows_out = df.count()
-                m.harvest()
-                log.info("stage %s (%s): %s rows", cfg.name, cfg.action_type, m.rows_out)
             if show_all or cfg.show_sample:
                 plain.show(5, truncate=False)  # OP-A11 head sample
             metrics.append(m)

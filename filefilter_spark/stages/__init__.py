@@ -70,7 +70,7 @@ STAGE_TYPES = {
     "expect": ExpectStage,
     "dedupbest": KeepBestStage,
     "temperature": TemperatureStage,
-    # r13: the repetition tier — rates that may exceed 1 (epochs) and
+    # the repetition tier — rates that may exceed 1 (epochs) and
     # one-call token-budget execution, both library-only before
     "epochs": EpochsStage,
     "budget": BudgetStage,
@@ -81,11 +81,11 @@ STAGE_TYPES = {
     "gopher": GopherStage,
     "gopherrep": GopherRepStage,
     "entropy": EntropyStage,
-    # r13: event/retrieval analytics stages + the percentile gate
+    # event/retrieval analytics stages + the percentile gate
     "sessionize": SessionizeStage,
     "search": SearchStage,
     "qualitygate": QualityGateStage,
-    # r14: index lifecycle + hybrid/batch retrieval from YAML
+    # index lifecycle + hybrid/batch retrieval from YAML
     "searchindex": SearchIndexStage,
     "batchsearch": BatchSearchStage,
     "annindex": AnnIndexStage,

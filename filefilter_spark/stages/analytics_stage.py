@@ -2,7 +2,7 @@
 index lifecycle.
 
 The reference's whole interaction model is YAML actionTypes
-(reference ``filefilter.py:306``); these expose the r13/r14
+(reference ``filefilter.py:306``); these expose the
 event/retrieval operators declaratively, same contract as the corpus
 stages:
 
@@ -103,9 +103,8 @@ class SearchStage(Stage):
     against a persisted ``build_text_index`` layout instead — a
     partition-pruned read of the terms' buckets, never a corpus scan;
     ``nBuckets`` is OPTIONAL (the layout's stats sidecar records the
-    build's bucket count and a contradicting value raises — ADVICE
-    r14); build or refresh that
-    layout with the ``searchindex`` stage upstream in the same
+    build's bucket count and a contradicting value raises); build or
+    refresh that layout with the ``searchindex`` stage upstream in the same
     pipeline (or own it externally).
 
     ``mode: hybrid`` fuses BM25 with exact cosine over an embedding
@@ -208,7 +207,7 @@ class SearchStage(Stage):
                     b=float(cfg.get("b", 0.75)),
                     # unset -> the index's stats sidecar governs (the
                     # build recorded its bucket count; a set value
-                    # that contradicts it raises — ADVICE r14)
+                    # that contradicts it raises)
                     n_buckets=(
                         int(cfg["nBuckets"])
                         if cfg.get("nBuckets") is not None else None
@@ -379,7 +378,7 @@ class BatchSearchStage(Stage):
                 id_col=cfg.get("idField", "doc_id"),
                 k1=float(cfg.get("k1", 1.2)),
                 b=float(cfg.get("b", 0.75)),
-                # unset -> the index's stats sidecar governs (ADVICE r14)
+                # unset -> the index's stats sidecar governs
                 n_buckets=(
                     int(cfg["nBuckets"])
                     if cfg.get("nBuckets") is not None else None

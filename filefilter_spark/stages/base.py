@@ -21,7 +21,8 @@ import datetime
 import decimal
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+import numpy as np
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -50,17 +51,39 @@ _INTEGRALS = (LongType, IntegerType, ShortType, ByteType)
 
 
 class Stage:
-    # True when apply() runs a sampling action on its input (schema
-    # inference). Pipeline.run then applies the stage to an
-    # observation-free copy of the chain first, so the sample never
-    # completes on a plan that carries per-stage Observations.
+    # True when apply() runs a sampling action on its input
+    # (infer_schema). Pipeline.run then applies the stage to a copy of
+    # the chain whose Observations it never reads first, so the sample
+    # never completes on a plan that carries the per-stage counts.
     samples_input = False
 
     def __init__(self, spark: SparkSession, cfg: StageConfig):
         self.spark = spark
         self.cfg = cfg
+        # Per-row counters of the frame the last apply() returned
+        # (python: errors; rest: status classes), filled by the first
+        # action over that frame.
+        self.observation: Observation | None = None
+        self._schema: StructType | None = None
 
     def apply(self, df: DataFrame) -> DataFrame:  # pragma: no cover - interface
+        raise NotImplementedError
+
+    def infer_schema(self, df: DataFrame) -> StructType:
+        """Output schema of the user code, learned from the first
+        ``SAMPLE_ROWS_FOR_SCHEMA`` input rows. Cached: Pipeline applies
+        the stage to its sample chain first, and the apply to the
+        observed chain must run no sample (an Observation keeps the
+        first completed action, so the limit job would set the counts).
+        """
+        if self._schema is None:
+            rows = [r.asDict() for r in df.limit(SAMPLE_ROWS_FOR_SCHEMA).collect()]
+            self._schema = self.schema_from_sample(df, rows)
+        return self._schema
+
+    def schema_from_sample(
+        self, df: DataFrame, rows: list[dict[str, Any]]
+    ) -> StructType:  # pragma: no cover - interface
         raise NotImplementedError
 
     def __repr__(self) -> str:
@@ -128,21 +151,12 @@ def _compatible(v: Any, dt: DataType) -> bool:
     if isinstance(dt, DecimalType):
         return isinstance(v, decimal.Decimal)
     if isinstance(dt, ArrayType):
-        return isinstance(v, (list, tuple)) or _is_ndarray(v)
+        return isinstance(v, (list, tuple, np.ndarray))
     if isinstance(dt, MapType):
         return isinstance(v, dict)
     if isinstance(dt, BinaryType):
         return isinstance(v, (bytes, bytearray))
     return True  # structs etc.: trust the input type
-
-
-def _is_ndarray(v: Any) -> bool:
-    try:
-        import numpy as np
-
-        return isinstance(v, np.ndarray)
-    except Exception:  # pragma: no cover
-        return False
 
 
 def schema_from_rows(

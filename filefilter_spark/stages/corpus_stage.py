@@ -404,7 +404,7 @@ class DsirStage(Stage):
         if not cfg.get("targetWhere"):
             raise ValueError("dsir stage requires actionConfig.targetWhere")
         id_col = cfg.get("idField", "doc_id")
-        # predicate target -> single tagged counting scan (r13)
+        # predicate target -> single tagged counting scan
         scores = dsir_logweights(
             df,
             F.expr(cfg["targetWhere"]),

@@ -20,7 +20,7 @@ same mechanism as the ``python`` stage (SURVEY.md §1.3).
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Any, Iterator
 
 import pandas as pd
 
@@ -40,7 +40,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from filefilter_spark.stages.base import SAMPLE_ROWS_FOR_SCHEMA, Stage, schema_from_rows
+from filefilter_spark.stages.base import Stage, schema_from_rows
 
 _SPARK_TO_PANDAS = {
     LongType: "int64", IntegerType: "int64",
@@ -85,27 +85,19 @@ def _exec_on_pdf(code_obj, pdf: pd.DataFrame) -> pd.DataFrame:
 
 class PandasStage(Stage):
     samples_input = True
-    _schema_cache: StructType | None = None
 
-    def infer_schema(self, df: DataFrame) -> StructType:
-        # Cached — see PythonStage.infer_schema for the Observation
-        # first-action rationale.
-        if self._schema_cache is not None:
-            return self._schema_cache
-        self._schema_cache = self._infer_schema_uncached(df)
-        return self._schema_cache
-
-    def _infer_schema_uncached(self, df: DataFrame) -> StructType:
-        rows_in = [r.asDict() for r in df.limit(SAMPLE_ROWS_FOR_SCHEMA).collect()]
+    def schema_from_sample(
+        self, df: DataFrame, rows: list[dict[str, Any]]
+    ) -> StructType:
         sample = (
-            pd.DataFrame(rows_in, columns=list(df.columns))
-            if rows_in else _typed_empty_sample(df)
+            pd.DataFrame(rows, columns=list(df.columns))
+            if rows else _typed_empty_sample(df)
         )
         code_obj = compile(self.cfg.code, f"<pandas-stage:{self.cfg.name}>", "exec")
         out = _exec_on_pdf(code_obj, sample)
-        rows = out.to_dict(orient="records")
-        if rows:
-            return schema_from_rows(rows, list(df.columns), base_schema=df.schema)
+        out_rows = out.to_dict(orient="records")
+        if out_rows:
+            return schema_from_rows(out_rows, list(df.columns), base_schema=df.schema)
         # Empty input: the user code still declared the output columns —
         # keep input types for surviving columns, map pandas dtypes for
         # new ones (the reference never defines filterN on empty input;

@@ -14,6 +14,12 @@ user code is compiled once per partition function (the reference's
 ``filefilter.py:44``), and the output schema is inferred up front by
 running the code on a driver-side sample (SURVEY.md §1.3).
 
+Error counter (OP-A14): the ``mapInPandas`` output carries one hidden
+per-row flag, set when the user code raised on that row. The stage
+observes ``count_if(flag) AS errors`` on it (``self.observation``) and
+drops the flag, so the first action over the stage's output fills the
+count, and later runs of the same plan do not add to it.
+
 Scale note: the per-row ``exec`` is inherently Python — this is the one
 stage class that cannot be JVM-side. Arrow batching keeps the transfer
 vectorized; compute cost is the user's code itself. At 100 TB this
@@ -24,82 +30,74 @@ dependency).
 from __future__ import annotations
 
 import random
-from typing import Any, Callable, Iterator
+from typing import Any, Iterator
 
 import pandas as pd
 
-from pyspark.sql import DataFrame
-from pyspark.sql.types import StructType
+import pyspark.sql.functions as F
+from pyspark.sql import DataFrame, Observation
+from pyspark.sql.types import BooleanType, StructField, StructType
 
-from filefilter_spark.stages.base import (
-    SAMPLE_ROWS_FOR_SCHEMA,
-    Stage,
-    coerce_cell,
-    schema_from_rows,
-)
+from filefilter_spark.stages.base import Stage, coerce_cell, schema_from_rows
+
+_ERROR_FLAG = "__ffspark_error"
 
 
-def _run_user_code(code_obj, row: dict[str, Any], on_error=None) -> dict[str, Any]:
+def _run_user_code(code_obj, row: dict[str, Any]) -> tuple[dict[str, Any], bool]:
     """Execute user code against a row dict; keep-on-error semantics.
 
     Scope mirrors the reference's restricted globals
     (``filefilter.py:40-41``): ``row`` plus ``rand``; imports inside the
     snippet are allowed, same as YAML-embedded code in the reference.
-    The ONE definition of the execution contract — the driver-side
-    schema sampler and the executor loop both call it (``on_error`` is
-    the executor's error-counter hook).
+    Returns the resulting row and whether the code raised. The ONE
+    definition of the execution contract — the driver-side schema
+    sampler and the executor loop both call it.
     """
     original = dict(row)
     try:
         exec(code_obj, {"row": row, "rand": random})
-        return row
+        return row, False
     except Exception:
-        if on_error is not None:
-            on_error()
-        return original  # keep the original row (filefilter.py:56-65)
+        return original, True  # keep the original row (filefilter.py:56-65)
 
 
 class PythonStage(Stage):
     samples_input = True
-    _schema_cache: StructType | None = None
 
-    def infer_schema(self, df: DataFrame) -> StructType:
-        # Cached so Pipeline can apply the stage to both its observed and
-        # observation-free chains with a single sampling action (the
-        # sample must never run on a plan carrying Observation nodes —
-        # PySpark observations capture the FIRST completed action, and a
-        # limit(100) sampling job would poison the per-stage row counts).
-        if self._schema_cache is not None:
-            return self._schema_cache
-        sample = [r.asDict() for r in df.limit(SAMPLE_ROWS_FOR_SCHEMA).collect()]
+    def schema_from_sample(
+        self, df: DataFrame, rows: list[dict[str, Any]]
+    ) -> StructType:
+        if not rows:
+            return df.schema
         code_obj = compile(self.cfg.code, f"<python-stage:{self.cfg.name}>", "exec")
-        out_rows = [_run_user_code(code_obj, dict(r)) for r in sample]
-        if not out_rows:
-            schema = df.schema
-        else:
-            schema = schema_from_rows(out_rows, list(df.columns), base_schema=df.schema)
-        self._schema_cache = schema
-        return schema
+        out_rows = [_run_user_code(code_obj, r)[0] for r in rows]
+        return schema_from_rows(out_rows, list(df.columns), base_schema=df.schema)
 
     def apply(self, df: DataFrame) -> DataFrame:
         schema = self.infer_schema(df)
         code_str = self.cfg.code
         stage_name = self.cfg.name
         col_types = [(f.name, f.dataType) for f in schema.fields]
-        err_acc = self.spark.sparkContext.accumulator(0)
 
         def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             code_obj = compile(code_str, f"<python-stage:{stage_name}>", "exec")
             for pdf in batches:
                 out: dict[str, list] = {name: [] for name, _ in col_types}
+                raised: list[bool] = []
                 for rec in pdf.to_dict(orient="records"):
-                    result = _run_user_code(
-                        code_obj, rec, on_error=lambda: err_acc.add(1)
-                    )
+                    result, failed = _run_user_code(code_obj, rec)
                     for name, dt in col_types:
                         out[name].append(coerce_cell(result.get(name), dt))
+                    raised.append(failed)
+                out[_ERROR_FLAG] = raised
                 yield pd.DataFrame(out)
 
-        result = df.mapInPandas(run, schema=schema)
-        result._filefilter_error_acc = err_acc  # surfaced by Pipeline metrics
-        return result
+        flagged = StructType(
+            schema.fields + [StructField(_ERROR_FLAG, BooleanType(), False)]
+        )
+        self.observation = Observation()
+        return (
+            df.mapInPandas(run, schema=flagged)
+            .observe(self.observation, F.count_if(_ERROR_FLAG).alias("errors"))
+            .drop(_ERROR_FLAG)
+        )

@@ -10,6 +10,16 @@ row (``filters.py:83-89``; drop at ``filefilter.py:110-113``); unfillable
 (``filters.py:31-33``); per-status-class counters ``20X/30X/40X/50X``
 (``filefilter.py:73-80``).
 
+Status counters: the ``mapInPandas`` output keeps every row, with a
+hidden status class — ``20X``/``30X``/``40X``/``50X``, ``errors`` for a
+request that raised on its last attempt, null for an unfillable
+template (no request sent). The stage observes one ``count_if`` per
+class (``self.observation``), keeps only the ``20X`` rows and drops the
+column. Counts are per row: each row counts the class of its last
+response, the reference's one-request-per-row semantics, so a 5xx that
+succeeds on retry counts once, as ``20X``. With ``mockTemplate`` every
+kept row counts as ``20X``.
+
 We implement the *intended* semantics: the reference only sends POST
 bodies when ``logHttpRequests`` is on (quirk — ``filters.py:65-71``);
 we always send.
@@ -36,12 +46,15 @@ from typing import Any, Iterator
 
 import pandas as pd
 
-from pyspark.sql import DataFrame
+import pyspark.sql.functions as F
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql.types import StringType, StructField, StructType
 
 from filefilter_spark.stages.base import Stage
 
 _FORMATTER = string.Formatter()
+_STATUS = "__ffspark_status"
+_STATUS_CLASSES = ("20X", "30X", "40X", "50X", "errors")
 
 
 def render_template(template: str, row: dict[str, Any]) -> str | None:
@@ -82,12 +95,11 @@ class RestStage(Stage):
         ac = self.cfg.action_config
         new_field = ac.get("newField", "response")
         schema = StructType(
-            list(df.schema.fields) + [StructField(new_field, StringType(), True)]
+            list(df.schema.fields) + [
+                StructField(new_field, StringType(), True),
+                StructField(_STATUS, StringType(), True),
+            ]
         )
-        sc = self.spark.sparkContext
-        acc_2xx, acc_3xx = sc.accumulator(0), sc.accumulator(0)
-        acc_4xx, acc_5xx = sc.accumulator(0), sc.accumulator(0)
-        acc_err = sc.accumulator(0)
 
         host = ac.get("host", "")
         path_t = ac.get("path", "")
@@ -108,11 +120,11 @@ class RestStage(Stage):
             # min(partitions, total cores) tasks run simultaneously.
             n_concurrent = max(
                 1,
-                min(df.rdd.getNumPartitions(), sc.defaultParallelism),
+                min(df.rdd.getNumPartitions(),
+                    self.spark.sparkContext.defaultParallelism),
             )
             rate_per_sec = rate_per_sec / n_concurrent
         timeout = float(ac.get("timeout", 30))
-        out_cols = [f.name for f in schema.fields]
 
         def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             session = None
@@ -122,16 +134,18 @@ class RestStage(Stage):
                 session = requests.Session()
             bucket = _TokenBucket(rate_per_sec)
 
-            def call(row: dict[str, Any]) -> str | None:
-                """Return response text for the row, or None → drop."""
+            def call(row: dict[str, Any]) -> tuple[str | None, str | None]:
+                """(response text, status class) for the row; the text
+                is set for ``20X`` only, the class is None when no
+                request could be built."""
                 if mock_template is not None:
                     rendered = render_template(mock_template, row)
-                    return rendered  # None (unfillable) drops the row
+                    return rendered, None if rendered is None else "20X"
                 from urllib.parse import quote
 
                 path = render_template(path_t, row)
                 if path is None:
-                    return None
+                    return None, None
                 qparts = []
                 for name, tmpl in query_params.items():
                     val = render_template(str(tmpl), row)
@@ -156,47 +170,44 @@ class RestStage(Stage):
                         )
                     except Exception:
                         if attempt == max_retries:
-                            acc_err.add(1)
-                            return None
+                            return None, "errors"
                         time.sleep(backoff * (2**attempt))
                         continue
                     code = resp.status_code
                     if 200 <= code < 300:
-                        acc_2xx.add(1)
                         try:
                             # JSON re-serialized to a string column
                             # (reference filters.py:78).
-                            return json.dumps(resp.json())
+                            return json.dumps(resp.json()), "20X"
                         except ValueError:
-                            return resp.text
+                            return resp.text, "20X"
                     if 300 <= code < 400:
-                        acc_3xx.add(1)
-                    elif 400 <= code < 500:
-                        acc_4xx.add(1)
-                    else:
-                        acc_5xx.add(1)
-                        if attempt < max_retries:
-                            time.sleep(backoff * (2**attempt))
-                            continue
-                    return None  # non-2xx → drop (filters.py:83-89)
-                return None
+                        return None, "30X"
+                    if 400 <= code < 500:
+                        return None, "40X"
+                    if attempt < max_retries:
+                        time.sleep(backoff * (2**attempt))
+                        continue
+                    return None, "50X"
+                return None, None
 
             for pdf in batches:
-                kept: list[dict[str, Any]] = []
+                texts, classes = [], []
                 for rec in pdf.to_dict(orient="records"):
-                    text = call(rec)
-                    if text is None:
-                        continue  # drop-on-error (filefilter.py:110-113)
-                    rec[new_field] = text
-                    kept.append(rec)
-                if kept:
-                    yield pd.DataFrame(kept, columns=out_cols)
-                else:
-                    yield pd.DataFrame({c: [] for c in out_cols})
+                    text, status = call(rec)
+                    texts.append(text)
+                    classes.append(status)
+                yield pdf.assign(**{new_field: texts, _STATUS: classes})
 
-        result = df.mapInPandas(run, schema=schema)
-        result._filefilter_status_accs = {
-            "20X": acc_2xx, "30X": acc_3xx, "40X": acc_4xx, "50X": acc_5xx,
-            "errors": acc_err,
-        }
-        return result
+        self.observation = Observation()
+        status = F.col(_STATUS)
+        return (
+            df.mapInPandas(run, schema=schema)
+            .observe(
+                self.observation,
+                *[F.count_if(status == c).alias(c) for c in _STATUS_CLASSES],
+            )
+            # drop-on-error (filters.py:83-89, filefilter.py:110-113)
+            .where(status == "20X")
+            .drop(_STATUS)
+        )

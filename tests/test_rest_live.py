@@ -99,16 +99,18 @@ filters:
       method: GET
       host: "{server}"
       path: "v31/name/{{countryName}}"
-"""), collect_metrics=True).run(df)
+""")).run(df)
     assert result.df.count() == 1  # 404 row dropped (filters.py:83-89)
-    m = result.metrics[0]
+    m = result.harvest_metrics()[0]
     assert m.http_status["20X"] == 1 and m.http_status["40X"] == 1
 
 
 def test_rest_retry_on_500_then_success(spark, server):
+    """A 500 that succeeds on retry keeps the row, and the status
+    classes count per row: once, as 20X."""
     _Handler.fail_next["k=a"] = 1  # first attempt 500s, retry succeeds
     df = spark.createDataFrame([(1, "a")], "id int, k string")
-    out = Pipeline(spark, load_config_str(f"""
+    result = Pipeline(spark, load_config_str(f"""
 filters:
   - name: rest
     actionType: rest
@@ -120,10 +122,12 @@ filters:
         k: "{{k}}"
       maxRetries: 2
       backoff: 0.01
-""")).run(df).df
-    rows = out.collect()
+""")).run(df)
+    rows = result.df.collect()
     assert len(rows) == 1
     assert json.loads(rows[0]["response"]) == {"ok": "k=a"}
+    m = result.harvest_metrics()[0]
+    assert (m.http_status["20X"], m.http_status["50X"]) == (1, 0)
 
 
 def test_rest_post_body_always_sent(spark, server):

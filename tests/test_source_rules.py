@@ -6,6 +6,8 @@
 - Code takes its settings as parameters: only ``session.py``, which
   maps the deployment settings (``SPARK_GRAFT_*``, ``SPARK_MASTER``,
   ``AWS_*``) into the session conf, reads the environment.
+- Stage metrics come from ``df.observe`` alone: no module creates a
+  Spark accumulator, which counts every run of a plan, not one.
 - No script under ``tools/`` turns the Spark UI on: per-stage numbers
   come from the event log (``perfbench/spans.py``), not from scraping
   the UI's REST API.
@@ -19,6 +21,7 @@ PKG = ROOT / "filefilter_spark"
 
 CUT = re.compile(r"localCheckpoint\(|\.checkpoint\(")
 ENV = re.compile(r"os\.environ|getenv")
+ACC = re.compile(r"accumulator\(")
 UI_ON = re.compile(r"""spark\.ui\.enabled["']?\s*[:,=]\s*["']?true""", re.I)
 
 
@@ -31,6 +34,16 @@ def test_lineage_cuts_and_env_reads_only_in_session():
         for n, line in enumerate(path.read_text().splitlines(), 1):
             if CUT.search(line) or ENV.search(line):
                 offenders.append(f"{rel}:{n}: {line.strip()}")
+    assert not offenders, "\n".join(offenders)
+
+
+def test_no_accumulators_in_package():
+    offenders = [
+        f"{path.relative_to(PKG).as_posix()}:{n}: {line.strip()}"
+        for path in sorted(PKG.rglob("*.py"))
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if ACC.search(line)
+    ]
     assert not offenders, "\n".join(offenders)
 
 

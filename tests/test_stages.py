@@ -31,6 +31,26 @@ filters:
     assert rows == {1: "OK", 2: None, 3: "OK"}
 
 
+def test_python_errors_counted_once_under_eager_stage(spark):
+    """The error count is observed with the row count: the eager
+    ``expect`` aggregate runs the python stage once and the caller's
+    count runs it again, and both counters still read one pass."""
+    df = spark.range(100).selectExpr("id", "IF(id % 4 = 0, NULL, 'ok') AS s")
+    result = Pipeline(spark, load_config_str("""
+filters:
+  - name: upper
+    actionType: python
+    code: |
+      row['s'] = row['s'].upper()   # raises AttributeError on None
+  - name: gate
+    actionType: expect
+    actionConfig: {minRows: 1}
+""")).run(df)
+    assert result.df.count() == 100
+    upper = result.harvest_metrics()[0]
+    assert (upper.rows_out, upper.errors) == (100, 25)
+
+
 def test_python_adds_columns_with_reference_coercion(spark):
     """New columns follow the reference contract (Database.py:102-103):
     float→double, anything stringy→string; ints stay integral."""
@@ -111,6 +131,21 @@ filters:
     code: SELECT * EXCLUDE(b) FROM df
 """)
     assert out.columns == ["a", "c"]
+
+
+def test_dialect_date_part_to_timestamp_regexp_full_match(spark):
+    """``date_part`` and ``to_timestamp`` pass through unchanged (Spark
+    parses both); ``regexp_full_match`` becomes ``regexp_like``."""
+    from filefilter_spark.dialect import translate
+
+    sql = translate(
+        "SELECT date_part('year', to_timestamp('2024-03-05 10:00:00')) AS y, "
+        "regexp_full_match('abc', '^a.c$') AS hit, "
+        "regexp_full_match('abcd', '^a.c$') AS miss"
+    )
+    assert "regexp_like(" in sql
+    row = spark.sql(sql).first()
+    assert (row["y"], row["hit"], row["miss"]) == (2024, True, False)
 
 
 # --- pandas stage (OP-C1) --------------------------------------------------
