@@ -211,3 +211,27 @@ def coerce_cell(v: Any, dt: DataType) -> Any:
     if isinstance(dt, BooleanType):
         return bool(v)
     return v
+
+
+# The exact Python type of the values coerce_cell returns unchanged for
+# each output type it converts to.
+_NATIVE = {
+    StringType: str,
+    DoubleType: float,
+    FloatType: float,
+    BooleanType: bool,
+    **dict.fromkeys(_INTEGRALS, int),
+}
+
+
+def coerce_column(values: list[Any], dt: DataType) -> list[Any]:
+    """``[coerce_cell(v, dt) for v in values]``, built once per column.
+
+    When every value is ``None`` or exactly ``dt``'s native type (a
+    ``bool`` is not an ``int``, an ``np.float64`` not a ``float``),
+    coerce_cell would return each one unchanged, so the list passes
+    through as it is. Raises what coerce_cell raises."""
+    native = _NATIVE.get(type(dt))
+    if native is not None and set(map(type, values)) <= {native, type(None)}:
+        return values
+    return [coerce_cell(v, dt) for v in values]

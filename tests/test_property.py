@@ -3,8 +3,19 @@ predicate trees over lineitem must agree between Spark SQL and DuckDB —
 sqllogictest-style fuzzing with DuckDB as the oracle, at sf0.001."""
 
 import duckdb
+import numpy as np
 import pytest
 from hypothesis import HealthCheck, assume, given, settings, strategies as st
+from pyspark.sql.types import (
+    BooleanType,
+    ByteType,
+    DoubleType,
+    FloatType,
+    IntegerType,
+    LongType,
+    ShortType,
+    StringType,
+)
 
 from tests.conftest import SF_DIR
 
@@ -371,3 +382,58 @@ def test_edit_distance_pairs_differential(spark, strs, d, q):
         tuple(r) for r in edit_distance_pairs(df, max_dist=d, q=q).collect()
     )
     assert got == expect
+
+
+# --- python stage: column builder vs per-cell coercion ----------------------
+
+class _Str(str):
+    pass
+
+
+_stage_cells = st.one_of(
+    st.none(),
+    st.just(float("nan")),
+    st.booleans(),
+    st.integers(),
+    st.floats(allow_nan=False),
+    st.integers(-(2**63), 2**63 - 1).map(np.int64),
+    st.floats().map(np.float64),
+    st.text(max_size=4),
+    st.text(max_size=4).map(_Str),
+    st.dictionaries(st.text(max_size=2), st.integers(), max_size=2),
+    st.lists(st.integers(), max_size=2),
+)
+
+
+def _same_cell(a, b):
+    return type(a) is type(b) and (a == b or (a != a and b != b))
+
+
+@settings(max_examples=200, deadline=None)
+@given(
+    values=st.one_of(
+        st.lists(_stage_cells, max_size=8),
+        # one native type with nulls: the lists the builder passes through
+        st.sampled_from([st.text(max_size=4), st.floats(), st.integers(), st.booleans()])
+        .flatmap(lambda s: st.lists(st.one_of(st.none(), s), max_size=8)),
+    ),
+    dt=st.sampled_from([
+        StringType(), DoubleType(), FloatType(), LongType(), IntegerType(),
+        ShortType(), ByteType(), BooleanType(),
+    ]),
+)
+def test_coerce_column_matches_coerce_cell(values, dt):
+    """The python stage's column builder returns exactly what calling
+    ``coerce_cell`` on every value returns (same values and types, NaN
+    equal to NaN), and raises where that raises."""
+    from filefilter_spark.stages.base import coerce_cell, coerce_column
+
+    try:
+        want = [coerce_cell(v, dt) for v in values]
+    except Exception as e:  # noqa: BLE001 - the builder must raise the same
+        with pytest.raises(type(e)):
+            coerce_column(list(values), dt)
+        return
+    got = coerce_column(list(values), dt)
+    assert len(got) == len(want)
+    assert all(_same_cell(g, w) for g, w in zip(got, want)), (got, want)

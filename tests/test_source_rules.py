@@ -8,6 +8,9 @@
   ``AWS_*``) into the session conf, reads the environment.
 - Stage metrics come from ``df.observe`` alone: no module creates a
   Spark accumulator, which counts every run of a plan, not one.
+- ``stages/base.py`` is the one place that calls ``coerce_cell(``: the
+  stages build their output through ``coerce_column``, so the coercion
+  rules have one path.
 - No script under ``tools/`` turns the Spark UI on: per-stage numbers
   come from the event log (``perfbench/spans.py``), not from scraping
   the UI's REST API.
@@ -22,6 +25,7 @@ PKG = ROOT / "filefilter_spark"
 CUT = re.compile(r"localCheckpoint\(|\.checkpoint\(")
 ENV = re.compile(r"os\.environ|getenv")
 ACC = re.compile(r"accumulator\(")
+COERCE = re.compile(r"\bcoerce_cell\(")
 UI_ON = re.compile(r"""spark\.ui\.enabled["']?\s*[:,=]\s*["']?true""", re.I)
 
 
@@ -43,6 +47,17 @@ def test_no_accumulators_in_package():
         for path in sorted(PKG.rglob("*.py"))
         for n, line in enumerate(path.read_text().splitlines(), 1)
         if ACC.search(line)
+    ]
+    assert not offenders, "\n".join(offenders)
+
+
+def test_coerce_cell_called_only_in_stage_base():
+    offenders = [
+        f"{path.relative_to(PKG).as_posix()}:{n}: {line.strip()}"
+        for path in sorted(PKG.rglob("*.py"))
+        if path.relative_to(PKG).as_posix() != "stages/base.py"
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if COERCE.search(line)
     ]
     assert not offenders, "\n".join(offenders)
 

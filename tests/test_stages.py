@@ -51,6 +51,71 @@ filters:
     assert (upper.rows_out, upper.errors) == (100, 25)
 
 
+def test_python_uncoercible_value_keeps_original_row(spark):
+    """The schema sample (first 100 rows) never sees ``'n/a'``, so ``n``
+    stays bigint; the rows that put a string there keep their originals
+    and count as errors instead of failing the job."""
+    df = spark.range(1000).selectExpr("id", "CAST(id AS BIGINT) AS n")
+    result = Pipeline(spark, load_config_str("""
+filters:
+  - name: late_type
+    actionType: python
+    code: |
+      if row['id'] >= 500:
+          row['n'] = 'n/a'
+""")).run(df)
+    rows = result.df.collect()
+    assert dict(result.df.dtypes)["n"] == "bigint"
+    assert len(rows) == 1000
+    assert all(r["n"] == r["id"] for r in rows)
+    assert result.harvest_metrics()[0].errors == 500
+
+
+def test_python_uncoercible_original_row_names_stage_and_column(spark):
+    """When the kept original row does not fit the output type either
+    (the sample retyped ``s`` to bigint, a later row holds ``'x'``), the
+    job fails with an error that names the stage and the column."""
+    df = spark.range(200).selectExpr("id", "IF(id < 150, CAST(id AS STRING), 'x') AS s")
+    out = run_yaml(spark, df, """
+filters:
+  - name: retype
+    actionType: python
+    code: |
+      row['s'] = int(row['s'])
+""")
+    assert dict(out.dtypes)["s"] == "bigint"
+    with pytest.raises(Exception, match=r"python stage 'retype': input value 'x' of column 's'"):
+        out.collect()
+
+
+def test_python_coerces_columns_not_of_their_type(spark):
+    """Columns whose values are not exactly their type take the
+    coercion path: a nullable bigint the code never touches reaches
+    the stage as pandas float64 (``3.0``/``NaN``) and comes back as
+    bigint with its nulls; a bool in a bigint column becomes ``1`` and
+    a dict in a string column JSON text."""
+    df = spark.range(200).selectExpr(
+        "id", "IF(id % 3 = 0, NULL, id) AS n", "id AS b", "CAST(id AS STRING) AS s"
+    )
+    out = run_yaml(spark, df, """
+filters:
+  - name: mixed
+    actionType: python
+    code: |
+      if row['id'] == 1:
+          row['b'] = True
+      if row['id'] == 2:
+          row['s'] = {'k': row['id']}
+""")
+    types = dict(out.dtypes)
+    assert (types["n"], types["b"], types["s"]) == ("bigint", "bigint", "string")
+    rows = {r["id"]: r for r in out.collect()}
+    assert len(rows) == 200
+    assert all(r["n"] == (None if i % 3 == 0 else i) for i, r in rows.items())
+    assert rows[1]["b"] == 1 and rows[5]["b"] == 5
+    assert rows[2]["s"] == '{"k": 2}' and rows[5]["s"] == "5"
+
+
 def test_python_adds_columns_with_reference_coercion(spark):
     """New columns follow the reference contract (Database.py:102-103):
     float→double, anything stringy→string; ints stay integral."""
