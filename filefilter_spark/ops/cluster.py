@@ -90,27 +90,66 @@ def _sq_dist(qd: Column, cent: Column) -> Column:
 # instead — identical arithmetic, identical tie-breaking, one
 # BroadcastNestedLoopJoin of a single row (k·d doubles, comfortably
 # under the broadcast ceiling at any plausible k) in place of an
-# unbounded plan literal. Shared by the Lloyd assignment here (which
-# also serves the IVF×PQ encode path via ops.pq._assign_cells) and
-# ops.similarity.cell_memberships.
+# unbounded plan literal. :func:`_cent_source` is the one place that
+# reads it.
 CENT_LITERAL_MAX_TERMS = 16384
 
+_NON_FINITE_SQL = {
+    "nan": "CAST('NaN' AS DOUBLE)",
+    "inf": "CAST('Infinity' AS DOUBLE)",
+    "-inf": "CAST('-Infinity' AS DOUBLE)",
+}
 
-def _cent_source(qframe: DataFrame, cents: list[list[float]]):
+
+def double_array_lit(values) -> Column:
+    """``array<double>`` literal of a nested sequence of numbers (one
+    ``array`` level per sequence level), built by ONE SQL parse.
+
+    ``F.lit`` per element pays a Py4J round trip each: ~2 s for
+    4,096 doubles (a 64×64 centroid matrix, the DSIR table), which
+    dwarfed the jobs those literals fed; one parse of the same values
+    takes ~15 ms (both measured on a 4-core box). ``repr`` is the
+    shortest round-trip decimal, so Catalyst parses back bit-identical
+    doubles (``-0.0`` and subnormals included); NaN and ±inf, which
+    ``F.lit`` also accepts, ride as string casts that parse with ANSI
+    on or off."""
+
+    def sql(v) -> str:
+        if hasattr(v, "__len__"):
+            return "array(" + ",".join(map(sql, v)) + ")"
+        x = float(v)
+        return _NON_FINITE_SQL.get(repr(x)) or f"{x!r}D"
+
+    return F.expr(sql(values))
+
+
+def _cent_source(frame: DataFrame, cents: Sequence[Sequence[float]]):
     """(frame, centroid-matrix column) — the matrix rides as a plan
-    literal below :data:`CENT_LITERAL_MAX_TERMS` terms, else joined
-    in from a one-row broadcast frame (see the constant's note)."""
+    literal up to :data:`CENT_LITERAL_MAX_TERMS` terms, else joined
+    in from a one-row broadcast frame (see the constant's note). The
+    one literal-or-broadcast switch: the Lloyd assignment (and through
+    it the IVF×PQ cell assignment), the IVF×PQ residual and
+    ``similarity.cell_memberships`` all read their matrix here."""
     k = len(cents)
     dim = len(cents[0]) if k else 0
     if k * dim <= CENT_LITERAL_MAX_TERMS:
-        return qframe, F.array(
-            *[F.array(*[F.lit(float(v)) for v in c]) for c in cents]
-        )
-    row = qframe.sparkSession.createDataFrame(
+        return frame, double_array_lit(cents)
+    row = frame.sparkSession.createDataFrame(
         [([[float(v) for v in c] for c in cents],)],
         "__cents array<array<double>>",
     )
-    return qframe.crossJoin(F.broadcast(row)), F.col("__cents")
+    return frame.crossJoin(F.broadcast(row)), F.col("__cents")
+
+
+def _seed_rows(seeds: DataFrame, k: int, seeding: str) -> list:
+    """The k seed rows of the ``id`` (lowest ids) or ``hash`` (lowest
+    ``xxhash64(id)``) seeding: one TakeOrderedAndProject over every
+    row, collected in a deterministic order."""
+    if seeding == "hash":
+        seeds = seeds.orderBy(F.xxhash64("__id"), F.col("__id"))
+    else:
+        seeds = seeds.orderBy("__id")
+    return seeds.limit(k).collect()
 
 
 def _assign(qframe: DataFrame, cents: list[list[float]]) -> DataFrame:
@@ -137,9 +176,9 @@ def _kmeanspar_seeds(
     seeds: DataFrame, k: int, scale: float
 ) -> list[list[float]]:
     """Deterministic k-means‖ (Bahmani et al., VLDB 2012) — the
-    rebuild-grade initializer that replaces ``seeding="maxmin"``'s
-    k−1 sequential jobs with **O(log k) passes** over the cached
-    quantized frame (VERDICT r15 #1).
+    rebuild-grade initializer: **O(log k) passes** over the cached
+    quantized frame where Gonzalez farthest-first seeding needs k−1
+    sequential jobs (VERDICT r15 #1).
 
     Shape per round (⌈log₂k⌉ rounds, ℓ = 2k oversampling as the paper
     recommends): ONE TakeOrderedAndProject job that draws an EXACT
@@ -159,16 +198,17 @@ def _kmeanspar_seeds(
     weighted D² — the derandomized k-means++ step — then a few
     weighted Lloyd polish iterations in numpy; O(|C|·k·d) driver
     FLOPs). Total Spark passes: ``2·⌈log₂k⌉ + 3`` (each round = one
-    draw + one state fold) versus maxmin's ``k−1`` sequential jobs —
+    draw + one state fold) versus farthest-first's ``k−1`` jobs —
     at rebuild-grade n_lists ≈ √n (thousands at 100 TB) that is ~27
     passes versus thousands of driver-synchronized jobs.
 
-    Like maxmin it cannot leave a data mode unseeded: every round's
-    d²-weighted draw lands mass in every still-uncovered region, and
-    the greedy D² reduction keeps the spread (measured — SCALING.md
-    "r16: k-means‖ rebuild seeding" reproduces maxmin's recall/pruning
-    on the shifted-rebuild scenario). Returns ≤ k seed vectors
-    (exactly min(k, distinct rows)).
+    Like farthest-first it cannot leave a data mode unseeded: every
+    round's d²-weighted draw lands mass in every still-uncovered
+    region, and the greedy D² reduction keeps the spread (measured —
+    SCALING.md "r16: k-means‖ rebuild seeding" reproduces
+    farthest-first's recall/pruning on the shifted-rebuild scenario).
+    Returns ≤ k seed vectors (exactly min(k, distinct rows); none on
+    an empty input).
 
     Plan-size discipline at rebuild-grade k: distances ride per-row
     STATE (``__d2``/``__c`` — the min distance and argmin candidate
@@ -187,18 +227,17 @@ def _kmeanspar_seeds(
         1
     ).collect()
     if not first:
-        raise ValueError("lloyd_kmeans: empty input")
+        return []
     first_vec = [v / scale for v in first[0]["q"]]
     ell = 2 * k
     rounds = max(1, math.ceil(math.log2(max(2, k))))
     pool_vecs: list[list[float]] = [first_vec]
 
     def dists_to(new_cents: list[list[float]]) -> Column:
-        cent_lit = F.array(
-            *[F.array(*[F.lit(float(v)) for v in c]) for c in new_cents]
-        )
         qd = F.transform(F.col("q"), lambda v: v / F.col("__scale"))
-        return F.transform(cent_lit, lambda c: _sq_dist(qd, c))
+        return F.transform(
+            double_array_lit(new_cents), lambda c: _sq_dist(qd, c)
+        )
 
     state = lineage_cut(
         seeds.withColumn("__nd", dists_to([first_vec])).select(
@@ -339,16 +378,12 @@ def lloyd_kmeans(
     n_lists=48/id-seeding left probed@4 at ~56% of the corpus);
     ``"hash"`` spreads the seeds content-blind, but leaves ~1/e of k
     modes unseeded at k ≈ mode count (coupon collector, measured).
-    Two mode-covering initializers close that gap: ``"maxmin"``
-    (Gonzalez farthest-first — exact 2-approximation for k-center,
-    but k−1 sequential driver-synchronized jobs: the small-k
-    exactness yardstick, NOT the production path) and
-    ``"kmeanspar"`` (deterministic k-means‖, Bahmani 2012 —
-    ⌈log₂k⌉+2 jobs total via E-S weighted sampling +
-    driver-side weighted reduction; the production rebuild
-    recommendation, see :func:`_kmeanspar_seeds`). The default stays
-    ``"id"`` because the exact DuckDB oracles replay that recipe."""
-    spark = df.sparkSession
+    ``"kmeanspar"`` closes that gap (deterministic k-means‖, Bahmani
+    2012 — ⌈log₂k⌉+2 jobs total via E-S weighted sampling +
+    driver-side weighted reduction; the rebuild seeding, see
+    :func:`_kmeanspar_seeds`). The default stays ``"id"`` because the
+    exact DuckDB oracles replay that recipe. Every mode raises
+    ``ValueError`` when it finds no seed row (empty input)."""
     q0 = df.select(
         F.col(id_col).alias("__id"),
         quantize_to_grid(vec_col, scale).alias("q"),
@@ -361,46 +396,20 @@ def lloyd_kmeans(
             seeds = qframe.filter(F.col("__id").isin(list(init_ids)))
         else:
             seeds = qframe
-        if seeding == "hash":
-            seed_rows = seeds.orderBy(
-                F.xxhash64("__id"), F.col("__id")
-            ).limit(k).collect()
-            cents = [[v / scale for v in r["q"]] for r in seed_rows]
-        elif seeding == "maxmin":
-            # Gonzalez (1985) farthest-first traversal, deterministic:
-            # first seed = lowest xxhash64(id); each next seed = the
-            # row FARTHEST from its nearest chosen seed (ties → lowest
-            # id). k−1 extra passes over the cached narrow frame — the
-            # rebuild-grade initializer: unlike id/hash seeding it
-            # cannot leave a data mode unseeded (coupon-collector gap,
-            # measured in SCALING.md "ANN drift signal"), and it is a
-            # 2-approximation for the k-center objective.
-            first = seeds.orderBy(
-                F.xxhash64("__id"), F.col("__id")
-            ).limit(1).collect()
-            if not first:
-                raise ValueError("lloyd_kmeans: empty input")
-            cents = [[v / scale for v in first[0]["q"]]]
-            for _ in range(k - 1):
-                far = (
-                    _assign(seeds, cents)
-                    .orderBy(F.desc("dist2"), F.asc("__id"))
-                    .limit(1)
-                    .collect()[0]
-                )
-                cents.append([v / scale for v in far["q"]])
-        elif seeding == "kmeanspar":
+        if seeding == "kmeanspar":
             cents = _kmeanspar_seeds(seeds, k, scale)
-        elif seeding != "id":
+        elif seeding in ("id", "hash"):
+            cents = [
+                [v / scale for v in r["q"]]
+                for r in _seed_rows(seeds, k, seeding)
+            ]
+        else:
             raise ValueError(
                 f"lloyd_kmeans: unknown seeding {seeding!r} "
-                "(id | hash | maxmin | kmeanspar)"
+                "(id | hash | kmeanspar)"
             )
-        else:
-            # one TakeOrderedAndProject serves both branches (sorted,
-            # deterministic collect order)
-            seed_rows = seeds.orderBy("__id").limit(k).collect()
-            cents = [[v / scale for v in r["q"]] for r in seed_rows]
+        if not cents:
+            raise ValueError("lloyd_kmeans: no seed rows (empty corpus)")
 
         for _ in range(iters):
             assigned = _assign(qframe, cents)

@@ -12,6 +12,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
+from filefilter_spark.ops.cluster import double_array_lit
 from filefilter_spark.ops.text import shingles, tokens
 
 _HASH_SPACE = 16 ** 8  # first 8 hex chars of md5 = 32-bit prefix
@@ -202,13 +203,7 @@ def dsir_logweights(
         dense = [default_lr] * n_buckets
         for r in counts:
             dense[int(r["__b"], 16)] = lr(float(r["__qc"]), float(r["__tc"]))
-        # ONE parser call for the whole table: F.lit(list) pays a py4j
-        # round-trip per element (~2 s for 4,096 doubles — measured;
-        # it dwarfed the job it was feeding). repr() is shortest
-        # round-trip, so Catalyst's parse yields bit-identical doubles.
-        lrarr = F.expr(
-            "array(" + ",".join(f"{v!r}D" for v in dense) + ")"
-        )
+        lrarr = double_array_lit(dense)
 
         def lookup(b: Column) -> Column:
             # element_at is 1-based; b is the bucket's int value
@@ -222,13 +217,15 @@ def dsir_logweights(
         # Sparse map (element_at on a literal map is a linear key
         # scan — functional, far slower than the dense tier; only
         # reachable at n_hex > 4 where a dense array would bloat
-        # every serialized task). Same one-parse literal trick;
+        # every serialized task). One parse per key and value array;
         # bucket keys are hex chars, so no quoting concerns.
         ks = ",".join(f"'{r['__b']}'" for r in counts)
-        vs = ",".join(
-            f"{lr(float(r['__qc']), float(r['__tc']))!r}D" for r in counts
+        lrmap = F.map_from_arrays(
+            F.expr(f"array({ks})"),
+            double_array_lit(
+                [lr(float(r["__qc"]), float(r["__tc"])) for r in counts]
+            ),
         )
-        lrmap = F.expr(f"map_from_arrays(array({ks}),array({vs}))")
 
         def lookup(b: Column) -> Column:
             return F.coalesce(F.element_at(lrmap, b), F.lit(default_lr))

@@ -56,6 +56,8 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
+from filefilter_spark.ops.cluster import double_array_lit
+
 _MOMENT_SCHEMA = "i int, j int, s long"
 
 
@@ -286,13 +288,13 @@ def project(
     into whole-stage codegen; one left-to-right fold per component, no
     UDF, no shuffle."""
     emb = F.col(vec_col).cast("array<double>")
-    mean_lit = F.array(*[F.lit(v) for v in model.mean])
-    centered = F.zip_with(emb, mean_lit, lambda x, mu: x - mu)
+    centered = F.zip_with(
+        emb, double_array_lit(model.mean), lambda x, mu: x - mu
+    )
     scores = []
     for ci, comp in enumerate(model.components):
-        comp_lit = F.array(*[F.lit(v) for v in comp])
         s = F.aggregate(
-            F.zip_with(centered, comp_lit, lambda x, v: x * v),
+            F.zip_with(centered, double_array_lit(comp), lambda x, v: x * v),
             F.lit(0.0),
             lambda acc, t: acc + t,
         )

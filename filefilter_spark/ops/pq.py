@@ -56,30 +56,24 @@ from typing import Mapping, Sequence
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
+from filefilter_spark.ops.cluster import (
+    _assign,
+    _cent_source,
+    _seed_rows,
+    _sq_dist,
+    double_array_lit,
+    quantize_to_grid,
+)
 from filefilter_spark.session import lineage_cut
 
 Codebooks = list[list[list[float]]]  # [subspace][centroid][component]
 
 
-def _grid(col: Column, scale: float) -> Column:
+def _on_grid(col: str | Column, scale: float) -> Column:
+    """``col`` quantized to the grid and divided back to doubles — the
+    values codebook fit, encode and rerank all argue over."""
     return F.transform(
-        col.cast("array<double>"),
-        lambda x: F.floor(x * F.lit(float(scale)) + F.lit(0.5)),
-    )
-
-
-def _fold_sq(diffs: Column) -> Column:
-    """Left-to-right Σ v² fold — the cross-engine-exact reduction
-    (DuckDB: ``list_reduce([0.0] || …)``)."""
-    return F.aggregate(diffs, F.lit(0.0), lambda acc, v: acc + v)
-
-
-def _cents_lit(codebooks: Codebooks) -> Column:
-    return F.array(
-        *[
-            F.array(*[F.array(*[F.lit(float(v)) for v in c]) for c in book])
-            for book in codebooks
-        ]
+        quantize_to_grid(col, scale), lambda v: v / F.lit(float(scale))
     )
 
 
@@ -101,15 +95,12 @@ def _code_expr(qd: Column, codebooks: Codebooks) -> Column:
     encode cannot drift onto different grids."""
     m = len(codebooks)
     sub = len(codebooks[0][0])
-    cents = _cents_lit(codebooks)
+    cents = double_array_lit(codebooks)
     chunks = _chunked(qd, m, sub)
 
     def code_of(chunk: Column, s: Column) -> Column:
         dists = F.transform(
-            F.element_at(cents, s + 1),
-            lambda c: _fold_sq(
-                F.zip_with(chunk, c, lambda x, y: (x - y) * (x - y))
-            ),
+            F.element_at(cents, s + 1), lambda c: _sq_dist(chunk, c)
         )
         return (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
 
@@ -133,19 +124,15 @@ def fit_pq_codebooks(
     ``cluster.lloyd_kmeans``); ``iters`` Lloyd rounds refine all
     subspaces together (see module docstring for the per-round shuffle
     bound). Empty clusters keep their previous centroid."""
-    qframe = df.select(
-        F.col(id_col).alias("__id"), _grid(F.col(vec_col), scale).alias("q")
-    )
-    if seeding == "hash":
-        seed_rows = qframe.orderBy(
-            F.xxhash64("__id"), F.col("__id")
-        ).limit(k).collect()
-    elif seeding != "id":
+    if seeding not in ("id", "hash"):
         raise ValueError(
             f"fit_pq_codebooks: unknown seeding {seeding!r} (id | hash)"
         )
-    else:
-        seed_rows = qframe.orderBy("__id").limit(k).collect()
+    qframe = df.select(
+        F.col(id_col).alias("__id"),
+        quantize_to_grid(vec_col, scale).alias("q"),
+    )
+    seed_rows = _seed_rows(qframe, k, seeding)
     if len(seed_rows) < k:
         raise ValueError(f"fit_pq_codebooks: need >= {k} rows")
     d = len(seed_rows[0]["q"])
@@ -223,11 +210,9 @@ def pq_encode(
 ) -> DataFrame:
     """``(id, codes)`` — the m-code compressed representation. Pure
     projection (codebook literal in codegen): no shuffle, no UDF."""
-    qd = F.transform(
-        _grid(F.col(vec_col), scale), lambda v: v / F.lit(float(scale))
-    )
     return df.select(
-        F.col(id_col), _code_expr(qd, codebooks).alias(out_col)
+        F.col(id_col),
+        _code_expr(_on_grid(vec_col, scale), codebooks).alias(out_col),
     )
 
 
@@ -257,9 +242,7 @@ def _adc_expr(codes_col: str, lut: list[list[float]]) -> Column:
     """``Σ_s LUT[s][code_s]`` folded in subspace order (deterministic
     left-to-right) — the LUT rides into codegen as a nested array
     literal, so scoring is table lookups + adds per row."""
-    lut_lit = F.array(
-        *[F.array(*[F.lit(v) for v in row]) for row in lut]
-    )
+    lut_lit = double_array_lit(lut)
     terms = F.transform(
         F.col(codes_col),
         lambda c, s: F.element_at(F.element_at(lut_lit, s + 1), c + 1),
@@ -313,24 +296,6 @@ def hash_sample(
         16, 10,
     ).cast("long")
     return df.filter(key < F.lit(int(frac * 2**32)))
-
-
-def _residual_expr(
-    qd: Column, cell: Column, centroids: Sequence[Sequence[float]],
-    scale: float,
-) -> Column:
-    """``x − centroid[cell]`` with the centroid grid-quantized the
-    same way as ``x`` (both operands on the grid → the difference is
-    exact and cross-engine-stable)."""
-    cents_q = F.array(*[
-        F.array(*[
-            F.lit(float(math.floor(v * scale + 0.5)) / scale) for v in c
-        ])
-        for c in centroids
-    ])
-    return F.zip_with(
-        qd, F.element_at(cents_q, cell + 1), lambda x, c: x - c
-    )
 
 
 def build_ivfpq_index(
@@ -399,10 +364,10 @@ def build_ivfpq_index(
         fit_df, n_lists=n_lists, vec_col=vec_col, id_col=id_col,
         method="lloyd", coarse_iters=coarse_iters, seeding=seeding,
     )
-    # maxmin/kmeanspar are COARSE-tier initializers (mode coverage);
-    # the PQ subspace fit has no mode-coverage problem, so both degrade
-    # to the content-blind hash spread there
-    pq_seeding = "hash" if seeding in ("maxmin", "kmeanspar") else seeding
+    # kmeanspar is a COARSE-tier initializer (mode coverage); the PQ
+    # subspace fit has no mode-coverage problem, so it degrades to the
+    # content-blind hash spread there
+    pq_seeding = "hash" if seeding == "kmeanspar" else seeding
     if residual:
         res_frame = _residual_frame(
             df, centroids, vec_col=vec_col, id_col=id_col, scale=scale
@@ -441,8 +406,6 @@ def _assign_cells(
 ) -> DataFrame:
     """``(id, cell)`` for every row against FROZEN centroids — the
     clusterer's own deterministic argmin fold, pure projection."""
-    from filefilter_spark.ops.cluster import _assign, quantize_to_grid
-
     qf = df.select(
         F.col(id_col).alias("__id"),
         quantize_to_grid(vec_col, scale).alias("q"),
@@ -459,37 +422,24 @@ def _residual_frame(
     id_col: str,
     scale: float,
 ) -> DataFrame:
-    """``(id, __res, cell)``: each row's grid-exact residual against
-    its assigned (frozen) centroid. Past
-    ``ops.cluster.CENT_LITERAL_MAX_TERMS`` the (grid-quantized)
-    centroid matrix rides a one-row broadcast join instead of a plan
-    literal — same doubles (quantized driver-side either way), so the
-    residual stays grid-exact."""
-    from filefilter_spark.ops.cluster import CENT_LITERAL_MAX_TERMS
-
+    """``(id, __res, cell)``: each row's residual ``x − centroid[cell]``
+    against its assigned (frozen) centroid. The centroid is
+    grid-quantized driver-side the same way as ``x`` (both operands on
+    the grid → the difference is exact and cross-engine-stable); the
+    matrix comes from ``ops.cluster._cent_source``, a plan literal or
+    past ``CENT_LITERAL_MAX_TERMS`` a one-row broadcast join — the
+    same doubles either way."""
     assigned = _assign_cells(df, centroids, vec_col, id_col, scale)
-    qd = F.transform(
-        _grid(F.col(vec_col), scale), lambda v: v / F.lit(float(scale))
+    cents_q = [
+        [float(math.floor(v * scale + 0.5)) / scale for v in c]
+        for c in centroids
+    ]
+    joined, cent_col = _cent_source(df.join(assigned, id_col), cents_q)
+    res = F.zip_with(
+        _on_grid(vec_col, scale),
+        F.element_at(cent_col, F.col("cell") + 1),
+        lambda x, c: x - c,
     )
-    joined = df.join(assigned, id_col)
-    k = len(centroids)
-    dim = len(centroids[0]) if k else 0
-    if k * dim <= CENT_LITERAL_MAX_TERMS:
-        res = _residual_expr(qd, F.col("cell"), centroids, scale)
-    else:
-        row = df.sparkSession.createDataFrame(
-            [([
-                [float(math.floor(v * scale + 0.5)) / scale for v in c]
-                for c in centroids
-            ],)],
-            "__cents_q array<array<double>>",
-        )
-        joined = joined.crossJoin(F.broadcast(row))
-        res = F.zip_with(
-            qd,
-            F.element_at(F.col("__cents_q"), F.col("cell") + 1),
-            lambda x, c: x - c,
-        )
     return joined.select(F.col(id_col), res.alias("__res"), "cell")
 
 
@@ -514,12 +464,9 @@ def ivfpq_encode_batch(
         # regrid the residual — the same normalization
         # fit_pq_codebooks applied when fitting, so encode and fit
         # argue over identical values (no ulp drift at tie boundaries)
-        res_qd = F.transform(
-            _grid(F.col("__res"), scale), lambda v: v / F.lit(float(scale))
-        )
         return res_frame.select(
             F.col(id_col),
-            _code_expr(res_qd, codebooks).alias("codes"),
+            _code_expr(_on_grid("__res", scale), codebooks).alias("codes"),
             "cell",
         )
     assigned = _assign_cells(df, centroids, vec_col, id_col, scale)
@@ -684,11 +631,7 @@ def ivfpq_topk(
         raise ValueError("ivfpq_topk: refine > 0 requires `vectors`")
     # k-bounded collect: refine·topk ids (the shortlist), never data.
     ids = [r[id_col] for r in shortlist.collect()]
-    qlit = F.array(*[F.lit(v) for v in qq])
-    qd = F.transform(
-        _grid(F.col(vec_col), scale), lambda v: v / F.lit(float(scale))
-    )
-    dist2 = _fold_sq(F.zip_with(qd, qlit, lambda x, y: (x - y) * (x - y)))
+    dist2 = _sq_dist(_on_grid(vec_col, scale), double_array_lit(qq))
     return (
         vectors.filter(F.col(id_col).isin(ids))
         .select(F.col(id_col), dist2.alias("dist2"))
@@ -845,17 +788,13 @@ def ivfpq_batch_topk(
     for r in shortlist.select("q_id", id_col).collect():
         short_ids[r["q_id"]].append(r[id_col])
     union_ids = sorted({i for ids in short_ids.values() for i in ids})
-    qd = F.transform(
-        _grid(F.col(vec_col), scale), lambda v: v / F.lit(float(scale))
-    )
+    qd = _on_grid(vec_col, scale)
     rerank_structs = []
     for q in qids:
-        qlit = F.array(*[F.lit(v) for v in qgrid[q]])
-        d2 = _fold_sq(F.zip_with(qd, qlit, lambda x, y: (x - y) * (x - y)))
         rerank_structs.append(
             F.struct(
                 F.lit(q).alias("q_id"),
-                d2.alias("dist2"),
+                _sq_dist(qd, double_array_lit(qgrid[q])).alias("dist2"),
                 F.col(id_col).isin(short_ids[q]).alias("keep"),
             )
         )
@@ -951,8 +890,12 @@ def build_ann_index(
     The build is deterministic (grid-quantized folds, lowest-id
     seeds), so rebuilding from the same corpus reproduces the layout
     bit-identically — a refresh is a rebuild, same contract as the
-    text index. An empty corpus refuses loudly (an empty partitioned
-    write is unreadable later).
+    text index. An empty corpus refuses loudly before anything is
+    written (an empty partitioned write is unreadable later): the
+    coarse fit's seed read, a full scan and the build's first action,
+    finds no row. A partial-read emptiness probe would instead be the
+    first action over the caller's frame and leave its ``observe``
+    row counts partial.
 
     Rebuilding over an EXISTING layout goes through temp dirs + the
     streaming maintenance swap protocol instead of overwriting in
@@ -964,8 +907,6 @@ def build_ann_index(
     and flip the reader."""
     import json as _json
 
-    if df.limit(1).count() == 0:
-        raise ValueError("build_ann_index: empty corpus — nothing to index")
     indexed, books, cents = build_ivfpq_index(
         df, n_lists=n_lists, m=m, k=k, iters=iters, vec_col=vec_col,
         id_col=id_col, scale=scale, residual=residual, fit_frac=fit_frac,

@@ -15,6 +15,8 @@ from typing import Sequence
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
+from filefilter_spark.ops.cluster import _cent_source, _sq_dist, double_array_lit
+
 
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -48,7 +50,7 @@ def topk_cosine(
     per-partition heaps, no global sort, no shuffle of vectors. This is
     the right baseline even at 100 TB: it reads every vector once.
     """
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
+    q = double_array_lit(query_vec)
     emb = _as_double_array(vec_col)
     return (
         df.select(F.col(id_col), cosine(emb, q).alias("cos_sim"))
@@ -459,7 +461,7 @@ def ivf_topk_cosine(
     probe_cells = sorted(
         range(len(centroids)), key=lambda i: -cos(query_vec, centroids[i])
     )[:n_probe]
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
+    q = double_array_lit(query_vec)
     return (
         assigned.filter(F.col("cell").isin(probe_cells))
         .select(F.col(id_col), cosine(F.col("__arr"), q).alias("cos_sim"))
@@ -480,7 +482,7 @@ def lsh_signature(vec: Column, planes: list[list[float]]) -> Column:
     a BIGINT bucket id."""
     sig = F.lit(0).cast("bigint")
     for j, plane in enumerate(planes):
-        p = F.array(*[F.lit(x) for x in plane])
+        p = double_array_lit(plane)
         sig = sig + F.when(dot(vec, p) > 0, F.lit(1 << j).cast("bigint")).otherwise(F.lit(0))
     return sig
 
@@ -538,7 +540,7 @@ def lsh_topk_cosine(
     cond = F.lit(False)
     for t, qs in enumerate(q_sigs):
         cond = cond | F.col(f"sig{t}").isin(probe_set(qs))
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
+    q = double_array_lit(query_vec)
     return (
         with_sigs.filter(cond)
         .select(F.col(id_col), cosine(F.col("__emb"), q).alias("cos_sim"))
@@ -563,41 +565,30 @@ def cell_memberships(
     WITHOUT re-scoring history (join on ``cell``; see
     ``streaming.jobs.semdedup_stream_dedup``). Nearest by squared
     euclidean (KMeans' metric), index tiebreak via array_sort's
-    struct ordering — identical expression to
-    :func:`semantic_dedup`'s in-line form, so the two agree row for
-    row. Zero shuffle: the centroid table rides the plan as a
-    literal — until ``k·d`` crosses
-    ``ops.cluster.CENT_LITERAL_MAX_TERMS``, past which the SAME
-    expression reads the matrix from a one-row broadcast join
-    instead (identical arithmetic and tie-breaking; the literal stops
-    compiling long before rebuild-grade k ≈ √n, which is exactly
+    struct ordering; :func:`semantic_dedup` assigns through this same
+    function, so batch and streaming agree row for row. Zero shuffle:
+    the centroid table comes from ``ops.cluster._cent_source`` — a
+    plan literal, or past ``CENT_LITERAL_MAX_TERMS`` a one-row
+    broadcast join (identical arithmetic and tie-breaking; the literal
+    stops compiling long before rebuild-grade k ≈ √n, which is exactly
     where the drift-rebuild loops re-size to)."""
-    from filefilter_spark.ops.cluster import CENT_LITERAL_MAX_TERMS
-
-    base = df.select(
-        F.col(id_col).alias("id"),
-        _as_double_array(vec_col).alias("__arr"),
+    base, cents = _cent_source(
+        df.select(
+            F.col(id_col).alias("id"),
+            _as_double_array(vec_col).alias("__arr"),
+        ),
+        centroids,
     )
-    k = len(centroids)
-    dim = len(centroids[0]) if k else 0
-    if k * dim <= CENT_LITERAL_MAX_TERMS:
-        cent_src = "array(" + ", ".join(
-            "array(" + ", ".join(f"{float(x)!r}D" for x in c) + ")"
-            for c in centroids
-        ) + ")"
-    else:
-        row = df.sparkSession.createDataFrame(
-            [([[float(x) for x in c] for c in centroids],)],
-            "__cents array<array<double>>",
+    by_dist = F.array_sort(
+        F.transform(
+            cents,
+            lambda c, i: F.struct(
+                _sq_dist(F.col("__arr"), c).alias("d"), i.alias("i")
+            ),
         )
-        base = base.crossJoin(F.broadcast(row))
-        cent_src = "__cents"
-    cells_expr = (
-        f"transform(slice(array_sort(transform({cent_src}, (c, i) -> "
-        "struct(aggregate(zip_with(__arr, c, (x, y) -> (x - y) * (x - y)), "
-        f"0D, (a, v) -> a + v) AS d, i AS i))), 1, {int(n_assign)}), s -> s.i)"
     )
-    return base.select("id", F.explode(F.expr(cells_expr)).alias("cell"))
+    cells = F.transform(F.slice(by_dist, 1, int(n_assign)), lambda s: s["i"])
+    return base.select("id", F.explode(cells).alias("cell"))
 
 
 # SemDeDup staleness thresholds, calibrated in SCALING.md "SemDeDup
@@ -724,23 +715,20 @@ def semantic_dedup(
     to density, at the cost of a training pass.
 
     Scale shape: KMeans is Spark ML's distributed Lloyd's; cell
-    assignment is a JVM expression against the (tiny, literal) centroid
+    assignment is a JVM expression against the (tiny) centroid
     table — zero shuffle; candidate generation is the shared
     self-join-free ``_bucket_pairs`` (narrow id pairs only); the verify
     joins unit vectors once. ``n_lists`` should grow with n (the
     SemDeDup paper uses k ~ sqrt(n): 110k clusters for 1.3 B
-    embeddings) — past ``ops.cluster.CENT_LITERAL_MAX_TERMS`` the
-    assignment automatically reads the centroid matrix from a one-row
-    broadcast join instead of a plan literal (r16; identical
-    arithmetic and tie-breaking, result-pinned), so rebuild-grade k
-    compiles.
+    embeddings) — :func:`cell_memberships` takes the centroid matrix
+    from ``ops.cluster._cent_source``, which past
+    ``CENT_LITERAL_MAX_TERMS`` joins it in from a one-row broadcast
+    instead of a plan literal (identical arithmetic and tie-breaking,
+    result-pinned), so rebuild-grade k compiles.
     """
     from filefilter_spark.ops.dedup import _bucket_pairs
 
     _, centroids = build_ivf_index(df, n_lists, vec_col, id_col, seed)
-    # r13: membership expression factored into cell_memberships (the
-    # streaming tier persists it); computed from df's raw-cast vectors,
-    # identical to the former in-line form over assigned.__arr.
     memberships = cell_memberships(df, centroids, n_assign, vec_col, id_col)
     candidates = _bucket_pairs(memberships, ["cell"], id_col="id")
     return _pair_cosine_verify(
@@ -811,9 +799,7 @@ def random_projection(
         raw,
     )
     outs = [
-        dot(emb, F.array(*[F.lit(mat[i][j]) for i in range(in_dim)])).alias(
-            f"p{j}"
-        )
+        dot(emb, double_array_lit([row[j] for row in mat])).alias(f"p{j}")
         for j in range(out_dim)
     ]
     return df.select(F.col(id_col), F.array(*outs).alias("proj"))

@@ -2452,11 +2452,10 @@ def test_pq_lloyd_refinement_reduces_quantization_error(spark):
     # deterministic under repartition.
     import pyspark.sql.functions as F
 
+    from filefilter_spark.ops.cluster import _sq_dist, quantize_to_grid
     from filefilter_spark.ops.pq import (
         _chunked,
         _code_expr,
-        _fold_sq,
-        _grid,
         fit_pq_codebooks,
     )
     from filefilter_spark.queries.registry import load_table
@@ -2465,7 +2464,7 @@ def test_pq_lloyd_refinement_reduces_quantization_error(spark):
 
     def total_err(books):
         qd = F.transform(
-            _grid(F.col("embedding"), 1e6), lambda v: v / F.lit(1e6)
+            quantize_to_grid("embedding", 1e6), lambda v: v / F.lit(1e6)
         )
         cents = F.array(
             *[F.array(*[F.array(*[F.lit(float(v)) for v in c])
@@ -2477,15 +2476,12 @@ def test_pq_lloyd_refinement_reduces_quantization_error(spark):
             F.zip_with(
                 chunks,
                 F.sequence(F.lit(0), F.lit(7)),
-                lambda ch, s: _fold_sq(
-                    F.zip_with(
-                        ch,
-                        F.element_at(
-                            F.element_at(cents, s + 1),
-                            F.element_at(codes, s + 1) + 1,
-                        ),
-                        lambda x, y: (x - y) * (x - y),
-                    )
+                lambda ch, s: _sq_dist(
+                    ch,
+                    F.element_at(
+                        F.element_at(cents, s + 1),
+                        F.element_at(codes, s + 1) + 1,
+                    ),
                 ),
             ),
             F.lit(0.0),
@@ -4340,11 +4336,11 @@ def test_build_ann_index_rebuild_swaps_atomically(spark, tmp_path):
 
 
 def test_lloyd_seeding_modes(spark):
-    """seeding='hash'/'maxmin'/'kmeanspar' are deterministic and
+    """seeding='hash'/'kmeanspar' are deterministic and
     partition-invariant (same assignments at any repartition); the
-    mode-covering initializers (maxmin, kmeanspar) spread seeds
-    across separated modes that id-order seeding would miss; unknown
-    modes raise."""
+    mode-covering initializer (kmeanspar) spreads seeds across
+    separated modes that id-order seeding would miss; unknown modes
+    raise."""
     import pytest as _pytest
 
     from filefilter_spark.ops.cluster import lloyd_kmeans
@@ -4354,7 +4350,7 @@ def test_lloyd_seeding_modes(spark):
     rows = [(i, [0.0 + 0.01 * i, 0.0]) for i in range(20)]
     rows += [(20 + i, [50.0 + 0.01 * i, 50.0]) for i in range(20)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    for seeding in ("hash", "maxmin", "kmeanspar"):
+    for seeding in ("hash", "kmeanspar"):
         a = {r["vec_id"]: r["cluster"] for r in
              lloyd_kmeans(df.repartition(1), k=2, iters=2,
                           seeding=seeding).collect()}
@@ -4364,7 +4360,7 @@ def test_lloyd_seeding_modes(spark):
         assert a == b, seeding
     # the mode-covering initializers must put the two modes in
     # different clusters
-    for seeding in ("maxmin", "kmeanspar"):
+    for seeding in ("kmeanspar",):
         got = {r["vec_id"]: r["cluster"] for r in
                lloyd_kmeans(df, k=2, iters=1, seeding=seeding).collect()}
         assert len({got[i] for i in range(20)}) == 1, seeding
@@ -4375,9 +4371,10 @@ def test_lloyd_seeding_modes(spark):
 
 
 def test_kmeanspar_seeding_covers_many_modes(spark):
-    """kmeanspar (deterministic k-means||) matches maxmin's mode
-    coverage at k = mode count — the scenario hash seeding loses ~1/e
-    of (coupon collector) and maxmin pays k-1 sequential jobs for —
+    """kmeanspar (deterministic k-means||) matches farthest-first
+    seeding's mode coverage at k = mode count — the scenario hash
+    seeding loses ~1/e of (coupon collector) and farthest-first pays
+    k-1 sequential jobs for —
     and k > distinct rows degrades to all rows (no crash)."""
     import numpy as np
 

@@ -2,6 +2,9 @@
 predicate trees over lineitem must agree between Spark SQL and DuckDB —
 sqllogictest-style fuzzing with DuckDB as the oracle, at sf0.001."""
 
+import math
+import struct
+
 import duckdb
 import numpy as np
 import pytest
@@ -437,3 +440,53 @@ def test_coerce_column_matches_coerce_cell(values, dt):
     got = coerce_column(list(values), dt)
     assert len(got) == len(want)
     assert all(_same_cell(g, w) for g, w in zip(got, want)), (got, want)
+
+
+# --- driver-side array literals ---------------------------------------------
+
+_lit_doubles = st.one_of(
+    st.floats(),
+    st.sampled_from([
+        -0.0, 5e-324, -5e-324, 2.2250738585072014e-308,
+        1.7976931348623157e308, -1.7976931348623157e308,
+        float("nan"), float("inf"), float("-inf"),
+    ]),
+)
+
+
+def _nested_doubles(depth):
+    s = st.lists(_lit_doubles, min_size=1, max_size=16)
+    for _ in range(depth - 1):
+        s = st.lists(s, min_size=1, max_size=4)
+    return s
+
+
+def _flat(v):
+    return [x for e in v for x in _flat(e)] if isinstance(v, list) else [v]
+
+
+def _same_double(a, b):
+    if math.isnan(b):
+        return math.isnan(a)
+    return struct.pack(">d", a) == struct.pack(">d", b)
+
+
+@settings(max_examples=25, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(case=st.integers(min_value=1, max_value=3).flatmap(
+    lambda d: st.tuples(st.just(d), _nested_doubles(d))))
+def test_double_array_lit_reads_back_bit_identical(spark, case):
+    """One parsed ``array<double>`` literal of a nested list (1 to 3
+    levels) reads back bit-identical — ``-0.0``, subnormals, ±max,
+    NaN and ±inf included — and is typed ``array<double>`` at every
+    level."""
+    from filefilter_spark.ops.cluster import double_array_lit
+
+    depth, values = case
+    df = spark.range(1).select(double_array_lit(values).alias("v"))
+    assert df.schema["v"].dataType.simpleString() == (
+        "array<" * depth + "double" + ">" * depth
+    )
+    got, want = _flat(df.first()["v"]), _flat(values)
+    assert len(got) == len(want)
+    assert all(_same_double(g, w) for g, w in zip(got, want)), (got, want)

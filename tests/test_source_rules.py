@@ -14,8 +14,15 @@
 - No script under ``tools/`` turns the Spark UI on: per-stage numbers
   come from the event log (``perfbench/spans.py``), not from scraping
   the UI's REST API.
+- Numeric array literals have one builder,
+  ``ops.cluster.double_array_lit`` (one SQL parse per literal): no
+  module builds an array literal one ``F.lit`` at a time, and the
+  ``!r}D`` double encoding appears nowhere else. Only
+  ``ops.cluster._cent_source`` reads ``CENT_LITERAL_MAX_TERMS`` to
+  choose between a literal and a broadcast.
 """
 
+import ast
 import re
 from pathlib import Path
 
@@ -27,6 +34,14 @@ ENV = re.compile(r"os\.environ|getenv")
 ACC = re.compile(r"accumulator\(")
 COERCE = re.compile(r"\bcoerce_cell\(")
 UI_ON = re.compile(r"""spark\.ui\.enabled["']?\s*[:,=]\s*["']?true""", re.I)
+PER_ELEMENT = re.compile(r"F\.array\(\s*\*\s*\[\s*F\.(lit|array)\(")
+# Short string stopword arrays and salt integers: not numeric literals.
+PER_ELEMENT_OK = {
+    ("ops/text.py", "sw = F.array(*[F.lit(w) for w in LANG_STOPWORDS[lang]])"),
+    ("ops/text.py", "F.array(*[F.lit(w) for w in GOPHER_STOPWORDS]),"),
+    ("ops/skew.py",
+     "SALT, F.explode(F.array(*[F.lit(i) for i in range(n_salts)]))"),
+}
 
 
 def test_lineage_cuts_and_env_reads_only_in_session():
@@ -69,4 +84,55 @@ def test_no_tool_enables_the_spark_ui():
         for n, line in enumerate(path.read_text().splitlines(), 1)
         if UI_ON.search(line)
     ]
+    assert not offenders, "\n".join(offenders)
+
+
+def _function_lines(path, name):
+    """Line numbers of the top-level function ``name`` in ``path``."""
+    for node in ast.parse(path.read_text()).body:
+        if isinstance(node, ast.FunctionDef) and node.name == name:
+            return set(range(node.lineno, node.end_lineno + 1))
+    raise AssertionError(f"{name} not found in {path}")
+
+
+def test_array_literals_built_in_one_place():
+    lit_lines = _function_lines(PKG / "ops/cluster.py", "double_array_lit")
+    offenders = []
+    for path in sorted(PKG.rglob("*.py")):
+        rel = path.relative_to(PKG).as_posix()
+        text = path.read_text()
+        lines = text.splitlines()
+        for m in PER_ELEMENT.finditer(text):
+            n = text.count("\n", 0, m.start()) + 1
+            if (rel, lines[n - 1].strip()) not in PER_ELEMENT_OK:
+                offenders.append(f"{rel}:{n}: {lines[n - 1].strip()}")
+        offenders += [
+            f"{rel}:{n}: {line.strip()}"
+            for n, line in enumerate(lines, 1)
+            if "!r}D" in line
+            and not (rel == "ops/cluster.py" and n in lit_lines)
+        ]
+    assert not offenders, "\n".join(offenders)
+
+
+def test_one_literal_or_broadcast_switch():
+    offenders = []
+    for path in sorted(PKG.rglob("*.py")):
+        rel = path.relative_to(PKG).as_posix()
+        tree = ast.parse(path.read_text())
+        allowed = set()
+        if rel == "ops/cluster.py":
+            allowed = _function_lines(path, "_cent_source")
+        for node in ast.walk(tree):
+            name = (
+                node.id if isinstance(node, ast.Name)
+                else node.attr if isinstance(node, ast.Attribute)
+                else None
+            )
+            if (
+                name == "CENT_LITERAL_MAX_TERMS"
+                and isinstance(node.ctx, ast.Load)
+                and node.lineno not in allowed
+            ):
+                offenders.append(f"{rel}:{node.lineno}")
     assert not offenders, "\n".join(offenders)

@@ -1501,6 +1501,28 @@ filters:
 """)
 
 
+def test_annindex_stage_keeps_full_upstream_row_counts(spark, tmp_path):
+    """The ANN build's first read over its input is a full one, so the
+    stage before ``annindex`` records its whole row count — not the
+    few rows a first-row emptiness probe would have read."""
+    df = spark.range(0, 2000, 1, 4).selectExpr(
+        "id AS vec_id",
+        "array(CAST(id % 7 AS DOUBLE), CAST(id % 11 AS DOUBLE), "
+        "CAST(id % 13 AS DOUBLE), CAST(id % 5 AS DOUBLE)) AS embedding",
+    )
+    result = Pipeline(spark, load_config_str(f"""
+filters:
+  - name: half
+    actionType: sql
+    code: SELECT * FROM df WHERE vec_id % 2 = 0
+  - name: build
+    actionType: annindex
+    actionConfig: {{indexPath: {tmp_path / "ix"}, nLists: 4, m: 4, k: 4}}
+""")).run(df)
+    assert result.df.count() == 1000
+    assert [m.rows_out for m in result.harvest_metrics()] == [1000, 1000]
+
+
 def test_retrieval_pipeline_example_end_to_end(spark):
     """examples/retrieval_pipeline.yml — the zero-code analytics
     showcase: percentile gate -> BM25 shortlist -> stats columns."""
