@@ -447,9 +447,9 @@ def cluster_pairs(
 
     Two modes, identical results (see :data:`CC_DRIVER_MAX_EDGES`):
     below ``driver_max_edges`` distinct pairs, a driver-side
-    union-find over the collected narrow id pairs (the pair count is
-    already known to whoever generated candidates; one bounded
-    collect replaces O(diameter) jobs); above it, iterative min-label
+    union-find over the narrow id pairs, fetched by one bounded
+    ``limit(driver_max_edges + 1)`` collect that also decides the mode
+    (it replaces O(diameter) jobs); above it, iterative min-label
     propagation (the standard large-graph CC shape, same contraction
     as GraphFrames/GraphX CC): every node starts labeled with itself;
     each round every node takes the min of its own and its neighbors'
@@ -464,29 +464,24 @@ def cluster_pairs(
     """
     uniq = pairs.select(id_a, id_b).distinct()
     if driver_max_edges > 0:
-        # persist the NARROW distinct pair list before sizing it —
-        # the pair generator upstream (LSH/Ed-Join/cosine verify) is
-        # the expensive part, and both the count and the
-        # collect-or-double below must not re-evaluate it
+        # One bounded read sizes and fetches the pair list: an extra
+        # row past ``driver_max_edges`` means "distributed". The NARROW
+        # distinct pairs are persisted first, so the distributed arm
+        # reuses them instead of re-running the pair generator upstream
+        # (LSH/Ed-Join/cosine verify, the expensive part).
         uniq = uniq.persist(StorageLevel.MEMORY_AND_DISK)
-        n_pairs = uniq.count()
-        if n_pairs <= driver_max_edges:
-            try:
-                return _cc_driver(
-                    uniq.collect(),
-                    pairs.sparkSession,
-                    pairs.schema[id_a].dataType,
-                )
-            finally:
-                uniq.unpersist()
+        rows = uniq.limit(driver_max_edges + 1).collect()
+        if len(rows) <= driver_max_edges:
+            uniq.unpersist()
+            return _cc_driver(rows, pairs.sparkSession,
+                              pairs.schema[id_a].dataType)
     edges = lineage_cut(
         uniq.selectExpr(f"{id_a} AS a", f"{id_b} AS b")
         .unionByName(uniq.selectExpr(f"{id_b} AS a", f"{id_a} AS b"))
         .distinct(),
         eager=True,
     )
-    if driver_max_edges > 0:
-        uniq.unpersist()
+    uniq.unpersist()
     labels = lineage_cut(
         edges.select(F.col("a").alias("node"))
         .distinct()

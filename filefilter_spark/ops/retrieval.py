@@ -665,8 +665,11 @@ def build_text_index(
       caller having to remember it (a mismatched count would silently
       prune to the wrong buckets).
 
-    Build cost: one tokenize scan + one (id, term) aggregation — the
-    same postings shuffle tf-idf already pays. ``n_buckets`` bounds
+    Build cost: two tokenize scans — the one-row stats aggregate (its
+    row is collected for the empty-corpus check and written from the
+    driver) and the (id, term) postings aggregation, the same postings
+    shuffle tf-idf already pays — then one read of the written postings
+    for the per-term document frequencies. ``n_buckets`` bounds
     file counts (the small-files maintenance loop — ``maybe_compact``
     in ops/layout.py — applies to ``postings/`` unchanged).
 
@@ -694,11 +697,15 @@ def build_text_index(
         # text_index_growth
         F.count(F.lit(1)).alias("built_n_docs"),
     )
-    if int(stats.first()["n_docs"]) == 0:
+    row = stats.first()
+    if int(row["n_docs"]) == 0:
         raise ValueError("build_text_index: empty corpus — nothing to index")
 
     sfx = "__build"
-    stats.coalesce(1).write.mode("overwrite").parquet(f"{path}/stats{sfx}")
+    # write the collected row: re-running the aggregate would tokenize
+    # the whole corpus once more
+    sidecar = spark.createDataFrame([row], stats.schema)
+    sidecar.write.mode("overwrite").parquet(f"{path}/stats{sfx}")
     toks = df.select(
         F.col(id_col),
         tokens(src).alias("toks"),

@@ -43,17 +43,21 @@ so the counts cost no extra jobs. Some stages act when applied:
 ``expect``'s aggregate, ``temperature``'s group counts and ``bpe``'s
 training histogram each read the full upstream, so they fill the
 upstream counts with the same values; later runs of the plan leave the
-counts as they are. The stage counters stay with
-``observe_metrics=False``: they sit directly above the stage's
-``mapInPandas``, which already blocks pushdown.
+counts as they are. ``qualityfilter`` also acts when applied, but its
+training reads capped class samples, a bounded read (below). The stage
+counters stay with ``observe_metrics=False``: they sit directly above
+the stage's ``mapInPandas``, which already blocks pushdown.
 
-A stage that samples its input when applied (``Stage.samples_input``:
-the python and pandas stages' schema-inference sample) and the OP-A11
-head sample must not run on a plan with pending Observations: an
-Observation keeps the first completed action, and a limit job would
-record the sample size as the stage's row count. Only then does
-:meth:`Pipeline.run` also thread a copy of the chain free of the
-Observations it reads, and only up to the last stage that needs it.
+A stage whose apply runs a bounded read of its input
+(``Stage.samples_input``: the python and pandas stages'
+schema-inference sample, ``qualityfilter``'s capped training classes)
+and the OP-A11 head sample must not run on a plan with pending
+Observations: an Observation keeps the first completed action, and a
+limit job would record the sample size as the upstream row counts.
+Only then does :meth:`Pipeline.run` also thread a copy of the chain
+free of the Observations it reads, and only up to the last stage that
+needs it; such a stage caches what it learned there (the schema, the
+trained model), so its apply to the observed chain reads nothing.
 
 Resume (workspace analog): with ``checkpoint_dir`` set, each stage's
 output is materialized to ``<dir>/stage_<N>/`` parquet; a later run

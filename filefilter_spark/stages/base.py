@@ -51,10 +51,11 @@ _INTEGRALS = (LongType, IntegerType, ShortType, ByteType)
 
 
 class Stage:
-    # True when apply() runs a sampling action on its input
-    # (infer_schema). Pipeline.run then applies the stage to a copy of
-    # the chain whose Observations it never reads first, so the sample
-    # never completes on a plan that carries the per-stage counts.
+    # True when apply() runs an action that is a bounded read of its
+    # input (infer_schema's sample, qualityfilter's capped training).
+    # Pipeline.run then applies the stage to a copy of the chain whose
+    # Observations it never reads first, so the bounded read never
+    # completes on a plan that carries the per-stage counts.
     samples_input = False
 
     def __init__(self, spark: SparkSession, cfg: StageConfig):

@@ -431,7 +431,15 @@ class QualityFilterStage(Stage):
     UDF only ever touches a bounded sample regardless of corpus size.
     SCORING stays full-corpus and UDF-free (the native SQL fold in
     ``ops.classifier.quality_scores``). Set ``trainLimit: null`` to
-    train on everything (test/oracle use)."""
+    train on everything (test/oracle use).
+
+    Training reads a bounded sample of the input, so the stage declares
+    ``samples_input``: Pipeline.run trains on its observation-free twin
+    chain, and the model is cached on the stage, so the apply to the
+    observed chain only scores."""
+
+    samples_input = True
+    _model = None  # the trained classifier, cached like Stage._schema
 
     def apply(self, df: DataFrame) -> DataFrame:
         import pyspark.sql.functions as F
@@ -447,24 +455,26 @@ class QualityFilterStage(Stage):
             )
         text_col = cfg.get("textField", "text")
         id_col = cfg.get("idField", "doc_id")
-        pos = df.filter(cfg["positiveWhere"])
-        neg = df.filter(f"NOT ({cfg['positiveWhere']})")
-        frac = cfg.get("trainFraction")
-        if frac is not None:
-            seed = int(cfg.get("seed", 42))
-            pos = pos.sample(fraction=float(frac), seed=seed)
-            neg = neg.sample(fraction=float(frac), seed=seed)
-        limit = cfg.get("trainLimit", 1_000_000)
-        if limit is not None:
-            pos = pos.limit(int(limit))
-            neg = neg.limit(int(limit))
-        qm = train_quality_classifier(
-            pos, neg,
-            text_col=text_col,
-            n_features=int(cfg.get("nFeatures", 1 << 18)),
-            max_iter=int(cfg.get("maxIter", 50)),
-            reg_param=float(cfg.get("regParam", 1e-3)),
-        )
+        qm = self._model
+        if qm is None:
+            pos = df.filter(cfg["positiveWhere"])
+            neg = df.filter(f"NOT ({cfg['positiveWhere']})")
+            frac = cfg.get("trainFraction")
+            if frac is not None:
+                seed = int(cfg.get("seed", 42))
+                pos = pos.sample(fraction=float(frac), seed=seed)
+                neg = neg.sample(fraction=float(frac), seed=seed)
+            limit = cfg.get("trainLimit", 1_000_000)
+            if limit is not None:
+                pos = pos.limit(int(limit))
+                neg = neg.limit(int(limit))
+            qm = self._model = train_quality_classifier(
+                pos, neg,
+                text_col=text_col,
+                n_features=int(cfg.get("nFeatures", 1 << 18)),
+                max_iter=int(cfg.get("maxIter", 50)),
+                reg_param=float(cfg.get("regParam", 1e-3)),
+            )
         scores = quality_scores(df, qm, text_col=text_col, id_col=id_col)
         out = df.join(scores, id_col, "left")
         if cfg.get("minProb") is not None:

@@ -83,7 +83,7 @@ import tempfile
 import uuid
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql.types import TimestampNTZType
 
 from filefilter_spark.ops.layout import (
@@ -930,9 +930,8 @@ def _greedy_neardup(
     id_col: str,
     cap: int | None,
     verify,
-    stats: dict | None,
     want_capped: bool = False,
-) -> list:
+) -> tuple[list, Observation]:
     """Arrival-order-greedy near-dedup of one batch against a survivor
     store, then the survivors' appends — the body the minhash (LSH
     bands) and semdedup (cell memberships) loops share.
@@ -949,20 +948,22 @@ def _greedy_neardup(
     2. the candidates are verified reading ONLY the candidate
        survivors' rows — batch rows matching history drop;
     3. the remainder near-dups within the batch through the batch
-       tier's pieces (``_bucket_pairs`` → verify →
-       ``keep_neardup_survivors``, CC min-id representative);
+       tier's pieces (``_bucket_pairs`` → verify → ``cluster_pairs``,
+       CC min-id representative);
     4. the survivors' rows and keys append to the store.
 
-    Fills ``stats`` (when given) with ``n_in``/``n_survived``; returns
-    the capped key rows when ``want_capped``."""
-    from pyspark.storagelevel import StorageLevel
-
-    from filefilter_spark.ops.dedup import _bucket_pairs, keep_neardup_survivors
+    Returns the capped key rows (when ``want_capped``) and an
+    Observation of ``n_in``/``n_survived``, filled by the rows append:
+    the batch's rows are flagged against every dropped id and counted
+    just above that flag, where no empty join side can prune the count
+    from the plan."""
+    from filefilter_spark.ops.dedup import _bucket_pairs, cluster_pairs
 
     scope: list = []  # the pair kernel's per-batch cache, freed below
     capped: list = []
+    counts = Observation()
     try:
-        remaining = new
+        remaining, killed = new, None
         if _dir_exists(spark, rows_dir):
             seen = spark.read.parquet(keys_dir)
             if cap is not None:
@@ -1018,24 +1019,25 @@ def _greedy_neardup(
                           scope=scope),
             remaining,
         )
-        survivors = keep_neardup_survivors(remaining, pairs, id_col=id_col)
-        if stats is not None:
-            # Counts BEFORE the store writes: appending to rows_dir
-            # invalidates any cached plan that reads it (Spark
-            # recacheByPath), so a post-write survivors.count() would
-            # recompute against the just-appended store — where every
-            # survivor now self-pairs and "dies".
-            survivors = survivors.persist(StorageLevel.MEMORY_AND_DISK)
-            stats.update(n_in=new.count(), n_survived=survivors.count())
+        losers = cluster_pairs(pairs).filter("doc_id != cluster_id").select(
+            F.col("doc_id").alias(id_col))
+        if killed is not None:  # disjoint: losers come from ``remaining``
+            losers = losers.unionByName(killed)
+        survivors = (
+            new.join(losers.withColumn("__drop", F.lit(True)), id_col, "left")
+            .observe(counts, F.count(F.lit(1)).alias("n_in"),
+                     F.count_if(F.col("__drop").isNull()).alias("n_survived"))
+            .filter("__drop IS NULL")
+            .drop("__drop")
+        )
         survivors.write.mode("append").parquet(rows_dir)
         keyed.join(
             survivors.select(F.col(id_col).alias(kid)), kid, "left_semi"
         ).write.mode("append").parquet(keys_dir)
-        survivors.unpersist()
     finally:
         for h in scope:
             h.unpersist()
-    return capped
+    return capped, counts
 
 
 def minhash_stream_dedup(
@@ -1072,11 +1074,12 @@ def minhash_stream_dedup(
     reuse that persisted frame through id filters — at 100 TB the
     MinHash fold is the dominant per-batch cost.
 
-    ``on_batch`` (opt-in metrics hook; its counts cost extra jobs) is
-    called after each micro-batch with ``{"batch_id", "n_in",
-    "n_survived", "seconds"}``. ``maintain_every=N`` compacts store
-    dirs past ``max_files_per_store`` data files (docs ordered by id,
-    bands by (band, bucket) so the probe side row-group-prunes).
+    ``on_batch`` (opt-in metrics hook; its counts are observed on the
+    survivor append, so they cost no extra job) is called after each
+    micro-batch with ``{"batch_id", "n_in", "n_survived", "seconds"}``.
+    ``maintain_every=N`` compacts store dirs past
+    ``max_files_per_store`` data files (docs ordered by id, bands by
+    (band, bucket) so the probe side row-group-prunes).
 
     Returns the survivor table. Which copy survives depends on arrival
     order ACROSS batches (the stream defines who arrived first) and is
@@ -1112,17 +1115,17 @@ def minhash_stream_dedup(
         banded = minhash_band_buckets(
             new, id_col, text_col, num_hashes, bands, seed, shingle_n
         ).persist(StorageLevel.MEMORY_AND_DISK)
-        stats = None if on_batch is None else {"batch_id": batch_id}
         try:
-            _greedy_neardup(
+            _, counts = _greedy_neardup(
                 spark, new, banded, docs_dir, bands_dir, ["band", "bucket"],
-                "doc_id", id_col, max_bucket, verify, stats,
+                "doc_id", id_col, max_bucket, verify,
             )
         finally:
             banded.unpersist()
         store.commit(batch_id)
-        if stats is not None:
-            on_batch({**stats, "seconds": _time.time() - t0})
+        if on_batch is not None:
+            on_batch({"batch_id": batch_id, **counts.get,
+                      "seconds": _time.time() - t0})
 
     store.run(path, handle, max_files_per_trigger, timeout_sec)
     return spark.read.parquet(docs_dir)
@@ -1243,12 +1246,11 @@ def semdedup_stream_dedup(
         cells = cell_memberships(
             new, state["cents"], n_assign, vec_col, id_col
         ).persist()
-        stats = None if on_batch is None else {"batch_id": batch_id}
         drift = None
         try:
-            capped = _greedy_neardup(
+            capped, counts = _greedy_neardup(
                 spark, new, cells, vecs_dir, cells_dir, ["cell"], "id",
-                id_col, max_cell, verify, stats, want_capped=track,
+                id_col, max_cell, verify, want_capped=track,
             )
             if track:
                 batch_hist = {
@@ -1267,9 +1269,10 @@ def semdedup_stream_dedup(
         rebuilt = rebuild_on_drift and drift["action"] == "rebuild"
         if rebuilt:
             do_rebuild(batch_id)
-        if stats is not None:
+        if on_batch is not None:
             on_batch({
-                **stats,
+                "batch_id": batch_id,
+                **counts.get,
                 "n_capped_cells": len(capped),
                 **drift,
                 "rebuilt": rebuilt,
@@ -1425,9 +1428,7 @@ def text_index_stream_ingest(
                 "n_buckets": nb["v"],
             }
         row = store.commit(batch_id, row) or {"n_docs": 0}
-        growth = None
-        if on_batch is not None or rebucket_on_growth:
-            growth = text_index_growth(row["n_docs"], row.get("built_n_docs"))
+        growth = text_index_growth(row["n_docs"], row.get("built_n_docs"))
         rebucketed = rebucket_on_growth and growth["action"] == "rebucket"
         if rebucketed:
             target = nb["v"] * (1 << max(1, _math.ceil(_math.log2(
@@ -1689,6 +1690,9 @@ def fuzzy_index_stream_ingest(
     the batch's prefix entries ordered by the unseen-at-build sentinel
     — a rising fraction means the frozen rarity order has lost
     selectivity, and ``action`` applies :func:`fuzzy_index_staleness`.
+    These three are observed on the batch's store appends, so the hook
+    costs no extra job; ``n_in`` is the exact count the batch already
+    runs for its emptiness check and ``n_strings``.
 
     ``rebuild_on_drift=True`` acts on ``action == "rebuild"`` at the
     batch boundary: it re-derives the two ORDER-DEPENDENT dirs —
@@ -1817,13 +1821,10 @@ def fuzzy_index_stream_ingest(
             )
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        if on_batch is not None or rebuild_on_drift:
-            row = prefix_full.agg(F.avg(
-                (F.col("gdf") == F.lit(FUZZY_UNSEEN_GDF)).cast("double")
-            ).alias("f")).first()
-            info["unseen_gram_frac"] = (
-                round(float(row["f"]), 6) if row["f"] is not None else 0.0
-            )
+        # The batch's figures are observed on the store appends that
+        # already run: the unseen-gram share on the postings append,
+        # the candidate rows and the verified pairs on the pairs append.
+        unseen, cand_rows, new_pairs = (Observation() for _ in range(3))
         prefix_b = prefix_full.drop("gdf")
         # Explicit bucket-set partition filter on the postings read, only
         # when the batch CAN be narrow: with E = n_in * (q*d+1) hashed
@@ -1881,11 +1882,9 @@ def fuzzy_index_stream_ingest(
         # one side stored; within: both new; short: both below T), and
         # dist is a pure function of the pair, so the dedup runs AFTER
         # the verify — only same-block multi-gram collisions collapse.
-        cands = cross.unionByName(within).unionByName(short_pairs)
-        if on_batch is not None:
-            # raw candidate collision rows; the verify reuses this frame
-            cands = cands.persist(StorageLevel.MEMORY_AND_DISK)
-            info["n_candidates"] = cands.count()
+        cands = cross.unionByName(within).unionByName(short_pairs).observe(
+            cand_rows, F.count(F.lit(1)).alias("n_candidates")
+        )
         strings_all = (
             spark.read.parquet(strings_dir)
             .select("id", "s")
@@ -1912,13 +1911,13 @@ def fuzzy_index_stream_ingest(
                 F.col("dist").cast("int").alias("dist"),
             )
             .distinct()
+            .observe(new_pairs, F.count(F.lit(1)).alias("n_new_pairs"))
         )
-        if on_batch is not None:
-            verified = verified.persist(StorageLevel.MEMORY_AND_DISK)
-            info["n_new_pairs"] = verified.count()
         writes = [
             lambda: verified.write.mode("append").parquet(pairs_dir),
-            lambda: prefix_b.repartition("bucket").write.partitionBy(
+            lambda: prefix_full.observe(unseen, F.avg(
+                (F.col("gdf") == F.lit(FUZZY_UNSEEN_GDF)).cast("double")
+            ).alias("f")).drop("gdf").repartition("bucket").write.partitionBy(
                 "bucket"
             ).mode("append").parquet(post_dir),
             lambda: base_b.select(
@@ -1942,9 +1941,15 @@ def fuzzy_index_stream_ingest(
         with ThreadPoolExecutor(max_workers=len(writes)) as pool:
             for fut in [pool.submit(w) for w in writes]:
                 fut.result()
-        cands.unpersist()
-        verified.unpersist()
         prefix_full.unpersist()
+        f = unseen.get["f"]
+        info["unseen_gram_frac"] = 0.0 if f is None else round(float(f), 6)
+        info.update(new_pairs.get)
+        # Adaptive execution prunes the candidate branch, and its metric
+        # with it, only when the branch is empty (every candidate id is
+        # in strings_all); Observation.get cannot read that empty row.
+        info["n_candidates"] = dict(cand_rows._jo.getAsJava()).get(
+            "n_candidates", 0)
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         t0 = _time.time()

@@ -105,6 +105,8 @@ SLOW_TESTS = {
     "test_stream_ingest_crash_before_commit_replays_exact",
     "test_fuzzy_index_stream_on_batch_figures_pinned",
     "test_ivfpq_stream_ingest_rerun_appends_nothing",
+    # two or three ingest drains per case
+    "test_ingest_on_batch_costs_no_jobs",
 }
 
 
@@ -140,3 +142,34 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+def jobs_in_group(spark, group, fn):
+    """``(fn(), the number of Spark jobs it ran)``: ``fn`` runs under
+    the job group ``group``."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def jobs_between_markers(spark, fn):
+    """``(fn(), the number of Spark jobs started while it ran)`` for
+    work outside the caller's job group: a streaming drain runs its
+    foreachBatch body under the stream's own group. Job ids are
+    sequential, so a one-job marker before and one after bound them."""
+    sc = spark.sparkContext
+    marks = []
+
+    def mark():
+        group = f"marker-{len(marks)}-{id(marks)}"
+        jobs_in_group(spark, group, sc.parallelize([0], 1).count)
+        marks.append(sc.statusTracker().getJobIdsForGroup(group)[0])
+
+    mark()
+    out = fn()
+    mark()
+    return out, marks[1] - marks[0] - 1

@@ -4545,6 +4545,33 @@ def test_cluster_pairs_driver_mode_equals_distributed(spark):
                    (8, 6), (9, 6), (50, 50), (60, 50)]
 
 
+def test_cluster_pairs_driver_arm_reads_pairs_once(spark):
+    """The driver arm sizes and fetches its pair list with one bounded
+    collect over the persisted distinct pairs — three jobs: the
+    distinct's shuffle, the cache build and the collect (a separate
+    count used to add two). One edge past ``driver_max_edges`` routes
+    the same graph to the distributed arm, with the same clusters."""
+    from conftest import jobs_in_group
+
+    from filefilter_spark.ops.dedup import cluster_pairs
+
+    pairs = spark.range(0, 2000, 1, 4).selectExpr(
+        "id * 3 AS id_a", "id * 3 + 1 AS id_b")
+    drv, n_jobs = jobs_in_group(spark, "cc-2k", lambda: cluster_pairs(pairs))
+    assert n_jobs == 3
+    assert drv.filter("doc_id != cluster_id").count() == 2000
+
+    chain = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (2, 1)], "id_a long, id_b long")
+    at_cap, n_cap = jobs_in_group(
+        spark, "cc-cap", lambda: cluster_pairs(chain, driver_max_edges=4))
+    past, n_past = jobs_in_group(
+        spark, "cc-past", lambda: cluster_pairs(chain, driver_max_edges=3))
+    assert n_cap == 3 < n_past
+    assert sorted(at_cap.collect()) == sorted(past.collect()) == [
+        (1, 1), (2, 1), (3, 1), (4, 1)]
+
+
 def test_centroid_broadcast_path_equals_literal(spark, monkeypatch):
     """Past CENT_LITERAL_MAX_TERMS the assignment expressions read the
     centroid matrix from a one-row broadcast join instead of a plan
@@ -5038,6 +5065,91 @@ def test_fuzzy_index_stream_on_batch_figures_pinned(spark, tmp_path):
     assert (FUZZY_UNSEEN_WARN <= sig[1]["unseen_gram_frac"]
             < FUZZY_UNSEEN_REBUILD)
     assert got.count() == sum(b["n_new_pairs"] for b in sig) == 16
+
+
+def _arrivals(spark, src, batches, schema):
+    """Write each of ``batches`` as one parquet file under ``src``, with
+    increasing mtimes, so every drain sees the same batch order."""
+    import glob
+    import os
+
+    seen = set()
+    for i, rows in enumerate(batches):
+        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
+            "append").parquet(src)
+        for f in set(glob.glob(f"{src}/part-*")) - seen:
+            os.utime(f, (1_700_000_000 + 10 * i,) * 2)
+            seen.add(f)
+
+
+@pytest.mark.parametrize("loop", ["fuzzy", "minhash"])
+def test_ingest_on_batch_costs_no_jobs(spark, tmp_path, loop):
+    """An ingest batch observes its on_batch figures on the store
+    appends it already runs, so a drain launches the same Spark jobs
+    with and without the hook. The figures stay exact: a replayed
+    minhash drain (every row killed by its stored self) still counts
+    each batch's rows in and none surviving."""
+    import random
+
+    from conftest import jobs_between_markers
+
+    from filefilter_spark.streaming.jobs import (
+        fuzzy_index_stream_ingest, minhash_stream_dedup)
+
+    rng = random.Random(7)
+
+    def word(n):
+        return "".join(rng.choice("abcdef") for _ in range(n))
+
+    src = str(tmp_path / "src")
+    if loop == "fuzzy":
+        from filefilter_spark.ops.dedup import build_fuzzy_index
+
+        base = [(i, word(12)) for i in range(30)]
+        # batch 1 pairs with the store; batch 2 is one string of grams
+        # no other string holds, so it has no candidate at all
+        _arrivals(spark, src, [
+            [(100 + i, base[i][1][:-1] + "z") for i in range(8)],
+            [(200, "QRSTUVWXYZQP")],
+        ], "doc_id long, s string")
+
+        def drain(d, hook):
+            if not (tmp_path / d).exists():
+                build_fuzzy_index(
+                    spark.createDataFrame(base, "doc_id long, s string"),
+                    str(tmp_path / d), id_col="doc_id", str_col="s",
+                    max_dist=2, q=2, n_buckets=8)
+            return jobs_between_markers(spark, lambda: fuzzy_index_stream_ingest(
+                spark, src, str(tmp_path / d), id_col="doc_id", str_col="s",
+                max_files_per_trigger=1, on_batch=hook))
+    else:
+        texts = [" ".join(word(3) for _ in range(12)) for _ in range(10)]
+        _arrivals(spark, src, [
+            [(i, t) for i, t in enumerate(texts)],
+            [(100 + i, t + " " + word(3)) for i, t in enumerate(texts[:5])]
+            + [(200, " ".join(word(3) for _ in range(12)))],
+        ], "doc_id long, text string")
+
+        def drain(d, hook):
+            return jobs_between_markers(spark, lambda: minhash_stream_dedup(
+                spark, src, threshold=0.5, max_files_per_trigger=1,
+                out_dir=str(tmp_path / d), on_batch=hook))
+
+    _, bare = drain("bare", None)
+    sig = []
+    got, hooked = drain("hooked", sig.append)
+    assert bare == hooked > 0
+    assert [b["batch_id"] for b in sig] == [0, 1]
+    assert [b["n_in"] for b in sig] == ([8, 1] if loop == "fuzzy" else [10, 6])
+    if loop == "fuzzy":
+        assert sig[0]["n_candidates"] >= sig[0]["n_new_pairs"] == got.count() > 0
+        assert (sig[1]["n_candidates"], sig[1]["n_new_pairs"]) == (0, 0)
+    else:
+        assert sum(b["n_survived"] for b in sig) == got.count() < 16
+        replay = []
+        drain("hooked", replay.append)
+        assert [(b["n_in"], b["n_survived"]) for b in replay] == [
+            (10, 0), (6, 0)]
 
 
 def test_ivfpq_stream_ingest_rerun_appends_nothing(spark, tmp_path, sf_dir):

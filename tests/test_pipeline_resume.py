@@ -2,6 +2,7 @@
 observe()-based metrics (OP-A10/A14)."""
 
 import pytest
+from conftest import jobs_in_group
 
 from filefilter_spark.config import load_config_str
 from filefilter_spark.pipeline import Pipeline
@@ -48,16 +49,6 @@ def test_resume_skips_unchanged_stages(spark, tmp_path):
     assert sorted(r.tag for r in r3.df.collect()) == ["yy"] * 5
 
 
-def _jobs_in_group(spark, group, fn):
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 @pytest.mark.parametrize("stage", [
     "actionType: expect\n    actionConfig: {minRows: 1, unique: [doc_id]}",
     "actionType: temperature\n    actionConfig: {alpha: 0.5}",
@@ -85,8 +76,8 @@ filters:
             out = STAGE_TYPES[c.action_type](spark, c).apply(out)
         return out
 
-    expected, want = _jobs_in_group(spark, f"direct-{kind}", direct)
-    result, got = _jobs_in_group(
+    expected, want = jobs_in_group(spark, f"direct-{kind}", direct)
+    result, got = jobs_in_group(
         spark, f"pipeline-{kind}", lambda: Pipeline(spark, cfg).run(df))
     assert want > 0 and got == want
     result.df.write.format("noop").mode("overwrite").save()

@@ -313,3 +313,22 @@ def test_bm25_indexed_empty_corpus_refuses_at_build(spark, docs, tmp_path):
 
     with pytest.raises(ValueError, match="empty corpus"):
         build_text_index(docs.limit(0), str(tmp_path / "ix0"), n_buckets=4)
+    assert not (tmp_path / "ix0").exists()
+
+
+def test_build_text_index_runs_its_stats_aggregate_once(spark, docs, tmp_path):
+    """The collected stats row answers the empty-corpus check and is
+    written as the sidecar, so the build tokenizes the corpus twice
+    (stats, postings), not three times. Ten jobs: the stats aggregate
+    (2), the sidecar write (1), the postings write (3), the postings
+    schema read (1) and the terms write (3)."""
+    from conftest import jobs_in_group
+
+    from filefilter_spark.ops.retrieval import build_text_index
+
+    ix = str(tmp_path / "ix")
+    _, n_jobs = jobs_in_group(
+        spark, "text-index", lambda: build_text_index(docs, ix, n_buckets=16))
+    assert n_jobs == 10
+    assert [tuple(r) for r in spark.read.parquet(f"{ix}/stats").collect()] == [
+        (500, 27939, 16, 500)]

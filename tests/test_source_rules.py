@@ -20,6 +20,10 @@
   ``!r}D`` double encoding appears nowhere else. Only
   ``ops.cluster._cent_source`` reads ``CENT_LITERAL_MAX_TERMS`` to
   choose between a literal and a broadcast.
+- The streaming ingest loops report their ``on_batch`` figures without
+  extra Spark jobs: in ``streaming/jobs.py`` no ``.persist(`` or
+  ``.count()`` sits inside an ``if`` whose test names ``on_batch`` or
+  ``stats``. A figure rides ``observe()`` on a frame the batch writes.
 """
 
 import ast
@@ -135,4 +139,24 @@ def test_one_literal_or_broadcast_switch():
                 and node.lineno not in allowed
             ):
                 offenders.append(f"{rel}:{node.lineno}")
+    assert not offenders, "\n".join(offenders)
+
+
+def test_ingest_figures_cost_no_jobs():
+    offenders = []
+    path = PKG / "streaming/jobs.py"
+    for node in ast.walk(ast.parse(path.read_text())):
+        if not isinstance(node, ast.If) or not {
+            n.id for n in ast.walk(node.test) if isinstance(n, ast.Name)
+        } & {"on_batch", "stats"}:
+            continue
+        offenders += [
+            f"streaming/jobs.py:{call.lineno}: .{call.func.attr}("
+            for stmt in node.body + node.orelse
+            for call in ast.walk(stmt)
+            if isinstance(call, ast.Call)
+            and isinstance(call.func, ast.Attribute)
+            and (call.func.attr == "persist"
+                 or (call.func.attr == "count" and not call.args))
+        ]
     assert not offenders, "\n".join(offenders)

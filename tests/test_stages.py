@@ -1523,6 +1523,32 @@ filters:
     assert [m.rows_out for m in result.harvest_metrics()] == [1000, 1000]
 
 
+def test_qualityfilter_stage_keeps_full_upstream_row_counts(spark):
+    """``qualityfilter`` trains on capped class samples, a bounded read:
+    it runs on the runner's observation-free twin chain, and the apply
+    to the observed chain only scores, so the stage before it records
+    its whole row count — not the rows the capped training read."""
+    df = spark.range(0, 2000, 1, 4).selectExpr(
+        "id AS doc_id",
+        "IF(id % 3 = 0, 'good spark prose', 'junk noise') AS text",
+    )
+    result = Pipeline(spark, load_config_str("""
+filters:
+  - name: half
+    actionType: sql
+    code: SELECT * FROM df WHERE doc_id % 2 = 0
+  - name: q
+    actionType: qualityfilter
+    actionConfig:
+      positiveWhere: "text like '%spark%'"
+      nFeatures: 1024
+      maxIter: 5
+      trainLimit: 5
+""")).run(df)
+    assert result.df.count() == 1000
+    assert [m.rows_out for m in result.harvest_metrics()] == [1000, 1000]
+
+
 def test_retrieval_pipeline_example_end_to_end(spark):
     """examples/retrieval_pipeline.yml — the zero-code analytics
     showcase: percentile gate -> BM25 shortlist -> stats columns."""
