@@ -16,10 +16,13 @@ driver), :func:`write_parquet`, :func:`write_orc`, :func:`write_jsonl`
 and :func:`write_bucketed_table`. None of them folds the data into one
 task; small-files compaction is ``ops.layout.compact_files``.
 
-Scale notes: CSV schema inference reads the file once extra — callers
-on 100 TB inputs should pass an explicit ``schema``; parquet needs no
-inference. S3 paths map to ``s3a://`` (hadoop-aws connector; credential
-chain is the standard AWS provider chain, same idea as DuckDB httpfs).
+Scale notes: a CSV source without an explicit ``schema`` is typed from
+its first :data:`CSV_SAMPLE_LINES` lines, as DuckDB's ``read_csv``
+sniffer types it, so no read scans the whole file for its types; the
+file is then read with that schema in ``FAILFAST`` mode, and a later
+value that does not fit raises. Parquet needs no inference. S3 paths
+map to ``s3a://`` (hadoop-aws connector; credential chain is the
+standard AWS provider chain, same idea as DuckDB httpfs).
 """
 
 from __future__ import annotations
@@ -39,6 +42,9 @@ _JSON_EXTS = {".json", ".jsonl", ".ndjson"}
 # are NOT splittable — one task per file regardless of size; at scale
 # prefer many modest files (or zstd/parquet) over one huge .gz.
 _COMPRESSION_EXTS = {".gz", ".bz2", ".zst", ".zstd", ".deflate"}
+# Lines a CSV source's column types are inferred from: DuckDB
+# read_csv's default sample_size, the reference's reader.
+CSV_SAMPLE_LINES = 20_480
 
 
 _SCRATCH_ROOTS: dict[str, str] = {}
@@ -202,6 +208,25 @@ def _apply_schema_select(df: DataFrame, schema: StructType | str) -> DataFrame:
     return df.select(*cols)
 
 
+def _csv_head_schema(spark: SparkSession, path: str, options: dict) -> StructType:
+    """The schema Spark's CSV inference gives the first
+    :data:`CSV_SAMPLE_LINES` lines of ``path``.
+
+    The head is collected into the driver JVM (one job, reading only
+    the first split when that split holds the sample) and wrapped as a
+    local dataset, and Spark's own CSV reader infers over it, as
+    ``DataFrameReader.csv`` does for an RDD of lines: one more job,
+    over local rows. That reader drops every line equal to the header,
+    so the header lines of a directory's later files are not taken
+    for data.
+    """
+    jspark = spark._jsparkSession
+    head = jspark.read().textFile(path).limit(CSV_SAMPLE_LINES).collectAsList()
+    lines = jspark.createDataset(head, spark._jvm.org.apache.spark.sql.Encoders.STRING())
+    reader = spark.read.options(**options, inferSchema=True)
+    return DataFrame(reader._jreader.csv(lines), spark).schema
+
+
 def read_input(
     spark: SparkSession,
     path: str,
@@ -215,6 +240,15 @@ def read_input(
     quirk 2 in SURVEY.md §2.A) the delimiter is optional: ``.tsv``
     defaults to tab, everything else to comma (the reference's orphan
     loader auto-sniffed; explicit-default is deterministic at scale).
+
+    A CSV/TSV/TXT source read without ``schema`` takes the column types
+    Spark's CSV inference gives its first :data:`CSV_SAMPLE_LINES`
+    lines (DuckDB ``read_csv``'s default ``sample_size``) and is read
+    with them in ``FAILFAST`` mode, as DuckDB reads: a later value that
+    does not fit its column's type, or a row with fewer or more fields
+    than the header, raises ``MALFORMED_RECORD_IN_PARSING`` when the
+    rows are read, never a silent null, padding or truncation. Pass
+    ``schema`` to type a file whose head is not representative.
     """
     from filefilter_spark.config import normalize_delimiter
 
@@ -261,12 +295,11 @@ def read_input(
     elif ext in _TEXT_EXTS:
         delimiter = normalize_delimiter(delimiter)
         sep = delimiter if delimiter is not None else ("\t" if ext == ".tsv" else ",")
-        reader = spark.read.options(header=True, sep=sep)
-        if schema is not None:
-            reader = reader.schema(schema)
-        else:
-            reader = reader.option("inferSchema", True)
-        df = reader.csv(p)
+        options = {"header": True, "sep": sep}
+        if schema is None:
+            schema = _csv_head_schema(spark, p, options)
+            options["mode"] = "FAILFAST"
+        df = spark.read.options(**options).schema(schema).csv(p)
     else:
         raise ValueError(f"unsupported input extension {ext!r} for {path!r}")
     if sample_lines and sample_lines > 0:

@@ -98,15 +98,28 @@ class StageMetrics:
     _counters: Observation | None = None  # the stage's own (Stage.observation)
 
     def harvest(self) -> None:
-        """Read the observed counts; blocks until an action has run."""
+        """Read the observed counts; blocks until an action has run.
+
+        A count stays ``None`` when adaptive execution pruned the
+        observed node (a later join with an empty side replaces the
+        whole join with an empty relation): the count is unknown, not 0.
+        """
         if self._observation is not None and self.rows_out is None:
-            self.rows_out = self._observation.get["rows"]
+            self.rows_out = _observed(self._observation).get("rows")
         if self._counters is not None:
-            counts = self._counters.get
+            counts = _observed(self._counters)
             if self.action_type == "rest":
                 self.http_status = counts
             else:
-                self.errors = counts["errors"]
+                self.errors = counts.get("errors")
+
+
+def _observed(obs: Observation) -> dict[str, Any]:
+    """The observed metrics as a dict, empty when the observed node was
+    pruned: ``Observation.get`` cannot convert that empty row. Reading
+    the Java map (``getAsJava``) instead took ~10 ms an observation on
+    a 4-core box, against ~0.5 ms for this length check."""
+    return {} if obs._jo.getRow().length() == 0 else obs.get
 
 
 @dataclass

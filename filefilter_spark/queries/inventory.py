@@ -38,8 +38,8 @@ def _scratch(name: str) -> str:
     oracle="SELECT n_nationkey, n_name, n_regionkey FROM nation",
     doc="CSV/TSV scan (Database.py:77-78): write nation as a TAB-delimited "
         "file, read it back through read_input with the reference's TAB "
-        "delimiter alias (loaders.py:10,22) and an explicit schema (the "
-        "scale-correct path — inference costs an extra pass).",
+        "delimiter alias (loaders.py:10,22) and an explicit schema (no "
+        "head sample to infer types from, no FAILFAST misfit check).",
 )
 def op_a1(spark: SparkSession, sf_dir: str) -> DataFrame:
     from filefilter_spark.io import read_input, write_csv_file

@@ -2,6 +2,7 @@
 vector), unusual CSV content round-trips, null handling in stages."""
 
 import pytest
+from conftest import jobs_in_group
 
 from filefilter_spark.config import load_config_str
 from filefilter_spark.pipeline import Pipeline
@@ -219,6 +220,97 @@ def test_sample_lines_cap(spark, tmp_path):
     src.write_text("a\n" + "\n".join(str(i) for i in range(100)))
     df = read_input(spark, str(src), sample_lines=7)
     assert df.count() == 7
+
+
+def _inferred_schema(spark, path):
+    """The schema a full-file ``inferSchema`` pass gives ``path``."""
+    return spark.read.options(header=True, sep=",", inferSchema=True).csv(str(path)).schema
+
+
+def _late_misfit_csv(tmp_path):
+    """An int column longer than the CSV sample, then one double."""
+    src = tmp_path / "late.csv"
+    src.write_text("a\n" + "".join(f"{i}\n" for i in range(30_000)) + "5.5\n")
+    return src
+
+
+def test_csv_head_sample_types_match_full_inference(spark, tmp_path):
+    """On a file the sample covers, the head-sample schema is the one a
+    full inference pass gives, and so are the rows."""
+    from filefilter_spark.io import read_input
+
+    src = tmp_path / "types.csv"
+    src.write_text("i,b,d,flag,day,ts,s,empty\n" + "".join(
+        f"{k},{k * 10**10},{k}.25,{str(k % 2 == 0).lower()},"
+        f"2024-01-{k % 28 + 1:02d},2024-01-01 10:00:{k % 60:02d},w{k},\n"
+        for k in range(50)))
+    df = read_input(spark, str(src))
+    expected = _inferred_schema(spark, src)
+    assert df.schema.simpleString() == (
+        "struct<i:int,b:bigint,d:double,flag:boolean,day:date,"
+        "ts:timestamp,s:string,empty:string>")
+    assert df.schema == expected
+    full = spark.read.schema(expected).options(header=True).csv(str(src))
+    assert sorted(df.collect()) == sorted(full.collect())
+
+
+def test_csv_late_misfit_fails_loudly(spark, tmp_path):
+    """A value past the sample that does not fit its sampled type
+    raises when read, naming the value; it never becomes a null."""
+    from filefilter_spark.io import read_input
+
+    df = read_input(spark, str(_late_misfit_csv(tmp_path)))  # tail not scanned
+    assert df.schema.simpleString() == "struct<a:int>"
+    with pytest.raises(Exception, match=r"5\.5"):
+        df.collect()
+    with pytest.raises(Exception, match="MALFORMED_RECORD_IN_PARSING"):
+        df.where("a IS NULL").collect()
+
+
+def test_csv_read_runs_at_most_two_jobs(spark, tmp_path):
+    """The head-sample read is one job for the head and one for the
+    inference over it, however long the file."""
+    from filefilter_spark.io import read_input
+
+    src = str(_late_misfit_csv(tmp_path))
+    _, jobs = jobs_in_group(spark, "csv-head-read", lambda: read_input(spark, src))
+    assert jobs <= 2
+
+
+@pytest.mark.parametrize("body", ["1,2,3\n4,5\n", "1,2,3\n4,5,6,7\n"],
+                         ids=["short", "long"])
+def test_csv_ragged_row_raises(spark, tmp_path, body):
+    from filefilter_spark.io import read_input
+
+    src = tmp_path / "ragged.csv"
+    src.write_text("a,b,c\n" + body)
+    with pytest.raises(Exception, match="MALFORMED_RECORD_IN_PARSING"):
+        read_input(spark, str(src)).collect()
+
+
+def test_csv_edge_inputs_read_as_before(spark, tmp_path):
+    """Empty and header-only files keep the schemas full inference
+    gives them; a gzip file reads like its plain twin."""
+    import gzip
+
+    from filefilter_spark.io import read_input
+
+    empty, header = tmp_path / "empty.csv", tmp_path / "header.csv"
+    empty.write_text("")
+    header.write_text("a,b\n")
+    for src, want in ((empty, "struct<>"), (header, "struct<a:string,b:string>")):
+        df = read_input(spark, str(src))
+        assert df.schema == _inferred_schema(spark, src)
+        assert df.schema.simpleString() == want
+        assert df.collect() == []
+    text = "id,x\n" + "".join(f"{i},{i / 4}\n" for i in range(100))
+    plain, packed = tmp_path / "t.csv", tmp_path / "t.csv.gz"
+    plain.write_text(text)
+    with gzip.open(packed, "wt") as f:
+        f.write(text)
+    got = read_input(spark, str(packed))
+    assert got.schema.simpleString() == "struct<id:int,x:double>"
+    assert sorted(got.collect()) == sorted(read_input(spark, str(plain)).collect())
 
 
 def test_to_cents_sign_safe(spark):

@@ -1,6 +1,11 @@
 """Resume-workspace (reference data/<input>.db analog) and
 observe()-based metrics (OP-A10/A14)."""
 
+import re
+import subprocess
+import sys
+from pathlib import Path
+
 import pytest
 from conftest import jobs_in_group
 
@@ -26,6 +31,48 @@ def test_observe_metrics_no_extra_jobs(spark):
     metrics = result.harvest_metrics()
     assert [m.rows_out for m in metrics] == [50, 50]
     assert metrics[1].errors == 0
+
+
+PRUNED_JOIN_YAML = """
+filters:
+  - name: half
+    actionType: sql
+    code: SELECT * FROM df WHERE doc_id % 2 = 0
+  - name: empty_join
+    actionType: sql
+    code: >-
+      SELECT a.doc_id, a.k FROM df a
+      JOIN (SELECT k FROM df WHERE doc_id < 0) b ON a.k = b.k
+"""
+
+
+def test_pruned_observation_reads_none(spark):
+    """A join whose other side comes out empty is replaced, by adaptive
+    execution, with an empty relation, and the upstream stage's
+    counter goes with it: its count is unknown (None), not 0, and
+    harvesting does not raise."""
+    df = spark.range(2000).selectExpr("id AS doc_id", "id % 7 AS k")
+    result = Pipeline(spark, load_config_str(PRUNED_JOIN_YAML)).run(df)
+    result.df.write.format("noop").mode("overwrite").save()
+    assert [m.rows_out for m in result.harvest_metrics()] == [None, 0]
+
+
+def test_cli_summary_prints_a_pruned_count(tmp_path):
+    """The CLI's per-stage summary (``-i``) prints the unknown count as
+    None and the run succeeds."""
+    src = tmp_path / "in.csv"
+    src.write_text("doc_id,k\n" + "".join(f"{i},{i % 7}\n" for i in range(2000)))
+    config = tmp_path / "pruned.yml"
+    config.write_text(PRUNED_JOIN_YAML)
+    proc = subprocess.run(
+        [sys.executable, "-m", "filefilter_spark", str(src), str(config),
+         str(tmp_path / "out.csv"), "-i"],
+        capture_output=True, text=True, timeout=300,
+        cwd=str(Path(__file__).resolve().parent.parent),
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    assert re.search(r"stage half +sql +rows=None ", proc.stderr)
+    assert re.search(r"stage empty_join +sql +rows=0 ", proc.stderr)
 
 
 def test_resume_skips_unchanged_stages(spark, tmp_path):

@@ -24,6 +24,9 @@
   extra Spark jobs: in ``streaming/jobs.py`` no ``.persist(`` or
   ``.count()`` sits inside an ``if`` whose test names ``on_batch`` or
   ``stats``. A figure rides ``observe()`` on a frame the batch writes.
+- A CSV source is typed from a head sample: ``inferSchema`` appears
+  only in ``io._csv_head_schema``, so no read scans a whole file to
+  infer its types.
 """
 
 import ast
@@ -159,4 +162,20 @@ def test_ingest_figures_cost_no_jobs():
             and (call.func.attr == "persist"
                  or (call.func.attr == "count" and not call.args))
         ]
+    assert not offenders, "\n".join(offenders)
+
+
+def test_infer_schema_only_in_the_head_sample():
+    helper = next(
+        node for node in ast.parse((PKG / "io.py").read_text()).body
+        if isinstance(node, ast.FunctionDef) and node.name == "_csv_head_schema"
+    )
+    offenders = []
+    for path in sorted(PKG.rglob("*.py")):
+        rel = path.relative_to(PKG).as_posix()
+        for n, line in enumerate(path.read_text().splitlines(), 1):
+            if "inferSchema" in line and not (
+                rel == "io.py" and helper.lineno <= n <= helper.end_lineno
+            ):
+                offenders.append(f"{rel}:{n}: {line.strip()}")
     assert not offenders, "\n".join(offenders)
