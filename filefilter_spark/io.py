@@ -19,8 +19,8 @@ task; small-files compaction is ``ops.layout.compact_files``.
 Scale notes: a CSV source without an explicit ``schema`` is typed from
 its first :data:`CSV_SAMPLE_LINES` lines, as DuckDB's ``read_csv``
 sniffer types it, so no read scans the whole file for its types; the
-file is then read with that schema in ``FAILFAST`` mode, and a later
-value that does not fit raises. Parquet needs no inference. S3 paths
+file is then read with that schema in ``FAILFAST`` mode, every field
+parsed, and a later value that does not fit raises. Parquet needs no inference. S3 paths
 map to ``s3a://`` (hadoop-aws connector; credential chain is the
 standard AWS provider chain, same idea as DuckDB httpfs).
 """
@@ -247,8 +247,10 @@ def read_input(
     with them in ``FAILFAST`` mode, as DuckDB reads: a later value that
     does not fit its column's type, or a row with fewer or more fields
     than the header, raises ``MALFORMED_RECORD_IN_PARSING`` when the
-    rows are read, never a silent null, padding or truncation. Pass
-    ``schema`` to type a file whose head is not representative.
+    rows are read, never a silent null, padding or truncation. The
+    check holds for a read of some of the columns and for a ``count()``
+    too: the read parses every field of each row. Pass ``schema`` to
+    type a file whose head is not representative.
     """
     from filefilter_spark.config import normalize_delimiter
 
@@ -298,7 +300,9 @@ def read_input(
         options = {"header": True, "sep": sep}
         if schema is None:
             schema = _csv_head_schema(spark, p, options)
-            options["mode"] = "FAILFAST"
+            # Without column pruning every field is parsed, so a read of
+            # some columns, or a count, checks the row's shape too.
+            options.update(mode="FAILFAST", columnPruning=False)
         df = spark.read.options(**options).schema(schema).csv(p)
     else:
         raise ValueError(f"unsupported input extension {ext!r} for {path!r}")

@@ -1580,36 +1580,29 @@ def remove_duplicate_spans(
 def _fuzzy_tagged(base: DataFrame, q: int) -> DataFrame:
     """Tagged positional q-grams for the Ed-Join family: one row per
     (string, gram occurrence) — ``(doc struct(id, l), t struct(g,
-    occ))`` over strings >= q chars. Tags (the occurrence# of a gram
-    within its string) make prefix overlap a multiset intersection;
-    computed in-row (O(L²) over a short key field). ``doc`` carries
-    (id, length) ONLY — the 16 B/entry posting bound — and the gram
-    array is let-bound once (the text._bind pattern, in SQL). Shared
-    by :func:`edit_distance_pairs` (batch) and
-    :func:`build_fuzzy_index` / the streaming ingest, so every tier
-    tags identically."""
-    return base.filter(F.length("s") >= q).select(
-        F.struct(
-            F.col("id"),
-            F.length("s").alias("l"),
-        ).alias("doc"),
-        F.expr(
-            "explode(get(transform("
-            f"array(transform(sequence(1, length(s) - {q - 1}),"
-            f" i -> substring(s, i, {q}))),"
-            " gs -> transform(gs, (x, i) -> struct(x AS g,"
-            " size(filter(slice(gs, 1, i), y -> y = x)) AS occ,"
-            " i AS pos))), 0))"
-        ).alias("t"),
+    occ, pos))`` over strings >= q chars. Tags (the occurrence# of a
+    gram within its string) make prefix overlap a multiset
+    intersection; computed in-row (O(L²) over a short key field).
+    ``doc`` carries (id, length) ONLY — the 16 B/entry posting bound —
+    and the gram array is let-bound once (the text._bind pattern, in
+    SQL). Every tier (batch op, index build, streaming ingest) tags
+    through here."""
+    return base.where(f"length(s) >= {q}").selectExpr(
+        "struct(id, length(s) AS l) AS doc",
+        "explode(get(transform("
+        f"array(transform(sequence(1, length(s) - {q - 1}),"
+        f" i -> substring(s, i, {q}))),"
+        " gs -> transform(gs, (x, i) -> struct(x AS g,"
+        " size(filter(slice(gs, 1, i), y -> y = x)) AS occ,"
+        " i AS pos))), 0)) AS t",
     )
 
 
 def _reduced_prefix_expr(gl_col: str, q: int, d: int) -> str:
     """SQL expression: the LOCATION-REDUCED rarest-first prefix of a
-    collected gram list (r17, VERDICT r16 #4 — Ed-Join's
-    location-based mismatch filtering, Xiao et al. VLDB'08, applied as
-    prefix REDUCTION so it cuts candidates at the source instead of
-    adding a pair-count exchange, the r16 count-filter lesson).
+    collected gram list — Ed-Join's location-based mismatch filtering
+    (Xiao et al. VLDB'08), applied as prefix REDUCTION so it cuts
+    candidates at the source instead of adding a pair-count exchange.
 
     ``gl_col`` is an ``array<struct<gdf, g, occ, pos>>`` (rarity key
     first, so ``array_sort`` is the global (gdf, g, occ) order;
@@ -1644,8 +1637,8 @@ def _reduced_prefix_expr(gl_col: str, q: int, d: int) -> str:
     # whose occurrence-#1 entry exists; 0-based occ), typically empty
     # for short keys — O(1) per candidate.
     #
-    # Two stronger, measured-and-REJECTED variants (r17 ledger): the
-    # EXACT interval-stabbing cover (prefix mean 10.63 vs this form's
+    # Two stronger variants were measured and rejected: the EXACT
+    # interval-stabbing cover (prefix mean 10.63 vs this form's
     # 11.93 at sf0.1 q=3 d=4; candidate rows 8.5M vs 10.3M vs the
     # unreduced 12.3M) costs ~250 interpreted-HOF lambda calls per doc
     # vs ~70 here, and the stage it runs in is AQE-coalesced to one
@@ -1688,6 +1681,83 @@ def _reduced_prefix_expr(gl_col: str, q: int, d: int) -> str:
 FUZZY_UNSEEN_GDF = 1 << 62
 
 
+def _fuzzy_prefix(
+    tagged: DataFrame, rarity: DataFrame, q: int, d: int
+) -> DataFrame:
+    """The prefix entries ``(g, occ, gdf, id, l)`` of each tagged
+    string: its grams sorted rarest-first under ``rarity`` = (g, occ,
+    gdf), location-reduced by :func:`_reduced_prefix_expr` (at most
+    ``q*d+1`` per string). A gram missing from ``rarity`` orders on
+    :data:`FUZZY_UNSEEN_GDF`; when ``rarity`` is the doc-frequency of
+    ``tagged`` itself, every gram is present and the left join keeps
+    every row an inner join would."""
+    return (
+        tagged.join(rarity, F.expr("t.g = g AND t.occ = occ"), "left")
+        .groupBy("doc")
+        .agg(F.expr(
+            f"collect_list(struct(coalesce(gdf, {FUZZY_UNSEEN_GDF}) AS gdf,"
+            " t.g AS g, t.occ AS occ, t.pos AS pos)) AS gl"
+        ))
+        .selectExpr("doc", f"explode({_reduced_prefix_expr('gl', q, d)}) AS t")
+        .selectExpr("t.g AS g", "t.occ AS occ", "t.gdf AS gdf",
+                    "doc.id AS id", "doc.l AS l")
+    )
+
+
+def _posting_pairs(
+    postings: DataFrame, q: int, d: int, pair_kernel=_chunked_list_pairs
+) -> DataFrame:
+    """Candidate pairs ``(id_a, id_b)``, ``id_a < id_b``, of prefix
+    entries ``(g, occ, id, l)`` that share a tagged gram, within the
+    length band and with the longer side >= ``q*(d+1)`` chars (pairs
+    of shorter strings go through :func:`_banded_short_pairs`).
+    ``pair_kernel`` emits each list's pairs: the chunked kernel, or
+    the in-place one for a micro-batch's lists. Posting lists carry
+    (id, l) only, never the strings. A pair colliding on several
+    grams comes out once per gram; the dedup runs after the verify."""
+    grouped = (
+        postings.groupBy("g", "occ")
+        .agg(F.expr("collect_list(struct(id, l)) AS ds"))
+        .where("size(ds) >= 2")
+    )
+    return (
+        pair_kernel(grouped, "ds")
+        .where(f"abs(a.l - b.l) <= {d} AND greatest(a.l, b.l) >= {q * (d + 1)}")
+        .selectExpr("a.id AS id_a", "b.id AS id_b")
+    )
+
+
+def _banded_short_pairs(lhs: DataFrame, rhs: DataFrame, d: int) -> DataFrame:
+    """Pairs ``(id_a, id_b)``, ``id_a < id_b``, of an ``lhs`` and an
+    ``rhs`` string (both (id, l, ...)) whose lengths differ by at most
+    ``d``: a bucket join where ``lhs`` explodes buckets [l, l+d]. The
+    strict (l, id) order keeps each pair once, so joining a set with
+    itself yields each unordered pair once, and the two length
+    directions of two disjoint sets are disjoint."""
+    return (
+        lhs.selectExpr("id AS id_l", "l AS l_l",
+                       f"explode(sequence(l, l + {d})) AS bkt")
+        .join(rhs.selectExpr("id AS id_r", "l AS l_r", "l AS bkt"), "bkt")
+        .where("l_l < l_r OR (l_l = l_r AND id_l < id_r)")
+        .selectExpr("least(id_l, id_r) AS id_a", "greatest(id_l, id_r) AS id_b")
+    )
+
+
+def _verify_pairs(cands: DataFrame, strings: DataFrame, d: int) -> DataFrame:
+    """The distinct ``(id_a, id_b, dist)`` of the candidate pairs whose
+    strings (from ``strings`` = (id, s, ...)) lie within edit distance
+    ``d``: the thresholded ``levenshtein`` stops early past ``d``
+    (returning -1). ``dist`` is a function of the pair, so the dedup
+    of repeated candidates runs here, on the true pairs only."""
+    return (
+        cands.join(strings.selectExpr("id AS id_a", "s AS s_a"), "id_a")
+        .join(strings.selectExpr("id AS id_b", "s AS s_b"), "id_b")
+        .select("id_a", "id_b", F.levenshtein("s_a", "s_b", d).alias("dist"))
+        .where("dist >= 0")
+        .distinct()
+    )
+
+
 def write_fuzzy_gram_layout(
     base: DataFrame,
     gramdf_path: str,
@@ -1696,50 +1766,23 @@ def write_fuzzy_gram_layout(
     max_dist: int,
     n_buckets: int,
 ) -> None:
-    """Write the ORDER-DEPENDENT half of the Ed-Join layout — the
-    frozen rarity table (``gramdf``) and the rarest-first prefix
-    postings (location-reduced, at most ``q·d+1`` entries per string —
-    see :func:`_reduced_prefix_expr`) derived under it — for ``base``
-    = (id, s). Shared by
+    """Write the ORDER-DEPENDENT half of the Ed-Join layout for
+    ``base`` = (id, s): the frozen rarity table (``gramdf``) and the
+    :func:`_fuzzy_prefix` postings derived under it. Shared by
     :func:`build_fuzzy_index` (fresh build) and the streaming loop's
     in-place rebuild (``fuzzy_index_stream_ingest
     rebuild_on_drift``), which regenerates EXACTLY these two dirs
     from the strings store when accumulated vocabulary drift has
     degraded prefix selectivity: strings/short/pairs are
     order-INDEPENDENT and survive a rebuild untouched."""
-    d = int(max_dist)
     tagged = _fuzzy_tagged(base, q)
-    gram_df = tagged.groupBy("t.g", "t.occ").agg(
-        F.count(F.lit(1)).alias("gdf")
-    )
-    gram_df.withColumn(
-        "bucket",
-        F.pmod(F.xxhash64("g", "occ"), F.lit(int(n_buckets))),
-    ).repartition("bucket").sortWithinPartitions("g", "occ").write.mode(
-        "overwrite"
-    ).partitionBy("bucket").parquet(gramdf_path)
-
-    prefix = (
-        tagged.join(gram_df, [F.expr("t.g = g"), F.expr("t.occ = occ")])
-        .groupBy("doc")
-        .agg(F.collect_list(
-            F.struct("gdf", "t.g", "t.occ", "t.pos")
-        ).alias("gl"))
-        .select(
-            "doc",
-            F.explode(
-                F.expr(_reduced_prefix_expr("gl", int(q), d))
-            ).alias("t"),
-        )
-        .select(
-            F.col("t.g").alias("g"),
-            F.col("t.occ").alias("occ"),
-            F.col("doc.id").alias("id"),
-            F.col("doc.l").alias("l"),
-        )
-    )
-    prefix.withColumn(
-        "bucket", F.pmod(F.xxhash64("g", "occ"), F.lit(int(n_buckets)))
+    rarity = tagged.groupBy("t.g", "t.occ").agg(F.expr("count(1) AS gdf"))
+    bucket = f"pmod(xxhash64(g, occ), {int(n_buckets)}) AS bucket"
+    rarity.selectExpr("*", bucket).repartition("bucket").sortWithinPartitions(
+        "g", "occ"
+    ).write.mode("overwrite").partitionBy("bucket").parquet(gramdf_path)
+    _fuzzy_prefix(tagged, rarity, int(q), int(max_dist)).selectExpr(
+        "g", "occ", "id", "l", bucket
     ).repartition("bucket").sortWithinPartitions("g", "occ", "id").write.mode(
         "overwrite"
     ).partitionBy("bucket").parquet(postings_path)
@@ -1752,64 +1795,19 @@ def _pairs_from_fuzzy_layout(
     q: int,
     d: int,
 ) -> DataFrame:
-    """The exact distance-``d`` pair set derived from a persisted
-    Ed-Join layout (r17): ``postings`` = the prefix entries
-    (g, occ, id, l), ``strings`` = (id, s, ...), ``short`` = the
-    length < ``q*(d+1)`` subset (id, s, l). Mirrors
-    :func:`edit_distance_pairs`' two blocks exactly — posting-list
-    grouping through the shared pair kernel + the length-banded short
-    join — so the result equals the batch op over the indexed corpus
-    bit-for-bit, without re-tagging it."""
-    T = q * (d + 1)
-    grouped = (
-        postings.select("g", "occ", F.struct("id", "l").alias("doc"))
-        .groupBy("g", "occ")
-        .agg(F.collect_list("doc").alias("ds"))
-        .filter(F.size("ds") >= 2)
+    """The exact distance-``d`` pair set of an Ed-Join layout:
+    ``postings`` = the prefix entries (g, occ, id, l), ``strings`` =
+    (id, s, ...), ``short`` = the length < ``q*(d+1)`` subset
+    (id, l, ...). Posting-list collisions through the shared pair
+    kernel plus the length-banded short block, then the verify. The
+    two blocks are disjoint (the long block needs greatest(l) >=
+    q*(d+1), the short block both sides below it).
+    :func:`edit_distance_pairs` runs it over in-memory frames,
+    :func:`build_fuzzy_index` over the layout it just wrote."""
+    cands = _posting_pairs(postings, q, d).unionByName(
+        _banded_short_pairs(short, short, d)
     )
-    long_pairs = (
-        _chunked_list_pairs(grouped, "ds")
-        .filter(
-            (F.abs(F.expr("a.l") - F.expr("b.l")) <= d)
-            & (F.greatest(F.expr("a.l"), F.expr("b.l")) >= T)
-        )
-        .select(F.expr("a.id").alias("id_a"), F.expr("b.id").alias("id_b"))
-    )
-    lhs = short.select(
-        F.col("id").alias("id_l"), F.col("l").alias("l_l"),
-        F.explode(
-            F.sequence(F.col("l"), F.col("l") + F.lit(d))
-        ).alias("bucket"),
-    )
-    rhs = short.select(
-        F.col("id").alias("id_r"), F.col("l").alias("l_r"),
-        F.col("l").alias("bucket"),
-    )
-    short_pairs = (
-        lhs.join(rhs, "bucket")
-        .filter(
-            (F.col("l_l") < F.col("l_r"))
-            | ((F.col("l_l") == F.col("l_r")) & (F.col("id_l") < F.col("id_r")))
-        )
-        .select(
-            F.least("id_l", "id_r").alias("id_a"),
-            F.greatest("id_l", "id_r").alias("id_b"),
-        )
-    )
-    sides = strings.select("id", "s")
-    both = (
-        long_pairs.unionByName(short_pairs)
-        .join(sides.select(F.col("id").alias("id_a"),
-                           F.col("s").alias("s_a")), "id_a")
-        .join(sides.select(F.col("id").alias("id_b"),
-                           F.col("s").alias("s_b")), "id_b")
-    )
-    return (
-        both.withColumn("dist", F.levenshtein("s_a", "s_b", d))
-        .filter(F.col("dist") >= 0)
-        .select("id_a", "id_b", F.col("dist").cast("int").alias("dist"))
-        .distinct()
-    )
+    return _verify_pairs(cands, strings, d)
 
 
 def build_fuzzy_index(
@@ -1846,10 +1844,11 @@ def build_fuzzy_index(
       read whole by every batch's length-banded short block (tiny for
       real key fields — bounded by the short-string count).
     * ``pairs/``    — the EXACT pair set (id_a, id_b, dist) over
-      everything indexed so far; the build seeds it with
-      :func:`edit_distance_pairs` over ``df`` and the ingest appends
-      each batch's new pairs, so after any drain it equals the batch
-      op over the union corpus bit-for-bit.
+      everything indexed so far; the build derives it from the layout
+      it just wrote (:func:`_pairs_from_fuzzy_layout`, the batch op's
+      own pair step) and the ingest appends each batch's new pairs, so
+      after any drain it equals :func:`edit_distance_pairs` over the
+      union corpus bit-for-bit.
     * ``stats/``    — one row (q, max_dist, n_buckets, n_strings,
       applied_keys): the probe/ingest parameters (a contradicting
       caller value raises — the n_buckets sidecar contract) and the
@@ -1873,7 +1872,7 @@ def build_fuzzy_index(
     # finished layout, so it stays sequential.
     from concurrent.futures import ThreadPoolExecutor
 
-    strings = base.select("id", "s", F.length("s").alias("l"))
+    strings = base.selectExpr("id", "s", "length(s) AS l")
 
     def _w_gram_postings() -> None:
         write_fuzzy_gram_layout(
@@ -1881,14 +1880,14 @@ def build_fuzzy_index(
         )
 
     def _w_strings() -> None:
-        strings.withColumn(
-            "sbucket", F.pmod(F.xxhash64("id"), F.lit(int(n_buckets)))
+        strings.selectExpr(
+            "*", f"pmod(xxhash64(id), {int(n_buckets)}) AS sbucket"
         ).repartition("sbucket").sortWithinPartitions("id").write.mode(
             "overwrite"
         ).partitionBy("sbucket").parquet(f"{path}/strings")
 
     def _w_short() -> None:
-        strings.filter(F.col("l") < T).write.mode("overwrite").parquet(
+        strings.where(f"l < {T}").write.mode("overwrite").parquet(
             f"{path}/short"
         )
 
@@ -1897,25 +1896,16 @@ def build_fuzzy_index(
                     pool.submit(_w_short)]:
             fut.result()
 
-    # Seed pairs/ FROM the just-written layout instead of re-running
-    # edit_distance_pairs from scratch (r17, guide §1.2 — the batch op
-    # would re-tag the corpus, re-aggregate gram doc-frequencies and
-    # re-derive every prefix, all of which write_fuzzy_gram_layout
-    # just computed; the postings read-back IS that chain's output).
-    # Result-identical by construction: postings rows are exactly the
-    # (g, occ, id, l) prefix entries the inline chain groups, and the
-    # short/strings stores are exactly its short block and verify
-    # sides, so the derived pair set equals edit_distance_pairs over
-    # df bit-for-bit (pinned by the ingest-vs-batch equality tests).
-    pairs = _pairs_from_fuzzy_layout(
+    # The postings read-back is the prefix chain's output, so seeding
+    # pairs/ from the layout skips re-tagging the corpus.
+    _pairs_from_fuzzy_layout(
         spark.read.parquet(f"{path}/postings"),
         spark.read.parquet(f"{path}/strings"),
         spark.read.parquet(f"{path}/short"),
         q=int(q), d=d,
-    ).select(
-        F.col("id_a").cast("long"), F.col("id_b").cast("long"), "dist"
-    )
-    pairs.write.mode("overwrite").parquet(f"{path}/pairs")
+    ).selectExpr(
+        "CAST(id_a AS BIGINT) AS id_a", "CAST(id_b AS BIGINT) AS id_b", "dist"
+    ).write.mode("overwrite").parquet(f"{path}/pairs")
 
     spark.createDataFrame(
         [(int(q), d, int(n_buckets), int(n_strings), [])],
@@ -1930,7 +1920,6 @@ def edit_distance_pairs(
     str_col: str = "s",
     max_dist: int = 2,
     q: int = 2,
-    max_gram_freq: int | None = None,
 ) -> DataFrame:
     """All pairs (id_a < id_b) with levenshtein(s_a, s_b) <= max_dist —
     fuzzy self-join for SHORT key fields (titles, URLs, product names).
@@ -1946,15 +1935,13 @@ def edit_distance_pairs(
     under any fixed global order — so only those grams are indexed,
     ordered rarest-first (global (doc-freq, gram, occ) order) so the
     indexed grams are the most selective ones. Locations sharpen the
-    bound further (r17 — Ed-Join's location-based mismatch filter as
-    prefix REDUCTION, :func:`_reduced_prefix_expr`): the prefix stops
-    early once it holds ``d+1`` unique-content grams with pairwise
-    disjoint spans — destroying all of them needs more than ``d``
-    edits — cutting posting lists, and the quadratic candidate stage
-    they feed, at the source (measured 12.3M → 10.3M candidate rows
-    at sf0.1), still lossless. This bounds
-    every string's posting contribution at q*d+1 REGARDLESS of text
-    entropy:
+    bound further (Ed-Join's location-based mismatch filter as prefix
+    REDUCTION, :func:`_reduced_prefix_expr`): the prefix stops early
+    once it holds ``d+1`` unique-content grams with pairwise disjoint
+    spans — destroying all of them needs more than ``d`` edits —
+    cutting posting lists, and the quadratic candidate stage they
+    feed, at the source, still lossless. This bounds every string's
+    posting contribution at q*d+1 REGARDLESS of text entropy:
     ubiquitous grams ("http", "the ") sort last and never enter the
     index unless a string has nothing rarer. Survivors get a
     thresholded early-exit ``levenshtein(l, r, d)`` verify (returns -1
@@ -1975,135 +1962,27 @@ def edit_distance_pairs(
     Posting lists carry (id, length) ONLY — 16 bytes per entry, never
     the strings — so even a degenerate identical-prefix cluster of
     100k strings buffers ~1.6 MB in one aggregation row, not the
-    ~10 MB+ a string-carrying list would (VERDICT r13 #2); the strings
-    come back via an id join for the verify step
-    (candidate-count-bounded, AQE broadcasts the small side).
-
-    ``max_gram_freq`` (default None = EXACT, matching the registered
-    oracle) optionally caps the residual posting lists like
-    ``token_jaccard_pairs``'s ``max_doc_freq`` — dropping a list can
-    only lose candidate pairs (a documented recall tradeoff, for
-    corpora where a bounded buffer matters more than completeness),
-    never admit false ones.
+    ~10 MB+ a string-carrying list would; the strings come back via an
+    id join for the verify step (candidate-count-bounded, AQE
+    broadcasts the small side).
 
     Shape: one in-row tagging pass, one narrow (gram, occ) doc-freq
     aggregate joined back (AQE broadcasts it when small), one per-doc
-    regroup to take the rarest-(q*d+1) slice in-row, one posting-list
-    grouping, chunked pair generation, a string join, verify, then
-    pair dedup on the survivors. Every shuffle carries ids + lengths
-    (plus the candidate pairs' strings at the verify), never
-    documents.
+    regroup to take the reduced prefix in-row (:func:`_fuzzy_prefix`),
+    then the index's own pair step over these in-memory frames
+    (:func:`_pairs_from_fuzzy_layout`): posting-list grouping, chunked
+    pair generation, a string join, verify, then pair dedup on the
+    survivors. Every shuffle carries ids + lengths (plus the candidate
+    pairs' strings at the verify), never documents.
     """
     d, T = int(max_dist), q * (int(max_dist) + 1)
     base = df.select(
         F.col(id_col).alias("id"), F.col(str_col).alias("s")
     ).filter(F.col("s").isNotNull())
-
-    # --- block 1: rarity-ordered prefix index over strings >= q chars --
     tagged = _fuzzy_tagged(base, q)
-    # global rarity: doc-frequency per tagged gram — a narrow
-    # map-combined aggregate over (g, occ) pairs, broadcast back.
-    gram_df = tagged.groupBy("t.g", "t.occ").agg(
-        F.count(F.lit(1)).alias("gdf")
-    )
-    # per-string rarest-first prefix: regroup the tagged grams, sort by
-    # (gdf, g, occ) in-row, keep the first q*d+1 — location-REDUCED
-    # (r17): stop earlier once the unique grams taken so far already
-    # need > d edits to destroy (see _reduced_prefix_expr).
-    prefix = (
-        tagged.join(gram_df, [F.expr("t.g = g"), F.expr("t.occ = occ")])
-        .groupBy("doc")
-        .agg(F.collect_list(
-            F.struct("gdf", "t.g", "t.occ", "t.pos")
-        ).alias("gl"))
-        .select(
-            "doc",
-            F.explode(
-                F.expr(_reduced_prefix_expr("gl", q, d))
-            ).alias("t"),
-        )
-    )
-    grouped = prefix.groupBy("t.g", "t.occ").agg(
-        F.collect_list("doc").alias("ds")
-    )
-    grouped = grouped.filter(F.size("ds") >= 2)
-    if max_gram_freq is not None:
-        grouped = grouped.filter(F.size("ds") <= max_gram_freq)
-    # Pair generation: the shared chunked kernel (r16 — replaces two
-    # chained explodes + pair distinct; see _chunked_list_pairs). A
-    # pair may still collide on several prefix grams; dedup now happens
-    # AFTER the verify, on the surviving (true) pairs, because the
-    # pre-verify distinct was the single most expensive exchange of the
-    # whole operator (measured at sf0.1: 5.9M candidate rows through
-    # the distinct for 431 survivors — 7.3 s of the 7.8 s total) while
-    # the duplicate rate is prefix-bounded (≤ q·d+1 collisions/pair;
-    # measured 1.13× here) and the re-verified duplicates are
-    # early-exit thresholded levenshteins. Strings attach by broadcast
-    # when the corpus side is small; at sizes past broadcast the extra
-    # join input is the measured duplicate rate, traded against
-    # removing a full candidate-set exchange (guide §2.3/§2.4).
-    long_pairs = (
-        _chunked_list_pairs(grouped, "ds")
-        .filter(
-            (F.abs(F.expr("a.l") - F.expr("b.l")) <= d)
-            & (F.greatest(F.expr("a.l"), F.expr("b.l")) >= T)
-        )
-        .select(
-            F.expr("a.id").alias("id_a"),
-            F.expr("b.id").alias("id_b"),
-        )
-    )
-
-    # --- block 2: both sides shorter than T ---------------------------
-    # length-banded bucket join: the shorter side explodes buckets
-    # [len, len+d]; equal lengths canonicalize by id. Bounded by the
-    # short-string subset, which is tiny for real key fields.
-    short = base.filter(F.length("s") < T)
-    lhs = short.select(
-        F.col("id").alias("id_l"), F.col("s").alias("s_l"),
-        F.explode(
-            F.sequence(F.length("s"), F.length("s") + F.lit(d))
-        ).alias("bucket"),
-    )
-    rhs = short.select(
-        F.col("id").alias("id_r"), F.col("s").alias("s_r"),
-        F.length("s").alias("bucket"),
-    )
-    short_pairs = (
-        lhs.join(rhs, "bucket")
-        .filter(
-            (F.length("s_l") < F.length("s_r"))
-            | ((F.length("s_l") == F.length("s_r")) & (F.col("id_l") < F.col("id_r")))
-        )
-        .select(
-            F.least("id_l", "id_r").alias("id_a"),
-            F.greatest("id_l", "id_r").alias("id_b"),
-        )
-    )
-
-    # strings come back ONLY now, for the surviving candidate pairs
-    # (the two blocks are disjoint — the long block requires
-    # greatest(l) >= T, the short block both < T — so the union has no
-    # cross-block duplicates); cost is bounded by the candidate count,
-    # and AQE broadcasts base when it is small
-    both = long_pairs.unionByName(short_pairs)
-    both = (
-        both.join(
-            base.select(F.col("id").alias("id_a"), F.col("s").alias("s_a")),
-            "id_a",
-        )
-        .join(
-            base.select(F.col("id").alias("id_b"), F.col("s").alias("s_b")),
-            "id_b",
-        )
-    )
-    return (
-        both.withColumn("dist", F.levenshtein("s_a", "s_b", d))
-        .filter(F.col("dist") >= 0)
-        .select("id_a", "id_b", F.col("dist").cast("int").alias("dist"))
-        # pair dedup on SURVIVORS (dist is a pure function of the pair,
-        # so duplicates are exact row duplicates): candidate-count
-        # exchanges shrink to true-pair-count exchanges — see the
-        # candidate-generation comment above
-        .distinct()
+    rarity = tagged.groupBy("t.g", "t.occ").agg(F.expr("count(1) AS gdf"))
+    strings = base.selectExpr("id", "s", "length(s) AS l")
+    return _pairs_from_fuzzy_layout(
+        _fuzzy_prefix(tagged, rarity, q, d), strings,
+        strings.where(f"l < {T}"), q, d,
     )

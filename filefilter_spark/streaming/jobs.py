@@ -1677,11 +1677,16 @@ def fuzzy_index_stream_ingest(
     * every pair has a later-arriving side, and that side's batch
       generates it: new-vs-store collisions ride a broadcast join of
       the batch's prefix against the bucketed postings, new-vs-new
-      reuses the batch op's self-group, and the short block
-      length-bands the batch's short strings against the (tiny) short
-      store in both length directions;
+      groups the batch's own prefix (the batch op's posting pairs,
+      with the in-place pair kernel), and the short block length-bands
+      the batch's short strings against the (tiny) short store in both
+      length directions;
     * the verify is exact, so losing NO candidates means the pair set
       is the batch op's, bit for bit.
+
+    The prefix builder, the pair blocks and the verify are the batch
+    op's own (``ops.dedup._fuzzy_prefix``, ``_posting_pairs``,
+    ``_banded_short_pairs``, ``_verify_pairs``).
 
     ``on_batch`` (opt-in) receives {batch_id, n_in, n_new_pairs,
     n_candidates, n_buckets_probed, applied, unseen_gram_frac, action,
@@ -1715,8 +1720,12 @@ def fuzzy_index_stream_ingest(
 
     from filefilter_spark.ops.dedup import (
         FUZZY_UNSEEN_GDF,
+        _banded_short_pairs,
+        _fuzzy_prefix,
         _fuzzy_tagged,
-        _reduced_prefix_expr,
+        _inplace_list_pairs,
+        _posting_pairs,
+        _verify_pairs,
         write_fuzzy_gram_layout,
     )
 
@@ -1755,70 +1764,19 @@ def fuzzy_index_stream_ingest(
             _swap_dirs(spark, f"{index_path}/gramdf", tmp_g, batch_id)
             _swap_dirs(spark, post_dir, tmp_p, batch_id)
 
-    def banded(lhs: DataFrame, rhs: DataFrame) -> DataFrame:
-        # short-string pairs within d by length banding, canonicalized
-        # by strict (len, id) so the two length directions are disjoint
-        # (module docstring of edit_distance_pairs)
-        L = lhs.select(
-            F.col("id").alias("id_l"),
-            F.col("l").alias("l_l"),
-            F.explode(F.sequence(F.col("l"), F.col("l") + F.lit(d))).alias(
-                "bkt"
-            ),
-        )
-        R = rhs.select(
-            F.col("id").alias("id_r"),
-            F.col("l").alias("l_r"),
-            F.col("l").alias("bkt"),
-        )
-        return (
-            L.join(R, "bkt")
-            .filter(
-                (F.col("l_l") < F.col("l_r"))
-                | ((F.col("l_l") == F.col("l_r"))
-                   & (F.col("id_l") < F.col("id_r")))
-            )
-            .select(
-                F.least("id_l", "id_r").alias("id_a"),
-                F.greatest("id_l", "id_r").alias("id_b"),
-            )
-        )
-
     def apply(base_b: DataFrame, n_in: int, info: dict) -> None:
         """Probe + verify one non-empty batch and append its stores."""
-        gramdf = spark.read.parquet(f"{index_path}/gramdf")
+        # The batch's prefix under the frozen order (unseen grams on the
+        # sentinel), so build- and probe-side prefixes share one total
+        # order.
         prefix_full = (
-            _fuzzy_tagged(base_b, q)
-            .join(
-                gramdf.select("g", "occ", "gdf"),
-                [F.expr("t.g = g"), F.expr("t.occ = occ")],
-                "left",
+            _fuzzy_prefix(
+                _fuzzy_tagged(base_b, q),
+                spark.read.parquet(f"{index_path}/gramdf").select(
+                    "g", "occ", "gdf"),
+                q, d,
             )
-            .groupBy("doc")
-            .agg(F.collect_list(F.struct(
-                F.coalesce(F.col("gdf"), F.lit(FUZZY_UNSEEN_GDF)).alias("gdf"),
-                F.col("t.g").alias("g"),
-                F.col("t.occ").alias("occ"),
-                F.col("t.pos").alias("pos"),
-            )).alias("gl"))
-            .select(
-                "doc",
-                # location-reduced prefix — the batch op's lossless cut;
-                # the frozen order (unseen grams on the sentinel) stays
-                # the sort key, so build- and probe-side prefixes share
-                # one total order
-                F.explode(F.expr(_reduced_prefix_expr("gl", q, d))).alias("t"),
-            )
-            .select(
-                F.col("t.g").alias("g"),
-                F.col("t.occ").alias("occ"),
-                F.col("t.gdf").alias("gdf"),
-                F.col("doc.id").alias("id"),
-                F.col("doc.l").alias("l"),
-            )
-            .withColumn(
-                "bucket", F.pmod(F.xxhash64("g", "occ"), F.lit(n_buckets))
-            )
+            .selectExpr("*", f"pmod(xxhash64(g, occ), {n_buckets}) AS bucket")
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
         # The batch's figures are observed on the store appends that
@@ -1842,77 +1800,33 @@ def fuzzy_index_stream_ingest(
             if len(bkts) < n_buckets:
                 store_post = store_post.filter(F.col("bucket").isin(bkts))
         cross = (
-            F.broadcast(prefix_b.select(
-                "bucket", "g", "occ",
-                F.col("id").alias("id_n"),
-                F.col("l").alias("l_n"),
-            ))
+            F.broadcast(prefix_b.selectExpr(
+                "bucket", "g", "occ", "id AS id_n", "l AS l_n"))
             .join(store_post, ["bucket", "g", "occ"])
-            .filter(
-                (F.col("id") != F.col("id_n"))
-                & (F.abs(F.col("l") - F.col("l_n")) <= d)
-                & (F.greatest(F.col("l"), F.col("l_n")) >= T)
-            )
-            .select(
-                F.least("id", "id_n").alias("id_a"),
-                F.greatest("id", "id_n").alias("id_b"),
-            )
+            .where(f"id != id_n AND abs(l - l_n) <= {d}"
+                   f" AND greatest(l, l_n) >= {T}")
+            .selectExpr("least(id, id_n) AS id_a", "greatest(id, id_n) AS id_b")
         )
-        within = (
-            prefix_b.groupBy("g", "occ")
-            .agg(F.collect_list(F.struct("id", "l")).alias("ds"))
-            .filter(F.size("ds") >= 2)
-            .select(F.explode("ds").alias("a"), "ds")
-            .select("a", F.explode("ds").alias("b"))
-            .filter(
-                F.expr("a.id < b.id")
-                & (F.abs(F.expr("a.l - b.l")) <= d)
-                & (F.greatest(F.expr("a.l"), F.expr("b.l")) >= T)
-            )
-            .select(F.expr("a.id").alias("id_a"), F.expr("b.id").alias("id_b"))
-        )
-        short_b = base_b.select(
-            "id", "s", F.length("s").alias("l")
-        ).filter(F.col("l") < T)
+        within = _posting_pairs(prefix_b, q, d, _inplace_list_pairs)
+        strings_b = base_b.selectExpr("id", "s", "length(s) AS l")
+        short_b = strings_b.where(f"l < {T}")
         short_store = spark.read.parquet(short_dir)
-        short_pairs = banded(
-            short_b, short_store.unionByName(short_b)
-        ).unionByName(banded(short_store, short_b))
+        short_pairs = _banded_short_pairs(
+            short_b, short_store.unionByName(short_b), d
+        ).unionByName(_banded_short_pairs(short_store, short_b, d))
         # The three blocks are pairwise disjoint by construction (cross:
-        # one side stored; within: both new; short: both below T), and
-        # dist is a pure function of the pair, so the dedup runs AFTER
-        # the verify — only same-block multi-gram collisions collapse.
+        # one side stored; within: both new; short: both below T), so
+        # only same-block multi-gram collisions repeat a pair, and the
+        # verify's dedup collapses them.
         cands = cross.unionByName(within).unionByName(short_pairs).observe(
             cand_rows, F.count(F.lit(1)).alias("n_candidates")
         )
-        strings_all = (
-            spark.read.parquet(strings_dir)
-            .select("id", "s")
-            .unionByName(base_b.select("id", "s"))
-        )
-        verified = (
-            cands.join(
-                strings_all.select(
-                    F.col("id").alias("id_a"), F.col("s").alias("s_a")
-                ),
-                "id_a",
-            )
-            .join(
-                strings_all.select(
-                    F.col("id").alias("id_b"), F.col("s").alias("s_b")
-                ),
-                "id_b",
-            )
-            .withColumn("dist", F.levenshtein("s_a", "s_b", d))
-            .filter(F.col("dist") >= 0)
-            .select(
-                F.col("id_a").cast("long"),
-                F.col("id_b").cast("long"),
-                F.col("dist").cast("int").alias("dist"),
-            )
-            .distinct()
-            .observe(new_pairs, F.count(F.lit(1)).alias("n_new_pairs"))
-        )
+        strings_all = spark.read.parquet(strings_dir).select(
+            "id", "s").unionByName(base_b)
+        verified = _verify_pairs(cands, strings_all, d).selectExpr(
+            "CAST(id_a AS BIGINT) AS id_a", "CAST(id_b AS BIGINT) AS id_b",
+            "dist",
+        ).observe(new_pairs, F.count(F.lit(1)).alias("n_new_pairs"))
         writes = [
             lambda: verified.write.mode("append").parquet(pairs_dir),
             lambda: prefix_full.observe(unseen, F.avg(
@@ -1920,10 +1834,8 @@ def fuzzy_index_stream_ingest(
             ).alias("f")).drop("gdf").repartition("bucket").write.partitionBy(
                 "bucket"
             ).mode("append").parquet(post_dir),
-            lambda: base_b.select(
-                "id", "s", F.length("s").alias("l")
-            ).withColumn(
-                "sbucket", F.pmod(F.xxhash64("id"), F.lit(n_buckets))
+            lambda: strings_b.selectExpr(
+                "*", f"pmod(xxhash64(id), {n_buckets}) AS sbucket"
             ).repartition("sbucket").write.partitionBy(
                 "sbucket"
             ).mode("append").parquet(strings_dir),

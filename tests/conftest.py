@@ -96,7 +96,6 @@ SLOW_TESTS = {
     "test_lsh_cosine_pairs_recall_vs_exact",
     "test_safesplit_minhash_method_matches_jaccard",
     "test_gopher_repetition_char_fractions",
-    "test_edit_distance_pairs_hot_gram_cap_trades_recall_only",
     "test_lloyd_kmeans_deterministic_and_correct",
     "test_semantic_dedup_recall_vs_exact",
     "test_quality_scores_match_model_coefficients",

@@ -27,6 +27,11 @@
 - A CSV source is typed from a head sample: ``inferSchema`` appears
   only in ``io._csv_head_schema``, so no read scans a whole file to
   infer its types.
+- The Ed-Join fuzzy join has one prefix builder and one verify: in
+  ``ops/`` and ``streaming/``, ``_reduced_prefix_expr`` is called from
+  one place (``ops.dedup._fuzzy_prefix``) and ``F.levenshtein`` from
+  one place (``ops.dedup._verify_pairs``), so the batch operator, the
+  index build and the streaming ingest cannot drift apart.
 """
 
 import ast
@@ -179,3 +184,24 @@ def test_infer_schema_only_in_the_head_sample():
             ):
                 offenders.append(f"{rel}:{n}: {line.strip()}")
     assert not offenders, "\n".join(offenders)
+
+
+def test_one_fuzzy_prefix_builder_and_one_verify():
+    calls = {"_reduced_prefix_expr": [], "F.levenshtein": []}
+    for sub in ("ops", "streaming"):
+        for path in sorted((PKG / sub).rglob("*.py")):
+            rel = path.relative_to(PKG).as_posix()
+            for node in ast.walk(ast.parse(path.read_text())):
+                if not isinstance(node, ast.Call):
+                    continue
+                f = node.func
+                name = (
+                    f.id if isinstance(f, ast.Name)
+                    else f"{f.value.id}.{f.attr}"
+                    if isinstance(f, ast.Attribute) and isinstance(f.value, ast.Name)
+                    else None
+                )
+                if name in calls:
+                    calls[name].append(f"{rel}:{node.lineno}")
+    assert {k: len(v) for k, v in calls.items()} == {
+        "_reduced_prefix_expr": 1, "F.levenshtein": 1}, calls
