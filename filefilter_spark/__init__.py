@@ -12,9 +12,11 @@ Reference behavior citations in docstrings point into the reference
 repo (e.g. ``filefilter.py:306``) — see SURVEY.md for the full map.
 """
 
-from filefilter_spark.session import get_spark
+from filefilter_spark.session import _refresh_zip_dirs_lazily, get_spark
 from filefilter_spark.pipeline import Pipeline
 from filefilter_spark.config import PipelineConfig, load_config
+
+_refresh_zip_dirs_lazily()
 
 __all__ = ["get_spark", "Pipeline", "PipelineConfig", "load_config"]
 

@@ -36,7 +36,15 @@ pass per output column to build the result. The stage stays on
 ``mapInPandas``: ``to_dict`` measured 1.7–3.2 µs/row against 3.8–5.7
 for Arrow input's ``RecordBatch.to_pylist`` (4 cores). At 100 TB
 this parallelizes linearly across executors with zero shuffle (narrow
-dependency).
+dependency). Each task also pays a fixed cost in the Python worker
+before its first row. Part of it is the worker's per-task
+``importlib.invalidate_caches()``, which before CPython 3.13 re-reads
+``pyspark.zip``'s directory once per zip importer (about 0.2 s of CPU
+per task on CPython 3.11, 4-core x86). Importing this package in a
+worker (unpickling the stage's function does) installs
+``session._refresh_zip_dirs_lazily``, which re-reads an archive only
+when it changed, so only a worker's first task pays that part. On
+3.13+ the stock call only drops the cache, and nothing is installed.
 """
 
 from __future__ import annotations

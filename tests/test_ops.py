@@ -3759,7 +3759,7 @@ def test_edit_distance_pairs_posting_lists_carry_ids_only(spark):
     so a degenerate identical-prefix cluster bounds each aggregation
     row at 16 bytes/entry (VERDICT r13 #2): one cluster collapsing
     every string into a single posting list still verifies EXACTLY
-    (default max_gram_freq=None keeps the op exact, matching the
+    (no posting list is capped, so the op stays exact, matching the
     registered oracle), and the collect_list input schema is pinned
     string-free."""
     from filefilter_spark.ops.dedup import edit_distance_pairs
