@@ -42,7 +42,10 @@ Plan shapes:
   persisted ``partitionBy(cell)`` so a probe is a partition-pruned
   read of ``n_probe/n_lists`` of the 32×-compressed table; optional
   residual encoding, content-addressed sampled fit, exact rerank of
-  the ADC shortlist.
+  the ADC shortlist. :func:`ivfpq_batch_topk` runs N queries through
+  the same probe (:func:`_ivfpq_probe`: probe order, ADC tables,
+  auto-refine sizing) and rerank distance; each function keeps only
+  its own top-k step.
 - :func:`ivfpq_encode_batch` — assign + encode against a FROZEN
   index: the incremental-append / streaming-ingest path (grid-exact,
   batch-arrival-invariant codes).
@@ -54,7 +57,7 @@ import math
 from typing import Mapping, Sequence
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 
 from filefilter_spark.ops.cluster import (
     _assign,
@@ -75,6 +78,12 @@ def _on_grid(col: str | Column, scale: float) -> Column:
     return F.transform(
         quantize_to_grid(col, scale), lambda v: v / F.lit(float(scale))
     )
+
+
+def _grid_values(vec: Sequence[float], scale: float) -> list[float]:
+    """A driver-side vector on the grid: Python floats equal to what
+    :func:`_on_grid` computes in the engine."""
+    return [float(math.floor(x * scale + 0.5)) / scale for x in vec]
 
 
 def _chunked(qd: Column, m: int, sub: int) -> Column:
@@ -224,7 +233,7 @@ def adc_lut(
     bit-identical to the engine-side recipe."""
     m = len(codebooks)
     sub = len(codebooks[0][0])
-    qq = [float(math.floor(x * scale + 0.5)) / scale for x in query]
+    qq = _grid_values(query, scale)
     lut = []
     for s in range(m):
         row = []
@@ -340,7 +349,7 @@ def build_ivfpq_index(
     then build one LUT per probed cell from the QUERY's residual —
     :func:`ivfpq_topk` handles both variants. Measured on the
     synthetic corpus (near-isotropic by construction; sf0.01, single
-    query, r11): ADC-only recall 0.3 → 0.4, refine-recall 0.9 → 0.8 —
+    query): ADC-only recall 0.3 → 0.4, refine-recall 0.9 → 0.8 —
     a wash here; the variant exists for real-world anisotropic
     embeddings where residual energy ≪ vector energy.
 
@@ -349,7 +358,7 @@ def build_ivfpq_index(
     (the fit is a k×d-bounded iterative job; assignment and encode
     remain single-pass projections over the full data). The sample is
     content-addressed, so the index stays bit-reproducible. Measured
-    caveat (sf0.01 synthetic corpus, single query, r11): sampling
+    caveat (sf0.01 synthetic corpus, single query): sampling
     CHANGES the deterministic seed set (k lowest ids of the sample),
     and shallow Lloyd runs are seed-sensitive — single-query
     refine-recall read 0.9 full-fit vs 0.4 at fit_frac=0.5 with the
@@ -430,10 +439,7 @@ def _residual_frame(
     past ``CENT_LITERAL_MAX_TERMS`` a one-row broadcast join — the
     same doubles either way."""
     assigned = _assign_cells(df, centroids, vec_col, id_col, scale)
-    cents_q = [
-        [float(math.floor(v * scale + 0.5)) / scale for v in c]
-        for c in centroids
-    ]
+    cents_q = [_grid_values(c, scale) for c in centroids]
     joined, cent_col = _cent_source(df.join(assigned, id_col), cents_q)
     res = F.zip_with(
         _on_grid(vec_col, scale),
@@ -501,9 +507,126 @@ def _auto_refine(probed_pop: int, topk: int) -> int:
     measured 0.9-recall points — refine=5 at the sf0.01 index
     (~500 probed rows) and refine=50 at 128k vectors / n_probe 4
     of 64 lists (~8k probed rows)."""
-    if topk <= 0:
-        raise ValueError("ivfpq_topk: topk must be > 0")
     return max(5, -(-int(probed_pop) // (16 * int(topk))))
+
+
+def _probe_cells(
+    qq: Sequence[float], centroids: Sequence[Sequence[float]], n_probe: int
+) -> list[int]:
+    """The ``n_probe`` cells nearest a grid-quantized query: squared L2
+    as a fixed left-to-right Python-float fold (the metric ADC
+    approximates, so the probe ranking and the fine ranking agree),
+    ties → lowest cell id."""
+
+    def sqd(cent: Sequence[float]) -> float:
+        acc = 0.0
+        for a, b in zip(qq, cent):
+            dv = a - b
+            acc = acc + dv * dv
+        return acc
+
+    return sorted(
+        range(len(centroids)), key=lambda i: (sqd(centroids[i]), i)
+    )[:n_probe]
+
+
+def _adc_column(
+    query: Sequence[float],
+    qq: Sequence[float],
+    probe: Sequence[int],
+    codebooks: Codebooks,
+    centroids: Sequence[Sequence[float]],
+    codes_col: str,
+    scale: float,
+    residual: bool,
+) -> Column:
+    """One query's ADC distance over its probed rows. Residual codes
+    (``build_ivfpq_index(residual=True)``) approximate x −
+    centroid[cell], so each probed cell needs its OWN LUT built from
+    the query's residual against that cell (Jégou §V: one LUT per
+    probed list); n_probe is small, so a when-chain over the probed
+    cells keeps it one codegen pass."""
+    if not residual:
+        return _adc_expr(codes_col, adc_lut(query, codebooks, scale))
+    adc = None
+    for c in probe:
+        qr = [a - b for a, b in zip(qq, _grid_values(centroids[c], scale))]
+        term = _adc_expr(codes_col, adc_lut(qr, codebooks, scale))
+        cond = F.col("cell") == c
+        adc = F.when(cond, term) if adc is None else adc.when(cond, term)
+    return adc
+
+
+def _ivfpq_probe(
+    indexed: DataFrame,
+    codebooks: Codebooks,
+    centroids: Sequence[Sequence[float]],
+    queries: Mapping[str, Sequence[float]],
+    topk: int,
+    n_probe: int,
+    refine: int | None,
+    vectors: DataFrame | None,
+    id_col: str,
+    codes_col: str,
+    scale: float,
+    residual: bool,
+    cell_counts: Mapping[int, int] | None,
+    dedup_ids: bool,
+    caller: str,
+) -> tuple[dict, dict, dict, dict, DataFrame]:
+    """Everything an IVF×PQ search needs before its top-k step, per
+    query: the grid-quantized query, its probe cells, its ADC column
+    and its shortlist size — plus ONE read of ``indexed`` pruned to the
+    union of the probed cells. Returns ``(grid, probes, adcs, sizes,
+    pruned)``, the first four keyed by query id.
+
+    ``refine=None`` sizes each query's shortlist from ITS probed
+    population (:func:`_auto_refine`): summed from ``cell_counts``
+    driver-side when given (zero Spark jobs), else from one grouped
+    count over the probed cells."""
+    if topk <= 0:
+        raise ValueError(f"{caller}: topk must be > 0")
+    if vectors is None and (refine is None or refine > 0):
+        raise ValueError(
+            f"{caller}: refine={refine} requires `vectors` for the exact "
+            "re-rank tier; pass refine=0 explicitly for the ADC-only "
+            "shortlist (measured recall ~0.3-0.5)"
+        )
+    grid = {q: _grid_values(vec, scale) for q, vec in queries.items()}
+    probes = {q: _probe_cells(v, centroids, n_probe) for q, v in grid.items()}
+    cells = sorted({c for cs in probes.values() for c in cs})
+    probed = indexed.filter(F.col("cell").isin(cells))
+    if refine is None:
+        counts = cell_counts
+        if counts is None:
+            counts = ivfpq_cell_counts(probed)
+        sizes = {
+            q: _auto_refine(sum(int(counts.get(c, 0)) for c in cs), topk)
+            * topk
+            for q, cs in probes.items()
+        }
+    else:
+        n = topk if refine <= 0 else int(refine) * topk
+        sizes = {q: n for q in queries}
+    adcs = {
+        q: _adc_column(
+            vec, grid[q], probes[q], codebooks, centroids, codes_col, scale,
+            residual,
+        )
+        for q, vec in queries.items()
+    }
+    # dedup_ids: the replay shield for stream-grown layouts, on the
+    # PRUNED read (a vector's codes are grid-deterministic, so keeping
+    # any one copy is exact)
+    pruned = probed.dropDuplicates([id_col]) if dedup_ids else probed
+    return grid, probes, adcs, sizes, pruned
+
+
+def _dist2(vec_col: str, qq: Sequence[float], scale: float) -> Column:
+    """The exact rerank distance: squared L2 between each row's
+    grid-quantized vector and the grid-quantized query, the same
+    deterministic fold the codebooks argue over."""
+    return _sq_dist(_on_grid(vec_col, scale), double_array_lit(qq))
 
 
 def ivfpq_topk(
@@ -526,20 +649,18 @@ def ivfpq_topk(
     """ANN top-k over an IVF×PQ index: score the query against the
     driver-side centroid table (n_lists rows — tiny), probe the
     ``n_probe`` nearest cells, ADC-rank ONLY the probed cells' codes.
+    Probe order, ADC, shortlist sizing and the pruned read are
+    :func:`_ivfpq_probe`'s, shared with :func:`ivfpq_batch_topk`; this
+    function is the one-query case with its own top-k step. The cell
+    filter compiles to partition pruning when ``indexed`` is persisted
+    partitioned by ``cell``; top-k is TakeOrderedAndProject as in
+    :func:`pq_adc_topk`.
 
     ``dedup_ids=True`` drops duplicate id rows on the PRUNED read —
     the replay shield for stream-grown layouts
-    (``ann_index_stream_ingest`` appends are at-least-once; a vector's
-    codes are grid-deterministic, so keeping any one copy is exact).
-    Cost is bounded by the probed cells, the same contract as
+    (``ann_index_stream_ingest`` appends are at-least-once). Cost is
+    bounded by the probed cells, the same contract as
     ``bm25_topk_indexed``'s (doc, term) dedup.
-
-    Coarse probe order is squared L2 on the grid-quantized query
-    (fixed left-to-right Python-float folds, ties → lowest cell id) —
-    the same metric ADC approximates, so the probe ranking and the
-    fine ranking agree. The cell filter compiles to partition pruning
-    when ``indexed`` is persisted partitioned by ``cell``; top-k is
-    TakeOrderedAndProject as in :func:`pq_adc_topk`.
 
     ``refine > 0`` adds the standard exact re-rank tier (Jégou §V.A):
     ADC shortlists ``refine·topk`` candidates, then the TRUE squared
@@ -551,90 +672,43 @@ def ivfpq_topk(
     (id-pruned scan), so the composed cost stays
     probed-cells-ADC + O(k) exact distances at any corpus size.
 
-    ``refine=None`` (default, r13) **auto-sizes from the measured
-    law**: at corpus scale the shortlist is the recall lever, not the
-    probe count — measured on the ×8–×64 fixtures (SCALING.md
-    "recall@10 vs n_probe/refine"), recall FALLS with extra probed
-    cells at fixed refine (coarse-ADC near-misses crowd true
-    neighbors out of a fixed-size shortlist) and ``refine=50``
-    restores 0.9 at 128k vectors where ``refine=5`` reads 0.47. Auto
-    mode counts the probed cells' rows (one partition-pruned count —
-    n_probe/n_lists of the table's metadata, no full scan) and sets
+    ``refine=None`` (default) **auto-sizes from the measured law**: at
+    corpus scale the shortlist is the recall lever, not the probe
+    count — measured on the ×8–×64 fixtures (SCALING.md "recall@10 vs
+    n_probe/refine"), recall FALLS with extra probed cells at fixed
+    refine (coarse-ADC near-misses crowd true neighbors out of a
+    fixed-size shortlist) and ``refine=50`` restores 0.9 at 128k
+    vectors where ``refine=5`` reads 0.47. Auto mode counts the probed
+    cells' rows (one partition-pruned grouped count) and sets
     ``refine = max(5, ceil(probed/16/topk))``, which reproduces both
     measured 0.9-recall points (:func:`_auto_refine`); it requires
-    ``vectors``. A user probing a grown index thus keeps ~0.9 recall
-    without reading SCALING.md. ``refine=0`` stays available as the
-    EXPLICIT ADC-only opt-in (candidate generation feeding a
-    downstream ranker) — an informed choice, so it does not warn.
+    ``vectors``. ``refine=0`` stays available as the EXPLICIT ADC-only
+    opt-in (candidate generation feeding a downstream ranker) — an
+    informed choice, so it does not warn.
 
-    ``cell_counts`` (r13): the :func:`ivfpq_cell_counts` histogram,
-    computed once per (re)build/ingest cycle. When provided, auto
-    mode sums the probed cells' entries driver-side — the per-query
-    sizing job disappears entirely, the right shape for an index
-    probed thousands of times between rebuilds. Cells absent from
-    the mapping count 0 (an empty cell has no file to count)."""
-    qq = [float(math.floor(x * scale + 0.5)) / scale for x in query]
-
-    def sqd(cent: Sequence[float]) -> float:
-        acc = 0.0
-        for a, b in zip(qq, cent):
-            dv = a - b
-            acc = acc + dv * dv
-        return acc
-
-    probe = sorted(
-        range(len(centroids)), key=lambda i: (sqd(centroids[i]), i)
-    )[:n_probe]
-    if refine is None:
-        if vectors is None:
-            raise ValueError(
-                "ivfpq_topk: refine=None (auto) requires `vectors` for "
-                "the exact re-rank tier; pass refine=0 explicitly for "
-                "the ADC-only shortlist (measured recall ~0.3-0.5)"
-            )
-        if cell_counts is not None:
-            probed_pop = sum(int(cell_counts.get(c, 0)) for c in probe)
-        else:
-            probed_pop = indexed.filter(F.col("cell").isin(probe)).count()
-        refine = _auto_refine(probed_pop, topk)
-    if residual:
-        # residual codes (build_ivfpq_index residual=True): the code
-        # approximates x − centroid[cell], so each probed cell needs
-        # its OWN LUT built from the query's residual against that
-        # cell (Jégou §V: one LUT per probed list). n_probe is small —
-        # a when-chain over probed cells keeps it one codegen pass.
-        adc = None
-        for c in probe:
-            cq = [
-                float(math.floor(v * scale + 0.5)) / scale
-                for v in centroids[c]
-            ]
-            qr = [a - b for a, b in zip(qq, cq)]
-            term = _adc_expr(codes_col, adc_lut(qr, codebooks, scale))
-            cond = F.col("cell") == c
-            adc = F.when(cond, term) if adc is None else adc.when(cond, term)
-    else:
-        adc = _adc_expr(codes_col, adc_lut(query, codebooks, scale))
-    shortlist_n = topk if refine <= 0 else refine * topk
-    pruned = indexed.filter(F.col("cell").isin(probe))
-    if dedup_ids:
-        pruned = pruned.dropDuplicates([id_col])
-    shortlist = (
-        pruned
-        .select(F.col(id_col), adc.alias("adc"))
-        .orderBy("adc", id_col)
-        .limit(shortlist_n)
+    ``cell_counts``: the :func:`ivfpq_cell_counts` histogram, computed
+    once per (re)build/ingest cycle. When provided, auto mode sums the
+    probed cells' entries driver-side — the per-query sizing job
+    disappears, the right shape for an index probed thousands of times
+    between rebuilds. Cells absent from the mapping count 0 (an empty
+    cell has no file to count)."""
+    grid, _, adcs, sizes, pruned = _ivfpq_probe(
+        indexed, codebooks, centroids, {"": query}, topk, n_probe, refine,
+        vectors, id_col, codes_col, scale, residual, cell_counts,
+        dedup_ids, "ivfpq_topk",
     )
-    if refine <= 0:
+    shortlist = (
+        pruned.select(F.col(id_col), adcs[""].alias("adc"))
+        .orderBy("adc", id_col)
+        .limit(sizes[""])
+    )
+    if refine is not None and refine <= 0:
         return shortlist
-    if vectors is None:
-        raise ValueError("ivfpq_topk: refine > 0 requires `vectors`")
     # k-bounded collect: refine·topk ids (the shortlist), never data.
     ids = [r[id_col] for r in shortlist.collect()]
-    dist2 = _sq_dist(_on_grid(vec_col, scale), double_array_lit(qq))
     return (
         vectors.filter(F.col(id_col).isin(ids))
-        .select(F.col(id_col), dist2.alias("dist2"))
+        .select(F.col(id_col), _dist2(vec_col, grid[""], scale).alias("dist2"))
         .orderBy("dist2", id_col)
         .limit(topk)
     )
@@ -664,192 +738,82 @@ def ivfpq_batch_topk(
     Returns (q_id, id_col, dist2, rank) — or (q_id, id_col, adc,
     rank) when ``refine=0`` (explicit ADC-only shortlists).
 
-    Shape: every query's probe cells and LUT are computed driver-side
-    from the same tiny centroid table as :func:`ivfpq_topk`; ONE read
-    pruned to the UNION of all probed cells serves every query (each
-    query still scores only its own cells — per-row the array of
-    (q_id, adc, in-probe) structs is built once, exploded, and
-    filtered), per-query shortlists come from a rank-over-window that
-    Spark rewrites to WindowGroupLimit (map-side partial top-k — the
-    shuffle carries at most shortlist·|queries| rows per partition),
-    and the exact re-rank tier reads the UNION of all shortlists' ids
-    in one point-lookup pass before a second per-query rank window.
-    At 100 TB: one pruned codes read + one id-pruned vector read for
-    the WHOLE batch, versus n_queries× of each for a query loop.
-
-    Semantics per query match :func:`ivfpq_topk` exactly: same probe
-    order (grid-quantized L2, ties → lowest cell), same deterministic
-    ADC folds, same auto-refine law (``refine=None`` sizes each
-    query's shortlist from ITS probed population — cell_counts makes
-    that zero Spark jobs), same dist2 ranking with id tiebreaks."""
+    Shape: :func:`_ivfpq_probe` computes every query's probe cells,
+    ADC column and shortlist size driver-side, as for
+    :func:`ivfpq_topk`; ONE read pruned to the UNION of all probed
+    cells serves every query (each query still scores only its own
+    cells — per-row the array of (q_id, adc, in-probe) structs is
+    built once, exploded, and filtered), per-query shortlists come from
+    a rank-over-window that Spark rewrites to WindowGroupLimit
+    (map-side partial top-k — the shuffle carries at most
+    shortlist·|queries| rows per partition), and the exact re-rank tier
+    reads the UNION of all shortlists' ids in one point-lookup pass
+    before a second per-query rank window. At 100 TB: one pruned codes
+    read + one id-pruned vector read for the WHOLE batch, versus
+    n_queries× of each for a query loop. Results per query equal
+    :func:`ivfpq_topk`'s."""
     if not queries:
         raise ValueError("ivfpq_batch_topk: queries must be non-empty")
-    if topk <= 0:
-        raise ValueError("ivfpq_batch_topk: topk must be > 0")
-    if refine is None and vectors is None:
-        raise ValueError(
-            "ivfpq_batch_topk: refine=None (auto) requires `vectors`; "
-            "pass refine=0 explicitly for ADC-only shortlists"
-        )
+    grid, probes, adcs, sizes, pruned = _ivfpq_probe(
+        indexed, codebooks, centroids, queries, topk, n_probe, refine,
+        vectors, id_col, codes_col, scale, residual, cell_counts,
+        dedup_ids, "ivfpq_batch_topk",
+    )
 
-    qids = list(queries)
-    qgrid: dict[str, list[float]] = {}
-    probes: dict[str, list[int]] = {}
-    for q, vec in queries.items():
-        qq = [float(math.floor(x * scale + 0.5)) / scale for x in vec]
-        qgrid[q] = qq
-
-        def sqd(cent: Sequence[float]) -> float:
-            acc = 0.0
-            for a, b in zip(qq, cent):
-                dv = a - b
-                acc = acc + dv * dv
-            return acc
-
-        probes[q] = sorted(
-            range(len(centroids)), key=lambda i: (sqd(centroids[i]), i)
-        )[:n_probe]
-    union_cells = sorted({c for cs in probes.values() for c in cs})
-
-    # per-query shortlist size: auto-refine from each query's probed
-    # population — one n_lists-bounded count job when no histogram is
-    # supplied, zero jobs when it is
-    if refine is None:
-        if cell_counts is None:
-            rows = (
-                indexed.filter(F.col("cell").isin(union_cells))
-                .groupBy("cell")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            )
-            cell_counts = {int(r["cell"]): int(r["n"]) for r in rows}
-        shortlists = {
-            q: _auto_refine(
-                sum(int(cell_counts.get(c, 0)) for c in probes[q]), topk
-            ) * topk
-            for q in qids
-        }
-    else:
-        shortlists = {
-            q: (topk if refine <= 0 else int(refine) * topk) for q in qids
-        }
-
-    def adc_for(q: str) -> Column:
-        if not residual:
-            return _adc_expr(codes_col, adc_lut(queries[q], codebooks, scale))
-        adc = None
-        for c in probes[q]:
-            cq = [
-                float(math.floor(v * scale + 0.5)) / scale
-                for v in centroids[c]
-            ]
-            qr = [a - b for a, b in zip(qgrid[q], cq)]
-            term = _adc_expr(codes_col, adc_lut(qr, codebooks, scale))
-            cond = F.col("cell") == c
-            adc = F.when(cond, term) if adc is None else adc.when(cond, term)
-        return adc
-
-    pruned = indexed.filter(F.col("cell").isin(union_cells))
-    if dedup_ids:
-        pruned = pruned.dropDuplicates([id_col])
-    structs = [
-        F.struct(
-            F.lit(q).alias("q_id"),
-            adc_for(q).alias("adc"),
-            F.col("cell").isin(probes[q]).alias("keep"),
-        )
-        for q in qids
-    ]
-    from pyspark.sql import Window as _W
+    def ranked_per_query(df: DataFrame, score: str) -> DataFrame:
+        w = Window.partitionBy("q_id").orderBy(F.asc(score), F.asc(id_col))
+        return df.withColumn("rank", F.row_number().over(w))
 
     exploded = (
-        pruned.select(F.col(id_col), F.explode(F.array(*structs)).alias("s"))
+        pruned.select(
+            F.col(id_col),
+            F.explode(F.array(*[
+                F.struct(
+                    F.lit(q).alias("q_id"),
+                    adcs[q].alias("adc"),
+                    F.col("cell").isin(probes[q]).alias("keep"),
+                )
+                for q in queries
+            ])).alias("s"),
+        )
         .filter(F.col("s.keep"))
         .select(F.col(id_col), F.col("s.q_id"), F.col("s.adc"))
     )
-    limit_expr = F.lit(max(shortlists.values()))
-    for q in qids:  # per-query limit rides as a when-chain literal
-        limit_expr = F.when(
-            F.col("q_id") == q, F.lit(int(shortlists[q]))
-        ).otherwise(limit_expr)
-    w = _W.partitionBy("q_id").orderBy(F.asc("adc"), F.asc(id_col))
-    shortlist = (
-        exploded.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= limit_expr)
+    limit_expr = F.lit(max(sizes.values()))
+    for q, n in sizes.items():  # per-query limit rides as a when-chain
+        limit_expr = F.when(F.col("q_id") == q, F.lit(n)).otherwise(limit_expr)
+    shortlist = ranked_per_query(exploded, "adc").filter(
+        F.col("rank") <= limit_expr
     )
     if refine is not None and refine <= 0:
         return shortlist.filter(F.col("rank") <= topk).select(
             "q_id", id_col, "adc", "rank"
         )
-    if vectors is None:
-        raise ValueError("ivfpq_batch_topk: refine > 0 requires `vectors`")
     # bounded collect: Σ_q shortlist_q ids, never data
-    short_ids: dict[str, list] = {q: [] for q in qids}
+    short_ids: dict[str, list] = {q: [] for q in queries}
     for r in shortlist.select("q_id", id_col).collect():
         short_ids[r["q_id"]].append(r[id_col])
     union_ids = sorted({i for ids in short_ids.values() for i in ids})
-    qd = _on_grid(vec_col, scale)
-    rerank_structs = []
-    for q in qids:
-        rerank_structs.append(
-            F.struct(
-                F.lit(q).alias("q_id"),
-                _sq_dist(qd, double_array_lit(qgrid[q])).alias("dist2"),
-                F.col(id_col).isin(short_ids[q]).alias("keep"),
-            )
-        )
     reranked = (
         vectors.filter(F.col(id_col).isin(union_ids))
-        .select(F.col(id_col), F.explode(F.array(*rerank_structs)).alias("s"))
+        .select(
+            F.col(id_col),
+            F.explode(F.array(*[
+                F.struct(
+                    F.lit(q).alias("q_id"),
+                    _dist2(vec_col, grid[q], scale).alias("dist2"),
+                    F.col(id_col).isin(short_ids[q]).alias("keep"),
+                )
+                for q in queries
+            ])).alias("s"),
+        )
         .filter(F.col("s.keep"))
         .select(F.col(id_col), F.col("s.q_id"), F.col("s.dist2"))
     )
-    w2 = _W.partitionBy("q_id").orderBy(F.asc("dist2"), F.asc(id_col))
     return (
-        reranked.withColumn("rank", F.row_number().over(w2))
+        ranked_per_query(reranked, "dist2")
         .filter(F.col("rank") <= topk)
         .select("q_id", id_col, "dist2", "rank")
-    )
-
-
-def ann_batch_topk_indexed(
-    spark,
-    path: str,
-    queries: Mapping[str, Sequence[float]],
-    topk: int = 10,
-    n_probe: int | str = 4,
-    refine: int | None = None,
-    vectors: DataFrame | None = None,
-    vec_col: str = "embedding",
-    id_col: str | None = None,
-) -> DataFrame:
-    """:func:`ivfpq_batch_topk` against a persisted
-    :func:`build_ann_index` layout — N queries, ONE partition-pruned
-    codes read over the union of their probed cells, auto-refine sized
-    from the meta sidecar's histogram (zero sizing jobs), replay-safe
-    id dedup on the pruned read. The batch twin of
-    :func:`ann_topk_indexed`, including ``n_probe="auto"`` (the drift
-    policy's widen rule, :func:`auto_n_probe`)."""
-    meta = load_ann_meta(spark, path)
-    _warn_if_stale(meta, path)
-    if n_probe == "auto":
-        n_probe = auto_n_probe(meta)
-    codes = spark.read.parquet(f"{path}/codes")
-    return ivfpq_batch_topk(
-        codes,
-        meta["codebooks"],
-        meta["centroids"],
-        queries,
-        topk=topk,
-        n_probe=n_probe,
-        refine=refine,
-        vectors=vectors,
-        vec_col=vec_col,
-        id_col=id_col or meta["id_col"],
-        scale=meta["scale"],
-        residual=meta["residual"],
-        cell_counts=meta["cell_counts"],
-        dedup_ids=True,
     )
 
 
@@ -869,8 +833,8 @@ def build_ann_index(
     seeding: str = "id",
 ) -> None:
     """Persist a self-contained IVF×PQ index layout — the ANN twin of
-    :func:`filefilter_spark.ops.retrieval.build_text_index` (r14: the
-    zero-code index lifecycle the ``annindex`` actionType exposes).
+    :func:`filefilter_spark.ops.retrieval.build_text_index`, and the
+    index lifecycle the ``annindex`` actionType exposes.
 
     Layout under ``path``:
 
@@ -970,13 +934,13 @@ def load_ann_meta(spark, path: str) -> dict:
 
 
 # Drift-policy thresholds, calibrated in SCALING.md "ANN drift
-# signal" (r15): on the measured recall curve a
+# signal": on the measured recall curve a
 # same-distribution ingest sits at TV ≈ 0.1–0.2 with flat recall, a
 # shifted-distribution ingest reads TV ≥ ~0.45 with recall sagging at
 # the default probe width, and recall at 2× ingested mass is rebuild
 # territory regardless of TV (the frozen model never saw half the
 # corpus). "Widen" = raise n_probe (recall is probe-bound under a
-# frozen partial fit — the measured r14 law); "rebuild" = refit the
+# frozen partial fit, as measured); "rebuild" = refit the
 # model, which restores the built≈ingested baseline and resets the
 # signal.
 DRIFT_TV_WIDEN = 0.30
@@ -994,7 +958,7 @@ def ann_index_drift(meta: Mapping) -> dict:
     distribution, per-cell arrival rates match the build histogram and
     probe recall holds; when the corpus drifts, mass lands in cells
     the model under-represents and recall decays silently (measured —
-    SCALING.md "ANN index maintenance", r14). This computes how far
+    SCALING.md "ANN drift signal"). This computes how far
     the INGESTED mass diverges from the BUILT mass:
 
     * ``tv_distance`` — total-variation distance between the
@@ -1064,8 +1028,8 @@ def auto_n_probe(meta: Mapping, base: int = 4) -> int:
     rule (``ann_index_drift``): ``base`` cells on a healthy index, 2×
     under ``widen_probe``, 3× under ``rebuild`` (capped at n_lists) —
     the multipliers reproduce the measured recovery points (probe 6→12
-    restored 0.5→0.8 recall on the r14 drifted partial fit; the r15
-    drift probe's shifted scenario held 0.94 at the widened width
+    restored 0.5→0.8 recall on a drifted partial fit; the drift
+    probe's shifted scenario held 0.94 at the widened width
     while the signal demanded a rebuild). Widening is a stopgap that
     pays probe cost proportional to the drifted mass — the rebuild
     recommendation still stands (and still warns)."""
@@ -1090,6 +1054,30 @@ def _warn_if_stale(meta: Mapping, path: str) -> None:
             "recommended action=%s — see SCALING.md 'ANN drift signal'",
             path, d["tv_distance"], d["ingested_frac"], d["action"],
         )
+
+
+def _ann_probe_args(
+    spark, path: str, n_probe: int | str, id_col: str | None
+) -> tuple[DataFrame, dict]:
+    """The codes table of a :func:`build_ann_index` layout and the
+    :func:`ivfpq_topk` / :func:`ivfpq_batch_topk` keyword arguments
+    that probe it: the meta sidecar's model and cell histogram (so
+    auto-refine sizing runs zero jobs), ``n_probe="auto"`` resolved by
+    the drift policy's widen rule (:func:`auto_n_probe`), and the
+    replay-safe id dedup on the pruned read. Warns once when the
+    layout is stale."""
+    meta = load_ann_meta(spark, path)
+    _warn_if_stale(meta, path)
+    return spark.read.parquet(f"{path}/codes"), dict(
+        codebooks=meta["codebooks"],
+        centroids=meta["centroids"],
+        n_probe=auto_n_probe(meta) if n_probe == "auto" else n_probe,
+        id_col=id_col or meta["id_col"],
+        scale=meta["scale"],
+        residual=meta["residual"],
+        cell_counts=meta["cell_counts"],
+        dedup_ids=True,
+    )
 
 
 def ann_topk_indexed(
@@ -1118,24 +1106,31 @@ def ann_topk_indexed(
     (:func:`auto_n_probe`): a healthy index probes the default 4
     cells; a drifted one widens 2-3× from the sidecar's own signal —
     zero extra jobs, and the rebuild recommendation still warns."""
-    meta = load_ann_meta(spark, path)
-    _warn_if_stale(meta, path)
-    if n_probe == "auto":
-        n_probe = auto_n_probe(meta)
-    codes = spark.read.parquet(f"{path}/codes")
+    codes, kw = _ann_probe_args(spark, path, n_probe, id_col)
     return ivfpq_topk(
-        codes,
-        meta["codebooks"],
-        meta["centroids"],
-        query,
-        topk=topk,
-        n_probe=n_probe,
-        refine=refine,
-        vectors=vectors,
-        vec_col=vec_col,
-        id_col=id_col or meta["id_col"],
-        scale=meta["scale"],
-        residual=meta["residual"],
-        cell_counts=meta["cell_counts"],
-        dedup_ids=True,
+        codes, query=query, topk=topk, refine=refine, vectors=vectors,
+        vec_col=vec_col, **kw,
+    )
+
+
+def ann_batch_topk_indexed(
+    spark,
+    path: str,
+    queries: Mapping[str, Sequence[float]],
+    topk: int = 10,
+    n_probe: int | str = 4,
+    refine: int | None = None,
+    vectors: DataFrame | None = None,
+    vec_col: str = "embedding",
+    id_col: str | None = None,
+) -> DataFrame:
+    """:func:`ivfpq_batch_topk` against a persisted
+    :func:`build_ann_index` layout — N queries, ONE partition-pruned
+    codes read over the union of their probed cells, with the same
+    sidecar-driven arguments as :func:`ann_topk_indexed`
+    (:func:`_ann_probe_args`), ``n_probe="auto"`` included."""
+    codes, kw = _ann_probe_args(spark, path, n_probe, id_col)
+    return ivfpq_batch_topk(
+        codes, queries=queries, topk=topk, refine=refine, vectors=vectors,
+        vec_col=vec_col, **kw,
     )

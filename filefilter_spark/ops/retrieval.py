@@ -8,18 +8,25 @@ reciprocal-rank fusion of keyword + embedding rankings (the standard
 hybrid-retrieval shape for dataset curation: find-docs-like-this with
 both lexical and semantic evidence).
 
-Spark-first design, both operators:
+Spark-first design:
 
-* ``bm25_topk`` is TWO corpus passes and ZERO wide shuffles. The query
-  term list is tiny and rides into both passes as literals (never a
-  join): pass 1 computes per-doc (dl, tf per term) IN-ROW — no explode,
-  ``F.size(F.filter(tokens, t == term))`` per term — and folds them
-  through one map-combined global aggregate into a single stats row
-  (N, Σdl, df per term). The driver turns that row into idf literals;
-  pass 2 scores each doc as a pure projection (whole-stage codegen,
-  fixed left-to-right term order) and takes top-k via
-  TakeOrderedAndProject — per-partition heaps, no global sort. At
-  100 TB: two scans, one single-row fan-in, k rows to the driver.
+* Every BM25 search, single or batch, scan or indexed, is one scorer
+  plus a top-k step. The scorer turns a batch of term queries into one
+  ``qs`` column per document — an array of (q_id, bm25) structs, one
+  per query — and a single-query search is the one-query batch.
+  The scan scorer (:func:`_scan_scores`) is TWO corpus passes and ZERO
+  wide shuffles: the query terms ride in as literals (never a join);
+  pass 1 is :func:`bm25_corpus_stats`, one map-combined global
+  aggregate over in-row per-term hits into a single stats row (N, Σdl,
+  df per union term) that the driver turns into idf literals; pass 2
+  is a pure projection that tokenizes once, computes tf once per union
+  term and sums each query's terms in its own fixed order. The indexed
+  scorer (:func:`_indexed_scores`) reads the same figures from a
+  :func:`build_text_index` layout instead of scanning the corpus.
+* The single-query top-k reads element 0 of ``qs`` in-row and takes
+  top-k through TakeOrderedAndProject — per-partition heaps, no global
+  sort, no explode. The batch top-k explodes ``qs`` and ranks through
+  a per-query window that Spark rewrites to WindowGroupLimit.
 * ``rrf_fuse`` joins two SMALL ranked lists (top-n each) — a
   broadcast-sized full outer join, never a corpus-scale operation.
 
@@ -35,7 +42,7 @@ from __future__ import annotations
 
 import math
 from dataclasses import dataclass
-from typing import Sequence
+from typing import Callable, Mapping, Sequence
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
@@ -51,40 +58,45 @@ def _per_term_tf(tok: Column, term: str) -> Column:
 
 def _normalize_terms(query_terms: Sequence[str], lowercase: bool) -> list[str]:
     """Lowercase (when asked) then DEDUPE preserving first-occurrence
-    order. Every retrieval entry point normalizes through here so a
-    duplicated query term ('spark spark') scores identically on the
-    scan, batch, and indexed paths: without the dedupe the scan path
-    would sum the term's contribution once per occurrence while the
-    indexed path's (doc, term) postings count it once — divergent
-    top-k membership from user YAML (ADVICE r13). BM25's classic
-    per-term form treats the query as a term SET; the dedupe makes
-    that the contract everywhere."""
-    normed = [t.lower() for t in query_terms] if lowercase else list(query_terms)
-    seen: set[str] = set()
-    out: list[str] = []
-    for t in normed:
-        if t not in seen:
-            seen.add(t)
-            out.append(t)
-    return out
+    order. BM25's classic per-term form treats the query as a term SET:
+    a duplicated term ('spark spark') counts once, which is also what
+    the indexed path's unique (doc, term) postings give."""
+    normed = [t.lower() for t in query_terms] if lowercase else query_terms
+    return list(dict.fromkeys(normed))
+
+
+def _query_terms(
+    queries: Mapping[str, Sequence[str]], lowercase: bool, caller: str
+) -> tuple[dict[str, list[str]], list[str]]:
+    """Each query's normalized term list, and the UNION of them in
+    first-occurrence order — the one term list that stats, the tf array
+    and the indexed pivot are built over."""
+    if not queries:
+        raise ValueError(f"{caller}: queries must be non-empty")
+    per_query = {
+        q: _normalize_terms(ts, lowercase) for q, ts in queries.items()
+    }
+    for q, ts in per_query.items():
+        if not ts:
+            raise ValueError(f"{caller}: query {q!r} has no terms")
+    union = _normalize_terms(
+        [t for ts in per_query.values() for t in ts], False
+    )
+    return per_query, union
 
 
 @dataclass(frozen=True)
 class Bm25Stats:
-    """:func:`bm25_corpus_stats` result. Iterates as the legacy
-    ``(n, avgdl, dfs)`` triple; additionally carries the NORMALIZED
-    term list the dfs were computed for, so :func:`bm25_topk` can
-    verify a precomputed stats object actually belongs to the query
-    (a same-length df list from a different term list would silently
-    produce wrong idf weights — ADVICE r13)."""
+    """:func:`bm25_corpus_stats` result: N, avgdl, and one df per term
+    of ``terms``, the NORMALIZED term list the dfs were computed for —
+    so :func:`bm25_topk` can check term for term that a precomputed
+    stats object belongs to the query (a same-length df list from a
+    different term list would silently produce wrong idf weights)."""
 
     n: int
     avgdl: float
     dfs: list[int]
     terms: tuple[str, ...]
-
-    def __iter__(self):
-        return iter((self.n, self.avgdl, self.dfs))
 
 
 def bm25_corpus_stats(
@@ -136,6 +148,111 @@ def bm25_idf(n: int, df_t: int) -> float:
     return math.log(1.0 + (n - df_t + 0.5) / (df_t + 0.5))
 
 
+def _bm25_term(
+    idf: Column, tf: Column, dl: Column, avgdl: float, k1: float, b: float
+) -> Column:
+    """One term's contribution, idf · tf·(k1+1) / (tf + k1·(1 − b +
+    b·dl/avgdl)), in the operand order the DuckDB oracle spells out."""
+    norm = F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * dl / F.lit(avgdl))
+    return idf * ((tf * F.lit(k1 + 1.0)) / (tf + norm))
+
+
+def _query_scores(
+    per_query: Mapping[str, list[str]], term_score: Callable[[str], Column]
+) -> Column:
+    """``qs``: array of (q_id, bm25) structs in query order — each
+    query's term scores summed left to right in ITS term order from an
+    exact 0.0, then rounded to 6dp. The fixed order keeps a score on a
+    rounding boundary from flipping between the scan and indexed paths
+    (a bare groupBy().sum() would add in partition order)."""
+    out = []
+    for q, ts in per_query.items():
+        total = F.lit(0.0)
+        for t in ts:
+            total = total + term_score(t)
+        out.append(
+            F.struct(F.lit(q).alias("q_id"), F.round(total, 6).alias("bm25"))
+        )
+    return F.array(*out)
+
+
+def _scan_scores(
+    df: DataFrame,
+    queries: Mapping[str, Sequence[str]],
+    text_col: str,
+    k1: float,
+    b: float,
+    lowercase: bool,
+    caller: str,
+    stats: Bm25Stats | None = None,
+) -> tuple[DataFrame, Column]:
+    """``(df, qs)``: the frame to score and its :func:`_query_scores`
+    column, after one :func:`bm25_corpus_stats` pass for the union terms
+    (skipped when ``stats`` is given). ``qs`` tokenizes once and binds
+    the per-row tf array of the union terms once (``_bind``); each
+    query's score indexes into that array."""
+    per_query, union = _query_terms(queries, lowercase, caller)
+    if stats is None:
+        stats = bm25_corpus_stats(df, union, text_col, lowercase=lowercase)
+    elif list(stats.terms) != union:
+        raise ValueError(
+            f"{caller}: stats was computed for terms {list(stats.terms)} "
+            f"but the query normalizes to {union} — stats must come from "
+            "bm25_corpus_stats over the same term list"
+        )
+    idf = {t: F.lit(bm25_idf(stats.n, d)) for t, d in zip(union, stats.dfs)}
+    pos = {t: i for i, t in enumerate(union)}
+    src = F.lower(F.col(text_col)) if lowercase else F.col(text_col)
+
+    def scores(tok: Column) -> Column:
+        dl = F.size(tok).cast("double")
+        return _bind(
+            F.array(*[_per_term_tf(tok, t).cast("double") for t in union]),
+            lambda tfs: _query_scores(
+                per_query,
+                lambda t: _bm25_term(
+                    idf[t], F.get(tfs, pos[t]), dl, stats.avgdl, k1, b
+                ),
+            ),
+        )
+
+    if stats.n == 0 or stats.avgdl == 0.0:
+        df = df.limit(0)
+    return df, _bind(tokens(src), scores)
+
+
+def _top_k(df: DataFrame, qs: Column, id_col: str, k: int) -> DataFrame:
+    """Top-k of a one-query ``qs``: element 0 read in-row (no
+    Generate) feeding TakeOrderedAndProject; returns (id_col, bm25)."""
+    return (
+        df.select(F.col(id_col), F.get(qs, 0).getField("bm25").alias("bm25"))
+        .filter(F.col("bm25") > 0.0)
+        .orderBy(F.desc("bm25"), F.asc(id_col))
+        .limit(k)
+    )
+
+
+def _batch_top_k(
+    df: DataFrame, qs: Column, id_col: str, k: int
+) -> DataFrame:
+    """Per-query top-k of ``qs``: explode to (q_id, bm25) rows
+    and rank over a per-query window that Spark rewrites to
+    WindowGroupLimit — partial top-k per partition map-side, so the one
+    shuffle carries at most k·|queries| rows per partition, never the
+    corpus. Returns (q_id, id_col, bm25, rank)."""
+    exploded = (
+        df.select(F.col(id_col), F.explode(qs).alias("q"))
+        .select(F.col(id_col), F.col("q.q_id"), F.col("q.bm25"))
+        .filter(F.col("bm25") > 0.0)
+    )
+    w = Window.partitionBy("q_id").orderBy(F.desc("bm25"), F.asc(id_col))
+    return (
+        exploded.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("q_id", id_col, "bm25", "rank")
+    )
+
+
 def bm25_topk(
     df: DataFrame,
     query_terms: Sequence[str],
@@ -145,7 +262,7 @@ def bm25_topk(
     k1: float = 1.2,
     b: float = 0.75,
     lowercase: bool = True,
-    stats: tuple[int, float, list[int]] | None = None,
+    stats: Bm25Stats | None = None,
 ) -> DataFrame:
     """BM25 top-k over a document table for a literal query.
 
@@ -156,60 +273,20 @@ def bm25_topk(
         Σ_t idf_t * (tf_t * (k1+1)) / (tf_t + k1 * (1 - b + b*dl/avgdl))
 
     Query terms are normalized (lowercased, then deduped preserving
-    first-occurrence order) so duplicated terms score identically on
-    the scan, batch, and indexed paths — BM25 treats the query as a
-    term set.
+    first-occurrence order) — BM25 treats the query as a term set. The
+    scorer is :func:`bm25_batch_topk`'s, for a batch of one query.
 
-    ``stats`` accepts a precomputed :func:`bm25_corpus_stats` result
-    (for the SAME term list) so repeated queries against an unchanged
-    corpus skip the stats pass and pay only the scoring scan; a
-    :class:`Bm25Stats` is verified term-for-term against the query,
-    not just by length.
+    ``stats`` takes a precomputed :func:`bm25_corpus_stats` result for
+    the SAME normalized term list (checked term for term), so repeated
+    queries against an unchanged corpus skip the stats pass and pay
+    only the scoring scan.
     """
     if not query_terms:
         raise ValueError("bm25_topk: query_terms must be non-empty")
-    terms = _normalize_terms(query_terms, lowercase)
-    n, avgdl, dfs = (
-        stats
-        if stats is not None
-        else bm25_corpus_stats(df, terms, text_col, lowercase=lowercase)
+    scored = _scan_scores(
+        df, {"": query_terms}, text_col, k1, b, lowercase, "bm25_topk", stats
     )
-    if isinstance(stats, Bm25Stats) and list(stats.terms) != terms:
-        raise ValueError(
-            f"bm25_topk: stats was computed for terms {list(stats.terms)} "
-            f"but the query normalizes to {terms} — stats must come from "
-            "bm25_corpus_stats over the same term list"
-        )
-    if len(dfs) != len(terms):
-        raise ValueError(
-            f"bm25_topk: stats carries {len(dfs)} df values for "
-            f"{len(terms)} query terms — stats must come from "
-            "bm25_corpus_stats over the same term list"
-        )
-    if n == 0 or avgdl == 0.0:
-        return df.select(F.col(id_col), F.lit(0.0).alias("bm25")).limit(0)
-    idfs = [bm25_idf(n, d) for d in dfs]
-
-    src = F.lower(F.col(text_col)) if lowercase else F.col(text_col)
-
-    def score(tok: Column) -> Column:
-        dl = F.size(tok).cast("double")
-        norm = F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * dl / F.lit(avgdl))
-        total = F.lit(0.0)
-        for term, idf in zip(terms, idfs):
-            tf = _per_term_tf(tok, term).cast("double")
-            total = total + F.lit(idf) * ((tf * F.lit(k1 + 1.0)) / (tf + norm))
-        return total
-
-    return (
-        df.select(
-            F.col(id_col),
-            F.round(_bind(tokens(src), score), 6).alias("bm25"),
-        )
-        .filter(F.col("bm25") > 0.0)
-        .orderBy(F.desc("bm25"), F.asc(id_col))
-        .limit(k)
-    )
+    return _top_k(*scored, id_col, k)
 
 
 def ranked(
@@ -225,6 +302,31 @@ def ranked(
     return df.select(F.col(id_col), F.row_number().over(w).alias("rank"))
 
 
+def _rrf_fused(
+    a: DataFrame, b: DataFrame, keys: list[str], k_rrf: int
+) -> DataFrame:
+    """(keys, rrf_score, rank_a, rank_b): the full outer join of two
+    ranked lists on ``keys`` with score 1/(k_rrf + rank_a) +
+    1/(k_rrf + rank_b) — a missing rank contributes 0, the fixed
+    two-operand addition keeps the score bit-deterministic, rounded to
+    6dp."""
+    ra = a.select(*keys, F.col("rank").alias("rank_a"))
+    rb = b.select(*keys, F.col("rank").alias("rank_b"))
+
+    def inv(rank: str) -> Column:
+        return F.coalesce(
+            F.lit(1.0) / (F.lit(k_rrf) + F.col(rank)).cast("double"),
+            F.lit(0.0),
+        )
+
+    return ra.join(rb, on=keys, how="full_outer").select(
+        *keys,
+        F.round(inv("rank_a") + inv("rank_b"), 6).alias("rrf_score"),
+        "rank_a",
+        "rank_b",
+    )
+
+
 def rrf_fuse(
     a: DataFrame,
     b: DataFrame,
@@ -235,28 +337,13 @@ def rrf_fuse(
     """Reciprocal-rank fusion of two ranked lists (Cormack et al. 2009):
     score(d) = 1/(k_rrf + rank_a(d)) + 1/(k_rrf + rank_b(d)), missing
     ranks contribute 0. Inputs are top-n lists (small); the full outer
-    join is broadcast-sized. Fixed two-operand addition keeps the
-    score bit-deterministic; membership/order decided on the rounded
+    join is broadcast-sized. Membership/order decided on the rounded
     score with id tiebreak."""
-    ra = a.select(F.col(id_col), F.col("rank").alias("rank_a"))
-    rb = b.select(F.col(id_col), F.col("rank").alias("rank_b"))
-    fused = ra.join(rb, on=id_col, how="full_outer").select(
-        F.col(id_col),
-        F.round(
-            F.coalesce(
-                F.lit(1.0) / (F.lit(k_rrf) + F.col("rank_a")).cast("double"),
-                F.lit(0.0),
-            )
-            + F.coalesce(
-                F.lit(1.0) / (F.lit(k_rrf) + F.col("rank_b")).cast("double"),
-                F.lit(0.0),
-            ),
-            6,
-        ).alias("rrf_score"),
-        "rank_a",
-        "rank_b",
+    return (
+        _rrf_fused(a, b, [id_col], k_rrf)
+        .orderBy(F.desc("rrf_score"), F.asc(id_col))
+        .limit(k)
     )
-    return fused.orderBy(F.desc("rrf_score"), F.asc(id_col)).limit(k)
 
 
 def rrf_fuse_batch(
@@ -273,33 +360,9 @@ def rrf_fuse_batch(
     per-query top-k fusions, all queries in one plan. Inputs are
     top-n·|queries| rows (small), so the full outer join is
     broadcast-scale; the per-query top-k rank window rewrites to
-    WindowGroupLimit. Same score recipe and determinism contract as
-    :func:`rrf_fuse` (fixed two-operand addition, 6dp round, id
-    tiebreak). Returns (q_col, id_col, rrf_score, rank_a, rank_b,
-    rank)."""
-    ra = a.select(
-        F.col(q_col), F.col(id_col), F.col("rank").alias("rank_a")
-    )
-    rb = b.select(
-        F.col(q_col), F.col(id_col), F.col("rank").alias("rank_b")
-    )
-    fused = ra.join(rb, on=[q_col, id_col], how="full_outer").select(
-        F.col(q_col),
-        F.col(id_col),
-        F.round(
-            F.coalesce(
-                F.lit(1.0) / (F.lit(k_rrf) + F.col("rank_a")).cast("double"),
-                F.lit(0.0),
-            )
-            + F.coalesce(
-                F.lit(1.0) / (F.lit(k_rrf) + F.col("rank_b")).cast("double"),
-                F.lit(0.0),
-            ),
-            6,
-        ).alias("rrf_score"),
-        "rank_a",
-        "rank_b",
-    )
+    WindowGroupLimit. Same score as :func:`rrf_fuse`. Returns (q_col,
+    id_col, rrf_score, rank_a, rank_b, rank)."""
+    fused = _rrf_fused(a, b, [q_col, id_col], k_rrf)
     w = Window.partitionBy(q_col).orderBy(
         F.desc("rrf_score"), F.asc(id_col)
     )
@@ -326,87 +389,17 @@ def bm25_batch_topk(
 
     Returns (q_id, id_col, bm25, rank). Shape: one stats pass for the
     UNION of all query terms (still a single map-combined one-row
-    aggregate — per-term hits are in-row), then one scoring scan that
-    computes every query's score from a per-row tf array bound ONCE
-    (the ``_bind`` let-binding: tokenize once, tf per union-term once,
-    each query's score indexes into that array), explodes to
-    (q_id, score) rows, and takes per-query top-k through a
-    rank-over-window that Spark rewrites to WindowGroupLimit — partial
-    per-partition top-k map-side, so the single shuffle carries at most
-    k·|queries| rows per partition, never the corpus.
+    aggregate — per-term hits are in-row), then one scoring scan
+    (:func:`_scan_scores`, shared with :func:`bm25_topk`) and the
+    per-query top-k of :func:`_batch_top_k`.
 
     Determinism contract matches :func:`bm25_topk`: rounded-score
     ranking with id tiebreaks, fixed per-query term order.
     """
-    if not queries:
-        raise ValueError("bm25_batch_topk: queries must be non-empty")
-    qids = list(queries)
-    # same normalization contract as bm25_topk: lowercase, then dedupe
-    # per query preserving first-occurrence order (dup terms count once)
-    norm_terms = {
-        q: _normalize_terms(ts, lowercase) for q, ts in queries.items()
-    }
-    for q, ts in norm_terms.items():
-        if not ts:
-            raise ValueError(f"bm25_batch_topk: query {q!r} has no terms")
-    union_terms: list[str] = []
-    for ts in norm_terms.values():
-        for t in ts:
-            if t not in union_terms:
-                union_terms.append(t)
-    term_idx = {t: i for i, t in enumerate(union_terms)}
-
-    n, avgdl, dfs = bm25_corpus_stats(df, union_terms, text_col,
-                                      lowercase=lowercase)
-    if n == 0 or avgdl == 0.0:
-        return df.select(
-            F.lit("").alias("q_id"), F.col(id_col),
-            F.lit(0.0).alias("bm25"), F.lit(0).alias("rank"),
-        ).limit(0)
-    idf_by_term = {t: bm25_idf(n, d) for t, d in zip(union_terms, dfs)}
-
-    src = F.lower(F.col(text_col)) if lowercase else F.col(text_col)
-
-    def scores(tok: Column) -> Column:
-        dl = F.size(tok).cast("double")
-        norm = F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * dl / F.lit(avgdl))
-
-        def per_query(tfs: Column) -> Column:
-            structs = []
-            for q in qids:
-                total = F.lit(0.0)
-                for t in norm_terms[q]:
-                    tf = F.get(tfs, term_idx[t])
-                    total = total + F.lit(idf_by_term[t]) * (
-                        (tf * F.lit(k1 + 1.0)) / (tf + norm)
-                    )
-                structs.append(
-                    F.struct(
-                        F.lit(q).alias("q_id"),
-                        F.round(total, 6).alias("bm25"),
-                    )
-                )
-            return F.array(*structs)
-
-        return _bind(
-            F.array(*[
-                _per_term_tf(tok, t).cast("double") for t in union_terms
-            ]),
-            per_query,
-        )
-
-    exploded = (
-        df.select(F.col(id_col), _bind(tokens(src), scores).alias("qs"))
-        .select(F.col(id_col), F.explode("qs").alias("q"))
-        .select(F.col(id_col), F.col("q.q_id"), F.col("q.bm25"))
-        .filter(F.col("bm25") > 0.0)
+    scored = _scan_scores(
+        df, queries, text_col, k1, b, lowercase, "bm25_batch_topk"
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("bm25"), F.asc(id_col))
-    return (
-        exploded.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", id_col, "bm25", "rank")
-    )
+    return _batch_top_k(*scored, id_col, k)
 
 
 def _read_index_stats(
@@ -417,7 +410,7 @@ def _read_index_stats(
     The sidecar's recorded ``n_buckets`` is AUTHORITATIVE: the probe's
     ``pmod(xxhash64(term), n_buckets)`` must replay the build's hash or
     it prunes to the WRONG buckets and the term's postings are silently
-    filtered out — partial/empty results with no error (ADVICE r14).
+    filtered out — partial/empty results with no error.
     Callers therefore default ``n_buckets=None`` (use the sidecar) and
     an explicitly passed value that contradicts the sidecar raises
     instead of misprobing. Layouts written before the sidecar carried
@@ -431,12 +424,8 @@ def _read_index_stats(
     # passive half of the growth wire (the ANN _warn_if_stale analog):
     # a probe against a layout grown far past its bucket sizing finds
     # the rebucket recommendation next to its slow query
-    bnd = (
-        int(srow["built_n_docs"])
-        if "built_n_docs" in srow.__fields__
-        and srow["built_n_docs"] is not None
-        else None
-    )
+    fields = srow.asDict()
+    bnd = fields.get("built_n_docs")
     g = text_index_growth(n, bnd)
     if g["action"] == "rebucket":
         import logging
@@ -450,11 +439,7 @@ def _read_index_stats(
             "signal'",
             path, g["growth_factor"], bnd,
         )
-    stored = (
-        int(srow["n_buckets"])
-        if "n_buckets" in srow.__fields__ and srow["n_buckets"] is not None
-        else None
-    )
+    stored = fields.get("n_buckets")
     if stored is not None:
         if n_buckets is not None and int(n_buckets) != stored:
             raise ValueError(
@@ -464,12 +449,12 @@ def _read_index_stats(
                 f"misses postings; omit the parameter to use the "
                 f"recorded value"
             )
-        return n, avgdl, stored
+        return n, avgdl, int(stored)
     return n, avgdl, 64 if n_buckets is None else int(n_buckets)
 
 
-# Text-index growth threshold (SCALING.md "Text-index growth signal",
-# r16). The BM25 layout has NO frozen model — stats and postings merge
+# Text-index growth threshold (SCALING.md "Text-index growth
+# signal"). The BM25 layout has NO frozen model — stats and postings merge
 # exactly forever — but n_buckets is a frozen SIZING decision: past
 # growth, each bucket holds that multiple of its intended postings
 # share. Measured (SCALING.md "Text-index growth signal"): probe LATENCY
@@ -513,23 +498,83 @@ def _indexed_term_dfs(
     at-least-once streaming replays (the streaming ingest maintains no
     terms table: a cached df would go stale between micro-batches),
     cost bounded by the matching postings."""
-    if _dir_exists(spark, f"{path}/terms"):
-        rows = (
-            spark.read.parquet(f"{path}/terms")
-            .filter(F.col("bucket").isin(list(buckets))
-                    & F.col("term").isin(list(terms)))
-            .collect()
+    has_terms = _dir_exists(spark, f"{path}/terms")
+    rows = spark.read.parquet(
+        f"{path}/terms" if has_terms else f"{path}/postings"
+    ).filter(F.col("bucket").isin(list(buckets))
+             & F.col("term").isin(list(terms)))
+    if not has_terms:
+        rows = rows.groupBy("term").agg(
+            F.count_distinct(F.col(id_col)).alias("df")
         )
-    else:
-        rows = (
-            spark.read.parquet(f"{path}/postings")
-            .filter(F.col("bucket").isin(list(buckets))
-                    & F.col("term").isin(list(terms)))
-            .groupBy("term")
-            .agg(F.count_distinct(F.col(id_col)).alias("df"))
-            .collect()
-        )
-    return {r["term"]: int(r["df"]) for r in rows}
+    return {r["term"]: int(r["df"]) for r in rows.collect()}
+
+
+def _indexed_scores(
+    spark,
+    path: str,
+    queries: Mapping[str, Sequence[str]],
+    id_col: str,
+    k1: float,
+    b: float,
+    n_buckets: int | None,
+    lowercase: bool,
+    caller: str,
+) -> tuple[DataFrame, Column]:
+    """``(per-doc frame, qs)`` over the documents holding any union
+    term, read from a :func:`build_text_index` layout — the scan
+    scorer's figures without a corpus scan: a one-row stats sidecar
+    read, one driver-local job hashing the union terms to their
+    buckets, a same-pruned df lookup and ONE partition-pruned postings
+    read.
+
+    Every posting row carries (tf, dl), so each term contribution is
+    row-local; per-doc scores are one map-combinable groupBy(doc) pivot
+    into one column PER UNION TERM (max of the single matching
+    posting's contribution), which :func:`_query_scores` sums in each
+    query's term order — bit-identical to the scan path, where an absent
+    term contributes an exact +0.0."""
+    per_query, union = _query_terms(queries, lowercase, caller)
+    n, avgdl, n_buckets = _read_index_stats(spark, path, n_buckets, caller)
+    # term -> bucket must use the engine's own xxhash64 (there is no
+    # python twin of Spark's seed-42 xxhash64): one driver-local
+    # 1-row job hashes all union terms at once.
+    brow = spark.range(1).select(
+        *[
+            F.pmod(F.xxhash64(F.lit(t)), F.lit(n_buckets)).alias(f"b{i}")
+            for i, t in enumerate(union)
+        ]
+    ).first()
+    buckets = sorted({int(v) for v in brow})
+    df_by_term = _indexed_term_dfs(spark, path, union, buckets, id_col)
+    idf = F.lit(0.0)
+    for t in union:
+        idf = F.when(
+            F.col("term") == t, F.lit(bm25_idf(n, df_by_term.get(t, 0)))
+        ).otherwise(idf)
+    post = spark.read.parquet(f"{path}/postings").filter(
+        F.col("bucket").isin(buckets) & F.col("term").isin(union)
+        # replay shield: duplicate (doc, term) rows from an
+        # at-least-once streaming append carry identical tf/dl — keep
+        # one, or the per-doc sum double-counts. Runs on the PRUNED
+        # read, so the dedup cost is |matching postings|, not the index
+    ).dropDuplicates([id_col, "term"])
+    contrib = _bm25_term(
+        idf, F.col("tf").cast("double"), F.col("dl").cast("double"),
+        avgdl, k1, b,
+    )
+    per_term = post.select(
+        F.col(id_col), F.col("term"), contrib.alias("c")
+    ).groupBy(id_col).agg(
+        *[
+            F.max(F.when(F.col("term") == t, F.col("c"))).alias(f"c_{i}")
+            for i, t in enumerate(union)
+        ]
+    )
+    term_col = {
+        t: F.coalesce(F.col(f"c_{i}"), F.lit(0.0)) for i, t in enumerate(union)
+    }
+    return per_term, _query_scores(per_query, term_col.get)
 
 
 def bm25_batch_topk_indexed(
@@ -546,14 +591,10 @@ def bm25_batch_topk_indexed(
     """:func:`bm25_batch_topk` against a :func:`build_text_index`
     layout — the retrieval-evaluation shape on the 100 TB query path:
     ONE partition-pruned read of the union terms' buckets serves every
-    query (no corpus scan at all), per-doc contributions pivot into
-    fixed-order per-union-term columns exactly like
-    :func:`bm25_topk_indexed`, and each query sums ITS terms'
-    columns in its own term order before the 6dp round — so results
+    query (no corpus scan at all; :func:`_indexed_scores`), so results
     equal :func:`bm25_batch_topk` bit-for-bit (same normalization
     including dup-term dedupe, same operand order, same rounded-score
-    rank with id tiebreak). Per-query top-k goes through the same
-    rank window Spark rewrites to WindowGroupLimit.
+    rank with id tiebreak, same :func:`_batch_top_k`).
 
     ``n_buckets=None`` (default) reads the bucket count the build
     recorded in the stats sidecar — the only value that replays the
@@ -562,79 +603,11 @@ def bm25_batch_topk_indexed(
 
     Returns (q_id, id_col, bm25, rank).
     """
-    if not queries:
-        raise ValueError("bm25_batch_topk_indexed: queries must be non-empty")
-    qids = list(queries)
-    norm_terms = {
-        q: _normalize_terms(ts, lowercase) for q, ts in queries.items()
-    }
-    for q, ts in norm_terms.items():
-        if not ts:
-            raise ValueError(
-                f"bm25_batch_topk_indexed: query {q!r} has no terms"
-            )
-    union_terms: list[str] = []
-    for ts in norm_terms.values():
-        for t in ts:
-            if t not in union_terms:
-                union_terms.append(t)
-
-    n, avgdl, n_buckets = _read_index_stats(
-        spark, path, n_buckets, "bm25_batch_topk_indexed"
+    scored = _indexed_scores(
+        spark, path, queries, id_col, k1, b, n_buckets, lowercase,
+        "bm25_batch_topk_indexed",
     )
-
-    brow = spark.range(1).select(
-        *[
-            F.pmod(F.xxhash64(F.lit(t)), F.lit(n_buckets)).alias(f"b{i}")
-            for i, t in enumerate(union_terms)
-        ]
-    ).first()
-    buckets = sorted({int(brow[f"b{i}"]) for i in range(len(union_terms))})
-
-    df_by_term = _indexed_term_dfs(spark, path, union_terms, buckets, id_col)
-    idf_by_term = {t: bm25_idf(n, df_by_term.get(t, 0)) for t in union_terms}
-
-    post = spark.read.parquet(f"{path}/postings").filter(
-        F.col("bucket").isin(buckets) & F.col("term").isin(union_terms)
-    ).dropDuplicates([id_col, "term"])
-    idf_expr = F.lit(0.0)
-    for t in union_terms:
-        idf_expr = F.when(F.col("term") == t, F.lit(idf_by_term[t])).otherwise(
-            idf_expr
-        )
-    tf = F.col("tf").cast("double")
-    dl = F.col("dl").cast("double")
-    norm = F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * dl / F.lit(avgdl))
-    contrib = idf_expr * ((tf * F.lit(k1 + 1.0)) / (tf + norm))
-    per_term = post.select(
-        F.col(id_col), F.col("term"), contrib.alias("c")
-    ).groupBy(id_col).agg(
-        *[
-            F.max(F.when(F.col("term") == t, F.col("c"))).alias(f"c_{i}")
-            for i, t in enumerate(union_terms)
-        ]
-    )
-    structs = []
-    for q in qids:
-        total = F.lit(0.0)
-        for t in norm_terms[q]:
-            total = total + F.coalesce(
-                F.col(f"c_{union_terms.index(t)}"), F.lit(0.0)
-            )
-        structs.append(
-            F.struct(F.lit(q).alias("q_id"), F.round(total, 6).alias("bm25"))
-        )
-    exploded = (
-        per_term.select(F.col(id_col), F.explode(F.array(*structs)).alias("q"))
-        .select(F.col(id_col), F.col("q.q_id"), F.col("q.bm25"))
-        .filter(F.col("bm25") > 0.0)
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("bm25"), F.asc(id_col))
-    return (
-        exploded.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", id_col, "bm25", "rank")
-    )
+    return _batch_top_k(*scored, id_col, k)
 
 
 def build_text_index(
@@ -746,7 +719,6 @@ def build_text_index(
     for d in ("postings", "terms", "stats"):
         _swap_dirs(spark, f"{path}/{d}", f"{path}/{d}{sfx}", "rebuild")
 
-
 def bm25_topk_indexed(
     spark,
     path: str,
@@ -761,20 +733,12 @@ def bm25_topk_indexed(
     """BM25 top-k against a :func:`build_text_index` layout — the
     100 TB query path: instead of two corpus scans, read ONLY the
     postings buckets the query terms hash into (partition pruning,
-    plan-tested) plus a same-pruned df lookup and a one-row stats read.
-
-    Scoring: every posting row carries (tf, dl), so each term
-    contribution is row-local; per-doc scores are one map-combinable
-    groupBy(doc) pivot into one column PER QUERY TERM (max of the
-    single matching posting's contribution), summed left-to-right in
-    query-term order before the 6dp round — the SAME fixed operand
-    order as the scan path, so a score on a rounding boundary cannot
-    flip between paths however the postings were partitioned (ADVICE
-    r13; a bare groupBy().sum() would add in partition order). Then
+    plan-tested) plus a same-pruned df lookup and a one-row stats read
+    (:func:`_indexed_scores` for a batch of one query), then
     TakeOrderedAndProject. Result semantics match :func:`bm25_topk`
     exactly (same formula, same normalization including dup-term
-    dedupe, same rounding) — the index is an access path, not a
-    different operator.
+    dedupe, same operand order, same rounding) — the index is an
+    access path, not a different operator.
 
     ``n_buckets=None`` (default) reads the bucket count the build
     recorded in the stats sidecar — the only value that replays the
@@ -783,64 +747,8 @@ def bm25_topk_indexed(
     """
     if not query_terms:
         raise ValueError("bm25_topk_indexed: query_terms must be non-empty")
-    terms = _normalize_terms(query_terms, lowercase)
-    import pyspark.sql.functions as _F  # local alias for lambda clarity
-
-    n, avgdl, n_buckets = _read_index_stats(
-        spark, path, n_buckets, "bm25_topk_indexed"
+    scored = _indexed_scores(
+        spark, path, {"": query_terms}, id_col, k1, b, n_buckets,
+        lowercase, "bm25_topk_indexed",
     )
-
-    # term -> bucket must use the engine's own xxhash64 (there is no
-    # python twin of Spark's seed-42 xxhash64): one driver-local
-    # 1-row job hashes all query terms at once.
-    brow = spark.range(1).select(
-        *[
-            _F.pmod(_F.xxhash64(_F.lit(t)), _F.lit(n_buckets)).alias(f"b{i}")
-            for i, t in enumerate(terms)
-        ]
-    ).first()
-    buckets = sorted({int(brow[f"b{i}"]) for i in range(len(terms))})
-
-    df_by_term = _indexed_term_dfs(spark, path, terms, buckets, id_col)
-    idf_by_term = {t: bm25_idf(n, df_by_term.get(t, 0)) for t in terms}
-
-    post = spark.read.parquet(f"{path}/postings").filter(
-        F.col("bucket").isin(buckets) & F.col("term").isin(terms)
-        # replay shield: duplicate (doc, term) rows from an
-        # at-least-once streaming append carry identical tf/dl — keep
-        # one, or the per-doc sum double-counts. Runs on the PRUNED
-        # read, so the dedup cost is |matching postings|, not the index
-    ).dropDuplicates([id_col, "term"])
-    idf_expr = F.lit(0.0)
-    for t in terms:
-        idf_expr = F.when(F.col("term") == t, F.lit(idf_by_term[t])).otherwise(
-            idf_expr
-        )
-    tf = F.col("tf").cast("double")
-    dl = F.col("dl").cast("double")
-    norm = F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * dl / F.lit(avgdl))
-    contrib = idf_expr * ((tf * F.lit(k1 + 1.0)) / (tf + norm))
-    # pivot the <=|query| contributions into one column per term (each
-    # (doc, term) posting is unique post-dedup, so max() is "the"
-    # contribution; still map-combinable), then sum left-to-right in
-    # query-term order — bit-identical to the scan path, where an
-    # absent term contributes an exact +0.0
-    per_term = post.select(
-        F.col(id_col), F.col("term"), contrib.alias("c")
-    ).groupBy(id_col).agg(
-        *[
-            F.max(F.when(F.col("term") == t, F.col("c"))).alias(f"c_{i}")
-            for i, t in enumerate(terms)
-        ]
-    )
-    total = F.lit(0.0)
-    for i in range(len(terms)):
-        total = total + F.coalesce(F.col(f"c_{i}"), F.lit(0.0))
-    return (
-        per_term.select(
-            F.col(id_col), F.round(total, 6).alias("bm25")
-        )
-        .filter(F.col("bm25") > 0.0)
-        .orderBy(F.desc("bm25"), F.asc(id_col))
-        .limit(k)
-    )
+    return _top_k(*scored, id_col, k)

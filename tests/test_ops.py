@@ -5431,6 +5431,48 @@ def test_ivfpq_batch_topk_equals_query_loop(spark, tmp_path):
         assert got_f == want_f, q
 
 
+@pytest.mark.parametrize("residual", [False, True], ids=["plain", "residual"])
+def test_ivfpq_batch_topk_equals_query_loop_in_memory(spark, residual):
+    """The batch/single equality over an in-memory index probed WITHOUT
+    a cell histogram: both sides size their auto-refine shortlist from
+    the grouped count over the probed cells, and with residual codes
+    both build one ADC table per probed cell. Auto-refine (dist2) and
+    ADC-only (refine=0) rankings match per query."""
+    import pyspark.sql.functions as F
+
+    from filefilter_spark.ops.pq import (
+        build_ivfpq_index,
+        ivfpq_batch_topk,
+        ivfpq_topk,
+    )
+
+    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    queries = {
+        f"q{r['vec_id']}": [float(x) for x in r["embedding"]]
+        for r in emb.filter(F.col("vec_id").isin(0, 3, 9)).collect()
+    }
+    indexed, books, cents = build_ivfpq_index(
+        emb, n_lists=16, m=8, k=16, iters=0, residual=residual
+    )
+    for refine, score in ((None, "dist2"), (0, "adc")):
+        batch = ivfpq_batch_topk(
+            indexed, books, cents, queries, topk=5, n_probe=4,
+            refine=refine, vectors=emb, residual=residual,
+        )
+        by_q = {q: [] for q in queries}
+        for r in batch.orderBy("q_id", "rank").collect():
+            by_q[r["q_id"]].append((r["vec_id"], round(r[score], 9)))
+        for q, vec in queries.items():
+            want = [
+                (r["vec_id"], round(r[score], 9))
+                for r in ivfpq_topk(
+                    indexed, books, cents, vec, topk=5, n_probe=4,
+                    refine=refine, vectors=emb, residual=residual,
+                ).collect()
+            ]
+            assert by_q[q] == want, (refine, q)
+
+
 def test_keep_top_fraction_skewed_equals_plain(spark):
     """The count-based two-phase form (score-class counting + radix
     select on the straddling class) must keep EXACTLY the plain

@@ -60,13 +60,17 @@ def _combine(children):
 predicates = st.recursive(_atom, _combine, max_leaves=6)
 
 
-@pytest.fixture(scope="module")
+@pytest.fixture
 def duck():
+    """A DuckDB connection per test function: an error one property
+    test provokes in DuckDB cannot leave a shared connection broken for
+    the next test."""
     con = duckdb.connect()
     con.execute(
         f"CREATE VIEW lineitem AS SELECT * FROM read_parquet('{SF_DIR}/lineitem.parquet')"
     )
-    return con
+    yield con
+    con.close()
 
 
 @settings(
@@ -92,8 +96,8 @@ def test_random_predicates_agree(spark, duck, pred):
         # parity; reject it and let hypothesis draw another.
         assume(False)
     except duckdb.Error:
-        # Transient error from the long-lived module-scoped connection
-        # (observed once as an I/O-class exception mid full-suite run).
+        # Transient error from the test's connection (observed once
+        # as an I/O-class exception mid full-suite run).
         # Retry on a fresh connection: a genuine oracle failure or SQL
         # error reproduces and still fails the test; a transient one
         # doesn't flake the suite.

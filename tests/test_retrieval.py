@@ -117,7 +117,8 @@ def test_bm25_stats_pass_is_single_row_map_combined(spark, docs):
     assert "Generate" not in tree
     assert len(re.findall(r"HashAggregate", tree)) == 2  # partial + final
     # the API returns plain Python numbers usable as literals
-    n, avgdl, dfs = bm25_corpus_stats(docs, terms)
+    stats = bm25_corpus_stats(docs, terms)
+    n, avgdl, dfs = stats.n, stats.avgdl, stats.dfs
     assert n > 0 and avgdl > 0 and len(dfs) == 2
 
 

@@ -32,6 +32,11 @@
   one place (``ops.dedup._fuzzy_prefix``) and ``F.levenshtein`` from
   one place (``ops.dedup._verify_pairs``), so the batch operator, the
   index build and the streaming ingest cannot drift apart.
+- Retrieval has one BM25 scorer and one IVF×PQ probe: in ``ops/``, the
+  BM25 saturation term ``k1 + 1.0`` appears once (``ops.retrieval.
+  _bm25_term``), ``_auto_refine`` has one caller and the squared-L2
+  probe-cell order one site (both in ``ops.pq._ivfpq_probe``), so a
+  single-query search and its batch twin cannot drift apart.
 """
 
 import ast
@@ -45,6 +50,11 @@ CUT = re.compile(r"localCheckpoint\(|\.checkpoint\(")
 ENV = re.compile(r"os\.environ|getenv")
 ACC = re.compile(r"accumulator\(")
 COERCE = re.compile(r"\bcoerce_cell\(")
+BM25_SATURATION = re.compile(r"k1 \+ 1\.0")
+# the squared-L2 probe order with its lowest-cell-id tiebreak
+PROBE_ORDER = re.compile(
+    r"sorted\(\s*range\(len\(centroids\)\),\s*key=lambda i: \("
+)
 UI_ON = re.compile(r"""spark\.ui\.enabled["']?\s*[:,=]\s*["']?true""", re.I)
 PER_ELEMENT = re.compile(r"F\.array\(\s*\*\s*\[\s*F\.(lit|array)\(")
 # Short string stopword arrays and salt integers: not numeric literals.
@@ -186,9 +196,11 @@ def test_infer_schema_only_in_the_head_sample():
     assert not offenders, "\n".join(offenders)
 
 
-def test_one_fuzzy_prefix_builder_and_one_verify():
-    calls = {"_reduced_prefix_expr": [], "F.levenshtein": []}
-    for sub in ("ops", "streaming"):
+def _call_sites(subdirs, names):
+    """``{name: ["rel:line", ...]}``: where the package's ``subdirs``
+    call each of ``names`` (a bare name or ``module.attr``)."""
+    calls = {name: [] for name in names}
+    for sub in subdirs:
         for path in sorted((PKG / sub).rglob("*.py")):
             rel = path.relative_to(PKG).as_posix()
             for node in ast.walk(ast.parse(path.read_text())):
@@ -203,5 +215,27 @@ def test_one_fuzzy_prefix_builder_and_one_verify():
                 )
                 if name in calls:
                     calls[name].append(f"{rel}:{node.lineno}")
+    return calls
+
+
+def test_one_fuzzy_prefix_builder_and_one_verify():
+    calls = _call_sites(("ops", "streaming"),
+                        ("_reduced_prefix_expr", "F.levenshtein"))
     assert {k: len(v) for k, v in calls.items()} == {
         "_reduced_prefix_expr": 1, "F.levenshtein": 1}, calls
+
+
+def test_one_bm25_scorer_and_one_ivfpq_probe():
+    found = {"saturation": [], "probe order": []}
+    for path in sorted((PKG / "ops").rglob("*.py")):
+        rel = path.relative_to(PKG).as_posix()
+        text = path.read_text()
+        for key, pattern in (("saturation", BM25_SATURATION),
+                             ("probe order", PROBE_ORDER)):
+            for m in pattern.finditer(text):
+                n = text.count("\n", 0, m.start()) + 1
+                found[key].append(f"{rel}:{n}")
+    found.update(_call_sites(("ops",), ("_auto_refine",)))
+    assert {k: len(v) for k, v in found.items()} == {
+        "saturation": 1, "probe order": 1, "_auto_refine": 1}, found
+    assert found["saturation"][0].startswith("ops/retrieval.py:"), found
