@@ -65,65 +65,48 @@ def _bucket(col, n_features: int):
     entirely. (Deliberately NOT ``HashingTF``: since SPARK-23469 its
     string hash is ``hashUnsafeBytes2``, which has no SQL twin — a
     model featurized with it could only be scored through
-    ``model.transform``.)"""
-    return F.pmod(F.hash(col), F.lit(n_features)).cast("long")
+    ``model.transform``.) A NULL term (a document without tokens)
+    maps to NULL, not to the bucket of ``hash(NULL)``, the seed."""
+    return F.when(
+        col.isNotNull(), F.pmod(F.hash(col), F.lit(n_features))
+    ).cast("long")
 
 
-def _featurize(df: DataFrame, text_col: str, n_features: int,
-               extra_cols: list) -> DataFrame:
-    """(extra_cols..., features: SparseVector) — term-frequency vectors
-    over :func:`_bucket` buckets. The SparseVector assembly is a
-    per-row UDF on (sorted indices, counts) arrays: acceptable here
-    because featurize feeds TRAINING only, whose input is a
-    reference-vs-crawl sample by design; the corpus-sized scoring path
-    never builds vectors at all (see :func:`quality_scores`).
+def _term_buckets(df: DataFrame, text_col: str, n_features: int,
+                  keys: list) -> DataFrame:
+    """(keys..., __b) — one row per token of ``text_col``: engine
+    tokens of the lowercased text, each mapped to its :func:`_bucket`.
+    The one term → bucket step training and scoring share. A document
+    with no tokens (empty or NULL text) keeps one row with a NULL
+    ``__b``."""
+    return df.select(
+        *keys, F.explode_outer(tokens(F.lower(F.col(text_col)))).alias("__t")
+    ).select(*keys, _bucket(F.col("__t"), n_features).alias("__b"))
 
-    One LINEAR plan — the per-doc counts fold inside a single
-    aggregate over the exploded tokens, with ``extra_cols`` carried as
-    ``first()`` alongside. (An earlier shape joined two subtrees of
-    the same plan on ``monotonically_increasing_id``; if the upstream
-    frame had nondeterministic row order — a sample, a round-robin
-    repartition — recomputation of one side could renumber rows and
-    silently misalign features with labels. With no second subtree
-    there is nothing to misalign: the id is only ever a grouping key
-    within one lineage.)"""
-    from pyspark.ml.linalg import SparseVector, VectorUDT
 
-    @F.udf(returnType=VectorUDT())
-    def to_vec(pairs):
-        return SparseVector(
-            n_features, [p["b"] for p in pairs], [float(p["c"]) for p in pairs]
-        )
+def _term_counts(labeled: DataFrame, n_features: int) -> DataFrame:
+    """(label, pairs) — one row per document of ``labeled``
+    ``(__text, label)``: its ``(__b, __c)`` term counts over
+    :func:`_bucket` buckets, empty for a document with no tokens.
 
-    extras = [c.alias(f"__x{i}") for i, c in enumerate(extra_cols)]
-    toks = df.select(
-        F.monotonically_increasing_id().alias("__rid"), *extras,
-        tokens(F.lower(F.col(text_col))).alias("__tk"),
-    )
-    xnames = [c for c in toks.columns if c.startswith("__x")]
-    pairs_agg = (
-        toks.select("__rid", *xnames, F.explode_outer("__tk").alias("__t"))
-        .withColumn("__b", _bucket(F.col("__t"), n_features))
-        .groupBy("__rid", "__b")
-        .agg(F.count("__t").alias("__c"),
-             *[F.first(x).alias(x) for x in xnames])
-        .groupBy("__rid")
-        .agg(
-            F.sort_array(
-                F.collect_list(
-                    F.when(
-                        F.col("__b").isNotNull(),
-                        F.struct(F.col("__b").alias("b"), F.col("__c").alias("c")),
-                    )
-                )
-            ).alias("__pairs"),
-            *[F.first(x).alias(x) for x in xnames],
-        )
-    )
-    out_names = df.select(*extra_cols).columns
-    return pairs_agg.select(
-        *[F.col(x).alias(n) for x, n in zip(xnames, out_names)],
-        to_vec("__pairs").alias("features"),
+    One linear plan: the label is a grouping key of both aggregates,
+    by ``(__rid, label, __b)`` and then ``(__rid, label)``, so no join
+    can misalign labels and counts when an upstream with a
+    nondeterministic row order (a sample, a round-robin repartition)
+    is recomputed. The row id is computed in its own ``select`` before
+    the token explode; in the generator's ``select`` Spark would
+    evaluate it once per token and every token would become its own
+    document."""
+    docs = labeled.select(F.monotonically_increasing_id().alias("__rid"), "*")
+    return (
+        _term_buckets(docs, "__text", n_features, ["__rid", "label"])
+        .groupBy("__rid", "label", "__b")
+        .agg(F.count("__b").alias("__c"))
+        .groupBy("__rid", "label")
+        .agg(F.collect_list(
+            F.when(F.col("__b").isNotNull(), F.struct("__b", "__c"))
+        ).alias("pairs"))
+        .select("label", "pairs")
     )
 
 
@@ -136,7 +119,8 @@ def _featurize(df: DataFrame, text_col: str, n_features: int,
 # (identical scored set, recall 1.0) in 5.7 s. Right-size the fit
 # input to ~this many sparse vectors per partition — a few-million-doc
 # sample (the 100 TB deployment shape, module docstring) still fans
-# out to tens of partitions.
+# out to tens of partitions. The per-row Python ``to_vec`` UDF runs in
+# these partitions too, so it starts as few Python tasks as the fit.
 _FIT_ROWS_PER_PARTITION = 50_000
 
 
@@ -152,35 +136,49 @@ def train_quality_classifier(
     high-quality reference sample, ``negative`` the raw-crawl sample;
     class balance is the caller's choice (GPT-3 used ~1:1).
 
-    The assembled vectors are persisted and repartitioned to
-    ``ceil(n / _FIT_ROWS_PER_PARTITION)`` partitions before the fit —
-    see that constant for the measured why. Coefficients remain
-    reproducible only up to float aggregation order (module
-    docstring), which partitioning was already part of."""
+    Both classes are labeled and unioned first, and one
+    :func:`_term_counts` plan gives each document's term counts. Those
+    counts are persisted and counted to size the fit at
+    ``ceil(n / _FIT_ROWS_PER_PARTITION)`` partitions (see that constant
+    for the measured why); the counts are repartitioned to that size,
+    turned into SparseVectors there by a per-row UDF, and only that
+    vector frame is persisted for the fit. The UDF is acceptable
+    because training reads a reference-vs-crawl sample by design; the
+    corpus-sized scoring path builds no vectors (see
+    :func:`quality_scores`). Coefficients remain reproducible only up
+    to float aggregation order (module docstring), which partitioning
+    was already part of."""
     import math
 
     from pyspark.ml.classification import LogisticRegression
+    from pyspark.ml.linalg import SparseVector, VectorUDT
     from pyspark.storagelevel import StorageLevel
 
-    feats = _featurize(
-        positive.select(F.col(text_col)), text_col, n_features,
-        [F.lit(1.0).alias("label")],
-    ).unionByName(_featurize(
-        negative.select(F.col(text_col)), text_col, n_features,
-        [F.lit(0.0).alias("label")],
-    )).persist(StorageLevel.MEMORY_AND_DISK)
+    # SparseVector sorts the (bucket, count) pairs by bucket
+    to_vec = F.udf(lambda pairs: SparseVector(n_features, pairs), VectorUDT())
+
+    labeled = positive.select(
+        F.col(text_col).alias("__text"), F.lit(1.0).alias("label")
+    ).unionByName(negative.select(
+        F.col(text_col).alias("__text"), F.lit(0.0).alias("label")
+    ))
+    counts = _term_counts(labeled, n_features).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
     try:
-        n_rows = feats.count()
-        train = feats.repartition(
-            max(1, math.ceil(n_rows / _FIT_ROWS_PER_PARTITION))
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+        n_rows = counts.count()
+        train = (
+            counts.repartition(max(1, math.ceil(n_rows / _FIT_ROWS_PER_PARTITION)))
+            .select("label", to_vec("pairs").alias("features"))
+            .persist(StorageLevel.MEMORY_AND_DISK)
+        )
         lr = LogisticRegression(
             maxIter=max_iter, regParam=reg_param, standardization=False
         )
         model = lr.fit(train)
         train.unpersist()
     finally:
-        feats.unpersist()
+        counts.unpersist()
     return QualityModel(model, n_features)
 
 
@@ -200,10 +198,10 @@ def quality_scores(
       ``pmod(hash(term), n)`` (``HashingTF`` is deliberately never
       used — since SPARK-23469 its string hash has no SQL twin; see
       :func:`_bucket`), so scoring can replay the identical term→
-      bucket map in pure JVM SQL: explode tokens, pmod-hash to
-      buckets, broadcast-join the NONZERO coefficient table, one
-      map-combined sum per doc (parity with the fitted coefficients is
-      pinned by a unit test). Fully codegen'd, no VectorUDT
+      bucket map in pure JVM SQL through the same
+      :func:`_term_buckets` step, left-broadcast-join the NONZERO
+      coefficient table, one map-combined sum per doc (parity with the
+      fitted coefficients is pinned by a unit test). Fully codegen'd, no VectorUDT
       materialization, and the broadcast is only the nonzero weights
       instead of the model riding every task closure — the better
       plan at corpus scale.
@@ -216,8 +214,11 @@ def quality_scores(
       closure.
 
     Docs with zero tokens (or only zero-weight buckets) still score:
-    the left join back onto the id frame gives them
-    ``sigmoid(intercept)``, matching an all-zero feature vector.
+    :func:`_term_buckets` keeps one NULL-bucket row for a doc without
+    tokens and the left join keeps tokens without a weight, so every
+    doc reaches the sum and one with no weighted token scores
+    ``sigmoid(intercept)``, matching an all-zero feature vector. One
+    row per distinct ``id_col`` value.
     """
     import numpy as np
     import pandas as pd
@@ -226,28 +227,17 @@ def quality_scores(
     intercept = float(qm.model.intercept)
     nz = np.flatnonzero(coefs)
     wdf = df.sparkSession.createDataFrame(
-        pd.DataFrame({"__bucket": nz.astype("int64"), "__w": coefs[nz]}),
-        "__bucket long, __w double",
+        pd.DataFrame({"__b": nz.astype("int64"), "__w": coefs[nz]}),
+        "__b long, __w double",
     )
-    contrib = (
-        df.select(
-            F.col(id_col),
-            F.explode(tokens(F.lower(F.col(text_col)))).alias("__t"),
-        )
-        .withColumn(
-            "__bucket",
-            F.pmod(F.hash("__t"), F.lit(qm.n_features)).cast("long"),
-        )
-        .join(F.broadcast(wdf), "__bucket")
+    margin = (
+        _term_buckets(df, text_col, qm.n_features, [F.col(id_col)])
+        .join(F.broadcast(wdf), "__b", "left")
         .groupBy(id_col)
-        .agg(F.sum("__w").alias("__margin"))
+        .agg((F.lit(intercept) + F.coalesce(F.sum("__w"), F.lit(0.0)))
+             .alias("__m"))
     )
-    margin = F.lit(intercept) + F.coalesce(F.col("__margin"), F.lit(0.0))
-    return (
-        df.select(F.col(id_col))
-        .join(contrib, id_col, "left")
-        .select(
-            F.col(id_col),
-            (F.lit(1.0) / (F.lit(1.0) + F.exp(-margin))).alias(score_col),
-        )
+    return margin.select(
+        F.col(id_col),
+        (F.lit(1.0) / (F.lit(1.0) + F.exp(-F.col("__m")))).alias(score_col),
     )

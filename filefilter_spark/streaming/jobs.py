@@ -594,113 +594,6 @@ def pipeline_foreach_batch(
     return spark.read.parquet(out_dir)
 
 
-def rate_soak(
-    spark: SparkSession,
-    num_batches: int = 55,
-    rows_per_sec: int = 20_000,
-    trigger: str = "200 milliseconds",
-    window: str = "1 second",
-    watermark: str = "2 seconds",
-    timeout_sec: int = 120,
-    state_partitions: int | None = 4,
-) -> list[dict]:
-    """Long-lived micro-batch soak on the unbounded ``rate`` source —
-    the amortization evidence the availableNow profiles can't give.
-
-    Runs watermark → tumbling window → count over a continuous
-    rate stream until ``num_batches`` data-carrying micro-batches have
-    completed, then returns one dict per batch: ``batch_id``,
-    ``input_rows``, ``add_batch_ms`` (the execution component of the
-    trigger), ``state_rows`` (live aggregation state after the batch).
-
-    What a healthy long-running query shows — and the soak test
-    asserts: per-batch addBatch time FLAT (no per-batch cost growing
-    with total rows processed), and state rows BOUNDED (watermark
-    eviction holds live state at ~(watermark+window)/window windows ×
-    key cardinality, independent of how long the query has run). A
-    state-leak bug (watermark not applied, wrong output mode) shows up
-    here as monotonic state growth even though every individual batch
-    is correct.
-    """
-    import json as _json
-    import time as _time
-
-    stream = (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", rows_per_sec)
-        .load()
-    )
-    agg = (
-        stream.withWatermark("timestamp", watermark)
-        .groupBy(
-            F.window("timestamp", window).alias("win"),
-            (F.col("value") % 10).alias("k"),
-        )
-        .agg(F.count("*").alias("n"))
-    )
-    qname = "soak_" + uuid.uuid4().hex[:8]
-    ckpt = _tmpfs_dir("soak")
-    # Same conf discipline as _run_to_memory: the state-partition count
-    # freezes at the first checkpoint, so set it for start() and restore
-    # the session's batch default right after.
-    conf_key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(conf_key, None)
-    if state_partitions is not None:
-        spark.conf.set(conf_key, str(state_partitions))
-    try:
-        query = (
-            agg.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(qname)
-            .option("checkpointLocation", ckpt)
-            .trigger(processingTime=trigger)
-            .start()
-        )
-    finally:
-        if state_partitions is not None:
-            if prev is not None:
-                spark.conf.set(conf_key, prev)
-            else:
-                # Same contract as _run_to_memory above: get(key, None)
-                # is None when the key was never explicitly set — unset
-                # rather than skip, or the soak's tiny partition count
-                # would leak into the session's batch queries.
-                spark.conf.unset(conf_key)
-    out: dict[int, dict] = {}
-    deadline = _time.time() + timeout_sec
-    try:
-        while len(out) < num_batches and _time.time() < deadline:
-            _time.sleep(0.2)
-            for p in query.recentProgress:
-                d = _json.loads(p.json) if hasattr(p, "json") else p
-                if d.get("numInputRows", 0) <= 0:
-                    continue
-                ops = d.get("stateOperators") or [{}]
-                out[d["batchId"]] = {
-                    "batch_id": d["batchId"],
-                    "input_rows": d["numInputRows"],
-                    "add_batch_ms": (d.get("durationMs") or {}).get(
-                        "addBatch", 0
-                    ),
-                    "state_rows": ops[0].get("numRowsTotal", 0),
-                }
-    finally:
-        # Best-effort cleanup: none of these may mask a timeout/error
-        # raised by the soak body (stop can throw if the query already
-        # died; the memory sink never registers its view when stop()
-        # lands before batch 0 on some Spark versions).
-        try:
-            query.stop()
-        except Exception:
-            pass
-        shutil.rmtree(ckpt, ignore_errors=True)
-        try:
-            spark.catalog.dropTempView(qname)
-        except Exception:
-            pass
-    return [out[b] for b in sorted(out)][:num_batches]
-
-
 # Replay-guard horizon: how many recently applied FILE keys a sidecar
 # remembers (16-hex-char keys → ~128 KB of sidecar). Under a durable
 # checkpoint a replay only redelivers the in-flight batch, so any bound

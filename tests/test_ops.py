@@ -1367,6 +1367,82 @@ def test_remove_duplicate_spans_matches_bruteforce(spark):
     run()
 
 
+def _rate_soak(spark, num_batches, timeout_sec):
+    """Long-lived micro-batch soak on the unbounded ``rate`` source:
+    watermark (2 s) → tumbling 1 s window → count over 10 keys, update
+    mode to a memory sink, 20k rows/s at a 200 ms trigger, until
+    ``num_batches`` data-carrying micro-batches have completed. One
+    dict per batch: ``batch_id``, ``input_rows``, ``add_batch_ms``
+    (the execution part of the trigger) and ``state_rows`` (live
+    aggregation state after the batch)."""
+    import json
+    import shutil
+    import time
+    import uuid
+
+    import pyspark.sql.functions as SF
+
+    from filefilter_spark.streaming.jobs import _tmpfs_dir
+
+    stream = spark.readStream.format("rate").option("rowsPerSecond", 20_000).load()
+    agg = (
+        stream.withWatermark("timestamp", "2 seconds")
+        .groupBy(SF.window("timestamp", "1 second").alias("win"),
+                 (SF.col("value") % 10).alias("k"))
+        .agg(SF.count("*").alias("n"))
+    )
+    qname = "soak_" + uuid.uuid4().hex[:8]
+    ckpt = _tmpfs_dir("soak")
+    # The state-partition count freezes at the first checkpoint: set it
+    # for start() only, then restore the session's batch setting
+    # (unset when it was never set explicitly).
+    conf_key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(conf_key, None)
+    spark.conf.set(conf_key, "4")
+    try:
+        query = (
+            agg.writeStream.outputMode("update").format("memory")
+            .queryName(qname)
+            .option("checkpointLocation", ckpt)
+            .trigger(processingTime="200 milliseconds")
+            .start()
+        )
+    finally:
+        if prev is not None:
+            spark.conf.set(conf_key, prev)
+        else:
+            spark.conf.unset(conf_key)
+    out = {}
+    deadline = time.time() + timeout_sec
+    try:
+        while len(out) < num_batches and time.time() < deadline:
+            time.sleep(0.2)
+            for p in query.recentProgress:
+                d = json.loads(p.json) if hasattr(p, "json") else p
+                if d.get("numInputRows", 0) <= 0:
+                    continue
+                ops = d.get("stateOperators") or [{}]
+                out[d["batchId"]] = {
+                    "batch_id": d["batchId"],
+                    "input_rows": d["numInputRows"],
+                    "add_batch_ms": (d.get("durationMs") or {}).get("addBatch", 0),
+                    "state_rows": ops[0].get("numRowsTotal", 0),
+                }
+    finally:
+        # best effort: stop() throws if the query already died, and the
+        # memory sink may never register its view
+        try:
+            query.stop()
+        except Exception:
+            pass
+        shutil.rmtree(ckpt, ignore_errors=True)
+        try:
+            spark.catalog.dropTempView(qname)
+        except Exception:
+            pass
+    return [out[b] for b in sorted(out)][:num_batches]
+
+
 def test_streaming_soak_flat_addbatch_and_bounded_state(spark):
     """OP-D5 long-lived soak: 50+ micro-batches on the unbounded rate
     source. Per-batch addBatch time must be FLAT (no cost growing with
@@ -1376,9 +1452,7 @@ def test_streaming_soak_flat_addbatch_and_bounded_state(spark):
     runtime — a state leak shows as monotonic growth here)."""
     import statistics as st
 
-    from filefilter_spark.streaming.jobs import rate_soak
-
-    rows = rate_soak(spark, num_batches=50, timeout_sec=150)
+    rows = _rate_soak(spark, num_batches=50, timeout_sec=150)
     assert len(rows) >= 50
     mid = st.median(r["add_batch_ms"] for r in rows[5:20])
     late = st.median(r["add_batch_ms"] for r in rows[-15:])
@@ -1931,7 +2005,8 @@ def test_quality_scores_match_model_coefficients(spark):
     from filefilter_spark.ops.text import tokens as _tk
 
     docs = spark.createDataFrame(
-        [(i, f"tok{i % 7} common spark word{i % 3}") for i in range(60)],
+        [(i, f"tok{i % 7} common spark word{i % 3}") for i in range(60)]
+        + [(60, ""), (61, None)],
         "doc_id bigint, text string",
     )
     qm = train_quality_classifier(
@@ -1949,7 +2024,7 @@ def test_quality_scores_match_model_coefficients(spark):
         .groupBy("doc_id", "__b").count().collect()
     )
     coefs = np.asarray(qm.model.coefficients.toArray(), dtype=np.float64)
-    margins = {i: float(qm.model.intercept) for i in range(60)}
+    margins = {i: float(qm.model.intercept) for i in range(62)}
     for r in counts:
         margins[r["doc_id"]] += coefs[r["__b"]] * r["count"]
     want = {d: 1.0 / (1.0 + np.exp(-m)) for d, m in margins.items()}
@@ -1982,6 +2057,43 @@ def test_quality_scores_survive_observed_session(spark):
     got = {r["doc_id"] for r in quality_scores(docs, qm)
            .filter(SF.col("quality_prob") > 0.5).collect()}
     assert got == {i for i in range(40) if i % 2}
+
+
+def test_quality_classifier_training_job_budget(spark, monkeypatch):
+    # Training runs one featurized plan: the persisted term counts are
+    # counted once to size the fit, and the vectors are built in the
+    # fit's own ceil(n / _FIT_ROWS_PER_PARTITION) partitions, persisted
+    # for the fit. 19 jobs on this fixture at max_iter=10.
+    import math
+
+    from pyspark.ml.classification import LogisticRegression
+
+    import filefilter_spark.ops.classifier as C
+    from conftest import jobs_in_group
+
+    docs = spark.createDataFrame(
+        [(i, "spark good prose" if i % 2 else "junk noise here")
+         for i in range(40)] + [(40, ""), (41, None)],
+        "doc_id bigint, text string",
+    )
+    monkeypatch.setattr(C, "_FIT_ROWS_PER_PARTITION", 16)
+    fits = []
+    real_fit = LogisticRegression.fit
+
+    def spy(self, dataset, params=None):
+        model = real_fit(self, dataset, params)
+        fits.append((dataset.rdd.getNumPartitions(),
+                     dataset.storageLevel.useMemory))
+        return model
+
+    monkeypatch.setattr(LogisticRegression, "fit", spy)
+    qm, n_jobs = jobs_in_group(spark, "quality-train", lambda: C.train_quality_classifier(
+        docs.filter("doc_id % 2 = 1"), docs.filter("doc_id % 2 = 0"),
+        n_features=1 << 12, max_iter=10,
+    ))
+    assert fits == [(math.ceil(42 / 16), True)]
+    assert qm.model.summary.totalIterations == 10
+    assert n_jobs == 19
 
 
 def test_gopher_rules_battery(spark):

@@ -37,6 +37,12 @@
   _bm25_term``), ``_auto_refine`` has one caller and the squared-L2
   probe-cell order one site (both in ``ops.pq._ivfpq_probe``), so a
   single-query search and its batch twin cannot drift apart.
+- The quality classifier featurizes in one place: in
+  ``ops/classifier.py`` the one ``F.hash(`` sits in ``_bucket``, the
+  one ``tokens(F.lower(`` term step in ``_term_buckets``, which both
+  training (``_term_counts``) and scoring (``quality_scores``) call,
+  one UDF builds ``VectorUDT`` values, and no ``extra_cols`` carrier
+  rides the featurization.
 """
 
 import ast
@@ -239,3 +245,26 @@ def test_one_bm25_scorer_and_one_ivfpq_probe():
     assert {k: len(v) for k, v in found.items()} == {
         "saturation": 1, "probe order": 1, "_auto_refine": 1}, found
     assert found["saturation"][0].startswith("ops/retrieval.py:"), found
+
+
+def test_one_quality_featurization():
+    path = PKG / "ops/classifier.py"
+    text = path.read_text()
+
+    def lines_of(pattern):
+        return [text.count("\n", 0, m.start()) + 1
+                for m in re.finditer(pattern, text)]
+
+    hashes, term_steps = lines_of(r"F\.hash\("), lines_of(r"tokens\(F\.lower\(")
+    assert len(hashes) == 1 and hashes[0] in _function_lines(path, "_bucket"), hashes
+    assert len(term_steps) == 1, term_steps
+    assert term_steps[0] in _function_lines(path, "_term_buckets"), term_steps
+    callers = sorted(
+        fn.name for fn in ast.parse(text).body
+        if isinstance(fn, ast.FunctionDef)
+        and any(isinstance(c, ast.Call) and isinstance(c.func, ast.Name)
+                and c.func.id == "_term_buckets" for c in ast.walk(fn))
+    )
+    assert callers == ["_term_counts", "quality_scores"], callers
+    assert len(lines_of(r"VectorUDT\(\)")) == 1
+    assert "extra_cols" not in text
