@@ -27,6 +27,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql.types import StructField, StructType
 from pyspark.storagelevel import StorageLevel
 
+from filefilter_spark.ops.layout import _swap_dirs, _write_sidecar
 from filefilter_spark.ops.text import fingerprint, shingles, tokens
 from filefilter_spark.session import lineage_cut
 
@@ -1849,10 +1850,13 @@ def build_fuzzy_index(
       own pair step) and the ingest appends each batch's new pairs, so
       after any drain it equals :func:`edit_distance_pairs` over the
       union corpus bit-for-bit.
-    * ``stats/``    — one row (q, max_dist, n_buckets, n_strings,
-      applied_keys): the probe/ingest parameters (a contradicting
-      caller value raises — the n_buckets sidecar contract) and the
-      per-file replay guard.
+    * ``stats/``    — the sidecar (``ops.layout._write_sidecar``): q,
+      max_dist, n_buckets, n_strings and applied_keys, the ingest
+      parameters and the per-file replay guard.
+
+    Every dir is staged in a temp dir and swapped in, the sidecar last
+    (the ``build_text_index`` protocol), so a rebuild that fails part
+    way leaves the old layout intact.
     """
     d, T = int(max_dist), int(q) * (int(max_dist) + 1)
     base = df.select(
@@ -1872,11 +1876,13 @@ def build_fuzzy_index(
     # finished layout, so it stays sequential.
     from concurrent.futures import ThreadPoolExecutor
 
+    b = {n: f"{path}/{n}__build"
+         for n in ("gramdf", "postings", "strings", "short", "pairs")}
     strings = base.selectExpr("id", "s", "length(s) AS l")
 
     def _w_gram_postings() -> None:
         write_fuzzy_gram_layout(
-            base, f"{path}/gramdf", f"{path}/postings", q, d, n_buckets
+            base, b["gramdf"], b["postings"], q, d, n_buckets
         )
 
     def _w_strings() -> None:
@@ -1884,12 +1890,10 @@ def build_fuzzy_index(
             "*", f"pmod(xxhash64(id), {int(n_buckets)}) AS sbucket"
         ).repartition("sbucket").sortWithinPartitions("id").write.mode(
             "overwrite"
-        ).partitionBy("sbucket").parquet(f"{path}/strings")
+        ).partitionBy("sbucket").parquet(b["strings"])
 
     def _w_short() -> None:
-        strings.where(f"l < {T}").write.mode("overwrite").parquet(
-            f"{path}/short"
-        )
+        strings.where(f"l < {T}").write.mode("overwrite").parquet(b["short"])
 
     with ThreadPoolExecutor(max_workers=3) as pool:
         for fut in [pool.submit(_w_gram_postings), pool.submit(_w_strings),
@@ -1899,19 +1903,20 @@ def build_fuzzy_index(
     # The postings read-back is the prefix chain's output, so seeding
     # pairs/ from the layout skips re-tagging the corpus.
     _pairs_from_fuzzy_layout(
-        spark.read.parquet(f"{path}/postings"),
-        spark.read.parquet(f"{path}/strings"),
-        spark.read.parquet(f"{path}/short"),
+        spark.read.parquet(b["postings"]),
+        spark.read.parquet(b["strings"]),
+        spark.read.parquet(b["short"]),
         q=int(q), d=d,
     ).selectExpr(
         "CAST(id_a AS BIGINT) AS id_a", "CAST(id_b AS BIGINT) AS id_b", "dist"
-    ).write.mode("overwrite").parquet(f"{path}/pairs")
+    ).write.mode("overwrite").parquet(b["pairs"])
 
-    spark.createDataFrame(
-        [(int(q), d, int(n_buckets), int(n_strings), [])],
-        "q long, max_dist long, n_buckets long, n_strings long, "
-        "applied_keys array<string>",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/stats")
+    for n, tmp in b.items():
+        _swap_dirs(spark, f"{path}/{n}", tmp, "rebuild")
+    _write_sidecar(spark, {"q": int(q), "max_dist": d,
+                           "n_buckets": int(n_buckets),
+                           "n_strings": int(n_strings), "applied_keys": []},
+                   f"{path}/stats", "rebuild")
 
 
 def edit_distance_pairs(

@@ -38,11 +38,19 @@ persisted indexes and the streaming ingest loops share, all through
 the Hadoop FileSystem API: listing, the one small-files compactor
 (:func:`compact_files`, plain or hive-partitioned) and its gate
 (:func:`maybe_compact`), the temp-then-swap directory replace (the
-only rename), the sidecar commit and the pending marker.
+only rename), the sidecar and the pending marker.
+
+Every persisted index keeps its metadata in one sidecar format: a
+one-row parquet table whose single ``json`` column holds the
+metadata dict as one JSON string (the text and fuzzy ``stats/``, the
+ANN ``meta/``, the ivfpq ``_applied/``). :func:`_write_sidecar` is its
+one writer, by temp + swap, and :func:`_read_sidecar` its one reader.
+A build swaps its data dirs in first and writes its sidecar last.
 """
 
 from __future__ import annotations
 
+import json
 from contextlib import contextmanager
 from typing import Sequence
 
@@ -223,13 +231,29 @@ def _swap_dirs(spark, live: str, tmp: str, tag) -> None:
     spark.catalog.refreshByPath(live)
 
 
-def _write_sidecar(spark, df: DataFrame, live: str, tag) -> None:
-    """Commit a small metadata table by write-to-temp + swap, never an
-    overwrite in place: a crash mid-overwrite would leave ``live``
-    empty and lose what it recorded."""
+def _write_sidecar(spark, row: dict, live: str, tag) -> None:
+    """Commit ``row`` as the sidecar at ``live`` by write-to-temp + swap,
+    never an overwrite in place: a crash mid-overwrite would leave
+    ``live`` empty and lose what it recorded."""
     tmp = f"{live.rstrip('/')}__tmp{tag}"
-    df.coalesce(1).write.mode("overwrite").parquet(tmp)
+    spark.createDataFrame([(json.dumps(row),)], "json string").coalesce(
+        1
+    ).write.mode("overwrite").parquet(tmp)
     _swap_dirs(spark, live, tmp, tag)
+
+
+def _read_sidecar(spark, live: str) -> dict | None:
+    """The dict :func:`_write_sidecar` committed at ``live``; None when
+    no sidecar was committed there yet."""
+    if not _dir_exists(spark, live):
+        return None
+    row = spark.read.schema("json string").parquet(live).first()
+    if row is not None and row["json"] is None:
+        raise ValueError(
+            f"{live!r} is not a JSON sidecar: rebuild the index (layouts "
+            "written before the one-JSON-row format are not read)"
+        )
+    return None if row is None else json.loads(row["json"])
 
 
 def _copy_dir(spark, src: str, dst: str) -> None:

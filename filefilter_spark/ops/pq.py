@@ -67,6 +67,7 @@ from filefilter_spark.ops.cluster import (
     double_array_lit,
     quantize_to_grid,
 )
+from filefilter_spark.ops.layout import _read_sidecar, _swap_dirs, _write_sidecar
 from filefilter_spark.session import lineage_cut
 
 Codebooks = list[list[list[float]]]  # [subspace][centroid][component]
@@ -841,10 +842,10 @@ def build_ann_index(
     * ``codes/`` — the :func:`build_ivfpq_index` (id, codes) rows,
       written ``partitionBy(cell)`` so a probe is a partition-pruned
       read of ``n_probe/n_lists`` of the 32×-compressed table.
-    * ``meta/``  — one row holding the JSON-encoded codebooks,
-      centroids, cell-count histogram (the auto-refine sizing input —
-      no per-query count job), the BUILD-TIME copy of that histogram
-      (``built_cell_counts`` — frozen forever, so
+    * ``meta/``  — the sidecar (``ops.layout._write_sidecar``): the
+      codebooks, centroids, cell-count histogram (the auto-refine
+      sizing input — no per-query count job), the BUILD-TIME copy of
+      that histogram (``built_cell_counts`` — frozen forever, so
       :func:`ann_index_drift` can compare what the model was fit on
       against what streaming ingest later appended), and the build
       parameters the probe must reuse (``scale``, ``residual``).
@@ -865,12 +866,10 @@ def build_ann_index(
     streaming maintenance swap protocol instead of overwriting in
     place: a crash mid-rebuild leaves the old index
     intact, and concurrent probes never see an empty ``meta/``. The
-    codes→meta swap pair is atomic-as-the-store-allows — the same
-    contract as every in-stream compaction; a refresh that must be
-    strictly atomic under concurrent probes should target a new path
-    and flip the reader."""
-    import json as _json
-
+    codes swap and the meta commit after it are each
+    atomic-as-the-store-allows — the same contract as every in-stream
+    compaction; a refresh that must be strictly atomic under concurrent
+    probes should target a new path and flip the reader."""
     indexed, books, cents = build_ivfpq_index(
         df, n_lists=n_lists, m=m, k=k, iters=iters, vec_col=vec_col,
         id_col=id_col, scale=scale, residual=residual, fit_frac=fit_frac,
@@ -881,8 +880,8 @@ def build_ann_index(
     meta = {
         "codebooks": books,
         "centroids": [list(map(float, c)) for c in cents],
-        "cell_counts": {str(c): n for c, n in counts.items()},
-        "built_cell_counts": {str(c): n for c, n in counts.items()},
+        "cell_counts": counts,
+        "built_cell_counts": counts,
         "scale": float(scale),
         "residual": bool(residual),
         "n_lists": int(n_lists),
@@ -896,40 +895,28 @@ def build_ann_index(
         "coarse_iters": int(coarse_iters),
         "fit_frac": float(fit_frac),
     }
-    meta_df = spark.createDataFrame([(_json.dumps(meta),)], "meta string")
-
-    from filefilter_spark.ops.layout import _swap_dirs
-
-    # stage both tables fully, then swap codes first and meta last —
-    # load_ann_meta reads meta, so the crash window between the swaps
-    # serves old-meta+new-codes for exactly two renames (deterministic
-    # rebuilds from the same corpus make even that window a no-op); on
-    # a fresh path each swap is a single rename into place
-    codes_dir, meta_dir = f"{path}/codes", f"{path}/meta"
+    # stage codes fully, swap it in, then commit meta last —
+    # load_ann_meta reads meta, so a crash between the swap and the
+    # commit serves old-meta+new-codes (deterministic rebuilds from the
+    # same corpus make even that window a no-op); on a fresh path the
+    # swap is a single rename into place
+    codes_dir = f"{path}/codes"
     indexed.repartition("cell").sortWithinPartitions(id_col).write.mode(
         "overwrite"
     ).partitionBy("cell").parquet(f"{codes_dir}__build")
-    meta_df.coalesce(1).write.mode("overwrite").parquet(f"{meta_dir}__build")
     _swap_dirs(spark, codes_dir, f"{codes_dir}__build", "rebuild")
-    _swap_dirs(spark, meta_dir, f"{meta_dir}__build", "rebuild")
+    _write_sidecar(spark, meta, f"{path}/meta", "rebuild")
 
 
 def load_ann_meta(spark, path: str) -> dict:
     """Read a :func:`build_ann_index` meta sidecar back into the
     driver-side dict :func:`ann_topk_indexed` probes with."""
-    import json as _json
-
-    row = spark.read.parquet(f"{path}/meta").first()
-    if row is None:
-        raise ValueError(f"load_ann_meta: empty meta at {path!r}")
-    meta = _json.loads(row["meta"])
-    meta["cell_counts"] = {
-        int(c): int(n) for c, n in meta["cell_counts"].items()
-    }
-    if "built_cell_counts" in meta:
-        meta["built_cell_counts"] = {
-            int(c): int(n) for c, n in meta["built_cell_counts"].items()
-        }
+    meta = _read_sidecar(spark, f"{path}/meta")
+    if meta is None:
+        raise ValueError(f"load_ann_meta: no meta at {path!r}")
+    # a JSON object keys the cell histograms by string
+    for key in ("cell_counts", "built_cell_counts"):
+        meta[key] = {int(c): int(n) for c, n in meta[key].items()}
     return meta
 
 

@@ -47,7 +47,12 @@ from typing import Callable, Mapping, Sequence
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
-from filefilter_spark.ops.layout import _dir_exists, _swap_dirs
+from filefilter_spark.ops.layout import (
+    _dir_exists,
+    _read_sidecar,
+    _swap_dirs,
+    _write_sidecar,
+)
 from filefilter_spark.ops.text import _bind, tokens
 
 
@@ -223,12 +228,16 @@ def _scan_scores(
 
 def _top_k(df: DataFrame, qs: Column, id_col: str, k: int) -> DataFrame:
     """Top-k of a one-query ``qs``: element 0 read in-row (no
-    Generate) feeding TakeOrderedAndProject; returns (id_col, bm25)."""
+    Generate) feeding TakeOrderedAndProject; returns (id_col, bm25).
+    The ``bm25 > 0`` filter runs on the k rows the limit keeps (a
+    prefix of the same order, so the rows are the same): below the
+    limit, Catalyst would push it through the projection and every
+    document would be scored twice."""
     return (
         df.select(F.col(id_col), F.get(qs, 0).getField("bm25").alias("bm25"))
-        .filter(F.col("bm25") > 0.0)
         .orderBy(F.desc("bm25"), F.asc(id_col))
         .limit(k)
+        .filter(F.col("bm25") > 0.0)
     )
 
 
@@ -413,10 +422,10 @@ def _read_index_stats(
     filtered out — partial/empty results with no error.
     Callers therefore default ``n_buckets=None`` (use the sidecar) and
     an explicitly passed value that contradicts the sidecar raises
-    instead of misprobing. Layouts written before the sidecar carried
-    the field fall back to the caller's value (or the build default
-    64) — the old trust-the-parameter contract, now legacy-only."""
-    srow = spark.read.parquet(f"{path}/stats").first()
+    instead of misprobing."""
+    srow = _read_sidecar(spark, f"{path}/stats")
+    if srow is None:
+        raise ValueError(f"{caller}: no index at {path!r}")
     n = int(srow["n_docs"])
     if n == 0:
         raise ValueError(f"{caller}: empty index at {path!r}")
@@ -424,8 +433,7 @@ def _read_index_stats(
     # passive half of the growth wire (the ANN _warn_if_stale analog):
     # a probe against a layout grown far past its bucket sizing finds
     # the rebucket recommendation next to its slow query
-    fields = srow.asDict()
-    bnd = fields.get("built_n_docs")
+    bnd = srow["built_n_docs"]
     g = text_index_growth(n, bnd)
     if g["action"] == "rebucket":
         import logging
@@ -439,18 +447,16 @@ def _read_index_stats(
             "signal'",
             path, g["growth_factor"], bnd,
         )
-    stored = fields.get("n_buckets")
-    if stored is not None:
-        if n_buckets is not None and int(n_buckets) != stored:
-            raise ValueError(
-                f"{caller}: n_buckets={int(n_buckets)} contradicts the "
-                f"index's stats sidecar (built with n_buckets={stored}) "
-                f"— probing with a mismatched bucket count silently "
-                f"misses postings; omit the parameter to use the "
-                f"recorded value"
-            )
-        return n, avgdl, int(stored)
-    return n, avgdl, 64 if n_buckets is None else int(n_buckets)
+    stored = int(srow["n_buckets"])
+    if n_buckets is not None and int(n_buckets) != stored:
+        raise ValueError(
+            f"{caller}: n_buckets={int(n_buckets)} contradicts the "
+            f"index's stats sidecar (built with n_buckets={stored}) "
+            f"— probing with a mismatched bucket count silently "
+            f"misses postings; omit the parameter to use the "
+            f"recorded value"
+        )
+    return n, avgdl, stored
 
 
 # Text-index growth threshold (SCALING.md "Text-index growth
@@ -631,23 +637,26 @@ def build_text_index(
       join.
     * ``terms/``    — (term, df) per distinct term, same bucketing, so
       the idf lookup is an equally pruned tiny read.
-    * ``stats/``    — one row (n_docs, sum_dl, n_buckets): exact
-      int64s, from which any engine reproduces avgdl bit-identically;
+    * ``stats/``    — the sidecar (``ops.layout._write_sidecar``):
+      n_docs, sum_dl, n_buckets and built_n_docs, exact integers from
+      which any engine reproduces avgdl bit-identically;
       ``n_buckets`` records the bucket count the postings were hashed
       with, so probes replay the SAME term→bucket hash without the
       caller having to remember it (a mismatched count would silently
       prune to the wrong buckets).
 
     Build cost: two tokenize scans — the one-row stats aggregate (its
-    row is collected for the empty-corpus check and written from the
-    driver) and the (id, term) postings aggregation, the same postings
-    shuffle tf-idf already pays — then one read of the written postings
-    for the per-term document frequencies. ``n_buckets`` bounds
-    file counts (the small-files maintenance loop — ``maybe_compact``
-    in ops/layout.py — applies to ``postings/`` unchanged).
+    row is collected for the empty-corpus check and written as the
+    sidecar from the driver) and the (id, term) postings aggregation,
+    the same postings shuffle tf-idf already pays — then one read of
+    the written postings for the per-term document frequencies.
+    ``n_buckets`` bounds file counts (the small-files maintenance loop
+    — ``maybe_compact`` in ops/layout.py — applies to ``postings/``
+    unchanged).
 
-    Every table is staged in a temp dir and swapped in (the streaming
-    maintenance protocol — same contract as ``pq.build_ann_index``), so
+    Every table is staged in a temp dir and swapped in, the sidecar
+    last (the streaming maintenance protocol — same contract as
+    ``pq.build_ann_index`` and ``dedup.build_fuzzy_index``), so
     rebuilding over an EXISTING layout is safe: a crash mid-rebuild
     leaves the old index intact and concurrent probes never see a
     half-written store.
@@ -675,10 +684,6 @@ def build_text_index(
         raise ValueError("build_text_index: empty corpus — nothing to index")
 
     sfx = "__build"
-    # write the collected row: re-running the aggregate would tokenize
-    # the whole corpus once more
-    sidecar = spark.createDataFrame([row], stats.schema)
-    sidecar.write.mode("overwrite").parquet(f"{path}/stats{sfx}")
     toks = df.select(
         F.col(id_col),
         tokens(src).alias("toks"),
@@ -712,12 +717,15 @@ def build_text_index(
     terms.write.mode("overwrite").partitionBy("bucket").parquet(
         f"{path}/terms{sfx}"
     )
-    # postings first, stats LAST: probes read stats (n_buckets, avgdl)
-    # before pruning, so the crash window between renames serves
-    # old-stats + new-postings for at most two renames; on a fresh path
-    # each swap is a single rename into place
-    for d in ("postings", "terms", "stats"):
+    # data first, stats LAST: probes read stats (n_buckets, avgdl)
+    # before pruning, so a crash between the swaps and the sidecar
+    # commit serves old-stats + new-postings; on a fresh path each swap
+    # is a single rename into place. The sidecar is the collected row:
+    # re-running the aggregate would tokenize the whole corpus again.
+    for d in ("postings", "terms"):
         _swap_dirs(spark, f"{path}/{d}", f"{path}/{d}{sfx}", "rebuild")
+    _write_sidecar(spark, row.asDict(), f"{path}/stats", "rebuild")
+
 
 def bm25_topk_indexed(
     spark,

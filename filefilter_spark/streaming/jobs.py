@@ -29,19 +29,21 @@ The store contract, the same for every ingest loop:
 
 - **Sidecar.** The text (``stats/``), ANN (``meta/``), fuzzy
   (``stats/``) and ivfpq (``_applied/``, hidden from
-  ``spark.read.parquet(out_dir)``) stores keep a one-row sidecar with
-  the store's statistics and the applied keys — a 16-hex md5 of each
-  ingested input file name, the last ``_APPLIED_KEYS_HORIZON`` of them.
-  It is committed once per batch, after all of the batch's store
-  appends, by write-to-temp + swap (``ops.layout._write_sidecar``).
+  ``spark.read.parquet(out_dir)``) stores keep the one sidecar format
+  of ``ops.layout``: one row holding one JSON string, the store's
+  statistics and the applied keys — a 16-hex md5 of each ingested
+  input file name, the last ``_APPLIED_KEYS_HORIZON`` of them.
+  ``_write_sidecar`` commits it once per batch, after all of the
+  batch's store appends, by write-to-temp + swap; ``_read_sidecar``
+  is its one reader.
 - **Replay.** foreachBatch is at-least-once, and after checkpoint loss
   batch ids renumber from 0 and a re-drain can regroup files, so the
   FILE is the unit of replay identity: a batch skips every file the
   sidecar holds and processes the rest. A non-file source keys the
-  batch id; a legacy sidecar without keys falls back to
-  ``last_batch_id``. The minhash and semdedup stores keep no sidecar: a
-  replayed row collides with its stored self in every band/cell and
-  that self-pair kills it, so a replay appends nothing.
+  batch id, so every commit records at least one key. The minhash and
+  semdedup stores keep no sidecar: a replayed row collides with its
+  stored self in every band/cell and that self-pair kills it, so a
+  replay appends nothing.
 - **Crash window.** A crash between a batch's appends and its commit
   leaves the appends with their files un-keyed, so the rerun appends
   them again; the statistics in the sidecar still count every file
@@ -80,6 +82,7 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
+import time
 import uuid
 
 import pyspark.sql.functions as F
@@ -92,6 +95,7 @@ from filefilter_spark.ops.layout import (
     _dir_exists,
     _is_directory,
     _pending_marker,
+    _read_sidecar,
     _swap_dirs,
     _write_sidecar,
     maybe_compact,
@@ -178,6 +182,32 @@ def _tmpfs_dir(name: str) -> str:
     return os.path.join(base, f"ffspark_ckpt_{name}_{uuid.uuid4().hex[:8]}")
 
 
+def _stop_and_clear(spark: SparkSession, query, ckpt: str | None) -> None:
+    """Stop ``query`` if it is still active and delete its checkpoint
+    ``ckpt`` (None keeps it) once no task runs (at most 30 s). ``stop()`` cancels the
+    query's jobs without waiting for their running tasks, and a task
+    still in flight commits its state-store delta (``.crc`` included)
+    into a checkpoint deleted before it finished, leaving those files
+    behind."""
+    try:
+        if query.isActive:
+            query.stop()
+    finally:
+        sc = spark.sparkContext._jsc.sc()
+        deadline = time.monotonic() + 30.0
+        try:
+            # task-start events still queued would hide running tasks
+            sc.listenerBus().waitUntilEmpty(30_000)
+            while time.monotonic() < deadline and any(
+                e.numRunningTasks()
+                for e in sc.statusTracker().getExecutorInfos()
+            ):
+                time.sleep(0.05)
+        finally:
+            if ckpt is not None:
+                shutil.rmtree(ckpt, ignore_errors=True)
+
+
 def _run_to_memory(
     agg, output_mode: str, timeout_sec: int, state_partitions: int | None = None
 ) -> tuple[str, object]:
@@ -234,9 +264,7 @@ def _run_to_memory(
     try:
         query.awaitTermination(timeout_sec)
     finally:
-        if query.isActive:  # pragma: no cover - timeout safety
-            query.stop()
-        shutil.rmtree(ckpt, ignore_errors=True)
+        _stop_and_clear(spark, query, ckpt)
     return qname, query
 
 
@@ -529,10 +557,8 @@ def _drain(
                 "raise timeout_sec and rerun"
             )
     finally:
-        if query.isActive:  # pragma: no cover
-            query.stop()
-        if checkpoint_dir is None:
-            shutil.rmtree(ckpt, ignore_errors=True)
+        _stop_and_clear(stream.sparkSession, query,
+                        None if checkpoint_dir else ckpt)
     if not _dir_exists(stream.sparkSession, result_dir):
         raise ValueError(
             f"{name}: the availableNow run produced no micro-batches "
@@ -626,12 +652,11 @@ class _IndexStore:
     marker fence and the drain (contract: module docstring).
 
     ``result_dir`` is the table the loop returns (its absence after the
-    drain means no micro-batch ran). ``sidecar`` is the one-row
-    metadata table that carries the applied keys (None for the dedup
-    stores, whose replay guard is the self-pair kill), with schema
-    ``ddl``; ``load``/``encode`` override the row codec (the ANN meta
-    sidecar is one JSON string). ``compact`` lists the maintenance
-    targets as (dir, partition column or None, sort columns)."""
+    drain means no micro-batch ran). ``sidecar`` is the store's
+    ``ops.layout`` sidecar, which carries the applied keys (None for
+    the dedup stores, whose replay guard is the self-pair kill).
+    ``compact`` lists the maintenance targets as (dir, partition column
+    or None, sort columns)."""
 
     def __init__(
         self,
@@ -639,40 +664,27 @@ class _IndexStore:
         name: str,
         result_dir: str,
         sidecar: str | None = None,
-        ddl: str | None = None,
         compact=(),
         max_files: int = 16,
         maintain_every: int | None = None,
         marker: str | None = None,
-        load=None,
-        encode=None,
     ):
         self.spark, self.name, self.result_dir = spark, name, result_dir
-        self.sidecar, self.ddl, self.compact = sidecar, ddl, compact
+        self.sidecar, self.compact = sidecar, compact
         self.max_files, self.maintain_every = max_files, maintain_every
         self.marker = marker
-        self._load, self._encode = load, encode or (lambda row: row)
         self.new_keys: list[str] = []
 
     def read(self) -> dict | None:
-        if self._load is not None:
-            return self._load()
-        if not _dir_exists(self.spark, self.sidecar):
-            return None
-        row = self.spark.read.parquet(self.sidecar).first()
-        return None if row is None else row.asDict()
+        return _read_sidecar(self.spark, self.sidecar)
 
     def begin(self, batch_df: DataFrame, batch_id: int):
         """``(the part of the batch not applied yet or None, sidecar)``:
         drops every file whose key the sidecar already holds; a
-        non-file source keys the batch id, and a legacy sidecar
-        without keys falls back to ``batch_id <= last_batch_id``."""
+        non-file source keys the batch id."""
         cur = self.read()
         self.new_keys = []
         seen = set((cur or {}).get("applied_keys") or [])
-        last = (cur or {}).get("last_batch_id")
-        if not seen and last is not None and batch_id <= int(last):
-            return None, cur
         files = _batch_files(batch_df)
         if not files:
             self.new_keys = [f"batch:{batch_id}"]
@@ -689,13 +701,11 @@ class _IndexStore:
         """Record ``row`` plus ``keys`` in the sidecar (temp + swap)."""
         row = {
             **row,
-            "last_batch_id": batch_id,
             "applied_keys": (list(row.get("applied_keys") or []) + list(keys))[
                 -_APPLIED_KEYS_HORIZON:
             ],
         }
-        df = self.spark.createDataFrame([self._encode(row)], self.ddl)
-        _write_sidecar(self.spark, df, self.sidecar, batch_id)
+        _write_sidecar(self.spark, row, self.sidecar, batch_id)
         return row
 
     def commit(self, batch_id: int, row: dict | None = None) -> dict | None:
@@ -788,7 +798,6 @@ def ivfpq_stream_ingest(
     store = _IndexStore(
         spark, "ivfpq_stream_ingest", out_dir,
         sidecar=f"{out_dir}/_applied",
-        ddl="last_batch_id long, applied_keys array<string>",
         compact=[(out_dir, "cell", [id_col])],
         max_files=max_files_per_partition, maintain_every=maintain_every,
     )
@@ -978,7 +987,6 @@ def minhash_stream_dedup(
     order ACROSS batches (the stream defines who arrived first) and is
     deterministic within a batch; a single-batch drain equals the
     batch pipeline exactly (pinned in tests)."""
-    import time as _time
 
     from pyspark.storagelevel import StorageLevel
 
@@ -1003,7 +1011,7 @@ def minhash_stream_dedup(
         )
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        t0 = _time.time()
+        t0 = time.time()
         new = batch_df.select(F.col(id_col), F.col(text_col))
         banded = minhash_band_buckets(
             new, id_col, text_col, num_hashes, bands, seed, shingle_n
@@ -1018,7 +1026,7 @@ def minhash_stream_dedup(
         store.commit(batch_id)
         if on_batch is not None:
             on_batch({"batch_id": batch_id, **counts.get,
-                      "seconds": _time.time() - t0})
+                      "seconds": time.time() - t0})
 
     store.run(path, handle, max_files_per_trigger, timeout_sec)
     return spark.read.parquet(docs_dir)
@@ -1082,7 +1090,6 @@ def semdedup_stream_dedup(
 
     Returns the survivor table ``(vec_id, embedding)``."""
     import math as _math
-    import time as _time
 
     from filefilter_spark.ops.similarity import (
         _as_double_array,
@@ -1134,7 +1141,7 @@ def semdedup_stream_dedup(
         }
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        t0 = _time.time()
+        t0 = time.time()
         new = batch_df.select(F.col(id_col), F.col(vec_col))
         cells = cell_memberships(
             new, state["cents"], n_assign, vec_col, id_col
@@ -1170,7 +1177,7 @@ def semdedup_stream_dedup(
                 **drift,
                 "rebuilt": rebuilt,
                 "n_lists": len(state["cents"]),
-                "seconds": _time.time() - t0,
+                "seconds": time.time() - t0,
             })
 
     store.run(path, handle, max_files_per_trigger, timeout_sec)
@@ -1232,8 +1239,6 @@ def text_index_stream_ingest(
     store = _IndexStore(
         spark, "text_index_stream_ingest", post_dir,
         sidecar=f"{out_dir}/stats",
-        ddl="n_docs long, sum_dl long, n_buckets long, last_batch_id long, "
-            "applied_keys array<string>, built_n_docs long",
         compact=[(post_dir, "bucket", ["term", id_col])],
         max_files=max_files_per_partition, maintain_every=maintain_every,
         marker=f"{out_dir}/rebucket_pending",
@@ -1394,24 +1399,19 @@ def ann_index_stream_ingest(
     applied, so a file the rebuild indexed never double-ingests when
     the stream delivers it later. Without ``rebuild_source`` the signal
     stays alert-only. Returns the codes table at ``index_path``."""
-    import json as _json
     import math as _math
-    import time as _time
 
     from filefilter_spark.ops.pq import (
         ann_index_drift,
         auto_n_probe,
         build_ann_index,
         ivfpq_encode_batch,
-        load_ann_meta,
     )
 
     codes_dir = f"{index_path}/codes"
     store = _IndexStore(
         spark, "ann_index_stream_ingest", codes_dir,
-        sidecar=f"{index_path}/meta", ddl="meta string",
-        load=lambda: load_ann_meta(spark, index_path),
-        encode=lambda meta: {"meta": _json.dumps(meta)},
+        sidecar=f"{index_path}/meta",
         compact=[(codes_dir, "cell", [id_col])],
         max_files=max_files_per_partition, maintain_every=maintain_every,
     )
@@ -1450,12 +1450,10 @@ def ann_index_stream_ingest(
         kw.update(rebuild_kwargs or {})
         build_ann_index(full, index_path, **kw)
         keys = [_file_key(f) for f in _batch_files(full)]
-        return store.write(
-            batch_id, with_drift(load_ann_meta(spark, index_path)), keys
-        )
+        return store.write(batch_id, with_drift(store.read()), keys)
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        t0 = _time.time()
+        t0 = time.time()
         batch_df, cur = store.begin(batch_df, batch_id)
         merged, n_in, rebuilt = None, 0, False
         if batch_df is not None:
@@ -1474,7 +1472,8 @@ def ann_index_stream_ingest(
             if not adds:
                 return  # empty batch: nothing to append or merge
             enc.write.partitionBy("cell").mode("append").parquet(codes_dir)
-            counts = dict(cur["cell_counts"])
+            # the sidecar's JSON keys cells by string
+            counts = {int(c): n for c, n in cur["cell_counts"].items()}
             for c, n in adds.items():
                 counts[c] = counts.get(c, 0) + n
             merged = store.commit(
@@ -1495,7 +1494,7 @@ def ann_index_stream_ingest(
                 "applied": merged is not None,
                 "rebuilt": rebuilt,
                 "n_lists": int(meta.get("n_lists", 0)),
-                "seconds": _time.time() - t0,
+                "seconds": time.time() - t0,
                 **ann_index_drift(meta),
             })
 
@@ -1606,7 +1605,6 @@ def fuzzy_index_stream_ingest(
     strings come back only for candidates (id join against the
     sbucket-partitioned strings store). Returns the pairs table,
     deduplicated on (id_a, id_b)."""
-    import time as _time
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark.storagelevel import StorageLevel
@@ -1629,8 +1627,6 @@ def fuzzy_index_stream_ingest(
     store = _IndexStore(
         spark, "fuzzy_index_stream_ingest", pairs_dir,
         sidecar=f"{index_path}/stats",
-        ddl="q long, max_dist long, n_buckets long, n_strings long, "
-            "applied_keys array<string>",
         compact=[(post_dir, "bucket", ["g", "occ", "id"]),
                  (strings_dir, "sbucket", ["id"])],
         max_files=max_files_per_partition, maintain_every=maintain_every,
@@ -1757,7 +1753,7 @@ def fuzzy_index_stream_ingest(
             "n_candidates", 0)
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        t0 = _time.time()
+        t0 = time.time()
         rebuilt = store.fence(
             batch_id, rebuild_on_drift, do_rebuild,
             "a prior rebuild crashed between its gramdf/postings swaps "
@@ -1797,7 +1793,7 @@ def fuzzy_index_stream_ingest(
                 **info,
                 "action": fuzzy_index_staleness(info["unseen_gram_frac"]),
                 "rebuilt": rebuilt,
-                "seconds": _time.time() - t0,
+                "seconds": time.time() - t0,
             })
 
     store.run(path, handle, max_files_per_trigger, timeout_sec,

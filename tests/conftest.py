@@ -25,6 +25,7 @@ SLOW_TESTS = {
     # the driver-window construct gate below instead
     "test_ann_index_stream_auto_rebuild",
     "test_fuzzy_index_stream_rebuild_on_drift",
+    "test_build_fuzzy_index_failed_rebuild_keeps_old_layout",
     "test_image_codecs_survive_corruption[tiff/gray_packbits.tif]",
     "test_streaming_soak_flat_addbatch_and_bounded_state",
     "test_build_ann_index_rebuild_swaps_atomically",

@@ -7,6 +7,8 @@ import datetime
 import pyspark.sql.functions as F
 import pytest
 
+from filefilter_spark.ops.layout import _read_sidecar, _write_sidecar
+
 
 @pytest.fixture(scope="module")
 def documents(spark, sf_dir):
@@ -1376,13 +1378,12 @@ def _rate_soak(spark, num_batches, timeout_sec):
     (the execution part of the trigger) and ``state_rows`` (live
     aggregation state after the batch)."""
     import json
-    import shutil
     import time
     import uuid
 
     import pyspark.sql.functions as SF
 
-    from filefilter_spark.streaming.jobs import _tmpfs_dir
+    from filefilter_spark.streaming.jobs import _stop_and_clear, _tmpfs_dir
 
     stream = spark.readStream.format("rate").option("rowsPerSecond", 20_000).load()
     agg = (
@@ -1432,10 +1433,9 @@ def _rate_soak(spark, num_batches, timeout_sec):
         # best effort: stop() throws if the query already died, and the
         # memory sink may never register its view
         try:
-            query.stop()
+            _stop_and_clear(spark, query, ckpt)
         except Exception:
             pass
-        shutil.rmtree(ckpt, ignore_errors=True)
         try:
             spark.catalog.dropTempView(qname)
         except Exception:
@@ -1450,9 +1450,18 @@ def test_streaming_soak_flat_addbatch_and_bounded_state(spark):
     live state BOUNDED (watermark eviction pins state at
     ~(watermark+window)/window windows x key cardinality regardless of
     runtime — a state leak shows as monotonic growth here)."""
+    import glob
+    import os
     import statistics as st
 
+    from filefilter_spark.streaming.jobs import _tmpfs_dir
+
+    ckpts = os.path.join(os.path.dirname(_tmpfs_dir("soak")),
+                         "ffspark_ckpt_soak_*")
+    before = set(glob.glob(ckpts))
     rows = _rate_soak(spark, num_batches=50, timeout_sec=150)
+    # the checkpoint is deleted after the stopped query's last task
+    assert set(glob.glob(ckpts)) <= before
     assert len(rows) >= 50
     mid = st.median(r["add_batch_ms"] for r in rows[5:20])
     late = st.median(r["add_batch_ms"] for r in rows[-15:])
@@ -3954,7 +3963,7 @@ def test_text_index_stream_reingest_is_idempotent(spark, tmp_path):
     terms = ["spark", "merge"]
     first = [tuple(r) for r in
              bm25_topk_indexed(spark, ix, terms, k=10, n_buckets=8).collect()]
-    stats1 = spark.read.parquet(f"{ix}/stats").first()
+    stats1 = _read_sidecar(spark, f"{ix}/stats")
     n_post1 = spark.read.parquet(f"{ix}/postings").count()
     # (a) durable default: rerun redelivers nothing at all
     text_index_stream_ingest(spark, src, ix, max_files_per_trigger=1)
@@ -3963,7 +3972,7 @@ def test_text_index_stream_reingest_is_idempotent(spark, tmp_path):
     # renumber, grouping shifts) — the per-file guard drops everything
     text_index_stream_ingest(spark, src, ix,
                              checkpoint_dir=str(tmp_path / "ckb"))
-    stats2 = spark.read.parquet(f"{ix}/stats").first()
+    stats2 = _read_sidecar(spark, f"{ix}/stats")
     assert spark.read.parquet(f"{ix}/postings").count() == n_post1
     assert (stats2["n_docs"], stats2["sum_dl"]) == (
         stats1["n_docs"], stats1["sum_dl"])
@@ -3974,7 +3983,7 @@ def test_text_index_stream_reingest_is_idempotent(spark, tmp_path):
     part2.coalesce(1).write.mode("append").parquet(src)
     text_index_stream_ingest(spark, src, ix,
                              checkpoint_dir=str(tmp_path / "ckc"))
-    stats3 = spark.read.parquet(f"{ix}/stats").first()
+    stats3 = _read_sidecar(spark, f"{ix}/stats")
     assert stats3["n_docs"] == docs.count()
     assert [tuple(r) for r in
             bm25_topk_indexed(spark, ix, terms, k=10).collect()] == [
@@ -4009,7 +4018,7 @@ def test_text_index_growth_signal(spark, tmp_path):
     ix, src = str(tmp_path / "ix"), str(tmp_path / "src")
     build_text_index(seed, ix, n_buckets=8)
     assert int(
-        spark.read.parquet(f"{ix}/stats").first()["built_n_docs"]
+        _read_sidecar(spark, f"{ix}/stats")["built_n_docs"]
     ) == seed.count()
     # stream in >8x the build size: the hook must flip to rebucket
     rest = docs.filter(F.col("doc_id") >= 40)
@@ -4021,7 +4030,7 @@ def test_text_index_growth_signal(spark, tmp_path):
     assert signals[-1]["growth_factor"] >= TEXT_GROWTH_REBUCKET
     # rebuild (rebucket) over the grown corpus re-freezes the baseline
     build_text_index(docs, ix, n_buckets=64)
-    s = spark.read.parquet(f"{ix}/stats").first()
+    s = _read_sidecar(spark, f"{ix}/stats")
     assert int(s["built_n_docs"]) == docs.count()
     assert text_index_growth(
         int(s["n_docs"]), int(s["built_n_docs"]))["action"] == "ok"
@@ -4094,7 +4103,7 @@ def test_text_index_stream_rebucket_on_growth(spark, tmp_path):
     last = sig[-1]
     assert last["action"] == "rebucket" and last["rebucketed"] is True
     growth = last["growth_factor"]
-    s = spark.read.parquet(f"{ix}/stats").first()
+    s = _read_sidecar(spark, f"{ix}/stats")
     # stats: target = 4 * 2^ceil(log2(growth)), baseline re-frozen
     assert int(s["n_buckets"]) == int(last["n_buckets"]) > 4
     assert int(s["built_n_docs"]) == int(s["n_docs"]) == docs.count()
@@ -4366,7 +4375,7 @@ def test_text_index_nbuckets_from_sidecar(spark, tmp_path):
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     ix = str(tmp_path / "ix")
     build_text_index(docs, ix, n_buckets=8)
-    assert int(spark.read.parquet(f"{ix}/stats").first()["n_buckets"]) == 8
+    assert int(_read_sidecar(spark, f"{ix}/stats")["n_buckets"]) == 8
     terms = ["spark", "merge"]
     scan = [tuple(r) for r in bm25_topk(docs, terms, k=10).collect()]
     # no parameter: the sidecar's value drives the bucket hash
@@ -4413,7 +4422,7 @@ def test_build_text_index_rebuild_swaps_atomically(spark, tmp_path):
     build_text_index(half, ix, n_buckets=8)
     # refresh in place with the FULL corpus and a different n_buckets
     build_text_index(docs, ix, n_buckets=16)
-    stats = spark.read.parquet(f"{ix}/stats").first()
+    stats = _read_sidecar(spark, f"{ix}/stats")
     assert stats["n_docs"] == docs.count()
     assert int(stats["n_buckets"]) == 16
     terms = ["spark", "merge"]
@@ -4535,7 +4544,6 @@ def test_auto_n_probe_widens_with_drift(spark, tmp_path):
     sidecar alone: 4 cells on a healthy index, 2x under widen_probe,
     3x under rebuild, capped at n_lists — and the indexed probe's plan
     prunes to exactly that many cells."""
-    import json as _json
     import re as _re
 
     from filefilter_spark.ops.pq import (
@@ -4592,10 +4600,7 @@ def test_auto_n_probe_widens_with_drift(spark, tmp_path):
             str(c): n for c, n in meta["built_cell_counts"].items()
         },
     }
-    spark.createDataFrame(
-        [(_json.dumps(doctored),)], "meta string"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{ix}/meta")
-    spark.catalog.refreshByPath(f"{ix}/meta")
+    _write_sidecar(spark, doctored, f"{ix}/meta", "doctored")
     assert probed_cells("auto") == 12
 
 
@@ -4996,7 +5001,7 @@ def test_fuzzy_index_stream_ingest_exact(spark, tmp_path):
                    for r in got3.collect()]) \
         == sorted([(r["id_a"], r["id_b"], r["dist"])
                    for r in want3.collect()])
-    stats = spark.read.parquet(f"{ix}/stats").first()
+    stats = _read_sidecar(spark, f"{ix}/stats")
     assert stats["n_strings"] == docs.count()
 
 
@@ -5019,6 +5024,65 @@ def test_fuzzy_index_short_store_one_part_per_task(spark, tmp_path):
     assert len(glob.glob(f"{ix}/short/part-*.parquet")) > 1
     short = spark.read.parquet(f"{ix}/short")
     assert sorted(r["id"] for r in short.collect()) == [0, 2, 4, 6]
+
+
+def test_build_fuzzy_index_failed_rebuild_keeps_old_layout(
+        spark, tmp_path, monkeypatch):
+    """A rebuild over an existing layout whose pairs step raises leaves
+    the old layout whole: every dir is staged and swapped in only after
+    all of them are written, the stats sidecar last, so ``pairs/``,
+    ``strings/``, the stats and an ingest probe over the layout read as
+    if the rebuild had never started."""
+    import os
+    import random
+
+    import filefilter_spark.ops.dedup as dedup
+    from filefilter_spark.streaming.jobs import fuzzy_index_stream_ingest
+
+    rng = random.Random(11)
+
+    def word(n):
+        return "".join(rng.choice("abcdef") for _ in range(n))
+
+    schema = "doc_id long, s string"
+    old = [(i, word(12)) for i in range(30)]
+    old += [(100 + i, old[i][1][:-1] + "z") for i in range(6)]
+    ix = str(tmp_path / "ix")
+    dedup.build_fuzzy_index(spark.createDataFrame(old, schema), ix,
+                            max_dist=2, q=2, n_buckets=8)
+
+    def snapshot():
+        return (
+            sorted(tuple(r) for r in spark.read.parquet(f"{ix}/pairs").collect()),
+            sorted(tuple(r) for r in spark.read.parquet(f"{ix}/strings").collect()),
+            _read_sidecar(spark, f"{ix}/stats"),
+        )
+
+    before = snapshot()
+    assert before[0] and before[2]["n_strings"] == len(old)
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("pairs step failed")
+
+    monkeypatch.setattr(dedup, "_pairs_from_fuzzy_layout", boom)
+    new = [(1000 + i, word(9)) for i in range(20)]
+    with pytest.raises(RuntimeError, match="pairs step failed"):
+        dedup.build_fuzzy_index(spark.createDataFrame(new, schema), ix,
+                                max_dist=2, q=2, n_buckets=4)
+    monkeypatch.undo()
+    assert snapshot() == before
+    assert not [d for d in os.listdir(ix) if "__old" in d]
+
+    # the probe: an ingest over the kept layout equals the batch op
+    src = str(tmp_path / "src")
+    arrived = [(200 + i, old[i][1][:-2] + "zz") for i in range(5)]
+    _arrivals(spark, src, [arrived], schema)
+    got = fuzzy_index_stream_ingest(spark, src, ix, id_col="doc_id",
+                                    str_col="s")
+    want = dedup.edit_distance_pairs(
+        spark.createDataFrame(old + arrived, schema), max_dist=2, q=2)
+    assert sorted(tuple(r) for r in got.collect()) == sorted(
+        tuple(r) for r in want.collect())
 
 
 def test_fuzzy_index_stream_rebuild_on_drift(spark, tmp_path):
@@ -5365,7 +5429,7 @@ def _crash_case(spark, tmp_path, sf_dir, loop):
         arrivals(docs)
 
         def read_text(d, res):
-            st = spark.read.parquet(f"{d}/stats").first()
+            st = _read_sidecar(spark, f"{d}/stats")
             return (st["n_docs"], st["sum_dl"], [
                 tuple(r) for r in bm25_topk_indexed(
                     spark, d, ["spark", "merge", "data"], k=10).collect()])
@@ -5409,7 +5473,7 @@ def _crash_case(spark, tmp_path, sf_dir, loop):
             spark, src, d, id_col="doc_id", str_col="s", **one)
 
     return run_fuzzy, lambda d, res: (
-        spark.read.parquet(f"{d}/stats").first()["n_strings"],
+        _read_sidecar(spark, f"{d}/stats")["n_strings"],
         sorted(tuple(r) for r in res.collect()),
     )
 

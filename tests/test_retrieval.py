@@ -85,6 +85,27 @@ def test_bm25_scoring_plan_is_projection_plus_take_ordered(spark, docs):
     assert _shuffle_count(plan) == 0
 
 
+def test_bm25_topk_scores_each_document_once(spark, docs, tmp_path):
+    """The score (its rounding step names it) appears once in the
+    executed plan of the scan and of the indexed top-k: the
+    ``bm25 > 0`` filter runs after the limit, where Catalyst cannot
+    push it through the scoring projection and repeat the score."""
+    from filefilter_spark.ops.retrieval import (
+        bm25_topk,
+        bm25_topk_indexed,
+        build_text_index,
+    )
+
+    ix = str(tmp_path / "ix")
+    build_text_index(docs, ix, n_buckets=8)
+    terms = ["spark", "merge", "window"]
+    for df in (bm25_topk(docs, terms, k=10),
+               bm25_topk_indexed(spark, ix, terms, k=10)):
+        plan = _plan(df)
+        assert plan.count("round(") == 1, plan
+        assert "TakeOrderedAndProject" in plan
+
+
 def test_bm25_stats_pass_is_single_row_map_combined(spark, docs):
     """The stats pass folds (N, Σdl, df per term) map-side: partial +
     final HashAggregate around at most one single-row exchange, and no
@@ -325,11 +346,31 @@ def test_build_text_index_runs_its_stats_aggregate_once(spark, docs, tmp_path):
     schema read (1) and the terms write (3)."""
     from conftest import jobs_in_group
 
+    from filefilter_spark.ops.layout import _read_sidecar
     from filefilter_spark.ops.retrieval import build_text_index
 
     ix = str(tmp_path / "ix")
     _, n_jobs = jobs_in_group(
         spark, "text-index", lambda: build_text_index(docs, ix, n_buckets=16))
     assert n_jobs == 10
-    assert [tuple(r) for r in spark.read.parquet(f"{ix}/stats").collect()] == [
-        (500, 27939, 16, 500)]
+    assert _read_sidecar(spark, f"{ix}/stats") == {
+        "n_docs": 500, "sum_dl": 27939, "n_buckets": 16, "built_n_docs": 500}
+
+
+def test_index_sidecar_in_an_older_format_must_be_rebuilt(spark, docs, tmp_path):
+    """A ``stats/`` table in the pre-JSON column layout (or none at all)
+    refuses with a rebuild hint instead of probing with missing
+    fields."""
+    from filefilter_spark.ops.retrieval import bm25_topk_indexed, build_text_index
+
+    ix = str(tmp_path / "ix")
+    with pytest.raises(ValueError, match="no index"):
+        bm25_topk_indexed(spark, ix, ["spark"], k=3)
+    build_text_index(docs, ix, n_buckets=8)
+    spark.createDataFrame(
+        [(500, 27939, 8, 500)],
+        "n_docs long, sum_dl long, n_buckets long, built_n_docs long",
+    ).write.mode("overwrite").parquet(f"{ix}/stats")
+    spark.catalog.refreshByPath(f"{ix}/stats")
+    with pytest.raises(ValueError, match="not a JSON sidecar: rebuild"):
+        bm25_topk_indexed(spark, ix, ["spark"], k=3)

@@ -43,6 +43,11 @@
   training (``_term_counts``) and scoring (``quality_scores``) call,
   one UDF builds ``VectorUDT`` values, and no ``extra_cols`` carrier
   rides the featurization.
+- Index metadata has one sidecar format: outside ``ops/layout.py`` a
+  ``stats``, ``meta`` or ``_applied`` sidecar path is only handed to
+  ``_write_sidecar``, ``_read_sidecar`` or ``_IndexStore(sidecar=)``,
+  no sidecar DDL string is declared, and ``_IndexStore`` takes no
+  ``ddl``, ``load`` or ``encode`` codec.
 """
 
 import ast
@@ -61,6 +66,9 @@ BM25_SATURATION = re.compile(r"k1 \+ 1\.0")
 PROBE_ORDER = re.compile(
     r"sorted\(\s*range\(len\(centroids\)\),\s*key=lambda i: \("
 )
+# a path segment naming a sidecar dir: "/stats", "meta", "/_applied__x"
+SIDECAR_PATH = re.compile(r"(^|/)(stats|meta|_applied)(/|__|$)")
+SIDECAR_DDL = re.compile(r"\bapplied_keys array<|\bmeta string\b")
 UI_ON = re.compile(r"""spark\.ui\.enabled["']?\s*[:,=]\s*["']?true""", re.I)
 PER_ELEMENT = re.compile(r"F\.array\(\s*\*\s*\[\s*F\.(lit|array)\(")
 # Short string stopword arrays and salt integers: not numeric literals.
@@ -268,3 +276,49 @@ def test_one_quality_featurization():
     assert callers == ["_term_counts", "quality_scores"], callers
     assert len(lines_of(r"VectorUDT\(\)")) == 1
     assert "extra_cols" not in text
+
+
+def _call_name(call):
+    f = call.func
+    return f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+
+
+def test_one_sidecar_writer_and_reader():
+    allowed = {"_write_sidecar", "_read_sidecar"}
+    offenders = []
+    for path in sorted(PKG.rglob("*.py")):
+        rel = path.relative_to(PKG).as_posix()
+        if rel == "ops/layout.py":
+            continue
+        tree = ast.parse(path.read_text())
+        docs = {
+            id(node.value) for node in ast.walk(tree)
+            if isinstance(node, ast.Expr) and isinstance(node.value, ast.Constant)
+        }
+        ok = set()  # string nodes handed to the sidecar functions
+        for call in ast.walk(tree):
+            if not isinstance(call, ast.Call):
+                continue
+            name = _call_name(call)
+            args = list(call.args) if name in allowed else []
+            args += [kw.value for kw in call.keywords
+                     if name == "_IndexStore" and kw.arg == "sidecar"]
+            ok.update(id(n) for a in args for n in ast.walk(a))
+        for node in ast.walk(tree):
+            if not (isinstance(node, ast.Constant) and isinstance(node.value, str)):
+                continue
+            if id(node) in docs:
+                continue
+            if SIDECAR_DDL.search(node.value):
+                offenders.append(f"{rel}:{node.lineno}: DDL {node.value!r}")
+            elif SIDECAR_PATH.search(node.value) and id(node) not in ok:
+                offenders.append(f"{rel}:{node.lineno}: {node.value!r}")
+    assert not offenders, "\n".join(offenders)
+    init = next(
+        fn for cls in ast.parse((PKG / "streaming/jobs.py").read_text()).body
+        if isinstance(cls, ast.ClassDef) and cls.name == "_IndexStore"
+        for fn in cls.body
+        if isinstance(fn, ast.FunctionDef) and fn.name == "__init__"
+    )
+    params = {a.arg for a in init.args.args + init.args.kwonlyargs}
+    assert not params & {"ddl", "load", "encode"}, params
